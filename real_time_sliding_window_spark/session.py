@@ -7,7 +7,15 @@ entry point all get the same plan-shaping defaults:
   requirement for skewed conv_id handling;
 - Arrow enabled for every pandas UDF path (input_hint bans per-row Python);
 - shuffle partitions sized to the local core count (on a real cluster this
-  would be ~2-3x total executor cores; AQE coalesces down post-shuffle).
+  would be ~2-3x total executor cores; AQE coalesces down post-shuffle);
+- Python workers forked from the package's daemon (``worker_daemon.py``).
+  Before CPython 3.13, the ``importlib.invalidate_caches()`` that every
+  pandas/Arrow task runs makes each cached zipimporter re-parse its whole
+  archive (pyspark.zip, the py4j zip, the spark-core jar, the package zip);
+  the daemon backports 3.13's shared, lazily refreshed cache with a stat
+  check, which takes that cost off every micro-batch of the ring buffer.
+  From 3.13 it only runs ``pyspark.daemon``. A caller's ``extra_conf``
+  value of ``spark.python.daemon.module`` wins.
 """
 
 from __future__ import annotations
@@ -41,9 +49,11 @@ def _export_pythonpath() -> None:
     ``addPyFile`` covers regular UDF workers, but transformWithStateInPandas
     spawns a long-lived StreamingPythonRunner that unpickles the stateful
     processor by module import at initialization — before py-files land.
-    Local mode inherits the driver env, so exporting PYTHONPATH here covers
-    it; on a cluster, ship the zip with --py-files AND set
-    spark.executorEnv.PYTHONPATH for TWS jobs.
+    The Python worker daemon (``spark.python.daemon.module``) is imported
+    the same way, before any py-file exists. Local mode inherits the driver
+    env, so exporting PYTHONPATH here covers both; on a cluster, ship the
+    zip with --py-files AND set spark.executorEnv.PYTHONPATH so executors
+    can import the daemon and TWS processors.
     """
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
@@ -105,6 +115,10 @@ def get_spark(
         # per-commit disk floor that throttles micro-batch cadence
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
                 "true")
+        # see the module docstring; executors must be able to import it
+        # (_export_pythonpath)
+        .config("spark.python.daemon.module",
+                "real_time_sliding_window_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -119,11 +133,17 @@ def _warm_python_workers(spark: SparkSession) -> None:
 
     Python workers are forked lazily at the FIRST Arrow/pandas stage, so
     whatever query happens to hit the boundary first absorbs the whole
-    pool's spawn (~1-2 s across 32 cores) — a per-session engine cost
+    pool's spawn and first imports (~6 s of a ~13 s ``get_spark`` on a
+    4-core VM) — a per-session engine cost
     misattributed to one operator. One trivial one-task-per-core
     mapInPandas round-trip at startup pays it where it belongs (session
     init), the same reasoning as warming the JVM before timing queries.
-    Workers are reused afterwards (spark.python.worker.reuse default)."""
+    Workers are reused afterwards (spark.python.worker.reuse default).
+
+    Spark's "time to initialize Python workers" task metric does not show
+    per-task worker cost on its own: for a reused worker it also counts the
+    idle time since that worker's previous task, because
+    ``pyspark/worker.py`` takes ``boot_time`` before its blocking read."""
     par = spark.sparkContext.defaultParallelism
 
     def _identity(it):

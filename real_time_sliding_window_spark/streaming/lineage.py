@@ -16,6 +16,11 @@ per role on the streaming plan (aggregated JVM-side, zero extra shuffle —
 observations ride the existing tasks), the engine reports them per
 micro-batch in ``progress.observedMetrics``, and the listener accumulates
 them — exactly a Micrometer gauge feed.
+
+Each state operator's ``customMetrics`` (for the RocksDB provider: get/put
+latencies and counts, commit-phase and load timings, bytes written) are kept
+per batch under ``state_operators``, so a slow stateful batch can be split
+into state-store time and the rest of the operator's task time.
 """
 
 from __future__ import annotations
@@ -59,6 +64,7 @@ class LineageListener(StreamingQueryListener):
 
     def onQueryProgress(self, event):
         p = json.loads(event.progress.json)
+        ops = p.get("stateOperators", [])
         rec = {
             "query": p.get("name"),
             "batch_id": p.get("batchId"),
@@ -66,12 +72,16 @@ class LineageListener(StreamingQueryListener):
             "processed_rows_per_sec": p.get("processedRowsPerSecond"),
             "batch_duration_ms": p.get("batchDuration"),
             "watermark": p.get("eventTime", {}).get("watermark"),
-            "state_rows": sum(
-                s.get("numRowsTotal", 0) for s in p.get("stateOperators", [])
-            ),
-            "state_updated": sum(
-                s.get("numRowsUpdated", 0) for s in p.get("stateOperators", [])
-            ),
+            "state_rows": sum(s.get("numRowsTotal", 0) for s in ops),
+            "state_updated": sum(s.get("numRowsUpdated", 0) for s in ops),
+            # plan order, one entry per stateful operator of the query
+            "state_operators": [
+                {
+                    "operator": s.get("operatorName"),
+                    "custom_metrics": s.get("customMetrics", {}),
+                }
+                for s in ops
+            ],
             # progress.json flattens observation Rows to bare value lists —
             # read the typed property to keep the metric names
             "observed": {
@@ -112,7 +122,9 @@ class LineageListener(StreamingQueryListener):
     def to_df(self, spark: SparkSession):
         import pandas as pd
 
-        pdf = pd.DataFrame(self.progress)
+        pdf = pd.DataFrame(self.progress).drop(
+            columns=["state_operators"], errors="ignore"
+        )
         if "observed" in pdf.columns:
             pdf = pdf.drop(columns=["observed"]).join(
                 pd.json_normalize(

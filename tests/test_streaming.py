@@ -673,6 +673,41 @@ class TestRoleGauges:
             spark.streams.removeListener(listener)
 
 
+class TestStateStoreMetrics:
+    def test_ring_batch_keeps_state_store_metrics(self, spark, tmp_path):
+        """The lineage listener keeps each state operator's customMetrics
+        per batch: for the ring buffer on the RocksDB provider, the batch's
+        get/put counts and the store's latency timers."""
+        import time
+
+        from real_time_sliding_window_spark.streaming import lineage
+
+        def pipe(stream):
+            return ring_buffer_stream(stream, timedelta(0), max_data=4)
+
+        listener = lineage.attach(spark)
+        try:
+            pushes = [rows(*[("c1", i, "user", f"t{i}", None, i) for i in range(6)])]
+            drive(spark, tmp_path, pipe, pushes, "ring_metrics")
+            # listener delivery is async — poll briefly for the progress event
+            deadline = time.monotonic() + 15
+            recs = []
+            while not recs and time.monotonic() < deadline:
+                time.sleep(0.2)
+                recs = [r for r in listener.progress
+                        if r["query"] == "ring_metrics" and r["num_input_rows"]]
+            assert recs
+            [op] = recs[0]["state_operators"]
+            assert op["operator"] == "applyInPandasWithState"
+            metrics = op["custom_metrics"]
+            assert metrics["rocksdbGetCount"] >= 1
+            assert metrics["rocksdbPutCount"] >= 1
+            assert {"rocksdbGetLatency", "rocksdbPutLatency", "rocksdbLoadLatencyMs",
+                    "rocksdbCommitFlushLatency"} <= metrics.keys()
+        finally:
+            spark.streams.removeListener(listener)
+
+
 class TestLiveWindowView:
     def test_current_bucket_visible_mid_stream(self, spark, tmp_path):
         """The open window is readable BEFORE the watermark closes it, with
