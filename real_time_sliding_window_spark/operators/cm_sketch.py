@@ -21,10 +21,9 @@ per-row bucket counts. That buys three properties the suite leans on:
   oracle can replay sketch construction AND estimation exactly (buckets
   are md5-derived — the engine-parity hash doctrine; no xxhash64,
   which DuckDB lacks);
-- EXACTLY additive: ``cm(A ⊎ B) = cm(A) + cm(B)`` pointwise, so the
-  incremental index through the exactly-once sink
-  (streaming/sketches.py::run_cm_index) is bit-lossless — the
-  Gramian-index property, NOT the HLL estimator caveat;
+- EXACTLY additive: ``cm(A ⊎ B) = cm(A) + cm(B)`` pointwise, so
+  per-batch sketches merge bit-losslessly (``cm_merge``) — NOT the HLL
+  estimator caveat;
 - one-pass distributed build: the explode is depth rows per input row,
   but map-side partial aggregation collapses each task's output to at
   most depth×width rows before the single shuffle — the shuffle volume
@@ -32,8 +31,7 @@ per-row bucket counts. That buys three properties the suite leans on:
 
 Reference anchor: no counterpart in the reference (its windows store
 every item); north-rule scale surface, sibling of heavy_hitters.py
-(frequent items), sketches.py (distinct counts) and windows.py's GK
-quantiles — together the four classic mergeable summaries.
+(frequent items) and windows.py's GK quantiles.
 """
 
 from __future__ import annotations

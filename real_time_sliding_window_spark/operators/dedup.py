@@ -766,10 +766,8 @@ def cool_buckets(
 
 def simhash_bands(fp: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Band rows (doc_id, simhash, band_idx, band_val) from a fingerprint
-    frame (id, simhash): 4 × 15-bit slices — the shared LSH key shape of
-    batch ``simhash_neardup_pairs`` and the streaming ingest guard
-    (streaming/neardup_guard.py), kept in ONE place so both paths bucket
-    identically and an index built by either is queryable by the other."""
+    frame (id, simhash): 4 × 15-bit slices — the LSH key shape of
+    ``simhash_neardup_pairs``."""
     bb, mask = C.SIMHASH_BAND_BITS, C.SIMHASH_BAND_MASK
     return fp.select(
         F.col(id_col).alias("doc_id"),

@@ -26,8 +26,7 @@ tagged with a monotonically increasing ``version``): consumers read the
 latest version per group, the historical versions are the evolution log.
 
 Reference anchor: no counterpart in the reference (its windows store
-every item); this is north-rule scale surface, the frequency twin of
-streaming/sketches.py's distinct-count index.
+every item); this is north-rule scale surface.
 """
 
 from __future__ import annotations

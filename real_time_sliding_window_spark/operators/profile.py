@@ -7,8 +7,7 @@ replicated once per distinct column INSIDE the shuffle, so k columns cost a
 k× shuffle, not k scans); ``exact_distinct=False`` switches to HLL++
 ``approx_count_distinct`` sketches, which partial-merge like any other agg
 — no Expand, flat shuffle — the right default at 100 TB where a ±2%
-cardinality is what you wanted anyway (same estimator tradeoff as
-streaming/sketches.py, stated there).
+cardinality is what you wanted anyway.
 
 Values are surfaced as strings so the output schema is column-type-agnostic;
 keep profiled columns to ints/strings when cross-engine hash identity

@@ -308,11 +308,9 @@ def _probe_score_rank(
     n_probe: int,
     dedup: bool,
 ) -> DataFrame:
-    """Shared IVF query tail — used by BOTH ivf_kmeans_topk (batch) and
-    streaming/ann_index.ivf_index_topk, whose pinned guarantee is that
-    index queries return EXACTLY the batch answer: one definition means
-    the probe explode, the int-cosine, the spill dedup, and the
-    (cosine desc, neighbor_id asc) tie-break can never drift apart.
+    """IVF query tail of ivf_kmeans_topk: the probe explode, the
+    int-cosine, the spill dedup, and the (cosine desc, neighbor_id asc)
+    tie-break.
     ``assigned``: (cid, vec_id, qv) rows; ``queries``: (vec_id, qv)."""
     probe_col = (
         _assign_udf(centroids)("qv")

@@ -46,14 +46,11 @@ def _ship_package(spark: SparkSession) -> None:
 def _export_pythonpath() -> None:
     """Put the package's parent dir on PYTHONPATH before the JVM starts.
 
-    ``addPyFile`` covers regular UDF workers, but transformWithStateInPandas
-    spawns a long-lived StreamingPythonRunner that unpickles the stateful
-    processor by module import at initialization — before py-files land.
     The Python worker daemon (``spark.python.daemon.module``) is imported
-    the same way, before any py-file exists. Local mode inherits the driver
-    env, so exporting PYTHONPATH here covers both; on a cluster, ship the
-    zip with --py-files AND set spark.executorEnv.PYTHONPATH so executors
-    can import the daemon and TWS processors.
+    by module name when the daemon starts, before any ``addPyFile`` lands.
+    Local mode inherits the driver env, so exporting PYTHONPATH here
+    covers it; on a cluster, ship the zip with --py-files AND set
+    spark.executorEnv.PYTHONPATH so executors can import the daemon.
     """
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")

@@ -74,74 +74,6 @@ def test_bucketed_join_no_join_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_neardup_guard_bucketed_probe_no_index_shuffle(spark, tmp_path):
-    """VERDICT r04 #3: with the index in a BucketedIndexSink, the guard's
-    per-batch probe join must NOT shuffle the accumulated index — the
-    index side comes hash-partitioned straight from the bucketed scan and
-    only the (batch-sized) probe side exchanges. The directory-per-batch
-    parquet sink, by contrast, re-shuffles the whole index every batch."""
-    from pyspark.sql import functions as F
-
-    from real_time_sliding_window_spark.operators.dedup import simhash_bands
-    from real_time_sliding_window_spark.storage import join_shuffle_count
-    from real_time_sliding_window_spark.streaming.sink import (
-        BucketedIndexSink,
-        ExactlyOnceParquetSink,
-    )
-
-    def bands(ids):
-        fp = spark.createDataFrame(
-            [(str(i), (i * 2654435761) % (1 << 60)) for i in ids],
-            schema="doc_id string, simhash long",
-        )
-        return simhash_bands(fp)
-
-    def probe_join(index):
-        probe = bands(range(100, 120))
-        return (
-            probe.alias("n")
-            .join(
-                index.alias("i"),
-                on=[
-                    F.col("n.band_idx") == F.col("i.band_idx"),
-                    F.col("n.band_val") == F.col("i.band_val"),
-                ],
-            )
-            .filter(F.bit_count(F.expr("n.simhash ^ i.simhash")) <= 3)
-        )
-
-    bsink = BucketedIndexSink(
-        str(tmp_path / "gidx"), "guard_idx_plan_b",
-        keys=["band_idx", "band_val"], n_buckets=4,
-    )
-    psink = ExactlyOnceParquetSink(str(tmp_path / "pidx"))
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for b, ids in enumerate((range(0, 40), range(40, 80))):
-            bsink.write_batch(bands(ids), b)
-            psink.write_batch(bands(ids), b)
-        bucketed = probe_join(
-            bsink.read_committed(spark, with_batch_id=True)
-            .filter(F.col("batch_id") != 2).drop("batch_id")
-        )
-        plain = probe_join(
-            psink.read_committed(spark, with_batch_id=True)
-            .filter(F.col("batch_id") != 2).drop("batch_id")
-        )
-        assert join_shuffle_count(bucketed) == 1  # probe side only
-        assert join_shuffle_count(plain) >= 2     # index side shuffles too
-        # layout is free semantically: identical candidate sets
-        key = lambda df: sorted(
-            (r["n.doc_id"], r["i.doc_id"])
-            for r in df.select("n.doc_id", "i.doc_id").collect()
-        )
-        assert key(bucketed) == key(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS guard_idx_plan_b")
-
-
 def test_repetition_zero_shuffle_map_plan(spark):
     """The sorted-run-length plan must stay map-only (no explode+groupBy):
     at most the ensure_parallelism exchange, no partial agg needed."""

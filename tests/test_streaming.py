@@ -620,20 +620,6 @@ class TestIcebergGating:
         with pytest.raises(RuntimeError, match="ExactlyOnceParquetSink"):
             iceberg.write_stream_to_iceberg(stream, "rtsw.db.t", str(tmp_path / "ck"))
 
-    def test_tws_v2_gated_without_protobuf(self, spark, tmp_path):
-        """transformWithStateInPandas path: refuse clearly when the protobuf
-        runtime its state server needs is absent (this sandbox), pointing at
-        the applyInPandasWithState engine."""
-        from real_time_sliding_window_spark.operators import stateful_tws
-
-        if stateful_tws.tws_available():
-            pytest.skip("protobuf present — gate not exercised")
-        src = tmp_path / "tws_in"
-        src.mkdir()
-        stream = spark.readStream.schema(synth.TRANSCRIPT_SCHEMA).parquet(str(src))
-        with pytest.raises(RuntimeError, match="ring_buffer_stream"):
-            stateful_tws.ring_buffer_stream_v2(stream, timedelta(seconds=1))
-
 
 class TestRoleGauges:
     def test_observed_per_role_counts(self, spark, tmp_path):
@@ -1223,654 +1209,6 @@ class TestStreamingPostings:
         assert key(from_idx) == key(from_batch)
 
 
-class TestNearDupIngestGuard:
-    """VERDICT r03 #2: streaming near-dup rejection AT INGEST — an
-    accumulating simhash band index through the exactly-once sink."""
-
-    SCHEMA = "doc_id string, text string"
-    UNIQ = {
-        "a": "the quick brown fox jumps over the lazy dog near the river",
-        "b": "spark structured streaming maintains state across micro "
-             "batch boundaries with watermarks",
-        "c": "connected components converge after logarithmically many "
-             "rounds of minimum propagation",
-        "d": "parquet column chunks compress runs of similar values into "
-             "compact dictionary pages",
-    }
-
-    def _run(self, spark, tmp_path, pushes, name, **kw):
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-
-        feed = FileFeed(spark, str(tmp_path / f"{name}_in"))
-        idx = ExactlyOnceParquetSink(str(tmp_path / f"{name}_idx"))
-        acc = ExactlyOnceParquetSink(str(tmp_path / f"{name}_acc"))
-        ckpt = str(tmp_path / f"{name}_ckpt")
-        for push in pushes:
-            feed.push(spark.createDataFrame(push, schema=self.SCHEMA))
-            run_neardup_ingest(
-                feed.stream(self.SCHEMA), idx, ckpt, accept_sink=acc, **kw
-            )
-        return feed, idx, acc, ckpt
-
-    def test_single_batch_equals_batch_survivors(self, spark, tmp_path):
-        """Whole corpus in ONE batch == batch simhash pairs -> CC ->
-        min-id survivors (the guard's stated equivalence)."""
-        from real_time_sliding_window_spark.operators.dedup import (
-            connected_components,
-            simhash_neardup_pairs,
-        )
-
-        U = self.UNIQ
-        corpus = pd.DataFrame({
-            "doc_id": ["d0", "d1", "d2", "d3", "d4"],
-            "text": [U["a"], U["a"], U["b"], U["b"], U["c"]],
-        })
-        _, idx, acc, _ = self._run(spark, tmp_path, [corpus], "one")
-        got = sorted(set(acc.read_committed(spark).toPandas().doc_id))
-
-        full = spark.createDataFrame(corpus, schema=self.SCHEMA)
-        pairs = simhash_neardup_pairs(full, max_bucket=None)
-        comp = connected_components(
-            pairs.select("doc_a", "doc_b"), full.select("doc_id"), "doc_id"
-        ).toPandas()
-        want = sorted(comp[comp.doc_id == comp.cluster_id].doc_id)
-        assert got == want == ["d0", "d2", "d4"]
-        # index holds exactly the accepted docs' band rows (4 each)
-        bands = idx.read_committed(spark).toPandas()
-        assert sorted(set(bands.doc_id)) == want
-        assert (bands.groupby("doc_id").size() == 4).all()
-
-    def test_multi_batch_greedy_and_redelivery(self, spark, tmp_path):
-        """Cross-batch greedy rejection, hamming-0 re-ingest rejection,
-        and exactly-once re-run stability."""
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["d0", "d1", "d2"],
-                           "text": [U["a"], U["a"], U["b"]]})
-        b2 = pd.DataFrame({"doc_id": ["d3", "d4"],
-                           "text": [U["a"], U["c"]]})   # d3 dup of accepted d0
-        b3 = pd.DataFrame({"doc_id": ["d5"], "text": [U["c"]]})  # dup of d4
-        feed, idx, acc, ckpt = self._run(
-            spark, tmp_path, [b1, b2, b3], "multi"
-        )
-        accepted = sorted(set(acc.read_committed(spark).toPandas().doc_id))
-        assert accepted == ["d0", "d2", "d4"]
-        # re-run with no new files: committed sets unchanged
-        n_idx = len(idx.read_committed(spark).toPandas())
-        run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                           accept_sink=acc)
-        assert len(idx.read_committed(spark).toPandas()) == n_idx
-        assert sorted(set(
-            acc.read_committed(spark).toPandas().doc_id
-        )) == ["d0", "d2", "d4"]
-
-    def test_accepted_set_pairwise_non_neardup(self, spark, tmp_path):
-        """Invariant: no two ACCEPTED docs are near-dups of each other,
-        regardless of batching."""
-        from real_time_sliding_window_spark.operators.dedup import (
-            simhash_neardup_pairs,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["a0", "a1"],
-                           "text": [U["a"], U["b"]]})
-        b2 = pd.DataFrame({"doc_id": ["a2", "a3"],
-                           "text": [U["b"], U["d"]]})
-        _, _, acc, _ = self._run(spark, tmp_path, [b1, b2], "inv")
-        accepted = acc.read_committed(spark)
-        n_pairs = simhash_neardup_pairs(
-            accepted, max_bucket=None
-        ).count()
-        assert n_pairs == 0
-        assert sorted(set(accepted.toPandas().doc_id)) == ["a0", "a1", "a3"]
-
-    def test_embedding_guard_greedy_and_equivalence(self, spark, tmp_path):
-        """Embedding-mode (semantic) ingest guard: single-batch input ==
-        batch embedding_neardup_pairs + CC min-id survivors; a later
-        re-ingest of an accepted vector (cosine 1) is rejected; bigint
-        vec_ids survive the typed semi-join."""
-        import numpy as np
-
-        from real_time_sliding_window_spark.operators.dedup import (
-            connected_components,
-            embedding_neardup_pairs,
-        )
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_embedding_ingest,
-        )
-
-        rng = np.random.default_rng(11)
-        vecs = rng.normal(size=(8, 16)).astype(np.float32)
-        vecs[1] = vecs[0] + 0.01   # near-dup pair (0, 1)
-        vecs[4] = vecs[3] * 1.02   # near-dup pair (3, 4)
-        schema = "vec_id long, embedding array<float>"
-
-        def pdf(ids, rows_):
-            return pd.DataFrame(
-                {"vec_id": ids,
-                 "embedding": [list(map(float, r)) for r in rows_]}
-            )
-
-        b1 = pdf(range(8), vecs)
-        b2 = pdf([100, 101], [vecs[0], rng.normal(size=16)])  # 100 ~ acc 0
-
-        feed = FileFeed(spark, str(tmp_path / "eg_in"))
-        idx = ExactlyOnceParquetSink(str(tmp_path / "eg_idx"))
-        acc = ExactlyOnceParquetSink(str(tmp_path / "eg_acc"))
-        ckpt = str(tmp_path / "eg_ckpt")
-        for push in (b1, b2):
-            feed.push(spark.createDataFrame(push, schema=schema))
-            run_embedding_ingest(
-                feed.stream(schema), idx, ckpt, accept_sink=acc,
-                min_cosine=0.95,
-            )
-
-        accepted = sorted(acc.read_committed(spark).toPandas().vec_id)
-        # batch-side survivors of b1 alone
-        full = spark.createDataFrame(b1, schema=schema)
-        pairs = embedding_neardup_pairs(
-            full, min_cosine=0.95, multiprobe=True
-        )
-        comp = connected_components(
-            pairs.select(
-                F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-            ),
-            full.select(F.col("vec_id").alias("doc_id")),
-            "doc_id",
-        ).toPandas()
-        want_b1 = sorted(
-            int(v) for v in comp[comp.doc_id == comp.cluster_id].doc_id
-        )
-        # batch 2: 100 rejected (cosine 1 vs accepted 0), 101 accepted
-        assert accepted == want_b1 + [101]
-        assert 1 not in accepted and 4 not in accepted and 100 not in accepted
-        # accepted rows keep the caller's bigint id type
-        assert acc.read_committed(spark).schema["vec_id"].dataType.typeName() == "long"
-
-    def test_retry_shortcircuit_replays_committed_decision(self, spark,
-                                                           tmp_path):
-        """Advice r4: a foreachBatch RETRY of a batch whose index write
-        committed (crash between index commit and accept/checkpoint
-        commit) replays the RECORDED decision — the committed index rows
-        — instead of recomputing against an index that now contains this
-        very batch. Pinned by simulating the crash: wipe the checkpoint
-        and the accept sink's commit, re-run, require the original
-        accepted set and an unchanged index."""
-        import shutil
-
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["d0", "d1", "d2"],
-                           "text": [U["a"], U["a"], U["b"]]})
-        feed = FileFeed(spark, str(tmp_path / "rt_in"))
-        idx = ExactlyOnceParquetSink(str(tmp_path / "rt_idx"))
-        acc = ExactlyOnceParquetSink(str(tmp_path / "rt_acc"))
-        ckpt = str(tmp_path / "rt_ckpt")
-        feed.push(spark.createDataFrame(b1, schema=self.SCHEMA))
-        run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                           accept_sink=acc)
-        orig = sorted(set(acc.read_committed(spark).toPandas().doc_id))
-        assert orig == ["d0", "d2"]
-        n_idx = len(idx.read_committed(spark).toPandas())
-
-        # crash simulation: index committed; accept + checkpoint lost
-        shutil.rmtree(ckpt)
-        shutil.rmtree(acc.root)
-        acc2 = ExactlyOnceParquetSink(str(tmp_path / "rt_acc"))
-        run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                           accept_sink=acc2)
-        assert sorted(set(
-            acc2.read_committed(spark).toPandas().doc_id
-        )) == orig
-        assert len(idx.read_committed(spark).toPandas()) == n_idx
-
-    def test_same_id_cross_batch_redelivery_rejected(self, spark,
-                                                     tmp_path):
-        """Advice r4: an at-least-once source redelivering a doc in a
-        LATER batch under its ORIGINAL doc_id must be caught as a
-        hamming-0 near-dup of its accepted original — no duplicate rows
-        in the accept sink, no duplicate band rows in the index."""
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["x1", "x2"],
-                           "text": [U["a"], U["b"]]})
-        b2 = pd.DataFrame({"doc_id": ["x1"], "text": [U["a"]]})  # same id!
-        _, idx, acc, _ = self._run(spark, tmp_path, [b1, b2], "sameid")
-        accepted = acc.read_committed(spark).toPandas()
-        assert sorted(accepted.doc_id) == ["x1", "x2"]  # exactly once
-        bands = idx.read_committed(spark).toPandas()
-        assert len(bands) == 8  # 2 docs x 4 bands, batch 2 added none
-
-    def test_embedding_retry_transitive_cluster(self, spark, tmp_path):
-        """Advice r4's exact divergence scenario, pinned: a transitive
-        within-batch cluster A~B, B~R, A!~R (min-id keeps only A). A
-        naive retry recompute against an index holding A's rows rejects
-        B but lets R survive (R no longer meets B) — accepting {A, R}.
-        The short-circuit must reproduce {A}."""
-        import shutil
-
-        import numpy as np
-
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_embedding_ingest,
-        )
-
-        # unit vectors at 0 / 25 / 50 degrees in a 16-dim plane:
-        # cos(A,B) = cos(B,R) = cos(25°) ≈ .906 >= .86; cos(A,R) ≈ .643 < .86
-        def rot(deg):
-            v = np.zeros(16, dtype=np.float64)
-            v[0] = np.cos(np.radians(deg))
-            v[1] = np.sin(np.radians(deg))
-            return list(v)
-
-        schema = "vec_id long, embedding array<float>"
-        b1 = pd.DataFrame(
-            {"vec_id": [0, 1, 2],
-             "embedding": [rot(0), rot(25), rot(50)]}
-        )
-        feed = FileFeed(spark, str(tmp_path / "tr_in"))
-        idx = ExactlyOnceParquetSink(str(tmp_path / "tr_idx"))
-        acc = ExactlyOnceParquetSink(str(tmp_path / "tr_acc"))
-        ckpt = str(tmp_path / "tr_ckpt")
-        # n_planes=1: flip-1-bit multiprobe covers the whole bucket space,
-        # so EVERY pair is a candidate and the exact cosine filter alone
-        # decides — the transitive structure is guaranteed, not luck
-        kw = dict(accept_sink=acc, min_cosine=0.86, n_planes=1)
-        feed.push(spark.createDataFrame(b1, schema=schema))
-        run_embedding_ingest(feed.stream(schema), idx, ckpt, **kw)
-        # construction check: the cluster resolved transitively to {0}
-        # (if (1,2) had not been a candidate pair, 2 would survive)
-        assert sorted(acc.read_committed(spark).toPandas().vec_id) == [0]
-
-        # crash between index commit and accept/checkpoint commit
-        shutil.rmtree(ckpt)
-        shutil.rmtree(acc.root)
-        acc2 = ExactlyOnceParquetSink(str(tmp_path / "tr_acc"))
-        kw["accept_sink"] = acc2
-        run_embedding_ingest(feed.stream(schema), idx, ckpt, **kw)
-        got = sorted(acc2.read_committed(spark).toPandas().vec_id)
-        assert got == [0]  # NOT [0, 2]
-        assert sorted(set(
-            idx.read_committed(spark).toPandas().vec_id
-        )) == ["0"]
-
-    def test_bucketed_index_sink_parity(self, spark, tmp_path):
-        """The BucketedIndexSink (production no-index-shuffle layout)
-        produces decision-identical results to the parquet sink across
-        multi-batch greedy ingest, including exactly-once re-runs."""
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-        from real_time_sliding_window_spark.streaming.sink import (
-            BucketedIndexSink,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["d0", "d1", "d2"],
-                           "text": [U["a"], U["a"], U["b"]]})
-        b2 = pd.DataFrame({"doc_id": ["d3", "d4"],
-                           "text": [U["a"], U["c"]]})
-        b3 = pd.DataFrame({"doc_id": ["d5"], "text": [U["c"]]})
-        feed = FileFeed(spark, str(tmp_path / "bk_in"))
-        idx = BucketedIndexSink(
-            str(tmp_path / "bk_idx"), "bk_idx_table",
-            keys=["band_idx", "band_val"], n_buckets=4,
-        )
-        acc = ExactlyOnceParquetSink(str(tmp_path / "bk_acc"))
-        ckpt = str(tmp_path / "bk_ckpt")
-        try:
-            for push in (b1, b2, b3):
-                feed.push(spark.createDataFrame(push, schema=self.SCHEMA))
-                run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                                   accept_sink=acc)
-            accepted = sorted(set(
-                acc.read_committed(spark).toPandas().doc_id
-            ))
-            assert accepted == ["d0", "d2", "d4"]  # == parquet-sink run
-            idx_rows = idx.read_committed(spark).toPandas()
-            assert sorted(set(idx_rows.doc_id)) == accepted
-            assert (idx_rows.groupby("doc_id").size() == 4).all()
-            # re-run with no new files: exactly-once no-op
-            run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                               accept_sink=acc)
-            assert len(idx.read_committed(spark).toPandas()) == len(idx_rows)
-        finally:
-            spark.sql("DROP TABLE IF EXISTS bk_idx_table")
-
-    def test_bucketed_index_sink_compaction(self, spark, tmp_path):
-        """r5: compact() rewrites the accumulated index as ONE
-        n_buckets-file generation — rows identical (batch_id preserved,
-        so read_batch/retry replay still work), file count reset, and
-        subsequent guard batches append to the new generation."""
-        import glob
-
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-        from real_time_sliding_window_spark.streaming.sink import (
-            BucketedIndexSink,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({"doc_id": ["d0", "d1", "d2"],
-                           "text": [U["a"], U["a"], U["b"]]})
-        b2 = pd.DataFrame({"doc_id": ["d3", "d4"],
-                           "text": [U["a"], U["c"]]})
-        b3 = pd.DataFrame({"doc_id": ["d5"], "text": [U["d"]]})
-        feed = FileFeed(spark, str(tmp_path / "cp_in"))
-        idx = BucketedIndexSink(
-            str(tmp_path / "cp_idx"), "cp_idx_table",
-            keys=["band_idx", "band_val"], n_buckets=4,
-        )
-        acc = ExactlyOnceParquetSink(str(tmp_path / "cp_acc"))
-        ckpt = str(tmp_path / "cp_ckpt")
-        try:
-            for push in (b1, b2):
-                feed.push(spark.createDataFrame(push, schema=self.SCHEMA))
-                run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                                   accept_sink=acc)
-            key = lambda df: sorted(
-                map(tuple, df.toPandas().itertuples(index=False))
-            )
-            before = key(idx.read_committed(spark, with_batch_id=True))
-            gen = idx.compact(spark)
-            assert gen == 1
-            # rows identical, batch_id preserved, per-batch readback works
-            assert key(
-                idx.read_committed(spark, with_batch_id=True)
-            ) == before
-            assert idx.read_batch(spark, 1).select(
-                "doc_id"
-            ).distinct().count() == 1  # batch 1 accepted only d4
-            # one generation's worth of files
-            files = glob.glob(
-                str(tmp_path / "cp_idx" / "data_g1" / "*.parquet")
-            )
-            assert 0 < len(files) <= 4
-            # the guard keeps working against the compacted generation
-            feed.push(spark.createDataFrame(b3, schema=self.SCHEMA))
-            run_neardup_ingest(feed.stream(self.SCHEMA), idx, ckpt,
-                               accept_sink=acc)
-            accepted = sorted(set(
-                acc.read_committed(spark).toPandas().doc_id
-            ))
-            assert accepted == ["d0", "d2", "d4", "d5"]
-            assert len(idx.committed_batches()) == 3
-        finally:
-            spark.sql("DROP TABLE IF EXISTS cp_idx_table")
-            spark.sql("DROP TABLE IF EXISTS cp_idx_table_g1")
-
-    def test_compact_heals_torn_retry_duplicates(self, spark, tmp_path):
-        """Advice r5: a crash between the table append and the marker
-        rename, followed by a retry's second append, duplicates one
-        batch's rows under the same batch_id. Presence-based probes are
-        unaffected, but row-COUNTING read_committed consumers (the
-        guards' occupancy fallback) would over-count — compact() now
-        distinct()s the accumulated rows, restoring exact counts while
-        preserving batch_id readback."""
-        from pyspark.sql import functions as SF
-
-        from real_time_sliding_window_spark.streaming.sink import (
-            BucketedIndexSink,
-        )
-
-        idx = BucketedIndexSink(
-            str(tmp_path / "tr_idx"), "tr_idx_table",
-            keys=["band_idx", "band_val"], n_buckets=2,
-        )
-        rows = spark.createDataFrame(
-            pd.DataFrame({
-                "doc_id": ["d0", "d1"],
-                "band_idx": [0, 0],
-                "band_val": [7, 9],
-            })
-        )
-        try:
-            # torn retry: first append lands in the table but the crash
-            # happens before the marker rename ...
-            idx._write(
-                rows.withColumn("batch_id", SF.lit(0)),
-                idx.table, idx.data_dir,
-            )
-            # ... and the retry re-appends the same batch and commits
-            idx.write_batch(rows, 0)
-            torn = idx.read_committed(spark, with_batch_id=True)
-            assert torn.count() == 4  # duplicated — the advice's hazard
-            assert idx.compact(spark) == 1
-            healed = idx.read_committed(spark, with_batch_id=True)
-            assert healed.count() == 2
-            assert sorted(
-                map(tuple, healed.toPandas().itertuples(index=False))
-            ) == [("d0", 0, 7, 0), ("d1", 0, 9, 0)]
-            assert idx.read_batch(spark, 0).count() == 2
-        finally:
-            spark.sql("DROP TABLE IF EXISTS tr_idx_table")
-            spark.sql("DROP TABLE IF EXISTS tr_idx_table_g1")
-
-    def test_occupancy_increment_log_parity_and_backfill(self, spark,
-                                                         tmp_path):
-        """r5: with occupancy_sink wired, the hot-bucket cap computed
-        from summed increments must make IDENTICAL decisions to the
-        index-re-agg path in a regime where the cap bites (5 clones >
-        max_bucket=3 -> bands hot -> candidates skipped -> all clones
-        accepted; a 6th clone in batch 2 still meets a hot bucket); the
-        increment sums equal the index's per-bucket occupancy; and a
-        crash between index and occupancy commit is healed by the retry
-        backfill."""
-        import os
-        import shutil
-
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-
-        U = self.UNIQ
-        b1 = pd.DataFrame({
-            "doc_id": [f"x{i}" for i in range(5)] + ["y0"],
-            "text": [U["a"]] * 5 + [U["b"]],
-        })
-        b2 = pd.DataFrame({"doc_id": ["x9", "z0"],
-                           "text": [U["a"], U["c"]]})
-
-        def run(name, with_occ):
-            feed = FileFeed(spark, str(tmp_path / f"{name}_in"))
-            idx = ExactlyOnceParquetSink(str(tmp_path / f"{name}_idx"))
-            acc = ExactlyOnceParquetSink(str(tmp_path / f"{name}_acc"))
-            occ = (ExactlyOnceParquetSink(str(tmp_path / f"{name}_occ"))
-                   if with_occ else None)
-            ckpt = str(tmp_path / f"{name}_ckpt")
-            for push in (b1, b2):
-                feed.push(spark.createDataFrame(push, schema=self.SCHEMA))
-                run_neardup_ingest(
-                    feed.stream(self.SCHEMA), idx, ckpt, accept_sink=acc,
-                    max_bucket=3, occupancy_sink=occ,
-                )
-            return idx, acc, occ, ckpt
-
-        idx_a, acc_a, _, _ = run("oa", with_occ=False)
-        idx_b, acc_b, occ_b, ckpt_b = run("ob", with_occ=True)
-        want = sorted(set(acc_a.read_committed(spark).toPandas().doc_id))
-        got = sorted(set(acc_b.read_committed(spark).toPandas().doc_id))
-        assert got == want
-        # the cap bit: all clones survived (hot buckets skip candidates)
-        assert set(f"x{i}" for i in range(5)) | {"x9"} <= set(got)
-
-        def occ_sums(occ):
-            return (
-                occ.read_committed(spark).toPandas()
-                .groupby(["band_idx", "band_val"]).n.sum().to_dict()
-            )
-
-        def idx_counts(idx):
-            pdf = idx.read_committed(spark).toPandas()
-            return pdf.groupby(["band_idx", "band_val"]).size().to_dict()
-
-        assert occ_sums(occ_b) == idx_counts(idx_b)
-
-        # crash between index commit and occupancy commit on batch 1:
-        # drop occupancy's batch-1 commit, then drive the RETRY (same
-        # rows, same batch id — the foreachBatch redelivery shape)
-        # through the module-level body; the short-circuit must backfill
-        # the increments from the committed index rows
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            ingest_text_batch,
-        )
-
-        os.remove(os.path.join(occ_b.commit_dir, "1.json"))
-        shutil.rmtree(os.path.join(occ_b.data_dir, "batch_id=1"))
-        assert occ_sums(occ_b) != idx_counts(idx_b)  # crash state visible
-        ingest_text_batch(
-            spark, spark.createDataFrame(b2, schema=self.SCHEMA), 1,
-            idx_b, accept_sink=acc_b, max_bucket=3, occupancy_sink=occ_b,
-        )
-        assert occ_sums(occ_b) == idx_counts(idx_b)
-        assert sorted(set(
-            acc_b.read_committed(spark).toPandas().doc_id
-        )) == want
-
-    def test_embedding_occupancy_log_parity(self, spark, tmp_path):
-        """r5: the embedding guard's occupancy increment log makes
-        identical decisions to the index-re-agg path in a clone-heavy
-        capped regime, and its sums equal the index's per-bucket
-        occupancy."""
-        import numpy as np
-
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_embedding_ingest,
-        )
-
-        rng = np.random.default_rng(23)
-        base = rng.normal(size=16)
-        other = rng.normal(size=16)
-        schema = "vec_id long, embedding array<float>"
-        b1 = pd.DataFrame({
-            "vec_id": list(range(5)) + [50],
-            "embedding": [list(map(float, base))] * 5
-            + [list(map(float, other))],
-        })
-        b2 = pd.DataFrame({
-            "vec_id": [9, 60],
-            "embedding": [list(map(float, base)),
-                          list(map(float, rng.normal(size=16)))],
-        })
-
-        def run(name, with_occ):
-            feed = FileFeed(spark, str(tmp_path / f"{name}_in"))
-            idx = ExactlyOnceParquetSink(str(tmp_path / f"{name}_idx"))
-            acc = ExactlyOnceParquetSink(str(tmp_path / f"{name}_acc"))
-            occ = (ExactlyOnceParquetSink(str(tmp_path / f"{name}_occ"))
-                   if with_occ else None)
-            ckpt = str(tmp_path / f"{name}_ckpt")
-            for push in (b1, b2):
-                feed.push(spark.createDataFrame(push, schema=schema))
-                run_embedding_ingest(
-                    feed.stream(schema), idx, ckpt, accept_sink=acc,
-                    min_cosine=0.9, n_planes=4, max_bucket=3,
-                    occupancy_sink=occ,
-                )
-            return idx, acc, occ
-
-        _, acc_a, _ = run("va", with_occ=False)
-        idx_b, acc_b, occ_b = run("vb", with_occ=True)
-        want = sorted(acc_a.read_committed(spark).toPandas().vec_id)
-        got = sorted(acc_b.read_committed(spark).toPandas().vec_id)
-        assert got == want
-        # the cap bit: the clones survived via hot-bucket candidate skip
-        assert set(range(5)) | {9} <= set(got)
-        occ_sums = (
-            occ_b.read_committed(spark).toPandas()
-            .groupby("bucket").n.sum().to_dict()
-        )
-        idx_counts = (
-            idx_b.read_committed(spark).toPandas()
-            .groupby("bucket").size().to_dict()
-        )
-        assert occ_sums == idx_counts
-
-    def test_numeric_min_id_not_lexicographic(self, spark, tmp_path):
-        """Review r4: bigint doc_ids must resolve clusters by NUMERIC
-        min (min(9,10)=9), not string min ('10'<'9') — the guard keeps
-        the caller's id type end to end now."""
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            run_neardup_ingest,
-        )
-
-        schema = "doc_id long, text string"
-        b1 = pd.DataFrame({"doc_id": [10, 9],
-                           "text": [self.UNIQ["a"], self.UNIQ["a"]]})
-        feed = FileFeed(spark, str(tmp_path / "nid_in"))
-        idx = ExactlyOnceParquetSink(str(tmp_path / "nid_idx"))
-        acc = ExactlyOnceParquetSink(str(tmp_path / "nid_acc"))
-        feed.push(spark.createDataFrame(b1, schema=schema))
-        run_neardup_ingest(
-            feed.stream(schema), idx, str(tmp_path / "nid_ckpt"),
-            accept_sink=acc,
-        )
-        accepted = acc.read_committed(spark).toPandas()
-        assert list(accepted.doc_id) == [9]
-        assert accepted.doc_id.dtype.kind == "i"  # caller's bigint kept
-
-    def test_hot_banded_doc_survives_cap(self, spark):
-        """Review r4: max_bucket caps candidate generation, never the
-        acceptance universe — docs whose every band is hot must still be
-        accepted (they just meet no candidates), not silently dropped."""
-        from real_time_sliding_window_spark.operators.dedup import (
-            simhash_bands,
-        )
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            _accepted_ids,
-        )
-
-        # 30 docs with IDENTICAL simhash -> every band bucket holds 30
-        rows = [(f"d{i:02d}", 0) for i in range(30)]
-        bands = simhash_bands(spark.createDataFrame(
-            pd.DataFrame(rows, columns=["doc_id", "simhash"]),
-            schema="doc_id string, simhash long",
-        ))
-        acc = sorted(_accepted_ids(bands, None, 3, 8).toPandas().doc_id)
-        # no candidates generated (all buckets hot) -> ALL accepted;
-        # the pre-review draft dropped every doc here
-        assert acc == sorted(f"d{i:02d}" for i in range(30))
-
-    def test_cross_batch_chain_is_greedy(self, spark):
-        """The documented divergence: A~B, B~C, A!~C with C in a later
-        batch — batch CC keeps {A}; greedy ingest keeps {A, C}. Driven
-        through the decision core with crafted fingerprints (simhash
-        text -> exact hamming relations are not constructible)."""
-        from real_time_sliding_window_spark.operators.dedup import (
-            simhash_bands,
-        )
-        from real_time_sliding_window_spark.streaming.neardup_guard import (
-            _accepted_ids,
-        )
-
-        def fp(rows_):
-            return spark.createDataFrame(
-                pd.DataFrame(rows_, columns=["doc_id", "simhash"]),
-                schema="doc_id string, simhash long",
-            )
-
-        # A=0b000000, B=0b000111 (h(A,B)=3), C=0b111111 (h(B,C)=3,
-        # h(A,C)=6 > 3); all share bands 1-3 (zeros) so all are candidates
-        batch1 = simhash_bands(fp([("A", 0), ("B", 7)]))
-        acc1 = _accepted_ids(batch1, None, 3, None).toPandas()
-        assert sorted(acc1.doc_id) == ["A"]
-        index = batch1.join(
-            spark.createDataFrame(pd.DataFrame({"doc_id": acc1.doc_id})),
-            "doc_id",
-        )
-        batch2 = simhash_bands(fp([("C", 63)]))
-        acc2 = _accepted_ids(batch2, index, 3, None).toPandas()
-        assert sorted(acc2.doc_id) == ["C"]  # greedy: B was never accepted
-
-
 class TestHeavyHitters:
     def test_misra_gries_guarantees_over_batches(self, spark, tmp_path):
         """r4: streamed Misra-Gries summary (m=8) over 3 micro-batches
@@ -1966,132 +1304,6 @@ class TestHeavyHitters:
         assert g2 == {"x": 2, "y": 1}
         # and the log is strictly bigger than the latest view
         assert len(log.toPandas()) > len(got)
-
-
-class TestDistinctSketchIndex:
-    def test_incremental_union_equals_single_pass_and_truth(
-        self, spark, tmp_path
-    ):
-        """r4: cross-batch repeats dedup by construction, redelivered
-        triggers are idempotent, the estimate is deterministic for a
-        given index, and EVERY batch cut (incremental, regrouped,
-        single-pass) lands within HLL error of the truth — while the
-        exact estimate value shifts sub-percent with merge history
-        (HIP-vs-union estimator + mode promotion; see sketches.py for
-        why the stronger equalities are deliberately NOT claimed)."""
-        from real_time_sliding_window_spark.streaming.sketches import (
-            distinct_estimates,
-            run_distinct_index,
-        )
-
-        schema = "grp string, user_id long"
-        # group a: 600 distinct users spread over 3 batches WITH overlap
-        # (users 0-299 / 200-449 / 400-599); group b: 50 distinct
-        b1 = pd.DataFrame({"grp": ["a"] * 300 + ["b"] * 50,
-                           "user_id": list(range(300)) + list(range(50))})
-        b2 = pd.DataFrame({"grp": ["a"] * 250,
-                           "user_id": list(range(200, 450))})
-        b3 = pd.DataFrame({"grp": ["a"] * 200 + ["b"] * 50,
-                           "user_id": list(range(400, 600))
-                           + list(range(50))})
-
-        feed = FileFeed(spark, str(tmp_path / "hll_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "hll_idx"))
-        ckpt = str(tmp_path / "hll_ckpt")
-        for push in (b1, b2, b3):
-            feed.push(spark.createDataFrame(push, schema=schema))
-            run_distinct_index(
-                feed.stream(schema), sink, ckpt, ["grp"], "user_id"
-            )
-        # re-run with no new data: index unchanged (exactly-once)
-        n_rows = sink.read_committed(spark).count()
-        run_distinct_index(feed.stream(schema), sink, ckpt, ["grp"],
-                           "user_id")
-        assert sink.read_committed(spark).count() == n_rows
-
-        got = {
-            r.grp: int(r.approx_distinct)
-            for r in distinct_estimates(
-                sink.read_committed(spark), ["grp"]
-            ).collect()
-        }
-        full = spark.createDataFrame(
-            pd.concat([b1, b2, b3]), schema=schema
-        )
-        single = {
-            r.grp: int(r.est)
-            for r in full.groupBy("grp").agg(
-                F.hll_sketch_estimate(
-                    F.hll_sketch_agg("user_id", F.lit(12))
-                ).alias("est")
-            ).collect()
-        }
-        # batch-cut insensitivity: union of {b1}, {b2}, {b3} sketches ==
-        # union of a re-grouped index ({b1 ∪ b2} sketch + {b3} sketch)
-        regrouped = spark.createDataFrame(
-            pd.concat([b1, b2]), schema=schema
-        ).groupBy("grp").agg(
-            F.hll_sketch_agg("user_id", F.lit(12)).alias("sketch")
-        ).unionByName(
-            spark.createDataFrame(b3, schema=schema).groupBy("grp").agg(
-                F.hll_sketch_agg("user_id", F.lit(12)).alias("sketch")
-            )
-        )
-        got_regrouped = {
-            r.grp: int(r.approx_distinct)
-            for r in distinct_estimates(regrouped, ["grp"]).collect()
-        }
-        # determinism for a given index: re-query reproduces exactly
-        again = {
-            r.grp: int(r.approx_distinct)
-            for r in distinct_estimates(
-                sink.read_committed(spark), ["grp"]
-            ).collect()
-        }
-        assert got == again
-        # every cut within HLL error of truth; cuts agree sub-percent
-        for grp, truth in (("a", 600), ("b", 50)):
-            for est in (got[grp], got_regrouped[grp], single[grp]):
-                assert abs(est - truth) / truth < 0.05
-            assert abs(got[grp] - got_regrouped[grp]) / truth < 0.02
-            assert abs(got[grp] - single[grp]) / truth < 0.02
-
-    def test_since_batch_retention_pruning(self, spark, tmp_path):
-        """VERDICT r04 #3: distinct_estimates(since_batch=k) unions only
-        the kept batches (sliding retention) — values seen solely before
-        the horizon are forgotten; requires a with_batch_id read and
-        raises without one."""
-        import pytest as _pytest
-
-        from real_time_sliding_window_spark.streaming.sketches import (
-            distinct_estimates,
-            run_distinct_index,
-        )
-
-        schema = "grp string, user_id long"
-        # disjoint 100-user blocks per batch -> exact expectations
-        pushes = [
-            pd.DataFrame({"grp": ["a"] * 100,
-                          "user_id": list(range(k * 100, (k + 1) * 100))})
-            for k in range(3)
-        ]
-        feed = FileFeed(spark, str(tmp_path / "ret_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "ret_idx"))
-        ckpt = str(tmp_path / "ret_ckpt")
-        for push in pushes:
-            feed.push(spark.createDataFrame(push, schema=schema))
-            run_distinct_index(
-                feed.stream(schema), sink, ckpt, ["grp"], "user_id"
-            )
-        idx = sink.read_committed(spark, with_batch_id=True)
-        full = distinct_estimates(idx, ["grp"]).collect()[0]
-        kept = distinct_estimates(idx, ["grp"], since_batch=1).collect()[0]
-        assert abs(int(full.approx_distinct) - 300) / 300 < 0.05
-        assert abs(int(kept.approx_distinct) - 200) / 200 < 0.05
-        with _pytest.raises(ValueError, match="with_batch_id"):
-            distinct_estimates(
-                sink.read_committed(spark), ["grp"], since_batch=1
-            )
 
 
 class TestAsOfStreamJoin:
@@ -2488,164 +1700,6 @@ class TestBm25OverIndex:
         from_idx = bm25_score_postings(idx, q, k=5).toPandas()
         from_batch = bm25_topk(full, q, k=5).toPandas()
         assert key(from_idx) == key(from_batch)
-
-
-class TestGramIndex:
-    """r5: incremental Gramian index — exact integer partials per batch
-    through the exactly-once sink; totals are BIT-IDENTICAL to the batch
-    Gramian (integers add), so incremental PCA == full refit."""
-
-    def test_incremental_equals_batch_and_pca_refit(self, spark, tmp_path):
-        import numpy as np
-
-        from real_time_sliding_window_spark.operators import linalg
-        from real_time_sliding_window_spark.streaming.moments import (
-            gram_totals,
-            run_gram_index,
-        )
-
-        rng = np.random.default_rng(11)
-        x = rng.normal(size=(90, 8))
-        schema = "vec_id long, embedding array<double>"
-        mk = lambda lo, hi: spark.createDataFrame(
-            [(i, [float(v) for v in x[i]]) for i in range(lo, hi)], schema
-        )
-
-        feed = FileFeed(spark, str(tmp_path / "gram_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "gram_idx"))
-        ckpt = str(tmp_path / "gram_ckpt")
-        for lo, hi in ((0, 30), (30, 75), (75, 90)):
-            feed.push(mk(lo, hi))
-            run_gram_index(
-                feed.stream(schema), sink, ckpt, dim=8
-            )
-        # replayed empty trigger: exactly-once manifest keeps totals fixed
-        run_gram_index(feed.stream(schema), sink, ckpt, dim=8)
-
-        idx = sink.read_committed(spark)
-        # 3 committed batches x 45 rows (36 triangle + 8 sums + 1 count)
-        assert idx.count() == 3 * 45
-        totals = {
-            (r["i"], r["j"]): r["dot"] for r in gram_totals(idx).collect()
-        }
-        batch = {
-            (r["i"], r["j"]): r["dot"]
-            for r in linalg.gram_matrix(mk(0, 90), dim=8).collect()
-        }
-        assert totals == batch  # exact integer equality
-        # incremental PCA == full refit, bit-for-bit (same constants in)
-        ci, ei, mi = linalg.pca_from_gram_rows(
-            gram_totals(idx).collect(), k=3, dim=8
-        )
-        cf, ef, mf = linalg.pca_fit(mk(0, 90), k=3, dim=8)
-        assert np.array_equal(ci, cf) and np.array_equal(ei, ef)
-        assert np.array_equal(mi, mf)
-
-
-class TestCmIndex:
-    """streaming/sketches.py::run_cm_index — the frequency twin of the
-    distinct index: per-batch CM sketches are EXACTLY additive, so the
-    accumulated index is bit-identical to a batch sketch (the lossless
-    Gramian property, deliberately stronger than the HLL caveat)."""
-
-    def test_incremental_equals_batch_exactly(self, spark, tmp_path):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_estimate,
-            cm_sketch,
-        )
-        from real_time_sliding_window_spark.streaming.sketches import (
-            cm_totals,
-            run_cm_index,
-        )
-
-        schema = "item string"
-        pushes = [
-            pd.DataFrame({"item": ["a"] * 30 + ["b"] * 5 + ["c"] * 1}),
-            pd.DataFrame({"item": ["a"] * 20 + ["d"] * 8}),
-            pd.DataFrame({"item": ["b"] * 15 + ["a"] * 10}),
-        ]
-        feed = FileFeed(spark, str(tmp_path / "cm_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "cm_idx"))
-        ckpt = str(tmp_path / "cm_ckpt")
-        for push in pushes:
-            feed.push(spark.createDataFrame(push, schema=schema))
-            run_cm_index(
-                feed.stream(schema), sink, ckpt, "item", depth=4, width=64
-            )
-        # exactly-once: re-trigger with no new data leaves the index alone
-        n = sink.read_committed(spark).count()
-        run_cm_index(
-            feed.stream(schema), sink, ckpt, "item", depth=4, width=64
-        )
-        assert sink.read_committed(spark).count() == n
-
-        totals = cm_totals(sink.read_committed(spark))
-        whole = cm_sketch(
-            spark.createDataFrame(pd.concat(pushes), schema=schema),
-            "item",
-            depth=4,
-            width=64,
-        )
-        assert (
-            totals.exceptAll(whole).count() == 0
-            and whole.exceptAll(totals).count() == 0
-        )
-        est = {
-            r.item: r.est_count
-            for r in cm_estimate(
-                totals,
-                spark.createDataFrame(
-                    pd.DataFrame({"item": list("abcd")}), schema=schema
-                ),
-                "item",
-                depth=4,
-                width=64,
-            ).collect()
-        }
-        for k, t in {"a": 60, "b": 20, "c": 1, "d": 8}.items():
-            assert est[k] >= t
-
-    def test_since_batch_retention_exact_subtraction(self, spark, tmp_path):
-        """CM retention is EXACT: dropping expired batches from the sum
-        yields precisely the sketch of the kept batches (additive
-        matrices subtract; HLL cannot). Also pins the with_batch_id
-        requirement."""
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_sketch,
-        )
-        from real_time_sliding_window_spark.streaming.sketches import (
-            cm_totals,
-            run_cm_index,
-        )
-
-        schema = "item string"
-        pushes = [
-            pd.DataFrame({"item": ["x"] * 10}),
-            pd.DataFrame({"item": ["x"] * 3 + ["y"] * 4}),
-        ]
-        feed = FileFeed(spark, str(tmp_path / "cmr_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "cmr_idx"))
-        ckpt = str(tmp_path / "cmr_ckpt")
-        for push in pushes:
-            feed.push(spark.createDataFrame(push, schema=schema))
-            run_cm_index(
-                feed.stream(schema), sink, ckpt, "item", depth=4, width=64
-            )
-        kept = cm_totals(
-            sink.read_committed(spark, with_batch_id=True), since_batch=1
-        )
-        only_b2 = cm_sketch(
-            spark.createDataFrame(pushes[1], schema=schema),
-            "item",
-            depth=4,
-            width=64,
-        )
-        assert (
-            kept.exceptAll(only_b2).count() == 0
-            and only_b2.exceptAll(kept).count() == 0
-        )
-        with pytest.raises(ValueError, match="with_batch_id"):
-            cm_totals(sink.read_committed(spark), since_batch=1)
 
 
 class TestCepStream:
@@ -3054,65 +2108,6 @@ class TestSequenceFunnelStream:
         # starts a FRESH one-shot funnel that later emits stage-1-only
         assert len(a_rows) == 2
         assert sorted(a_rows.stages_reached) == [1, 3]
-
-
-class TestIvfAnnIndex:
-    """streaming/ann_index.py — incremental IVF index: accumulated index
-    row-identical to a batch build, queries equal the batch ANN answer
-    exactly, exactly-once replay."""
-
-    def test_incremental_equals_batch_ann(self, spark, tmp_path):
-        from real_time_sliding_window_spark.operators.similarity import (
-            ivf_kmeans_topk,
-            kmeans_centroids,
-        )
-        from real_time_sliding_window_spark.streaming.ann_index import (
-            ivf_index_topk,
-            run_ivf_index,
-        )
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).cache()
-        cents = kmeans_centroids(emb, n_centroids=8, n_iter=3)
-        n = emb.count()
-
-        # 3 disjoint batches by vec_id stripe (append-only unique ids)
-        feed = FileFeed(spark, str(tmp_path / "ivf_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "ivf_idx"))
-        ckpt = str(tmp_path / "ivf_ckpt")
-        schema = "vec_id long, embedding array<float>, label int"
-        for i in range(3):
-            feed.push(emb.filter(F.col("vec_id") % 3 == i))
-            run_ivf_index(
-                feed.stream(schema), sink, ckpt, cents, spill=2
-            )
-        n_rows = sink.read_committed(spark).count()
-        run_ivf_index(feed.stream(schema), sink, ckpt, cents, spill=2)
-        assert sink.read_committed(spark).count() == n_rows  # exactly-once
-        assert n_rows >= n  # spill=2 assigns most vectors twice
-
-        query_ids = [0, 7, 23, 55]
-        queries = emb.filter(F.col("vec_id").isin(query_ids))
-        got = ivf_index_topk(
-            sink.read_committed(spark), queries, cents,
-            k=3, n_probe=2, spill=2,
-        ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        exp = ivf_kmeans_topk(
-            emb, query_ids, k=3, n_probe=2, centroids=cents, spill=2
-        ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            got[["query_id", "neighbor_id", "rank"]],
-            exp[["query_id", "neighbor_id", "rank"]],
-        )
-
-    def test_spill_validation(self, spark, tmp_path):
-        from real_time_sliding_window_spark.streaming.ann_index import (
-            run_ivf_index,
-        )
-
-        with pytest.raises(ValueError):
-            run_ivf_index(None, None, "x", [[0]], spill=0)
 
 
 class TestFunnelTombstone:

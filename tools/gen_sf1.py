@@ -5,7 +5,7 @@ The driver ships sf{0.001,0.01,0.1}; the remaining scale risk is drift
 and plan blowup only visible ANOTHER 10× up. This script synthesizes
 sf1 from sf0.1 with structure-preserving tiles (no RNG — every value is
 a pure function of the source row and its tile index k ∈ 0..9; tile 0 is
-the sf0.1 data verbatim), so the oracle gate and bench can run unchanged
+the sf0.1 data verbatim), so the oracle gate can run unchanged
 against `--out` (default /tmp/sf1):
 
 - dims (region, nation): copied — dims don't scale with fact data.
@@ -16,9 +16,9 @@ against `--out` (default /tmp/sf1):
   a `-t{k}` suffix so name-grouped queries don't merge tiles.
 - events: ids offset, ts/value/props kept — event-time density grows
   10×, the scale-up a window engine actually faces.
-- documents: the dedup_scale_bench corpus model (Heaps'-law vocabulary
-  growth): each tile's words salted with probability 1/2, deterministic
-  in (word, position, tile), salt purely [a-z0-9] so it stays one token.
+- documents: Heaps'-law vocabulary growth — each tile's words salted
+  with probability 1/2, deterministic in (word, position, tile), salt
+  purely [a-z0-9] so it stays one token.
   Planted near-dups survive WITHIN a tile; cross-tile copies are not
   near-dups — near-dup density per tile is constant, total linear.
   n_chars keeps the source value (metadata column; no query derives it
@@ -31,7 +31,6 @@ against `--out` (default /tmp/sf1):
 
 Run: python tools/gen_sf1.py [--mult 10] [--out /tmp/sf1]
 Then: python tools/oracle_check.py /tmp/sf1
-      SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
 """
 
 from __future__ import annotations

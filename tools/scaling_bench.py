@@ -267,16 +267,11 @@ efficiencies are a lower bound for the cluster setting. The featurize+
 window job (compute-dominant, bounded state) is the cleaner proxy for the
 shuffle/agg scaling the rule targets.
 
-## Headline throughput (32 cores, sf0.1 bench — see BENCH_r*.json)
+## Headline throughput
 
-`python bench.py` prints one JSON line: batch suite per-query seconds +
-streaming turns/sec (ring buffer steady + drain modes, windowed agg), plus
-per-batch p50/p99 durations from the lineage listener.
-
-## Skew evidence
-
-See `BENCH/SKEW.md` (tools/skew_bench.py): hot-key content aggregation,
-plain vs salted vs sharded output.
+`python3 perfbench/run.py --workload ring_drain|window_live --seconds 10`
+prints one JSON line per run: setup_s, turns_per_s, emit_p50_s, emit_p99_s
+and failed_ratio (workloads and layer map: perfbench/RESULTS.md).
 
 ## Correctness gates
 
