@@ -21,6 +21,12 @@ Each state operator's ``customMetrics`` (for the RocksDB provider: get/put
 latencies and counts, commit-phase and load timings, bytes written) are kept
 per batch under ``state_operators``, so a slow stateful batch can be split
 into state-store time and the rest of the operator's task time.
+
+The engine's per-batch phase timings (``durationMs``: ``addBatch``,
+``queryPlanning``, ``walCommit``, ``commitOffsets``, ``latestOffset``,
+``getBatch``, ``triggerExecution``) are kept under ``duration_ms``.
+``addBatch`` is the time the sink's ``foreachBatch`` body took, so a slow
+sink shows up there without instrumenting the sink.
 """
 
 from __future__ import annotations
@@ -71,6 +77,7 @@ class LineageListener(StreamingQueryListener):
             "num_input_rows": p.get("numInputRows"),
             "processed_rows_per_sec": p.get("processedRowsPerSecond"),
             "batch_duration_ms": p.get("batchDuration"),
+            "duration_ms": p.get("durationMs", {}),
             "watermark": p.get("eventTime", {}).get("watermark"),
             "state_rows": sum(s.get("numRowsTotal", 0) for s in ops),
             "state_updated": sum(s.get("numRowsUpdated", 0) for s in ops),
@@ -123,7 +130,10 @@ class LineageListener(StreamingQueryListener):
         import pandas as pd
 
         pdf = pd.DataFrame(self.progress).drop(
-            columns=["state_operators"], errors="ignore"
+            columns=["state_operators", "duration_ms"], errors="ignore"
+        )
+        pdf = pdf.join(
+            pd.DataFrame([r["duration_ms"] for r in self.progress]).add_suffix("_ms")
         )
         if "observed" in pdf.columns:
             pdf = pdf.drop(columns=["observed"]).join(

@@ -16,8 +16,11 @@ the same contract is implemented against parquet with the standard
   (queryId, epochId), re-expressed on a filesystem.
 
 ``read_committed`` reads back only committed batches, so a torn write is
-invisible. Lineage (per-partition row counts per batch) is recorded from
-inside the same foreachBatch.
+invisible. Lineage (per-partition row counts per batch) is read from the
+committed part files of the batch's single write: ``part-NNNNN`` names the
+partition that wrote the file and the parquet footer holds its row count.
+The manifest therefore describes exactly the files it commits, and a batch
+costs one Spark job — no cached copy, no second evaluation of the plan.
 """
 
 from __future__ import annotations
@@ -28,7 +31,24 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+def _partition_rows(data_dir: str) -> dict[str, int]:
+    """Rows per writing partition of one parquet write: the partition id
+    comes from the ``part-NNNNN-…`` file name, the count from the footer,
+    summed over the partition's ``c000``, ``c001``, … files. Zero-row files
+    (Spark writes one for an empty write) leave no entry."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, int] = {}
+    for name in os.listdir(data_dir):
+        if not (name.startswith("part-") and name.endswith(".parquet")):
+            continue
+        n = pq.read_metadata(os.path.join(data_dir, name)).num_rows
+        if n:
+            pid = str(int(name.split("-", 2)[1]))
+            out[pid] = out.get(pid, 0) + n
+    return out
 
 
 class ExactlyOnceParquetSink:
@@ -36,8 +56,7 @@ class ExactlyOnceParquetSink:
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.commit_dir = os.path.join(root, "_commits")
-        self.lineage_dir = os.path.join(root, "_lineage")
-        for d in (self.data_dir, self.commit_dir, self.lineage_dir):
+        for d in (self.data_dir, self.commit_dir):
             os.makedirs(d, exist_ok=True)
         self.track_lineage = track_lineage
 
@@ -48,33 +67,28 @@ class ExactlyOnceParquetSink:
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         """foreachBatch body. Idempotent per batch_id."""
         if os.path.exists(self._commit_marker(batch_id)):
-            return  # redelivered batch after recovery: exactly-once no-op
+            # redelivered batch after recovery: its rows are committed, but
+            # the plan still runs (into the noop sink) so the batch's state
+            # stores commit — Spark refuses a batch whose stateful operators
+            # left a partition uncommitted
+            df.write.format("noop").mode("overwrite").save()
+            return
         target = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        # a crashed attempt's temp dir: the retry picks a new uuid, and one
+        # writer per sink root running batches in order makes it garbage
+        for name in os.listdir(self.root):
+            if name.startswith(f"_tmp_{batch_id}_"):
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
         tmp = os.path.join(self.root, f"_tmp_{batch_id}_{uuid.uuid4().hex}")
-        lineage = None
-        if self.track_lineage:
-            # persist across the two passes — otherwise the lineage agg and
-            # the parquet write each recompute the full micro-batch plan
-            df.persist()
-        try:
-            if self.track_lineage:
-                # per-partition lineage in one extra narrow aggregation
-                lineage = (
-                    df.groupBy(F.spark_partition_id().alias("partition_id"))
-                    .count()
-                    .collect()
-                )
-            df.write.mode("overwrite").parquet(tmp)
-        finally:
-            if self.track_lineage:
-                df.unpersist()
+        df.write.mode("overwrite").parquet(tmp)
+        partitions = _partition_rows(tmp) if self.track_lineage else {}
         if os.path.exists(target):
             shutil.rmtree(target)  # torn write from a previous attempt
         os.rename(tmp, target)
         payload = {
             "batch_id": batch_id,
-            "partitions": {str(r["partition_id"]): r["count"] for r in (lineage or [])},
-            "rows": int(sum(r["count"] for r in (lineage or []))),
+            "partitions": partitions,
+            "rows": sum(partitions.values()),
         }
         marker_tmp = self._commit_marker(batch_id) + ".tmp"
         with open(marker_tmp, "w") as f:

@@ -571,9 +571,20 @@ class TestExactlyOnce:
         sink.write_batch(df, 0)
         # simulate crash between data write and commit marker
         os.remove(sink._commit_marker(0))
+        # the crashed attempt's temp dir survives the crash; a later batch's
+        # must not be mistaken for it
+        stale = os.path.join(sink.root, "_tmp_0_deadbeef")
+        later = os.path.join(sink.root, "_tmp_10_deadbeef")
+        for d in (stale, later):
+            os.makedirs(d)
+            open(os.path.join(d, "part-00000-x-c000.snappy.parquet"), "w").close()
         sink.write_batch(df, 0)  # retry rewrites cleanly
         out = sink.read_committed(spark).toPandas()
         assert len(out) == 1
+        assert not os.path.exists(stale)
+        assert os.path.exists(later)
+        shutil.rmtree(later)
+        assert sorted(os.listdir(sink.root)) == ["_commits", "data"]
 
     def test_resume_from_checkpoint_identical_output(self, spark, tmp_path):
         """Incremental runs with a persistent checkpoint produce exactly the
@@ -603,6 +614,172 @@ class TestExactlyOnce:
         a = inc[cols].sort_values(cols).reset_index(drop=True)
         b = fresh[cols].sort_values(cols).reset_index(drop=True)
         pd.testing.assert_frame_equal(a, b)
+
+    @staticmethod
+    def _partition_counts(df) -> dict[str, int]:
+        return {
+            str(r["pid"]): r["count"]
+            for r in df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+        }
+
+    def test_lineage_matches_spark_partition_id(self, spark, tmp_path):
+        """Lineage read from the write's part files equals the batch's
+        spark_partition_id() counts; the empty partition stays absent."""
+        sink = ExactlyOnceParquetSink(str(tmp_path / "lin"))
+        df = synth.to_spark(spark, rows(
+            ("c1", 0, "user", "a", None, 0),
+            ("c2", 0, "user", "b", None, 1),
+            ("c3", 0, "user", "c", None, 2),
+        )).repartition(4, "conv_id")
+        want = self._partition_counts(df)
+        assert len(want) < 4 and sum(want.values()) == 3
+        sink.write_batch(df, 0)
+        assert sink.lineage() == [{"batch_id": 0, "partitions": want, "rows": 3}]
+
+    def test_empty_batch_commits_empty_lineage(self, spark, tmp_path):
+        sink = ExactlyOnceParquetSink(str(tmp_path / "empty"))
+        df = synth.to_spark(spark, rows(("c1", 0, "user", "a", None, 0))).limit(0)
+        sink.write_batch(df, 0)
+        assert sink.lineage() == [{"batch_id": 0, "partitions": {}, "rows": 0}]
+        out = sink.read_committed(spark)
+        assert out.count() == 0
+        assert out.columns == df.columns
+
+    def test_lineage_sums_files_of_one_partition(self, spark, tmp_path):
+        """maxRecordsPerFile splits a partition over c000, c001, … files;
+        the manifest sums them back per partition."""
+        import os
+
+        sink = ExactlyOnceParquetSink(str(tmp_path / "split"))
+        df = synth.to_spark(spark, rows(
+            *[(f"c{i % 3}", i, "user", f"t{i}", None, i) for i in range(7)]
+        )).repartition(2, "conv_id")
+        want = self._partition_counts(df)
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+        try:
+            sink.write_batch(df, 0)
+        finally:
+            spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+        files = [n for n in os.listdir(os.path.join(sink.data_dir, "batch_id=0"))
+                 if n.endswith(".parquet")]
+        assert len(files) == 7
+        assert sink.lineage() == [{"batch_id": 0, "partitions": want, "rows": 7}]
+
+    def test_write_batch_runs_one_spark_job(self, spark, tmp_path):
+        """No persist, no lineage aggregation: a batch with no shuffle is
+        written by exactly one Spark job."""
+        import time
+
+        sink = ExactlyOnceParquetSink(str(tmp_path / "onejob"))
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        try:
+            sc.setJobGroup("sink-write-batch", "write_batch")
+            sink.write_batch(spark.range(0, 100, 1, 4), 0)
+            # job events reach the status tracker through the async listener
+            # bus in order: once a later fence job shows, every job of the
+            # group has been recorded
+            sc.setJobGroup("sink-write-batch-fence", "fence")
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 15
+        while (not tracker.getJobIdsForGroup("sink-write-batch-fence")
+               and time.monotonic() < deadline):
+            time.sleep(0.05)
+        assert len(tracker.getJobIdsForGroup("sink-write-batch")) == 1
+        assert sink.lineage()[0]["rows"] == 100
+
+    def test_sigkill_mid_stream_resumes_exactly_once(self, spark, tmp_path):
+        """A real crash: a child process streams a window query into the
+        sink on a processing-time trigger and is SIGKILLed (Python and its
+        JVM together) as soon as its first batch commits. Restarting from
+        the same checkpoint yields exactly the rows of an uninterrupted run."""
+        import os
+        import signal
+        import subprocess
+        import sys
+        import time
+
+        spec = WindowSpec(name="crash", length="2 seconds", watermark_delay="0 seconds")
+        feed = FileFeed(spark, str(tmp_path / "crash_in"))
+        for k in range(5):
+            feed.push(rows(*[
+                (f"c{c}", k, "user", f"t{k}", None, 3 * k + c) for c in range(3)
+            ]))
+        sink = ExactlyOnceParquetSink(str(tmp_path / "crash_out"))
+        ckpt = str(tmp_path / "crash_ckpt")
+        child = CRASH_CHILD.format(
+            feed=feed.dir, sink=sink.root, ckpt=ckpt,
+            length=spec.length, delay=spec.watermark_delay,
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, RTSW_DRIVER_MEM="1g")
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (repo, env.get("PYTHONPATH")) if p
+        )
+        log_path = tmp_path / "crash_child.log"
+        with open(log_path, "w") as log:
+            proc = subprocess.Popen(
+                [sys.executable, "-c", child], env=env, stdout=log,
+                stderr=subprocess.STDOUT, start_new_session=True,
+            )
+        try:
+            deadline = time.monotonic() + 240
+            while (not sink.committed_batches() and proc.poll() is None
+                   and time.monotonic() < deadline):
+                time.sleep(0.05)
+            assert proc.poll() is None, log_path.read_text()[-4000:]
+            assert sink.committed_batches(), "no batch committed before deadline"
+        finally:
+            if proc.poll() is None:
+                os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+        committed_at_kill = len(sink.committed_batches())
+
+        def pipe(stream):
+            return windowed_stream(stream, spec, keys=["conv_id"])
+
+        run_to_sink(pipe(feed.stream()), sink, ckpt, "crash_resume")
+        ref = ExactlyOnceParquetSink(str(tmp_path / "crash_ref"))
+        run_to_sink(pipe(feed.stream()), ref, str(tmp_path / "crash_ref_ckpt"),
+                    "crash_ref")
+
+        assert len(sink.committed_batches()) > committed_at_kill
+        got = sink.read_committed(spark).toPandas()
+        want = ref.read_committed(spark).toPandas()
+        key = ["window_start", "conv_id"]
+        assert len(want) > 0
+        assert not got.duplicated(key).any()
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want.sort_values(key).reset_index(drop=True),
+        )
+        assert sum(m["rows"] for m in sink.lineage()) == len(got)
+
+
+# Child process of test_sigkill_mid_stream_resumes_exactly_once: the window
+# query into the sink on a 1 s processing-time trigger, run until killed.
+CRASH_CHILD = """
+from real_time_sliding_window_spark.config import WindowSpec
+from real_time_sliding_window_spark.session import get_spark
+from real_time_sliding_window_spark.sources.streams import FileFeed
+from real_time_sliding_window_spark.streaming.pipeline import windowed_stream
+from real_time_sliding_window_spark.streaming.sink import ExactlyOnceParquetSink
+
+spark = get_spark(app_name="rtsw-crash-child", master="local[2]", shuffle_partitions=4)
+spec = WindowSpec(name="crash", length={length!r}, watermark_delay={delay!r})
+sink = ExactlyOnceParquetSink({sink!r})
+(
+    windowed_stream(FileFeed(spark, {feed!r}).stream(), spec, keys=["conv_id"])
+    .writeStream.foreachBatch(sink.foreach_batch())
+    .outputMode("append")
+    .option("checkpointLocation", {ckpt!r})
+    .trigger(processingTime="1 second")
+    .start()
+    .awaitTermination()
+)
+"""
 
 
 class TestIcebergGating:
@@ -690,6 +867,44 @@ class TestStateStoreMetrics:
             assert metrics["rocksdbPutCount"] >= 1
             assert {"rocksdbGetLatency", "rocksdbPutLatency", "rocksdbLoadLatencyMs",
                     "rocksdbCommitFlushLatency"} <= metrics.keys()
+        finally:
+            spark.streams.removeListener(listener)
+
+
+class TestBatchPhaseTimings:
+    def test_window_batch_keeps_duration_phases(self, spark, tmp_path):
+        """The lineage listener keeps each batch's engine phase timings;
+        addBatch (the sink's foreachBatch time) sits inside
+        triggerExecution, and to_df flattens them to <phase>_ms columns."""
+        import time
+
+        from real_time_sliding_window_spark.streaming import lineage
+
+        spec = WindowSpec(name="phases", length="2 seconds", watermark_delay="0 seconds")
+
+        def pipe(stream):
+            return windowed_stream(stream, spec, keys=["conv_id"])
+
+        listener = lineage.attach(spark)
+        try:
+            pushes = [rows(("c1", 0, "user", "a", None, 0), ("c1", 1, "user", "b", None, 5))]
+            drive(spark, tmp_path, pipe, pushes, "phases")
+            deadline = time.monotonic() + 15
+            recs = []
+            while not recs and time.monotonic() < deadline:
+                time.sleep(0.2)
+                recs = [r for r in listener.progress
+                        if r["query"] == "phases" and r["num_input_rows"]]
+            assert recs
+            d = recs[0]["duration_ms"]
+            phases = {"addBatch", "queryPlanning", "walCommit", "commitOffsets",
+                      "latestOffset", "getBatch", "triggerExecution"}
+            assert phases <= d.keys()
+            assert 0 < d["addBatch"] <= d["triggerExecution"]
+            pdf = listener.to_df(spark).toPandas()
+            assert {f"{p}_ms" for p in phases} <= set(pdf.columns)
+            row = pdf[(pdf["query"] == "phases") & (pdf["num_input_rows"] > 0)].iloc[0]
+            assert row["addBatch_ms"] == d["addBatch"]
         finally:
             spark.streams.removeListener(listener)
 
