@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_sliding_window_spark.config import ViewArgs
-from real_time_sliding_window_spark.operators import dedup as D
 from real_time_sliding_window_spark.operators import similarity as S
 from real_time_sliding_window_spark.operators import text as T
 from real_time_sliding_window_spark.operators import windows as W
@@ -531,19 +530,6 @@ def q_events_type_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("n_rows") > 0)
 
 
-def q_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact deduplication of documents by content hash: canonical id (min
-    doc_id) + duplicate count per distinct text."""
-    return (
-        _docs(spark, sf_dir)
-        .groupBy(F.md5(F.col("text")).alias("text_hash"))
-        .agg(
-            F.min("doc_id").alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_dupes"),
-        )
-    )
-
-
 def q_text_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source text statistics: docs, chars, whitespace token counts."""
     df = _docs(spark, sf_dir)
@@ -646,50 +632,6 @@ def q_click_and_purchase_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return slots("click").intersect(slots("purchase"))
-
-
-def q_minhash_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-duplicate pairs with exact Jaccard verification."""
-    return D.minhash_lsh_pairs(_docs(spark, sf_dir), min_jaccard=0.2)
-
-
-def q_ngram_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via the df-capped inverted-index
-    path (max_df=128, mirrored in the oracle SQL) — the scale-bounded
-    candidate generation + exact verification."""
-    return D.ngram_jaccard_pairs(_docs(spark, sf_dir), min_jaccard=0.5, max_df=128)
-
-
-def q_neardup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster resolution: df-capped ngram-Jaccard pairs ->
-    min-label connected components -> (doc_id, cluster_id, cluster_size)."""
-    return D.neardup_clusters(_docs(spark, sf_dir), min_jaccard=0.5, max_df=128)
-
-
-def q_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed production dedup: exact-dedup first (one hash agg), near-dup
-    clustering over canonical texts only (shingle df weighted by duplicate
-    multiplicity = raw-corpus df), expansion back to all docs. Clusters are
-    provably identical to connected components over {raw near-dup pairs} ∪
-    {doc → exact-dup canonical} — the oracle implements exactly that edge
-    set (_PIPELINE_CLUSTERS_SQL). See full_dedup's docstring for the one
-    deliberate divergence from neardup_clusters(raw) in the
-    multiplicity-over-cap regime."""
-    return D.full_dedup(_docs(spark, sf_dir), min_jaccard=0.5, max_df=128)
-
-
-def q_dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep-BEST near-dup resolution (r4): per df-capped ngram cluster,
-    mark the member with the highest quality score (distinct_permille,
-    ties to the lower doc_id) — what a production pipeline keeps instead
-    of the min-id representative (dedup.keep_best_per_cluster)."""
-    docs = _docs(spark, sf_dir)
-    scores = T.quality_scores(docs).select(
-        "doc_id", F.col("distinct_permille").alias("score")
-    )
-    return D.keep_best_per_cluster(
-        docs, scores, min_jaccard=0.5, max_df=128
-    )
 
 
 def q_hash_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -821,26 +763,6 @@ def q_topk_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (user_id, event_type) pairs — hash-aggregate distinct."""
     return _events(spark, sf_dir).select("user_id", "event_type").distinct()
-
-
-def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document 60-bit SimHash fingerprints."""
-    return D.simhash_fingerprints(_docs(spark, sf_dir))
-
-
-def q_simhash_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 4 x 15-bit band candidates with the
-    occupancy cap (max_bucket=1024, mirrored in the oracle)."""
-    return D.simhash_neardup_pairs(
-        _docs(spark, sf_dir), max_hamming=4, max_bucket=1024
-    )
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding cosine near-dups via sign-sketch buckets with flip-1-bit
-    multi-probe (recall measured in BENCH/ANN.md)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return D.embedding_neardup_pairs(emb, min_cosine=0.35, multiprobe=True)
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1107,192 +1029,6 @@ def q_tfidf_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_topk(_docs(spark, sf_dir), _TFIDF_QUERIES, k=10)
 
 
-# Twin of dedup.ngram_jaccard_pairs(max_df=128): candidates only from
-# shingles with document frequency <= 128; verification counts ALL shared
-# shingles of surviving candidate pairs (exact inter/union/jaccard).
-_NGRAM_MAX_DF = 128
-_NGRAM_SQL = f"""
-    WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-            list_distinct(
-                list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-                               i -> array_to_string(w[i:i+2], ' '))) AS shingles
-        FROM base
-    ),
-    idx AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (
-        SELECT doc_id, CAST(len(shingles) AS BIGINT) AS sz FROM sh
-    ),
-    dfs AS (SELECT shingle, count(*) AS df FROM idx GROUP BY 1),
-    ridx AS (
-        SELECT idx.* FROM idx
-        JOIN dfs USING (shingle) WHERE dfs.df <= {_NGRAM_MAX_DF}
-    ),
-    hsets AS (
-        SELECT idx.doc_id, list(idx.shingle) AS hsh FROM idx
-        JOIN dfs USING (shingle) WHERE dfs.df > {_NGRAM_MAX_DF}
-        GROUP BY 1
-    ),
-    it_r AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter_rare
-        FROM ridx a
-        JOIN ridx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    it AS (
-        SELECT doc_a, doc_b,
-               inter_rare + COALESCE(len(list_intersect(ha.hsh, hb.hsh)), 0)
-                   AS inter
-        FROM it_r
-        LEFT JOIN hsets ha ON ha.doc_id = it_r.doc_a
-        LEFT JOIN hsets hb ON hb.doc_id = it_r.doc_b
-    )
-    SELECT doc_a, doc_b, inter,
-           sa.sz + sb.sz - inter AS union_sz,
-           CAST(inter AS DOUBLE)
-               / CAST(sa.sz + sb.sz - inter AS DOUBLE) AS jaccard
-    FROM it
-    JOIN sizes sa ON sa.doc_id = it.doc_a
-    JOIN sizes sb ON sb.doc_id = it.doc_b
-    WHERE CAST(inter AS DOUBLE)
-              / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.5
-"""
-
-_CLUSTERS_SQL = f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_NGRAM_SQL}) p
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(doc, peer) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.doc, e.dst FROM reach r JOIN edges e ON e.src = r.peer
-    ),
-    comp AS (SELECT doc AS doc_id, min(peer) AS cluster_id FROM reach GROUP BY doc)
-    SELECT c.doc_id, c.cluster_id, s.cluster_size
-    FROM comp c
-    JOIN (
-        SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        FROM comp GROUP BY 1
-    ) s USING (cluster_id)
-"""
-
-# Oracle twin of dedup.full_dedup: connected components over the raw
-# near-dup pair edges (identical candidate semantics — full_dedup weights
-# canonical shingle df by duplicate multiplicity, which equals raw-corpus
-# df) PLUS an edge from every document to its exact-dup canonical (min
-# doc_id per md5(text)) — exact duplicates always cluster together, even
-# when their multiplicity alone pushes every shingle over max_df.
-_PIPELINE_CLUSTERS_SQL = f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_NGRAM_SQL}) p
-        UNION
-        SELECT min(doc_id) OVER (PARTITION BY md5(text)) AS doc_a,
-               doc_id AS doc_b
-        FROM documents
-        QUALIFY doc_b <> doc_a
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(doc, peer) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.doc, e.dst FROM reach r JOIN edges e ON e.src = r.peer
-    ),
-    comp AS (SELECT doc AS doc_id, min(peer) AS cluster_id FROM reach GROUP BY doc)
-    SELECT c.doc_id, c.cluster_id, s.cluster_size
-    FROM comp c
-    JOIN (
-        SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        FROM comp GROUP BY 1
-    ) s USING (cluster_id)
-"""
-
-
-def _minhash_oracle_sql(
-    n_hashes: int = 12, bands: int = 4, rows_per_band: int = 3,
-    min_jaccard: float = 0.2,
-) -> str:
-    """DuckDB twin of dedup.minhash_lsh_pairs: universal-hash minhash
-    (sig_j = min (a_j*x + b_j) mod P over 28-bit shingle hashes x — exact
-    int64 on both engines), md5 band keys, count-based exact verify."""
-    from real_time_sliding_window_spark.functions.columns import (
-        MINHASH_A, MINHASH_B, MINHASH_P,
-    )
-
-    sig_elems = ", ".join(
-        f"list_min(list_transform(hs, x -> (x * {MINHASH_A[j]} + {MINHASH_B[j]}) "
-        f"% {MINHASH_P}))"
-        for j in range(n_hashes)
-    )
-    band_exprs = ", ".join(
-        "md5(" + " || '|' || ".join(
-            f"sg[{b * rows_per_band + r + 1}]::VARCHAR" for r in range(rows_per_band)
-        ) + ")"
-        for b in range(bands)
-    )
-    return f"""
-        WITH base AS (
-            SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ),
-        sh AS (
-            SELECT doc_id,
-                list_distinct(
-                    list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-                                   i -> array_to_string(w[i:i+2], ' '))) AS shingles
-            FROM base
-        ),
-        h AS (
-            SELECT doc_id, shingles,
-                list_transform(shingles,
-                    s -> ('0x' || substr(md5(s), 1, 7))::BIGINT) AS hs
-            FROM sh
-        ),
-        sig AS (SELECT doc_id, [{sig_elems}] AS sg FROM h),
-        bands_t AS (
-            SELECT doc_id, b.k AS band_idx, bk[b.k + 1] AS band_key
-            FROM (SELECT doc_id, [{band_exprs}] AS bk FROM sig),
-                 LATERAL (SELECT unnest(generate_series(0, {bands - 1})) AS k) b
-        ),
-        cand AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands_t a
-            JOIN bands_t b ON a.band_idx = b.band_idx
-                          AND a.band_key = b.band_key
-                          AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
-        idx AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-        sizes AS (SELECT doc_id, CAST(len(shingles) AS BIGINT) AS sz FROM sh),
-        it AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS inter
-            FROM cand c
-            JOIN idx ia ON ia.doc_id = c.doc_a
-            JOIN idx ib ON ib.doc_id = c.doc_b AND ib.shingle = ia.shingle
-            GROUP BY 1, 2
-        )
-        SELECT doc_a, doc_b, inter,
-               sa.sz + sb.sz - inter AS union_sz,
-               CAST(inter AS DOUBLE)
-                   / CAST(sa.sz + sb.sz - inter AS DOUBLE) AS jaccard
-        FROM it
-        JOIN sizes sa ON sa.doc_id = it.doc_a
-        JOIN sizes sb ON sb.doc_id = it.doc_b
-        WHERE CAST(inter AS DOUBLE)
-                  / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= {min_jaccard}
-    """
-
-
 def _sketch_sql_expr(qv: str, n_planes: int) -> str:
     """DuckDB twin of functions/columns.sign_sketch: bit p of the bucket is
     the sign of the projection onto dense pseudo-random ±1 plane p."""
@@ -1312,19 +1048,6 @@ _INT_COSINE = (
     " / (sqrt(CAST(list_sum(list_transform({a}, v -> v*v)) AS DOUBLE))"
     " * sqrt(CAST(list_sum(list_transform({b}, v -> v*v)) AS DOUBLE)))"
 )
-
-
-def _simhash_sql_expr() -> str:
-    """60-bit simhash twin (functions/columns.simhash60): 15 hex chars per
-    token hash, bits 0..59 — always a positive BIGINT on both engines."""
-    terms = []
-    for j in range(60):
-        terms.append(
-            f"CASE WHEN COALESCE(list_sum(list_transform(hs, "
-            f"x -> ((x >> {j}) & 1) * 2 - 1)), 0) > 0 "
-            f"THEN (1::BIGINT << {j}) ELSE 0 END"
-        )
-    return " + ".join(terms)
 
 
 def _ivf_sql(n_planes: int = 8, k: int = 3) -> str:
@@ -1792,25 +1515,6 @@ def q_temperature_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_kept"),
         F.sum("n_chars").alias("kept_chars"),
     )
-
-
-def q_leakage_safe_splits_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val/test splits (r5,
-    operators/sampling.py::leakage_safe_splits): the split key is the
-    near-dup cluster representative, so no near-duplicate pair can
-    straddle train and eval — zero straddle by key choice. Full
-    per-doc assignment is the gated output (doc_id, cluster_id,
-    cluster_size, split); the oracle rebuilds the identical clusters
-    (recursive-CTE components over the df-capped ngram pairs) and
-    applies the identical md5 split expression to cluster_id."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        leakage_safe_splits,
-    )
-
-    return leakage_safe_splits(
-        _docs(spark, sf_dir), train_pct=80, val_pct=10,
-        min_jaccard=0.5, max_df=128,
-    ).select("doc_id", "cluster_id", "cluster_size", "split")
 
 
 def q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2900,7 +2604,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_gate_docs": q_length_gate_docs,
         "media_pipeline_docs": q_media_pipeline_docs,
         "temperature_mixture_docs": q_temperature_mixture_docs,
-        "leakage_safe_splits_docs": q_leakage_safe_splits_docs,
         "embedding_gram": q_embedding_gram,
         "token_drift_docs": q_token_drift_docs,
         # -- r3/r4 additions, never yet in the driver window (r5 rotation) --
@@ -2912,7 +2615,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "late_suppliers": q_late_suppliers,
         "mixture_sample_docs": q_mixture_sample_docs,
         "token_budget_docs": q_token_budget_docs,
-        "dedup_keep_best_docs": q_dedup_keep_best_docs,
         # -- stable set (driver-green r3+r4) --
         "tumbling_events": q_tumbling_events,
         "sliding_events": q_sliding_events,
@@ -2934,24 +2636,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "user_running_value": q_user_running_value,
         "events_type_unpivot": q_events_type_unpivot,
         "orders_by_segment": q_orders_by_segment,
-        "dedup_exact_docs": q_dedup_exact_docs,
         "text_stats_docs": q_text_stats_docs,
         "lineitem_pricing": q_lineitem_pricing,
         "rollup_lineitem": q_rollup_lineitem,
         "top_unshipped_orders": q_top_unshipped_orders,
         "click_not_purchase_users": q_click_not_purchase_users,
         "click_and_purchase_users": q_click_and_purchase_users,
-        "minhash_neardup_docs": q_minhash_neardup_docs,
-        "ngram_jaccard_docs": q_ngram_jaccard_docs,
         # ---- position 51+: long-stable pins displaced from the driver window
         # (driver-green in r3 AND r4; still checked by tools/oracle_check.py) --
-        "neardup_clusters_docs": q_neardup_clusters_docs,
-        "dedup_pipeline_docs": q_dedup_pipeline_docs,
         "decontaminate_docs": q_decontaminate_docs,
         "pack_docs": q_pack_docs,
         "topk_events_per_user": q_topk_events_per_user,
-        "simhash_neardup_docs": q_simhash_neardup_docs,
-        "embedding_neardup": q_embedding_neardup,
         "ann_cosine_topk": q_ann_cosine_topk,
         "ann_ivf_topk": q_ann_ivf_topk,
         "ann_ivf_kmeans_topk": q_ann_ivf_kmeans_topk,
@@ -2961,7 +2656,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_counts_docs": q_split_counts_docs,
         "chunk_docs": q_chunk_docs,
         "distinct_user_types": q_distinct_user_types,
-        "simhash_docs": q_simhash_docs,
         "langid_docs": q_langid_docs,
         "quality_docs": q_quality_docs,
         "token_counts_docs": q_token_counts_docs,
@@ -3564,14 +3258,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN customer ON o_custkey = c_custkey
             GROUP BY 1
         """,
-        "dedup_exact_docs": """
-            SELECT
-                md5(text) AS text_hash,
-                min(doc_id) AS canonical_id,
-                count(*) AS n_dupes
-            FROM documents
-            GROUP BY 1
-        """,
         "text_stats_docs": """
             SELECT
                 source,
@@ -3632,28 +3318,6 @@ def oracle_sql() -> dict[str, str]:
             INTERSECT
             SELECT DISTINCT user_id, date_trunc('hour', ts) AS hour
             FROM events WHERE event_type = 'purchase'
-        """,
-        "minhash_neardup_docs": _minhash_oracle_sql(),
-        "ngram_jaccard_docs": _NGRAM_SQL,
-        "neardup_clusters_docs": _CLUSTERS_SQL,
-        "dedup_pipeline_docs": _PIPELINE_CLUSTERS_SQL,
-        "dedup_keep_best_docs": f"""
-            WITH clusters AS ({_CLUSTERS_SQL}),
-            t AS (SELECT doc_id, {_TOK} AS tok FROM documents),
-            q AS (
-                SELECT doc_id,
-                       CASE WHEN len(tok) > 0
-                            THEN CAST(floor(1000 * len(list_distinct(tok))
-                                            / len(tok)) AS BIGINT)
-                            ELSE 0 END AS score
-                FROM t
-            )
-            SELECT c.doc_id, c.cluster_id, c.cluster_size, q.score,
-                   (row_number() OVER (
-                        PARTITION BY c.cluster_id
-                        ORDER BY q.score DESC, c.doc_id ASC
-                    ) = 1) AS keep
-            FROM clusters c JOIN q USING (doc_id)
         """,
         "hash_sample_docs": """
             SELECT doc_id, source FROM documents
@@ -3797,78 +3461,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "distinct_user_types": """
             SELECT DISTINCT user_id, event_type FROM events
-        """,
-        "simhash_docs": f"""
-            WITH t AS (
-                SELECT doc_id, {_TOK} AS tok FROM documents
-            ),
-            h AS (
-                SELECT doc_id, tok,
-                    list_transform(tok,
-                        t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hs
-                FROM t
-            )
-            SELECT doc_id,
-                   CAST({_simhash_sql_expr()} AS BIGINT) AS simhash,
-                   CAST(len(tok) AS BIGINT) AS n_tokens
-            FROM h
-        """,
-        "simhash_neardup_docs": f"""
-            WITH t AS (SELECT doc_id, {_TOK} AS tok FROM documents),
-            h AS (
-                SELECT doc_id,
-                    list_transform(tok,
-                        t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hs
-                FROM t
-            ),
-            f AS (
-                SELECT doc_id, CAST({_simhash_sql_expr()} AS BIGINT) AS simhash
-                FROM h
-            ),
-            bands AS (
-                SELECT doc_id, simhash, k.k AS band_idx,
-                       (simhash >> (15 * k.k)) & 32767 AS band_val
-                FROM f, LATERAL (SELECT unnest(generate_series(0, 3)) AS k) k
-            ),
-            cool AS (
-                SELECT band_idx, band_val FROM bands
-                GROUP BY 1, 2 HAVING count(*) <= 1024
-            ),
-            cbands AS (SELECT bands.* FROM bands JOIN cool USING (band_idx, band_val)),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       a.simhash AS sa, b.simhash AS sb
-                FROM cbands a
-                JOIN cbands b ON a.band_idx = b.band_idx
-                            AND a.band_val = b.band_val
-                            AND a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b,
-                   CAST(bit_count(xor(sa, sb)) AS INTEGER) AS hamming
-            FROM pairs
-            WHERE bit_count(xor(sa, sb)) <= 4
-        """,
-        "embedding_neardup": f"""
-            WITH q AS (
-                SELECT vec_id,
-                    list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-                FROM embeddings
-            ),
-            b AS (SELECT vec_id, qv, {_sketch_sql_expr('qv', 8)} AS bucket FROM q),
-            probed AS (
-                SELECT vec_id, qv,
-                       CASE WHEN p.p = 0 THEN bucket
-                            ELSE xor(bucket, (1 << (p.p - 1))) END AS bucket
-                FROM b, LATERAL (SELECT unnest(generate_series(0, 8)) AS p) p
-            ),
-            pairs AS (
-                SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
-                       {_INT_COSINE.format(a='a.qv', b='b2.qv')} AS cosine
-                FROM probed a
-                JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-            )
-            SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.35
         """,
         "ann_ivf_topk": _ivf_sql(n_planes=8, k=3),
         "ann_ivf_kmeans_topk": _KMEANS_IVF_SQL,
@@ -4459,22 +4051,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT i, j, dot FROM tri
             UNION ALL SELECT i, j, dot FROM sums
             UNION ALL SELECT i, j, dot FROM cnt
-        """,
-        # identical clusters (recursive-CTE components over the df-capped
-        # pairs) + the identical md5 split expression keyed on cluster_id
-        "leakage_safe_splits_docs": f"""
-            WITH clusters AS ({_CLUSTERS_SQL})
-            SELECT doc_id, cluster_id, cluster_size,
-                   CASE
-                     WHEN ('0x' || substr(md5(CAST(cluster_id AS VARCHAR)),
-                                          1, 4))::BIGINT % 100 < 80
-                       THEN 'train'
-                     WHEN ('0x' || substr(md5(CAST(cluster_id AS VARCHAR)),
-                                          1, 4))::BIGINT % 100 < 90
-                       THEN 'val'
-                     ELSE 'test'
-                   END AS split
-            FROM clusters
         """,
         # alpha=0.5 -> sqrt, IEEE-correctly-rounded on both engines, so the
         # floor'd per-mille rate is bit-identical; sizes are exact integer

@@ -1,8 +1,7 @@
 """Iterative graph analytics — integer fixed-point PageRank (r5).
 
-The suite's graph family so far: near-dup clustering via checkpointed
-connected components (dedup.py::connected_components) and the
-approximate k-NN similarity graph (similarity.py::knn_graph). PageRank
+The suite's graph family so far: the approximate k-NN similarity
+graph (similarity.py::knn_graph). PageRank
 adds the canonical ITERATIVE dataflow shape — per-iteration join +
 aggregate with lineage truncation — computed in exact integer
 fixed-point so the DuckDB oracle replays every iteration bit-for-bit

@@ -13,9 +13,8 @@ selection is a pure function of a key column via md5, so
   aggregates.
 
 `decontaminate` is the classic eval-set hygiene pass: find held-out
-documents sharing any word k-gram with the training split — the same
-inverted-index + df-cap machinery as dedup.ngram_jaccard_pairs, but as a
-semi-join across splits instead of a self-join.
+documents sharing any word k-gram with the training split — an
+inverted-index semi-join across splits with a document-frequency cap.
 """
 
 from __future__ import annotations
@@ -96,49 +95,6 @@ def mixture_sample(
     for src, pct in sorted(rates.items()):
         rate = F.when(F.col(source_col) == src, F.lit(pct)).otherwise(rate)
     return df.filter(b * F.lit(100) < rate * F.lit(n_buckets))
-
-
-def leakage_safe_splits(
-    docs: DataFrame,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    min_jaccard: float = 0.5,
-    max_df: int = 128,
-) -> DataFrame:
-    """Train/val/test assignment hashed on the near-dup CLUSTER id, not
-    the document id — the eval-leakage defense: a near-duplicate of a
-    training document can never land in val/test, because every member
-    of a connected near-dup cluster shares one content-addressed split
-    decision.
-
-    Plain ``split_assignment(doc_id)`` is leaky by construction: two
-    docs at Jaccard 0.9 hash independently, so ~20% of near-dup pairs
-    straddle train/eval and the eval set silently rehearses training
-    data. Here the split key is the cluster representative (min doc_id
-    over the df-capped ngram-Jaccard connected components —
-    dedup.neardup_clusters), so the straddle rate is zero BY KEY
-    CHOICE, not by post-hoc filtering. Singleton docs hash exactly as
-    before (their cluster_id is their own doc_id), so the split is
-    unchanged for the non-duplicated bulk of the corpus.
-
-    Scale shape: inherits the cluster pipeline's bounds (df-capped
-    candidates, checkpointed components); the split itself is the same
-    map-side expression as split_assignment. Percentages apply to
-    CLUSTERS; doc-level proportions shift only by the duplicated mass
-    (reported per-split by the caller if needed).
-
-    Output: (doc_id, cluster_id, cluster_size, split).
-    """
-    from real_time_sliding_window_spark.operators.dedup import (
-        neardup_clusters,
-    )
-
-    clusters = neardup_clusters(
-        docs, min_jaccard=min_jaccard, max_df=max_df
-    )
-    return split_assignment(
-        clusters, "cluster_id", train_pct=train_pct, val_pct=val_pct
-    )
 
 
 def temperature_mixture(
@@ -253,8 +209,7 @@ def token_budget_select(
         )
     # materialize once: scored fans out to 3-4 consumers (strata agg,
     # boundary collect, full join, edge path) and separate actions get
-    # no ReusedExchange (the repo's multi-branch rule — see
-    # connected_components / ngram_jaccard_pairs)
+    # no ReusedExchange (the repo's multi-branch rule)
     scored = df.select(
         F.col(id_col),
         F.col(score_col).cast("long").alias("__score"),
@@ -327,8 +282,7 @@ def decontaminate(
     docs) before training. k=8 is the common eval-decontamination gram
     size. The join is an inverted-index semi-join restricted to
     sub-max_df shingles (corpus-wide boilerplate is not contamination
-    evidence — same df-cap reasoning, and the same linear bound, as
-    ngram_jaccard_pairs; BENCH/DFCAP.md).
+    evidence, and the cap bounds the join linearly; BENCH/DFCAP.md).
 
     ``bloom_bits`` switches the plan (not the result): the train-shingle
     set's Bloom image (operators/bloom.py) prunes held-out shingles

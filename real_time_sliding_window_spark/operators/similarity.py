@@ -8,7 +8,7 @@ Three paths, per the scale doctrine:
   window — the shuffle is only |queries| × |corpus| similarity rows, and at
   scale you'd pre-filter by norm bounds or sketch buckets first.
 - **IVF-style bucketed top-k** (sign-sketch LSH): assign every vector to a
-  coarse bucket (same per-row math as dedup's LSH), search only the
+  coarse bucket (sign-sketch LSH over quantized ints), search only the
   query's bucket (+ flip-1-bit probes). Near-dup regimes only — measured
   recall collapses on unstructured embeddings (BENCH/ANN.md).
 - **IVF with a LEARNED coarse quantizer** (integer k-means): Voronoi cells
@@ -526,9 +526,8 @@ def knn_graph(
 ) -> DataFrame:
     """Approximate k-NN graph over the WHOLE corpus: every vector gets its
     top-k cosine neighbors among its LSH-bucket candidates (sign-sketch
-    buckets + flip-1-bit multi-probe — the same candidate generator as
-    dedup.embedding_neardup_pairs, so its measured recall curves and the
-    max_bucket occupancy doctrine carry over unchanged).
+    buckets + flip-1-bit multi-probe, with the max_bucket occupancy
+    cap on hot buckets).
 
     This is ivf_topk with EVERY vector as a query — which is exactly why
     it cannot reuse ivf_topk's plan: broadcasting an all-rows "query set"
@@ -553,10 +552,9 @@ def knn_graph(
     right = b
     if max_bucket is not None:
         # cap the join-TARGET side only; every vector still probes OUT
-        # (embedding_neardup_pairs doctrine: never filter the id universe)
-        from real_time_sliding_window_spark.operators.dedup import cool_buckets
-
-        right = b.join(cool_buckets(b, ["bucket"], max_bucket), "bucket")
+        # (never filter the id universe, only skip hot-bucket candidates)
+        cool = b.groupBy("bucket").count().filter(F.col("count") <= max_bucket)
+        right = b.join(cool.select("bucket"), "bucket")
     left = b
     if multiprobe:
         probes = [F.col("bucket")] + [

@@ -81,12 +81,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("RTSW_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # r6 (guide §3.1/§9): let the planner pick shuffled-hash over
-        # sort-merge when its size conditions hold — the dedup family's
-        # pair-count stages measured 3× faster (35s → 11s at sf1) and no
-        # suite query regressed. AQE still falls back per-partition, and
-        # the skew-join splitter stays on for oversized partitions.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         # r6 (guide §6): floor the SCAN parallelism at the core count —
         # a small parquet input otherwise arrives as 1-4 splits and every
         # compute-heavy map stage (regex tokenize, md5, higher-order

@@ -11,11 +11,11 @@ the live question.
 This module answers it with Structured Streaming's UPDATE output mode: the
 windowed aggregation emits every window group that changed in each
 micro-batch (including the open one), and a foreachBatch upsert keeps the
-latest value per (window, keys). The store is the same
-filesystem-as-Iceberg pattern as ExactlyOnceParquetSink: per-batch delta
-parquet + commit markers (idempotent on redelivery), with the read side
-resolving the newest version per key — MERGE-on-read, exactly what
-`iceberg.merge_batch_into_iceberg` does server-side on a real cluster.
+latest value per (window, keys). The store is an ExactlyOnceParquetSink
+(per-batch delta parquet + commit markers, exactly once on redelivery),
+with the read side resolving the newest version per key — MERGE-on-read,
+exactly what `iceberg.merge_batch_into_iceberg` does server-side on a real
+cluster.
 
 Scale notes: each micro-batch writes only CHANGED groups (delta size is
 bounded by update activity, not window count); the read-side
@@ -40,6 +40,7 @@ from pyspark.sql.window import Window as SqlWindow
 
 from real_time_sliding_window_spark.config import WindowSpec
 from real_time_sliding_window_spark.streaming.pipeline import windowed_stream
+from real_time_sliding_window_spark.streaming.sink import ExactlyOnceParquetSink
 
 
 class LiveWindowView:
@@ -58,10 +59,8 @@ class LiveWindowView:
 
     def __init__(self, root: str):
         self.root = root
-        self.delta_dir = os.path.join(root, "delta")
-        self.commit_dir = os.path.join(root, "_commits")
-        for d in (self.delta_dir, self.commit_dir):
-            os.makedirs(d, exist_ok=True)
+        self.sink = ExactlyOnceParquetSink(root, track_lineage=False)
+        self.delta_dir = self.sink.data_dir
         self._gc_tmp_dirs()
 
     # -- compaction lease ------------------------------------------------
@@ -141,23 +140,10 @@ class LiveWindowView:
             pass
 
     # -- sink side -----------------------------------------------------
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.commit_dir, f"{batch_id}.json")
-
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: idempotent delta write of changed groups."""
-        if os.path.exists(self._marker(batch_id)):
-            return  # redelivered after recovery — exactly-once no-op
-        target = os.path.join(self.delta_dir, f"batch_id={batch_id}")
-        tmp = os.path.join(self.root, f"_tmp_{batch_id}_{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
-        m = self._marker(batch_id)
-        with open(m + ".tmp", "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.rename(m + ".tmp", m)
+        """foreachBatch body: the sink's exactly-once delta write of the
+        changed groups."""
+        self.sink.write_batch(df, batch_id)
 
     def start(
         self,
@@ -175,9 +161,7 @@ class LiveWindowView:
         """
         agg = windowed_stream(stream, spec, ts_col=ts_col, keys=keys)
         writer = (
-            agg.writeStream.foreachBatch(
-                lambda df, bid: self.write_batch(df, bid)
-            )
+            agg.writeStream.foreachBatch(self.sink.foreach_batch())
             .outputMode("update")
             .option("checkpointLocation", checkpoint)
             .queryName(query_name)
@@ -187,18 +171,6 @@ class LiveWindowView:
         return writer.start()
 
     # -- read side -------------------------------------------------------
-    def _committed(self) -> list[str]:
-        ids = sorted(
-            int(n.split(".")[0])
-            for n in os.listdir(self.commit_dir)
-            if n.endswith(".json")
-        )
-        return [
-            p
-            for b in ids
-            if os.path.exists(p := os.path.join(self.delta_dir, f"batch_id={b}"))
-        ]
-
     def buckets(
         self, spark: SparkSession, keys: Sequence[str] = ()
     ) -> DataFrame:
@@ -232,11 +204,8 @@ class LiveWindowView:
     def _resolved(
         self, spark: SparkSession, keys: Sequence[str] = ()
     ) -> DataFrame:
-        paths = self._committed()
-        if not paths:
-            raise FileNotFoundError(f"no committed deltas under {self.root}")
         # batch_id is encoded in the path; recover it as the version column
-        deltas = spark.read.option("basePath", self.delta_dir).parquet(*paths)
+        deltas = self.sink.read_committed(spark, with_batch_id=True)
         w = SqlWindow.partitionBy("window_start", *keys).orderBy(
             F.col("batch_id").desc()
         )
@@ -298,11 +267,10 @@ class LiveWindowView:
         """
         self._acquire_lease(stale_after_s)
         try:
-            paths = self._committed()
-            if len(paths) <= 1:
+            old_ids = self.sink.committed_batches()
+            if len(old_ids) <= 1:
                 return 0
             resolved = self._resolved(spark, keys)
-            old_ids = sorted(int(p.rsplit("=", 1)[1]) for p in paths)
             snap_id = old_ids[0]
             tmp = os.path.join(self.root, f"_tmp_snap_{uuid.uuid4().hex}")
             resolved.write.mode("overwrite").parquet(tmp)
@@ -331,7 +299,7 @@ class LiveWindowView:
                     ignore_errors=True,
                 )
                 try:
-                    os.remove(self._marker(b))
+                    os.remove(self.sink._commit_marker(b))
                 except FileNotFoundError:
                     pass
             return len(old_ids) - 1

@@ -25,8 +25,8 @@ def ensure_parallelism(
     """Repartition iff the input has fewer partitions than the cluster can
     use in parallel.
 
-    Heavy per-row expression work (minhash signatures, simhash bit sums,
-    shingle explosion) is compute-bound, and a small parquet input arrives
+    Heavy per-row expression work (tokenizing, hashing, shingle
+    explosion) is compute-bound, and a small parquet input arrives
     as a single partition under ``spark.sql.files.maxPartitionBytes`` — one
     task, zero parallelism. At production scale the scan naturally has
     thousands of splits and this is a no-op (the condition never triggers),

@@ -11,6 +11,12 @@ from real_time_sliding_window_spark.plans.audit import scorecard
 SF = "/root/testdata/sf0.001"
 
 
+def test_every_query_has_an_oracle_twin():
+    """Spark-free: a driver query without its DuckDB twin (or a twin
+    whose query is gone) is caught here, not only by oracle_check."""
+    assert set(E.queries()) == set(E.oracle_sql())
+
+
 def test_filter_pushdown_and_partial_agg(spark):
     sc = scorecard(E.q_lineitem_pricing(spark, SF))
     assert sc["pushed_filters"], "shipdate filter must reach the parquet scan"

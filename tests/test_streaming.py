@@ -1297,6 +1297,43 @@ class TestLiveViewIdempotence:
         got = view.buckets(spark, keys=["conv_id"]).toPandas()
         assert len(got) == 1 and got.iloc[0]["n_rows"] == 2
 
+    def test_restart_redelivers_committed_stateful_batch(self, spark, tmp_path):
+        """Crash after the view committed a batch but before the engine's
+        commits/N: the restart redelivers that stateful batch. Its state
+        stores must still commit (Spark validates every partition), and
+        the view's rows stay exactly once."""
+        import os
+
+        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
+
+        feed = FileFeed(spark, str(tmp_path / "rs_in"))
+        view = LiveWindowView(str(tmp_path / "rs_store"))
+        spec = WindowSpec(
+            name="rs", length="10 minutes", watermark_delay="0 seconds"
+        )
+        ckpt = str(tmp_path / "rs_ckpt")
+
+        def run():
+            view.start(
+                feed.stream(), spec, ckpt, keys=["conv_id"], query_name="rs"
+            ).awaitTermination()
+
+        for i, sec in enumerate((0, 700, 1400)):
+            feed.push(rows(("c1", i, "user", "t", None, sec)))
+        run()
+        key = lambda p: sorted(
+            map(tuple, p[["window_start", "n_rows"]].itertuples(index=False))
+        )
+        before = key(view.buckets(spark, keys=["conv_id"]).toPandas())
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+        assert os.path.exists(os.path.join(view.root, "_commits", f"{last}.json"))
+        os.remove(os.path.join(commits, str(last)))
+        os.remove(os.path.join(commits, f".{last}.crc"))
+        run()
+        assert key(view.buckets(spark, keys=["conv_id"]).toPandas()) == before
+        assert before == [(T0, 1), (T0 + 600 * SEC, 1), (T0 + 1200 * SEC, 1)]
+
 
 class TestStatelessDocOpsOnStreams:
     def test_chunking_composes_with_readstream(self, spark, tmp_path):
