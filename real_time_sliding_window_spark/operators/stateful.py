@@ -1,9 +1,8 @@
-"""Per-conversation stateful ring buffer — the engine's custom operator core.
+"""Bucketed stateful ring buffer — the engine's custom operator core.
 
 Generalizes the reference's two eviction mechanisms (SURVEY.md §2 A5-A7)
 into one event-time stateful operator implemented with
-``applyInPandasWithState`` (PySpark's flatMapGroupsWithState), keyed by
-``conv_id``:
+``applyInPandasWithState`` (PySpark's flatMapGroupsWithState):
 
 - **maxDuration** (the on-demand window's age expiry,
   ``OnDemandBucketedWindow.kt:161-191``: cutoff = now − length): rows whose
@@ -11,9 +10,9 @@ into one event-time stateful operator implemented with
   plays the reference's wall-clock "now".
 - **maxData** (the fixed window's capacity eviction,
   ``FixedTumblingBucketedWindow.kt:170-179``: evict oldest bucket at
-  capacity, firing ``NonCurrentBucketRemoving`` *before* removal): when the
-  buffer exceeds ``max_data`` turns, the oldest rows are evicted
-  oldest-first.
+  capacity, firing ``NonCurrentBucketRemoving`` *before* removal): when a
+  conversation's buffer exceeds ``max_data`` turns, its oldest rows are
+  evicted oldest-first.
 
 Observable output replaces the reference's observer callbacks
 (``GenericSubject.kt:37-41``) with action rows:
@@ -24,18 +23,48 @@ Observable output replaces the reference's observer callbacks
 - ``EVICT`` / reason ``capacity`` — count eviction, oldest-first
   (removal-order invariant, ``FixedTumblingBucketedWindowTest.kt:442-490``);
 - ``EVICT`` / reason ``age`` — maxDuration expiry (also fired on event-time
-  timeout when no new data arrives for the key).
+  timeout when no new data arrives for the conversation).
 
-State is held as parallel arrays (Arrow-friendly flat struct of lists); the
-pandas body is fully vectorized — no per-row Python in the hot path
-(input_hint mandate). Scale notes: state size is bounded by
-``max_data`` × row width (or watermark horizon × rate for pure timed mode);
-one shuffle on ``conv_id`` feeds the operator; the RocksDB state store
-(configured in session.py) keeps large state off-heap.
+**Bucketed keying.** Every semantic above is per conversation, but the
+state is keyed by ``bucket = pmod(xxhash64(conv_id), RING_BUCKETS)``: one
+state row, one Python call and one event-time timer per bucket per
+micro-batch, the way the reference expires items in one maintenance pass
+over every data class (``OnDemandBucketedWindow.kt:160-191``) rather than
+one per item. The body is one segmented numpy pass over all the bucket's
+conversations, so ``applyInPandasWithState``'s per-call constant (Arrow to
+pandas, state (de)serialization, timer bookkeeping) is paid once per bucket
+rather than once per conversation. Consequences:
+
+- at most ``RING_BUCKETS`` state tasks do work in a batch, whatever the
+  number of shuffle partitions;
+- a bucket touched by a batch (new turns or its timer) rewrites the state
+  of all of its conversations;
+- the bucket count and the state layout are part of the checkpoint:
+  changing ``RING_BUCKETS`` or ``STATE_SCHEMA`` needs a fresh checkpoint.
+  Spark refuses a checkpoint of the per-conversation layout (key schema
+  ``conv_id`` string vs ``bucket`` int:
+  ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``). A changed bucket count keeps
+  the key schema, so every state row also stores the count it was written
+  with (``n_buckets``) and the body raises on a mismatch rather than route
+  conversations to buckets that do not hold their buffers.
+
+A bucket's state row holds its buffered turns sorted by (conversation,
+ts, turn_idx): ``ts_us`` and ``turn_idx`` arrays, the string columns
+pickled into one binary ``payload``, and the bucket count. Spark converts
+every element of a state array between Python and the JVM on each read and
+write, and a touched bucket reads and writes all of its conversations, so
+one binary value instead of four string arrays is what keeps a bucket with
+many buffered but untouched conversations cheap. The pandas body is fully
+vectorized — no per-row or per-conversation Python in the hot path. State
+size is bounded by ``max_data`` × row width per conversation (or watermark
+horizon × rate for pure timed mode); one shuffle on the bucket feeds the
+operator; the RocksDB state store (configured in session.py) keeps large
+state off-heap.
 """
 
 from __future__ import annotations
 
+import pickle
 from datetime import timedelta
 from typing import Iterator, Tuple
 
@@ -47,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -54,6 +84,10 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+# State key space: conversations hash into this many buckets (see the
+# module docstring). Part of the checkpoint's state layout.
+RING_BUCKETS = 64
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -73,16 +107,16 @@ STATE_SCHEMA = StructType(
     [
         StructField("ts_us", ArrayType(LongType()), True),
         StructField("turn_idx", ArrayType(IntegerType()), True),
-        StructField("role", ArrayType(StringType()), True),
-        StructField("text", ArrayType(StringType()), True),
-        StructField("tool", ArrayType(StringType()), True),
+        # pickled lists: role, text, tool, conv_id (and shard, sharded)
+        StructField("payload", BinaryType(), True),
+        # the bucket count the state was written with: a resume under
+        # another RING_BUCKETS keeps the key schema, so the body checks this
+        StructField("n_buckets", IntegerType(), True),
     ]
 )
 
-
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_I32 = np.empty(0, dtype=np.int32)
-_EMPTY_OBJ = np.empty(0, dtype=object)
+_DTYPES = (np.int64, np.int32, object, object, object, object, np.int32)
+_TS, _TI, _ROLE, _TEXT, _TOOL, _CONV, _SHARD = range(7)
 
 
 def make_ring_buffer_fn(
@@ -92,10 +126,26 @@ def make_ring_buffer_fn(
 ):
     """Build the applyInPandasWithState body (a closure over the spec).
 
-    The body is pure numpy array algebra — no per-row Python and, just as
-    important at 10^4-10^5 groups per micro-batch, no pandas DataFrame
-    construction per group except the single output frame: with many small
-    conversation groups the per-group constant factor IS the throughput.
+    One call handles every conversation of a bucket: the state holds all
+    of their buffers, concatenated and sorted by (conv_id, ts, turn_idx),
+    and every step below is a segmented numpy operation over that array,
+    applied per conversation exactly as if each had its own state:
+
+    1. dedup on ``(conv_id, turn_idx)`` against the buffer and within the
+       batch (first occurrence in (ts, turn_idx) order wins) → ``DUP``;
+    2. merge the rest into the buffer → ``ADD``;
+    3. session close, then age eviction, then capacity eviction;
+    4. one event-time timer for the bucket, at the earliest wake of any of
+       its conversations.
+
+    Output rows come grouped per conversation, each conversation's rows in
+    the order DUP, ADD, session (EVICT rows then SESSION_END, per
+    session), age EVICT, capacity EVICT; ``buffer_size`` is the
+    conversation's buffer size after the step that emitted the row.
+
+    The body is pure numpy array algebra — no per-row or per-conversation
+    Python and no pandas DataFrame construction except the single output
+    frame: the per-call constant factor is what bucketing amortizes.
 
     ``session_gap`` (VERDICT r03 #4) adds the one window kind the stateful
     op didn't speak: per-conversation SESSION-CLOSE semantics matching
@@ -107,15 +157,20 @@ def make_ring_buffer_fn(
     ``EVICT``/reason ``session`` followed by ONE ``SESSION_END`` marker
     row (``ts`` = session end = last_ts + gap, ``buffer_size`` = member
     count, null turn columns) — the reference's callback surface
-    (GenericSubject.kt:37-41) for gap-closed conversations. An
-    EventTimeTimeout timer wakes the key at the open session's
+    (GenericSubject.kt:37-41) for gap-closed conversations. The bucket's
+    EventTimeTimeout timer wakes it at the earliest open session's
     ``last_ts + gap`` so closure fires even when no new turn ever
     arrives; the timer is RE-ARMED on every keep-state invocation
     (EventTimeTimeout registrations do not persist across invocations).
     Composes with maxDuration / maxData, which keep evicting inside the
-    open session (eviction order per invocation: session close, then
-    age, then capacity).
+    open session.
     """
+    return _ring_body(max_duration, max_data, session_gap, sharded=False)
+
+
+def _ring_body(max_duration, max_data, session_gap, sharded: bool):
+    """The segmented body. ``sharded`` segments on (conv_id, shard) and
+    keeps the shard as one more state array and a leading output column."""
     max_dur_us = (
         round(max_duration.total_seconds() * 1e6) if max_duration is not None else None
     )
@@ -124,187 +179,217 @@ def make_ring_buffer_fn(
         if session_gap is not None
         else None
     )
+    n_cols = 7 if sharded else 6
+    n_buckets = RING_BUCKETS
 
     def fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
+        key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
+        # the pool: the buffered rows (state), then this batch's rows
         if state.exists:
             s = state.get
-            b_ts = np.asarray(s[0], dtype=np.int64)
-            b_ti = np.asarray(s[1], dtype=np.int32)
-            b_role = np.asarray(s[2], dtype=object)
-            b_text = np.asarray(s[3], dtype=object)
-            b_tool = np.asarray(s[4], dtype=object)
+            cols = state_columns(s)
+            # another bucket count, or the other ring (sharded/unsharded)
+            # resumed on this checkpoint: same key and state schema
+            if s[-1] != n_buckets or len(cols) != n_cols:
+                raise ValueError(
+                    f"ring state was written with {s[-1]} buckets and "
+                    f"{len(cols)} columns, this ring has RING_BUCKETS = "
+                    f"{n_buckets} and {n_cols} columns: conversations would "
+                    "not find their buffers. Resume from a fresh checkpoint."
+                )
+            cols = [np.asarray(c, dtype=_DTYPES[i]) for i, c in enumerate(cols)]
         else:
-            b_ts, b_ti = _EMPTY_I64, _EMPTY_I32
-            b_role = b_text = b_tool = _EMPTY_OBJ
-
-        # output accumulators: (action, reason, ts, ti, role, text, tool, size)
-        parts: list[tuple] = []
-
+            cols = [np.empty(0, dtype=_DTYPES[c]) for c in range(n_cols)]
+        buf = np.arange(len(cols[_TS]))  # pool rows in the buffer, sorted
         if not state.hasTimedOut:
             chunks = list(pdfs)
             batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            n_ts = batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-            n_ti = batch["turn_idx"].to_numpy().astype(np.int32, copy=False)
-            n_role = batch["role"].to_numpy(dtype=object)
-            n_text = batch["text"].to_numpy(dtype=object)
-            n_tool = batch["tool"].to_numpy(dtype=object)
-            order = np.lexsort((n_ti, n_ts))  # stable (ts, turn_idx)
-            n_ts, n_ti = n_ts[order], n_ti[order]
-            n_role, n_text, n_tool = n_role[order], n_text[order], n_tool[order]
+            new = [
+                batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64),
+                batch["turn_idx"].to_numpy().astype(np.int32, copy=False),
+                batch["role"].to_numpy(dtype=object),
+                batch["text"].to_numpy(dtype=object),
+                batch["tool"].to_numpy(dtype=object),
+                batch["conv_id"].to_numpy(dtype=object),
+            ]
+            if sharded:
+                new.append(batch["shard"].to_numpy().astype(np.int32, copy=False))
+            cols = [np.concatenate([c, n]) for c, n in zip(cols, new)]
+        ts, ti = cols[_TS], cols[_TI]
+        n_pool = len(ts)
 
-            # Set-dedup on row identity (conv_id, turn_idx): against state
-            # and within the batch (first occurrence in (ts, turn_idx) order
-            # wins — the skip-list Set semantics made explicit).
-            dup = np.isin(n_ti, b_ti)
-            _, first_pos = np.unique(n_ti, return_index=True)
-            intra = np.ones(len(n_ti), dtype=bool)
-            intra[first_pos] = False
+        # dense segment (conversation) codes over the pool, in key order
+        seg = pd.factorize(cols[_CONV], sort=True, use_na_sentinel=False)[0]
+        if sharded:
+            seg = np.unique(
+                (seg.astype(np.int64) << 32) | cols[_SHARD], return_inverse=True
+            )[1]
+        n_seg = int(seg.max()) + 1 if n_pool else 0
+
+        def sizes(rows, of):
+            """Per-conversation buffer size after a step, for rows ``of``."""
+            return np.bincount(seg[rows], minlength=n_seg)[seg[of]]
+
+        # output parts: (action, reason, pool rows, buffer_size per row)
+        parts: list[tuple] = []
+        if n_pool > len(buf):
+            # Set-dedup on row identity (conv_id, turn_idx): against the
+            # buffer and within the batch (first occurrence in (ts,
+            # turn_idx) order wins — the skip-list Set semantics made
+            # explicit).
+            inc = len(buf) + np.lexsort(
+                (ti[len(buf):], ts[len(buf):], seg[len(buf):])
+            )
+            ident = (seg.astype(np.int64) << 32) | (ti.astype(np.int64) & 0xFFFFFFFF)
+            dup = np.isin(ident[inc], ident[buf])
+            intra = np.ones(len(inc), dtype=bool)
+            intra[np.unique(ident[inc], return_index=True)[1]] = False
             dup |= intra
             if dup.any():
-                parts.append(
-                    ("DUP", None, n_ts[dup], n_ti[dup], n_role[dup],
-                     n_text[dup], n_tool[dup], len(b_ts))
-                )
+                parts.append(("DUP", None, inc[dup], sizes(buf, inc[dup])))
             if not dup.all():
-                keep = ~dup
-                f_ts, f_ti = n_ts[keep], n_ti[keep]
-                f_role, f_text, f_tool = n_role[keep], n_text[keep], n_tool[keep]
-                b_ts = np.concatenate([b_ts, f_ts])
-                b_ti = np.concatenate([b_ti, f_ti])
-                b_role = np.concatenate([b_role, f_role])
-                b_text = np.concatenate([b_text, f_text])
-                b_tool = np.concatenate([b_tool, f_tool])
-                order = np.lexsort((b_ti, b_ts))
-                b_ts, b_ti = b_ts[order], b_ti[order]
-                b_role, b_text, b_tool = b_role[order], b_text[order], b_tool[order]
-                parts.append(
-                    ("ADD", None, f_ts, f_ti, f_role, f_text, f_tool, len(b_ts))
-                )
+                added = inc[~dup]
+                buf = np.concatenate([buf, added])
+                buf = buf[np.lexsort((ti[buf], ts[buf], seg[buf]))]
+                parts.append(("ADD", None, added, sizes(buf, added)))
 
         wm_us = state.getCurrentWatermarkMs() * 1000
+        end_src = end_ts = None  # SESSION_END rows: last member, end ts
 
         # --- session close: watermark passed last_ts + gap ---------------
-        if gap_us is not None and wm_us > 0 and len(b_ts):
-            # session end indices on the (ts, turn_idx)-sorted buffer:
-            # a new session starts where the inter-turn gap EXCEEDS the
-            # session gap (inclusive merge, matching session_agg)
-            bounds = np.flatnonzero(np.diff(b_ts) > gap_us)
-            ends = np.append(bounds, len(b_ts) - 1)
-            # sessions close in ts order, so closed is a prefix: every
-            # session whose end (last_ts + gap) is STRICTLY below the
+        if gap_us is not None and wm_us > 0 and len(buf):
+            b_ts, b_seg = ts[buf], seg[buf]
+            # a session starts at each conversation's first row and where
+            # the inter-turn gap EXCEEDS the session gap (inclusive merge,
+            # matching session_agg)
+            first = np.ones(len(buf), dtype=bool)
+            first[1:] = (b_seg[1:] != b_seg[:-1]) | (np.diff(b_ts) > gap_us)
+            sid = np.cumsum(first) - 1
+            last = np.append(np.flatnonzero(first)[1:] - 1, len(buf) - 1)
+            # a session whose end (last_ts + gap) is STRICTLY below the
             # watermark is final — merge is inclusive (a turn at exactly
             # last_ts + gap extends the session) and rows with ts >= wm
-            # are still admissible, so wm == end is not yet closeable
-            n_closed = int(
-                np.searchsorted(b_ts[ends] + gap_us, wm_us, side="left")
-            )
-            if n_closed:
-                starts = np.concatenate(([0], ends[:-1] + 1))
-                cut = int(ends[n_closed - 1]) + 1
-                remaining = len(b_ts) - cut
-                for si in range(n_closed):
-                    lo, hi = int(starts[si]), int(ends[si]) + 1
-                    parts.append(
-                        ("EVICT", "session", b_ts[lo:hi], b_ti[lo:hi],
-                         b_role[lo:hi], b_text[lo:hi], b_tool[lo:hi],
-                         remaining)
-                    )
-                    parts.append(
-                        ("SESSION_END", None,
-                         np.array([int(b_ts[hi - 1]) + gap_us],
-                                  dtype=np.int64),
-                         np.array([None], dtype=object),
-                         np.array([None], dtype=object),
-                         np.array([None], dtype=object),
-                         np.array([None], dtype=object),
-                         hi - lo)
-                    )
-                b_ts, b_ti = b_ts[cut:], b_ti[cut:]
-                b_role, b_text, b_tool = (
-                    b_role[cut:], b_text[cut:], b_tool[cut:]
+            # are still admissible, so wm == end is not yet closeable.
+            # Sessions close in ts order: per conversation a prefix.
+            closed_sess = b_ts[last] + gap_us < wm_us
+            if closed_sess.any():
+                closed = closed_sess[sid]
+                gone = buf[closed]
+                end_src = buf[last[closed_sess]]
+                end_ts = ts[end_src] + gap_us
+                n_members = (last - np.flatnonzero(first) + 1)[closed_sess]
+                buf = buf[~closed]
+                # each session's EVICT rows, then its SESSION_END row
+                # (pool row n_pool + k stands for the k-th SESSION_END)
+                rows = np.concatenate([gone, n_pool + np.arange(len(end_src))])
+                order = np.argsort(
+                    np.concatenate(
+                        [2 * sid[closed], 2 * np.flatnonzero(closed_sess) + 1]
+                    ),
+                    kind="stable",
                 )
+                is_end = rows[order] >= n_pool
+                parts.append((
+                    np.where(is_end, "SESSION_END", "EVICT").astype(object),
+                    np.where(is_end, None, "session"),
+                    rows[order],
+                    np.concatenate([sizes(buf, gone), n_members])[order],
+                ))
 
         # --- age eviction: cutoff = watermark − max_duration -------------
-        if max_dur_us is not None and wm_us > 0 and len(b_ts):
-            cutoff = wm_us - max_dur_us
-            n_aged = int(np.searchsorted(b_ts, cutoff, side="left"))
-            if n_aged:
-                parts.append(
-                    ("EVICT", "age", b_ts[:n_aged], b_ti[:n_aged],
-                     b_role[:n_aged], b_text[:n_aged], b_tool[:n_aged],
-                     len(b_ts) - n_aged)
-                )
-                b_ts, b_ti = b_ts[n_aged:], b_ti[n_aged:]
-                b_role, b_text, b_tool = (
-                    b_role[n_aged:], b_text[n_aged:], b_tool[n_aged:]
-                )
+        if max_dur_us is not None and wm_us > 0 and len(buf):
+            aged = ts[buf] < wm_us - max_dur_us
+            if aged.any():
+                gone, buf = buf[aged], buf[~aged]
+                parts.append(("EVICT", "age", gone, sizes(buf, gone)))
 
         # --- capacity eviction: oldest-first beyond max_data -------------
-        if max_data is not None and len(b_ts) > max_data:
-            k = len(b_ts) - max_data
-            parts.append(
-                ("EVICT", "capacity", b_ts[:k], b_ti[:k],
-                 b_role[:k], b_text[:k], b_tool[:k], max_data)
-            )
-            b_ts, b_ti = b_ts[k:], b_ti[k:]
-            b_role, b_text, b_tool = b_role[k:], b_text[k:], b_tool[k:]
+        if max_data is not None and len(buf):
+            b_seg = seg[buf]
+            rank = np.arange(len(buf)) - np.searchsorted(b_seg, b_seg)
+            over = rank < np.bincount(b_seg, minlength=n_seg)[b_seg] - max_data
+            if over.any():
+                gone, buf = buf[over], buf[~over]
+                parts.append(
+                    ("EVICT", "capacity", gone, np.full(len(gone), max_data))
+                )
 
-        if len(b_ts) == 0:
+        if len(buf) == 0:
             state.remove()
         else:
-            state.update(
-                (b_ts.tolist(), b_ti.tolist(), b_role.tolist(),
-                 b_text.tolist(), b_tool.tolist())
-            )
-            # earliest pending wake: age expiry of the oldest row and/or
-            # the open session's close boundary (must be > watermark)
+            kept = [c[buf].tolist() for c in cols]
+            state.update((
+                kept[_TS], kept[_TI],
+                pickle.dumps(tuple(kept[_ROLE:]), protocol=5), n_buckets,
+            ))
+            # the bucket's earliest pending wake over its conversations:
+            # age expiry of the oldest row and/or the end of the earliest
+            # open session. Spark takes a timer at the watermark (>= wm,
+            # > 0) and fires it once the watermark passes it; a timer at
+            # wm + 1 could wake a conversation later than its own timer,
+            # left at wm by an earlier call, would have.
+            b_ts = ts[buf]
             wakes_us = []
             if max_dur_us is not None:
-                wakes_us.append(int(b_ts[0]) + max_dur_us)
+                wakes_us.append(int(b_ts.min()) + max_dur_us)
             if gap_us is not None:
-                # FIRST unclosed session's end on the post-eviction buffer
-                nb = np.flatnonzero(np.diff(b_ts) > gap_us)
-                wakes_us.append(
-                    int(b_ts[nb[0]] if len(nb) else b_ts[-1]) + gap_us
-                )
+                b_seg = seg[buf]
+                ends = np.ones(len(buf), dtype=bool)
+                ends[:-1] = (b_seg[1:] != b_seg[:-1]) | (np.diff(b_ts) > gap_us)
+                wakes_us.append(int(b_ts[ends].min()) + gap_us)
             if wakes_us:
                 state.setTimeoutTimestamp(
                     max(min(wakes_us) // 1000,
-                        state.getCurrentWatermarkMs() + 1)
+                        state.getCurrentWatermarkMs(), 1)
                 )
 
         if parts:
-            n_out = sum(len(p[2]) for p in parts)
-            action = np.empty(n_out, dtype=object)
-            reason = np.empty(n_out, dtype=object)
-            size = np.empty(n_out, dtype=np.int32)
-            at = 0
-            for p in parts:
-                m = len(p[2])
-                action[at:at + m] = p[0]
-                reason[at:at + m] = p[1]
-                size[at:at + m] = p[7]
-                at += m
-            yield pd.DataFrame(
-                {
-                    "conv_id": conv_id,
-                    "action": action,
-                    "reason": reason,
-                    "turn_idx": np.concatenate([p[3] for p in parts]),
-                    "role": np.concatenate([p[4] for p in parts]),
-                    "text": np.concatenate([p[5] for p in parts]),
-                    "tool": np.concatenate([p[6] for p in parts]),
-                    "ts": np.concatenate([p[2] for p in parts]).astype(
-                        "datetime64[us]"
-                    ),
-                    "buffer_size": size,
-                }
-            )
+            rows = np.concatenate([p[2] for p in parts])
+            end_k = rows - n_pool  # >= 0: the row is the k-th SESSION_END
+            if end_src is not None:
+                rows = np.where(end_k >= 0, end_src[np.maximum(end_k, 0)], rows)
+            # group per conversation, keeping each one's row order
+            order = np.argsort(seg[rows], kind="stable")
+            rows, end_k = rows[order], end_k[order]
+            out = {
+                "conv_id": cols[_CONV][rows],
+                "action": _per_row(parts, 0)[order],
+                "reason": _per_row(parts, 1)[order],
+                "turn_idx": ti[rows],
+                "role": cols[_ROLE][rows],
+                "text": cols[_TEXT][rows],
+                "tool": cols[_TOOL][rows],
+                "ts": ts[rows],
+                "buffer_size": np.concatenate([p[3] for p in parts])[order].astype(np.int32),
+            }
+            if end_src is not None:
+                is_end = end_k >= 0
+                out["turn_idx"] = out["turn_idx"].astype(object)
+                for name in ("turn_idx", "role", "text", "tool"):
+                    out[name][is_end] = None
+                out["ts"][is_end] = end_ts[end_k[is_end]]
+            out["ts"] = out["ts"].astype("datetime64[us]")
+            if sharded:
+                out = {"shard": cols[_SHARD][rows], **out}
+            yield pd.DataFrame(out)
 
     return fn
+
+
+def state_columns(value) -> list:
+    """A ring state row as its column lists: ts_us, turn_idx, role, text,
+    tool, conv_id (and shard, for the sharded ring)."""
+    return [value[0], value[1], *pickle.loads(value[2])]
+
+
+def _per_row(parts: list, field: int) -> np.ndarray:
+    """Concatenate one field of the output parts, a scalar field repeated
+    over its part's rows."""
+    return np.concatenate([
+        np.broadcast_to(np.asarray(p[field], dtype=object), len(p[2]))
+        for p in parts
+    ])
 
 
 def ring_buffer_stream(
@@ -316,26 +401,24 @@ def ring_buffer_stream(
 ) -> DataFrame:
     """Wire the stateful ring buffer onto a (streaming) transcript DataFrame.
 
-    One shuffle (groupBy conv_id) feeds the stateful operator; watermark
+    Conversations are keyed into ``RING_BUCKETS`` state buckets by
+    ``pmod(xxhash64(conv_id), RING_BUCKETS)``; one shuffle on the bucket
+    feeds the stateful operator, and ``make_ring_buffer_fn``'s body runs
+    once per touched bucket over all of its conversations. Eviction,
+    dedup and session semantics stay per conversation. The watermark
     drives age eviction, session close (``session_gap`` — see
-    make_ring_buffer_fn) and the event-time timeout. For skewed conv_ids
-    see operators/skew.py (stateful-op skew is not fixed by AQE —
-    SURVEY.md §4.3). Session-gap mode requires the unsharded operator:
-    per-shard gap computation would see a subsample of the conversation
-    and split sessions a full view would merge.
+    make_ring_buffer_fn) and the bucket's event-time timeout. A checkpoint
+    written with another bucket count or state layout is refused (see the
+    module docstring).
+    For one conversation hotter than a core, see
+    ``sharded_ring_buffer_stream``. Session-gap mode requires this
+    unsharded operator: per-shard gap computation would see a subsample of
+    the conversation and split sessions a full view would merge.
     """
-    from real_time_sliding_window_spark.config import interval_str
-
-    wm = transcripts.withWatermark("ts", interval_str(watermark_delay))
     fn = make_ring_buffer_fn(max_duration, max_data, session_gap)
-    return wm.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout
-        if max_duration is not None or session_gap is not None
-        else GroupStateTimeout.NoTimeout,
+    return _bucketed_ring(
+        transcripts, watermark_delay, ["conv_id"], fn, OUTPUT_SCHEMA,
+        timed=max_duration is not None or session_gap is not None,
     )
 
 
@@ -353,9 +436,11 @@ def sharded_ring_buffer_stream(
     ``ring_buffer_stream`` routes ALL turns of one conv_id through one
     state task per micro-batch — correct, but a single 10^6-turn
     conversation caps at single-task throughput (measured ceiling in
-    BENCH/SKEW.md). This variant shards the group key to
-    (conv_id, hash(turn_idx) % n_shards), so a hot conversation spreads
-    over n_shards parallel state tasks.
+    BENCH/SKEW.md). This variant segments the ring on
+    (conv_id, shard = hash(turn_idx) % n_shards) and buckets on
+    ``xxhash64(conv_id, shard)``, so a hot conversation spreads over up to
+    n_shards buckets and state tasks. Same bucketed body as the unsharded
+    operator; the shard is one more segment column.
 
     Semantics vs the unsharded operator, stated precisely:
 
@@ -390,8 +475,6 @@ def sharded_ring_buffer_stream(
     Use when one conversation's turn rate exceeds one core's state
     throughput; otherwise prefer ``ring_buffer_stream``.
     """
-    from real_time_sliding_window_spark.config import interval_str
-
     if session_gap is not None:
         raise ValueError(
             "session_gap is not supported with sharding: a shard-local "
@@ -404,34 +487,35 @@ def sharded_ring_buffer_stream(
     per_shard_cap = (
         -(-max_data // n_shards) if max_data is not None else None
     )
-    wm = transcripts.withWatermark("ts", interval_str(watermark_delay))
-    sharded = wm.withColumn(
+    sharded = transcripts.withColumn(
         "shard", F.pmod(F.xxhash64("turn_idx"), F.lit(n_shards)).cast("int")
     )
-    fn = make_ring_buffer_fn(max_duration, per_shard_cap)
-    out_fields = [StructField("shard", IntegerType())] + list(OUTPUT_SCHEMA)
-    return sharded.groupBy("conv_id", "shard").applyInPandasWithState(
-        _with_shard_key(fn),
-        outputStructType=StructType(out_fields),
+    return _bucketed_ring(
+        sharded, watermark_delay, ["conv_id", "shard"],
+        _ring_body(max_duration, per_shard_cap, None, sharded=True),
+        StructType([StructField("shard", IntegerType())] + list(OUTPUT_SCHEMA)),
+        timed=max_duration is not None,
+    )
+
+
+def _bucketed_ring(
+    transcripts, watermark_delay, seg_cols, fn, output_schema, timed: bool,
+) -> DataFrame:
+    """The one ring wiring: watermark, bucket the segment key, run ``fn``
+    once per bucket under ``applyInPandasWithState``."""
+    from real_time_sliding_window_spark.config import interval_str
+
+    wm = transcripts.withWatermark("ts", interval_str(watermark_delay))
+    bucket = F.pmod(F.xxhash64(*seg_cols), F.lit(RING_BUCKETS)).cast("int")
+    return wm.withColumn("bucket", bucket).groupBy("bucket").applyInPandasWithState(
+        fn,
+        outputStructType=output_schema,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout
-        if max_duration is not None
+        if timed
         else GroupStateTimeout.NoTimeout,
     )
-
-
-def _with_shard_key(fn):
-    """Adapt the 1-key ring body to a (conv_id, shard) key: run it on the
-    conv_id and prepend the shard column to each yielded frame."""
-
-    def wrapped(key, pdfs, state):
-        conv_id, shard = key
-        for frame in fn((conv_id,), pdfs, state):
-            frame.insert(0, "shard", np.full(len(frame), shard, dtype=np.int32))
-            yield frame
-
-    return wrapped
 
 
 def ring_state_from_actions(actions: DataFrame) -> DataFrame:

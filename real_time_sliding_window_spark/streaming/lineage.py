@@ -18,9 +18,10 @@ micro-batch in ``progress.observedMetrics``, and the listener accumulates
 them — exactly a Micrometer gauge feed.
 
 Each state operator's ``customMetrics`` (for the RocksDB provider: get/put
-latencies and counts, commit-phase and load timings, bytes written) are kept
-per batch under ``state_operators``, so a slow stateful batch can be split
-into state-store time and the rest of the operator's task time.
+latencies and counts, commit-phase and load timings, bytes written) and its
+state row count (``num_rows_total``) are kept per batch under
+``state_operators``, so a slow stateful batch can be split into state-store
+time and the rest of the operator's task time.
 
 The engine's per-batch phase timings (``durationMs``: ``addBatch``,
 ``queryPlanning``, ``walCommit``, ``commitOffsets``, ``latestOffset``,
@@ -85,6 +86,7 @@ class LineageListener(StreamingQueryListener):
             "state_operators": [
                 {
                     "operator": s.get("operatorName"),
+                    "num_rows_total": s.get("numRowsTotal"),
                     "custom_metrics": s.get("customMetrics", {}),
                 }
                 for s in ops

@@ -871,6 +871,41 @@ class TestStateStoreMetrics:
             spark.streams.removeListener(listener)
 
 
+class TestRingBucketState:
+    def test_state_rows_are_buckets_not_conversations(self, spark, tmp_path):
+        """The ring keeps one state row per conv_id-hash bucket: 200
+        conversations leave at most RING_BUCKETS rows in the operator's
+        store, and every conversation's turns are still ADDed."""
+        import time
+
+        from real_time_sliding_window_spark.operators.stateful import RING_BUCKETS
+        from real_time_sliding_window_spark.streaming import lineage
+
+        def pipe(stream):
+            return ring_buffer_stream(stream, timedelta(0), max_data=4)
+
+        convs = [f"c{i:03d}" for i in range(200)]
+        push = rows(*[(c, i, "user", f"{c}/{i}", None, i)
+                      for c in convs for i in range(2)])
+        listener = lineage.attach(spark)
+        try:
+            _, snaps = drive(spark, tmp_path, pipe, [push], "ring_buckets")
+            deadline = time.monotonic() + 15
+            recs = []
+            while not recs and time.monotonic() < deadline:
+                time.sleep(0.2)
+                recs = [r for r in listener.progress
+                        if r["query"] == "ring_buckets" and r["num_input_rows"]]
+            assert recs
+            [op] = recs[-1]["state_operators"]
+            assert 0 < op["num_rows_total"] <= RING_BUCKETS
+        finally:
+            spark.streams.removeListener(listener)
+        adds = snaps[-1][snaps[-1].action == "ADD"]
+        assert len(adds) == 2 * len(convs)
+        assert set(adds.conv_id) == set(convs)
+
+
 class TestBatchPhaseTimings:
     def test_window_batch_keeps_duration_phases(self, spark, tmp_path):
         """The lineage listener keeps each batch's engine phase timings;
