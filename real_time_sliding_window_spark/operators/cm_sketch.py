@@ -1,7 +1,7 @@
 """Count-min sketch — fixed-size, exactly-additive frequency summaries
 (r5).
 
-Misra-Gries (operators/heavy_hitters.py) answers "which items are
+A frequent-items summary such as Misra-Gries answers "which items are
 frequent" with UNDER-estimates and O(m) state but cannot answer a point
 query for an untracked item. The count-min sketch [Cormode &
 Muthukrishnan, "An Improved Data Stream Summary: The Count-Min Sketch
@@ -30,8 +30,8 @@ per-row bucket counts. That buys three properties the suite leans on:
   is sketch-sized, not corpus-sized.
 
 Reference anchor: no counterpart in the reference (its windows store
-every item); north-rule scale surface, sibling of heavy_hitters.py
-(frequent items) and windows.py's GK quantiles.
+every item); north-rule scale surface, sibling of windows.py's GK
+quantiles.
 """
 
 from __future__ import annotations

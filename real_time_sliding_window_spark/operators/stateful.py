@@ -119,6 +119,31 @@ _DTYPES = (np.int64, np.int32, object, object, object, object, np.int32)
 _TS, _TI, _ROLE, _TEXT, _TOOL, _CONV, _SHARD = range(7)
 
 
+def batch_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """The rows of one ``applyInPandasWithState`` call as one frame, or
+    None when the call brought none (a timer-only call)."""
+    chunks = list(pdfs)
+    if not chunks:
+        return None
+    return chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+
+
+def arm_timer(state: GroupState, wakes_us) -> None:
+    """The one event-time timer rule of every stateful operator: arm the
+    key's timer for the earliest of ``wakes_us`` (none when it is empty).
+
+    Each wake X stands for a condition "watermark µs > X". Spark fires a
+    timer T once the watermark (ms) passes T, so T = X // 1000 fires
+    exactly when the condition first holds. Spark takes a timer at the
+    watermark (>= wm, > 0), so the floor is wm itself: wm + 1 would wake
+    the key one tick after its condition holds. Timer registrations do not
+    persist across calls: every call that keeps state re-arms."""
+    if len(wakes_us):
+        state.setTimeoutTimestamp(
+            max(int(min(wakes_us)) // 1000, state.getCurrentWatermarkMs(), 1)
+        )
+
+
 def make_ring_buffer_fn(
     max_duration: timedelta | None,
     max_data: int | None,
@@ -202,9 +227,8 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
         else:
             cols = [np.empty(0, dtype=_DTYPES[c]) for c in range(n_cols)]
         buf = np.arange(len(cols[_TS]))  # pool rows in the buffer, sorted
-        if not state.hasTimedOut:
-            chunks = list(pdfs)
-            batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        batch = None if state.hasTimedOut else batch_frame(pdfs)
+        if batch is not None:
             new = [
                 batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64),
                 batch["turn_idx"].to_numpy().astype(np.int32, copy=False),
@@ -325,10 +349,7 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
             ))
             # the bucket's earliest pending wake over its conversations:
             # age expiry of the oldest row and/or the end of the earliest
-            # open session. Spark takes a timer at the watermark (>= wm,
-            # > 0) and fires it once the watermark passes it; a timer at
-            # wm + 1 could wake a conversation later than its own timer,
-            # left at wm by an earlier call, would have.
+            # open session
             b_ts = ts[buf]
             wakes_us = []
             if max_dur_us is not None:
@@ -338,11 +359,7 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
                 ends = np.ones(len(buf), dtype=bool)
                 ends[:-1] = (b_seg[1:] != b_seg[:-1]) | (np.diff(b_ts) > gap_us)
                 wakes_us.append(int(b_ts[ends].min()) + gap_us)
-            if wakes_us:
-                state.setTimeoutTimestamp(
-                    max(min(wakes_us) // 1000,
-                        state.getCurrentWatermarkMs(), 1)
-                )
+            arm_timer(state, wakes_us)
 
         if parts:
             rows = np.concatenate([p[2] for p in parts])

@@ -20,9 +20,10 @@ join Flink ships as a temporal join. This module closes the gap with one
 - state is bounded BOTH ways: rights older than ``watermark − horizon``
   can no longer match any pending left (pending lefts all have
   ts ≥ watermark) and are discarded; lefts leave state as they emit; and
-  a timer is re-registered on EVERY invocation that keeps state — when no
-  lefts are pending it fires when the oldest right ages out of the
-  horizon, so right-only keys are reaped instead of lingering forever.
+  a timer is re-registered on EVERY invocation that keeps state, by the
+  one rule of every stateful operator (``operators.stateful.arm_timer``)
+  — when no lefts are pending it fires when the oldest right ages out of
+  the horizon, so right-only keys are reaped instead of lingering forever.
 
 Determinism: the match rule is the batch operator's — latest right with
 ``l_ts − horizon ≤ r_ts ≤ l_ts``; equal-ts ties resolve by the NUMERIC
@@ -59,6 +60,10 @@ from pyspark.sql.types import (
 )
 
 from real_time_sliding_window_spark.config import interval_str
+from real_time_sliding_window_spark.operators.stateful import (
+    arm_timer,
+    batch_frame,
+)
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -103,13 +108,8 @@ def _asof_fn(horizon_us: int):
             l_pay = r_pay = _EMPTY_OBJ
 
         new_rights = False
-        if not state.hasTimedOut:
-            chunks = list(pdfs)
-            batch = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
+        batch = None if state.hasTimedOut else batch_frame(pdfs)
+        if batch is not None:
             ts = batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
             side = batch["side"].to_numpy(dtype=object)
             # The JVM-side pack() already mapped null -> -inf and NaN ->
@@ -184,12 +184,9 @@ def _asof_fn(horizon_us: int):
             # pending left (emission), else when the oldest right ages out
             # of the horizon (reaping) — so right-only keys are cleaned up
             # instead of holding state forever
-            if len(l_ts):
-                wake_ms = int(l_ts.min()) // 1000 + 1
-            else:
-                wake_ms = (int(r_ts.min()) + horizon_us) // 1000 + 1
-            state.setTimeoutTimestamp(
-                max(wake_ms, state.getCurrentWatermarkMs() + 1)
+            arm_timer(
+                state,
+                [l_ts.min()] if len(l_ts) else [r_ts.min() + horizon_us],
             )
 
         if out is not None:

@@ -7,10 +7,15 @@ docstring (r5).
 The batch entry queries ``event_transitions`` and ``funnel_click_error``
 answer turn-taking questions AFTER the fact; these are their streaming
 twins — the pattern-detection surface Flink ships as CEP / temporal
-pattern matching, built on the suite's proven stateful discipline
-(``streaming/asof.py``): one shuffle on the key, per-key numpy state,
-watermark-FINAL append emission (no retractions), ALWAYS-re-armed
-event-time timers so idle keys still finalize.
+pattern matching. All four run on ONE keyed event-time kernel
+(``_tail_stream``): one shuffle on the key; per key, the unfinalized
+events wait in the stable (ts, seq) order until the watermark passes
+them, then the operator's ``step`` folds them into its few state fields
+and emits watermark-FINAL append rows (no retractions). Every call that
+keeps state re-arms the key's timer by the one rule of every stateful
+operator (``operators.stateful.arm_timer``): each deadline is a
+condition "watermark > X", and the timer wakes exactly when the earliest
+one first holds, so idle keys still finalize.
 
 ``transitions_stream`` — emits every consecutive (from_type → to_type)
 pair per key under the stable (ts, seq) order. A pair is emitted exactly
@@ -66,6 +71,10 @@ from pyspark.sql.types import (
 )
 
 from real_time_sliding_window_spark.config import interval_str
+from real_time_sliding_window_spark.operators.stateful import (
+    arm_timer,
+    batch_frame,
+)
 
 TRANSITIONS_OUTPUT_SCHEMA = StructType(
     [
@@ -74,16 +83,6 @@ TRANSITIONS_OUTPUT_SCHEMA = StructType(
         StructField("to_type", StringType(), False),
         StructField("from_us", LongType(), False),
         StructField("to_us", LongType(), False),
-    ]
-)
-
-_TRANSITIONS_STATE_SCHEMA = StructType(
-    [
-        StructField("us", ArrayType(LongType()), True),
-        StructField("seq", ArrayType(LongType()), True),
-        StructField("typ", ArrayType(StringType()), True),
-        StructField("bridge_us", LongType(), True),
-        StructField("bridge_typ", StringType(), True),
     ]
 )
 
@@ -96,35 +95,108 @@ FUNNEL_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-_FUNNEL_STATE_SCHEMA = StructType(
+SEQUENCE_OUTPUT_SCHEMA = StructType(
     [
-        StructField("us", ArrayType(LongType()), True),
-        StructField("seq", ArrayType(LongType()), True),
-        StructField("typ", ArrayType(StringType()), True),
-        StructField("first_us", LongType(), True),
-        StructField("then_us", LongType(), True),
+        StructField("key", StringType(), False),
+        StructField("stage_us", ArrayType(LongType()), False),
+        StructField("stages_reached", LongType(), False),
     ]
 )
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_OBJ = np.empty(0, dtype=object)
+RUNS_OUTPUT_SCHEMA = StructType(
+    [
+        StructField("key", StringType(), False),
+        StructField("run_type", StringType(), False),
+        StructField("run_len", LongType(), False),
+        StructField("start_us", LongType(), False),
+        StructField("end_us", LongType(), False),
+    ]
+)
+
+# each operator's own state fields, after the kernel's (us, seq, typ) tail
+_TRANSITIONS_EXTRA = [
+    StructField("bridge_us", LongType(), True),
+    StructField("bridge_typ", StringType(), True),
+]
+_FUNNEL_EXTRA = [
+    StructField("first_us", LongType(), True),
+    StructField("then_us", LongType(), True),
+]
+_SEQUENCE_EXTRA = [StructField("matched", ArrayType(LongType()), True)]
+_RUNS_EXTRA = [
+    StructField("run_typ", StringType(), True),
+    StructField("run_len", LongType(), True),
+    StructField("run_start", LongType(), True),
+    StructField("run_last", LongType(), True),
+]
 
 
-def _pack(
-    stream: DataFrame,
-    key_col: str,
-    type_col: str,
-    ts_col: str,
-    seq_col: str,
-    watermark_delay: timedelta,
+def _tail_body(step, n_extra: int):
+    """The ``applyInPandasWithState`` body of every CEP operator: merge
+    this call's rows into the key's tail, split off the events behind
+    the watermark (a prefix in (ts, seq) order) and call
+    ``step(f_us, f_typ, extra, wm_us, n_pending)`` with them, the
+    operator's state fields ``extra`` (all None for a new key) and the
+    number of events still pending. It returns ``(rows, extra, wakes_us)``:
+    output columns without ``key`` (or None); the new state fields, or
+    None when they hold nothing (the key leaves state once its tail is
+    empty too); and the step's deadlines, each a condition "watermark µs
+    > X" — or None to FINISH the key: its tail is dropped and ``extra``
+    kept with no timer (the funnel's tombstone). The timer wakes at the
+    earliest of the oldest pending event and those deadlines."""
+
+    def fn(
+        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (k,) = key
+        s = state.get if state.exists else ([], [], []) + (None,) * n_extra
+        us = np.asarray(s[0], dtype=np.int64)
+        seq = np.asarray(s[1], dtype=np.int64)
+        typ = np.asarray(s[2], dtype=object)
+        extra = tuple(s[3:])
+        batch = None if state.hasTimedOut else batch_frame(pdfs)
+        if batch is not None:
+            b_us = batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+            us = np.concatenate([us, b_us])
+            seq = np.concatenate([seq, batch["seq"].to_numpy(dtype=np.int64)])
+            typ = np.concatenate([typ, batch["typ"].to_numpy(dtype=object)])
+
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        order = np.lexsort((seq, us))
+        us, seq, typ = us[order], seq[order], typ[order]
+        n = int(np.searchsorted(us, wm_us))  # events behind the watermark
+        rows, extra, wakes_us = step(us[:n], typ[:n], extra, wm_us, len(us) - n)
+        us, seq, typ = us[n:], seq[n:], typ[n:]
+        if wakes_us is None:
+            us, seq, typ, wakes_us = us[:0], seq[:0], typ[:0], []
+
+        if extra is None and len(us) == 0:
+            state.remove()
+        else:
+            state.update(
+                (us.tolist(), seq.tolist(), typ.tolist(),
+                 *(extra or (None,) * n_extra))
+            )
+            arm_timer(state, [us[0], *wakes_us] if len(us) else wakes_us)
+
+        if rows is not None:
+            yield pd.DataFrame({"key": k, **rows})
+
+    return fn
+
+
+def _tail_stream(
+    stream: DataFrame, key_col: str, type_col: str, ts_col: str,
+    seq_col: str, watermark_delay: timedelta, step,
+    output_schema: StructType, extra_fields: list,
 ) -> DataFrame:
-    """Shared operator prelude: watermark + the (key, ts, seq, typ)
-    normalization + NULL-key filter. One definition so the four CEP
-    operators (transitions, funnel, sequence funnel, runs) cannot drift
-    apart on key-null policy or seq handling."""
-    wm = interval_str(watermark_delay)
-    return (
-        stream.withWatermark(ts_col, wm)
+    """The one CEP wiring: watermark, the (key, ts, seq, typ)
+    normalization and NULL-key filter, one shuffle on the key, and the
+    state schema (the tail, then ``extra_fields``) — so the four
+    operators cannot drift apart on key-null policy, seq handling or
+    timers."""
+    packed = (
+        stream.withWatermark(ts_col, interval_str(watermark_delay))
         .select(
             F.col(key_col).cast("string").alias("key"),
             F.col(ts_col).alias("ts"),
@@ -133,113 +205,67 @@ def _pack(
         )
         .filter(F.col("key").isNotNull())
     )
-
-
-def _merge_batch(pdfs, us, seq, typ, timed_out):
-    """Append this invocation's rows (if any) to the pending arrays."""
-    if timed_out:
-        return us, seq, typ
-    chunks = list(pdfs)
-    if not chunks:
-        return us, seq, typ
-    batch = chunks[0] if len(chunks) == 1 else pd.concat(
-        chunks, ignore_index=True
+    state_schema = StructType(
+        [
+            StructField("us", ArrayType(LongType()), True),
+            StructField("seq", ArrayType(LongType()), True),
+            StructField("typ", ArrayType(StringType()), True),
+            *extra_fields,
+        ]
     )
-    b_us = batch["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-    b_seq = batch["seq"].to_numpy(dtype=np.int64)
-    b_typ = batch["typ"].to_numpy(dtype=object)
-    return (
-        np.concatenate([us, b_us]),
-        np.concatenate([seq, b_seq]),
-        np.concatenate([typ, b_typ]),
+    return packed.groupBy("key").applyInPandasWithState(
+        _tail_body(step, len(extra_fields)),
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
-def _transitions_fn(max_idle_us: int | None):
-    def fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.exists:
-            s = state.get
-            us = np.asarray(s[0], dtype=np.int64)
-            seq = np.asarray(s[1], dtype=np.int64)
-            typ = np.asarray(s[2], dtype=object)
-            bridge_us = s[3] if s[3] is not None else None
-            bridge_typ = s[4]
-        else:
-            us, seq, typ = _EMPTY_I64, _EMPTY_I64, _EMPTY_OBJ
-            bridge_us = bridge_typ = None
+def _idle_us(max_idle: timedelta | None) -> int | None:
+    """``max_idle`` in µs (None: no idle rule)."""
+    if max_idle is None:
+        return None
+    if max_idle < timedelta(0):
+        raise ValueError(f"max_idle must not be negative, got {max_idle}")
+    return int(max_idle.total_seconds() * 1_000_000)
 
-        us, seq, typ = _merge_batch(pdfs, us, seq, typ, state.hasTimedOut)
 
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        order = np.lexsort((seq, us))
-        us, seq, typ = us[order], seq[order], typ[order]
-        final = us < wm_us
-
-        out = None
-        if final.any():
-            f_us, f_typ = us[final], typ[final]
+def _transitions_step(max_idle_us: int | None):
+    def step(f_us, f_typ, extra, wm_us, n_pending):
+        bridge_us, bridge_typ = extra
+        rows = None
+        if len(f_us):
             # chain: bridge (if any) -> finalized events, consecutive pairs
             if bridge_us is not None:
-                c_us = np.concatenate([[bridge_us], f_us])
-                c_typ = np.concatenate([[bridge_typ], f_typ])
-            else:
-                c_us, c_typ = f_us, f_typ
-            if len(c_us) >= 2:
-                out = pd.DataFrame(
-                    {
-                        "key": k,
-                        "from_type": c_typ[:-1],
-                        "to_type": c_typ[1:],
-                        "from_us": c_us[:-1],
-                        "to_us": c_us[1:],
-                    }
-                )
-                if max_idle_us is not None:
-                    # EVENT-TIME session rule: a pair spanning a gap
-                    # larger than max_idle is suppressed regardless of
-                    # which micro-batches carried the two events —
-                    # output must not depend on arrival batching
-                    out = out[out.to_us - out.from_us <= max_idle_us]
-                    if out.empty:
-                        out = None
-            bridge_us = int(f_us[-1])
-            bridge_typ = f_typ[-1]
-            us, seq, typ = us[~final], seq[~final], typ[~final]
-
-        idle_reaped = (
-            max_idle_us is not None
-            and len(us) == 0
-            and bridge_us is not None
-            and wm_us - bridge_us > max_idle_us
-        )
-        if idle_reaped or (len(us) == 0 and bridge_us is None):
-            state.remove()
-        else:
-            state.update(
-                (us.tolist(), seq.tolist(), typ.tolist(),
-                 bridge_us, bridge_typ)
+                f_us = np.concatenate([[bridge_us], f_us])
+                f_typ = np.concatenate([[bridge_typ], f_typ])
+            # EVENT-TIME session rule: a pair spanning a gap larger than
+            # max_idle is suppressed regardless of which micro-batches
+            # carried the two events — output must not depend on arrival
+            # batching
+            keep = np.diff(f_us) <= (
+                max_idle_us if max_idle_us is not None else np.inf
             )
-            # re-arm EVERY invocation (timer registrations don't persist):
-            # wake when the watermark passes the oldest pending event, or
-            # for bridge-only keys with an idle horizon, at reap time
-            if len(us):
-                wake_ms = int(us.min()) // 1000 + 1
-                state.setTimeoutTimestamp(
-                    max(wake_ms, state.getCurrentWatermarkMs() + 1)
-                )
-            elif max_idle_us is not None:
-                wake_ms = (bridge_us + max_idle_us) // 1000 + 1
-                state.setTimeoutTimestamp(
-                    max(wake_ms, state.getCurrentWatermarkMs() + 1)
-                )
+            if keep.any():
+                rows = {
+                    "from_type": f_typ[:-1][keep],
+                    "to_type": f_typ[1:][keep],
+                    "from_us": f_us[:-1][keep],
+                    "to_us": f_us[1:][keep],
+                }
+            bridge_us, bridge_typ = int(f_us[-1]), f_typ[-1]
 
-        if out is not None:
-            yield out
+        if bridge_us is None:
+            return rows, None, []
+        if max_idle_us is None or n_pending:
+            return rows, (bridge_us, bridge_typ), []
+        if wm_us - bridge_us > max_idle_us:
+            return rows, None, []  # idle-reaped: can never pair again
+        # bridge-only key with an idle horizon: wake at reap time
+        return rows, (bridge_us, bridge_typ), [bridge_us + max_idle_us]
 
-    return fn
+    return step
 
 
 def transitions_stream(
@@ -255,227 +281,140 @@ def transitions_stream(
     consecutive (from → to) event pair per key, emitted exactly once
     when the later event is behind the watermark. ``seq_col`` breaks
     equal-timestamp ties (the reference's (ts, turn_idx) stable order);
-    aggregate downstream for the transition matrix."""
-    max_idle_us = (
-        int(max_idle.total_seconds() * 1_000_000)
-        if max_idle is not None
-        else None
-    )
-    packed = _pack(stream, key_col, type_col, ts_col, seq_col, watermark_delay)
-    return packed.groupBy("key").applyInPandasWithState(
-        _transitions_fn(max_idle_us),
-        outputStructType=TRANSITIONS_OUTPUT_SCHEMA,
-        stateStructType=_TRANSITIONS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    aggregate downstream for the transition matrix. A negative
+    ``max_idle`` raises ``ValueError``."""
+    step = _transitions_step(_idle_us(max_idle))
+    return _tail_stream(
+        stream, key_col, type_col, ts_col, seq_col, watermark_delay,
+        step, TRANSITIONS_OUTPUT_SCHEMA, _TRANSITIONS_EXTRA,
     )
 
 
 _FUNNEL_DONE = -1  # tombstone sentinel in the first_us state slot
 
 
-def _funnel_fn(first_type: str, then_type: str, window_us: int):
-    def fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.exists:
-            s = state.get
-            if s[3] == _FUNNEL_DONE:
-                # TOMBSTONE: this key already emitted its one row. Drain
-                # and discard the batch — without this marker, events
-                # pending at emission time (or arriving after) would
-                # restart the funnel, making the output depend on how
-                # events were batched into triggers. One-shot semantics
-                # on an unbounded stream costs one tombstone row per
-                # emitted key, forever (state ∝ keys, the transitions
-                # bridge bound); rolling funnels are
-                # sequence_funnel_stream's job.
-                list(pdfs)
-                state.update(([], [], [], _FUNNEL_DONE, None))
-                return
-            us = np.asarray(s[0], dtype=np.int64)
-            seq = np.asarray(s[1], dtype=np.int64)
-            typ = np.asarray(s[2], dtype=object)
-            first_us = s[3] if s[3] is not None else None
-            then_us = s[4]
-        else:
-            us, seq, typ = _EMPTY_I64, _EMPTY_I64, _EMPTY_OBJ
-            first_us = then_us = None
-
-        us, seq, typ = _merge_batch(pdfs, us, seq, typ, state.hasTimedOut)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        order = np.lexsort((seq, us))
-        us, seq, typ = us[order], seq[order], typ[order]
-        final = us < wm_us
-        if final.any():
-            # fold finalized events in order into the (first, then) pair
-            for u, t in zip(us[final], typ[final]):
-                u = int(u)
-                if t == first_type and (first_us is None or u < first_us):
-                    first_us = u
-                    # a NEW earlier first invalidates a conversion that
-                    # is no longer inside (first, first+window]... it
-                    # cannot: events fold in ts order, so first_us only
-                    # decreases before any conversion at higher ts is
-                    # seen; window re-check below keeps it honest anyway
-                    if then_us is not None and (
-                        then_us <= first_us
-                        or then_us > first_us + window_us
-                    ):
-                        then_us = None
-                elif (
-                    t == then_type
-                    and first_us is not None
-                    and then_us is None
-                    and first_us < u <= first_us + window_us
+def _funnel_step(first_type: str, then_type: str, window_us: int):
+    def step(f_us, f_typ, extra, wm_us, n_pending):
+        first_us, then_us = extra
+        if first_us == _FUNNEL_DONE:
+            # TOMBSTONE: this key already emitted its one row. Drain and
+            # discard the batch — without this marker, events pending at
+            # emission time (or arriving after) would restart the funnel,
+            # making the output depend on how events were batched into
+            # triggers. One-shot semantics on an unbounded stream costs
+            # one tombstone row per emitted key, forever (state ∝ keys,
+            # the transitions bridge bound); rolling funnels are
+            # sequence_funnel_stream's job.
+            return None, extra, None
+        # fold finalized events in order into the (first, then) pair
+        for u, t in zip(f_us.tolist(), f_typ):
+            if t == first_type and (first_us is None or u < first_us):
+                first_us = u
+                # a NEW earlier first invalidates a conversion that is no
+                # longer inside (first, first+window]... it cannot: events
+                # fold in ts order, so first_us only decreases before any
+                # conversion at higher ts is seen; window re-check below
+                # keeps it honest anyway
+                if then_us is not None and (
+                    then_us <= first_us or then_us > first_us + window_us
                 ):
-                    then_us = u
-            us, seq, typ = us[~final], seq[~final], typ[~final]
+                    then_us = None
+            elif (
+                t == then_type
+                and first_us is not None
+                and then_us is None
+                and first_us < u <= first_us + window_us
+            ):
+                then_us = u
 
-        out = None
-        if first_us is not None and wm_us > first_us + window_us:
+        if first_us is None:
+            return None, None, []
+        if wm_us > first_us + window_us:
             # window closed: no qualifying conversion can still arrive
             # (it would be <= first+window < wm — late, dropped at source)
-            out = pd.DataFrame(
-                {
-                    "key": [k],
-                    "first_us": [first_us],
-                    "then_us": [then_us],
-                    "latency_us": [
-                        then_us - first_us if then_us is not None else None
-                    ],
-                }
-            )
-            # tombstone, never remove: see the state.exists branch
-            state.update(([], [], [], _FUNNEL_DONE, None))
-        elif len(us) == 0 and first_us is None:
-            state.remove()
-        else:
-            state.update(
-                (us.tolist(), seq.tolist(), typ.tolist(), first_us, then_us)
-            )
-            # wake at whichever finalization comes first: oldest pending
-            # event, or the funnel window closing
-            wakes = []
-            if len(us):
-                wakes.append(int(us.min()) // 1000 + 1)
-            if first_us is not None:
-                wakes.append((first_us + window_us) // 1000 + 1)
-            state.setTimeoutTimestamp(
-                max(min(wakes), state.getCurrentWatermarkMs() + 1)
-            )
+            rows = {
+                "first_us": [first_us],
+                "then_us": [then_us],
+                "latency_us": [
+                    then_us - first_us if then_us is not None else None
+                ],
+            }
+            # tombstone, never remove: see the tombstone branch above
+            return rows, (_FUNNEL_DONE, None), None
+        # wake when the funnel window closes (the kernel adds the oldest
+        # pending event)
+        return None, (first_us, then_us), [first_us + window_us]
 
-        if out is not None:
-            yield out
-
-    return fn
+    return step
 
 
-SEQUENCE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), False),
-        StructField("stage_us", ArrayType(LongType()), False),
-        StructField("stages_reached", LongType(), False),
-    ]
-)
+def funnel_stream(
+    stream: DataFrame,
+    key_col: str,
+    type_col: str,
+    first_type: str,
+    then_type: str,
+    window: timedelta,
+    ts_col: str = "ts",
+    seq_col: str = "event_id",
+    watermark_delay: timedelta = timedelta(seconds=30),
+) -> DataFrame:
+    """Streaming conversion funnel (module docstring). Emits ONE final
+    row per key that ever saw ``first_type``: (key, first_us, then_us,
+    latency_us) with nulls when no ``then_type`` landed strictly inside
+    ``(first, first + window]``. Keys without a ``first_type`` event
+    never emit (they exit state as their tail finalizes)."""
+    if window <= timedelta(0):
+        raise ValueError(f"window must be positive, got {window}")
+    step = _funnel_step(first_type, then_type, int(window.total_seconds() * 1_000_000))
+    return _tail_stream(
+        stream, key_col, type_col, ts_col, seq_col, watermark_delay,
+        step, FUNNEL_OUTPUT_SCHEMA, _FUNNEL_EXTRA,
+    )
 
-_SEQUENCE_STATE_SCHEMA = StructType(
-    [
-        StructField("us", ArrayType(LongType()), True),
-        StructField("seq", ArrayType(LongType()), True),
-        StructField("typ", ArrayType(StringType()), True),
-        StructField("matched", ArrayType(LongType()), True),
-    ]
-)
 
-
-def _sequence_fn(stages: tuple, window_us: int):
+def _sequence_step(stages: tuple, window_us: int):
     k = len(stages)
 
-    def fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (kk,) = key
-        if state.exists:
-            s = state.get
-            us = np.asarray(s[0], dtype=np.int64)
-            seq = np.asarray(s[1], dtype=np.int64)
-            typ = np.asarray(s[2], dtype=object)
-            matched = list(s[3]) if s[3] is not None else []
-        else:
-            us, seq, typ = _EMPTY_I64, _EMPTY_I64, _EMPTY_OBJ
-            matched = []
-
-        us, seq, typ = _merge_batch(pdfs, us, seq, typ, state.hasTimedOut)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        order = np.lexsort((seq, us))
-        us, seq, typ = us[order], seq[order], typ[order]
-        final = us < wm_us
+    def step(f_us, f_typ, extra, wm_us, n_pending):
+        matched = list(extra[0]) if extra[0] is not None else []
         rounds: list[list[int]] = []
-        if final.any():
-            # event-time-deterministic ROUND state machine: a round
-            # closes when it completes, or when an event lands past its
-            # stage-1 window — and that same event may then open the
-            # next round. Round boundaries depend only on event times,
-            # never on how events were batched.
-            for u, t in zip(us[final], typ[final]):
-                u = int(u)
-                if matched and len(matched) < k and (
-                    u > matched[0] + window_us
-                ):
+        # event-time-deterministic ROUND state machine: a round closes
+        # when it completes, or when an event lands past its stage-1
+        # window — and that same event may then open the next round.
+        # Round boundaries depend only on event times, never on how
+        # events were batched.
+        for u, t in zip(f_us.tolist(), f_typ):
+            if matched and len(matched) < k and u > matched[0] + window_us:
+                rounds.append(matched)
+                matched = []
+            if t == stages[len(matched)]:
+                if not matched:
+                    matched.append(u)  # ts-ordered fold: first == min
+                elif u > matched[-1] and u <= matched[0] + window_us:
+                    matched.append(u)
+                if len(matched) == k:
+                    # full match: built from FINAL events and the greedy
+                    # chain never revises — emits immediately
                     rounds.append(matched)
                     matched = []
-                if t == stages[len(matched)]:
-                    if not matched:
-                        matched.append(u)  # ts-ordered fold: first == min
-                    elif (
-                        u > matched[-1]
-                        and u <= matched[0] + window_us
-                    ):
-                        matched.append(u)
-                    if len(matched) == k:
-                        # full match: built from FINAL events and the
-                        # greedy chain never revises — emits immediately
-                        rounds.append(matched)
-                        matched = []
-            us, seq, typ = us[~final], seq[~final], typ[~final]
 
-        # the open round closes by WATERMARK once its window is shut
-        # (no event can still arrive inside it)
+        # the open round closes by WATERMARK once its window is shut (no
+        # event can still arrive inside it)
         if matched and wm_us > matched[0] + window_us:
             rounds.append(matched)
             matched = []
 
-        out = None
-        if rounds:
-            out = pd.DataFrame(
-                {
-                    "key": kk,
-                    "stage_us": rounds,
-                    "stages_reached": [len(r) for r in rounds],
-                }
-            )
+        rows = (
+            {"stage_us": rounds, "stages_reached": [len(r) for r in rounds]}
+            if rounds
+            else None
+        )
+        if not matched:
+            return rows, None, []
+        return rows, (matched,), [matched[0] + window_us]
 
-        if len(us) == 0 and len(matched) == 0:
-            state.remove()
-        else:
-            state.update((us.tolist(), seq.tolist(), typ.tolist(), matched))
-            wakes = []
-            if len(us):
-                wakes.append(int(us.min()) // 1000 + 1)
-            if matched:
-                wakes.append((matched[0] + window_us) // 1000 + 1)
-            state.setTimeoutTimestamp(
-                max(min(wakes), state.getCurrentWatermarkMs() + 1)
-            )
-
-        if out is not None:
-            yield out
-
-    return fn
+    return step
 
 
 def sequence_funnel_stream(
@@ -505,116 +444,32 @@ def sequence_funnel_stream(
         raise ValueError("need at least one stage")
     if window <= timedelta(0):
         raise ValueError(f"window must be positive, got {window}")
-    window_us = int(window.total_seconds() * 1_000_000)
-    packed = _pack(stream, key_col, type_col, ts_col, seq_col, watermark_delay)
-    return packed.groupBy("key").applyInPandasWithState(
-        _sequence_fn(tuple(stages), window_us),
-        outputStructType=SEQUENCE_OUTPUT_SCHEMA,
-        stateStructType=_SEQUENCE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    step = _sequence_step(tuple(stages), int(window.total_seconds() * 1_000_000))
+    return _tail_stream(
+        stream, key_col, type_col, ts_col, seq_col, watermark_delay,
+        step, SEQUENCE_OUTPUT_SCHEMA, _SEQUENCE_EXTRA,
     )
 
 
-def funnel_stream(
-    stream: DataFrame,
-    key_col: str,
-    type_col: str,
-    first_type: str,
-    then_type: str,
-    window: timedelta,
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-    watermark_delay: timedelta = timedelta(seconds=30),
-) -> DataFrame:
-    """Streaming conversion funnel (module docstring). Emits ONE final
-    row per key that ever saw ``first_type``: (key, first_us, then_us,
-    latency_us) with nulls when no ``then_type`` landed strictly inside
-    ``(first, first + window]``. Keys without a ``first_type`` event
-    never emit (they exit state as their tail finalizes)."""
-    if window <= timedelta(0):
-        raise ValueError(f"window must be positive, got {window}")
-    window_us = int(window.total_seconds() * 1_000_000)
-    packed = _pack(stream, key_col, type_col, ts_col, seq_col, watermark_delay)
-    return packed.groupBy("key").applyInPandasWithState(
-        _funnel_fn(first_type, then_type, window_us),
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-RUNS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), False),
-        StructField("run_type", StringType(), False),
-        StructField("run_len", LongType(), False),
-        StructField("start_us", LongType(), False),
-        StructField("end_us", LongType(), False),
-    ]
-)
-
-_RUNS_STATE_SCHEMA = StructType(
-    [
-        StructField("us", ArrayType(LongType()), True),
-        StructField("seq", ArrayType(LongType()), True),
-        StructField("typ", ArrayType(StringType()), True),
-        StructField("run_typ", StringType(), True),
-        StructField("run_len", LongType(), True),
-        StructField("run_start", LongType(), True),
-        StructField("run_last", LongType(), True),
-    ]
-)
-
-
-def _runs_fn(max_idle_us: int | None):
-    def fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.exists:
-            s = state.get
-            us = np.asarray(s[0], dtype=np.int64)
-            seq = np.asarray(s[1], dtype=np.int64)
-            typ = np.asarray(s[2], dtype=object)
-            run = (
-                [s[3], int(s[4]), int(s[5]), int(s[6])]
-                if s[3] is not None
-                else None
-            )
-        else:
-            us, seq, typ = _EMPTY_I64, _EMPTY_I64, _EMPTY_OBJ
-            run = None
-
-        us, seq, typ = _merge_batch(pdfs, us, seq, typ, state.hasTimedOut)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        order = np.lexsort((seq, us))
-        us, seq, typ = us[order], seq[order], typ[order]
-        final = us < wm_us
+def _runs_step(max_idle_us: int | None):
+    def step(f_us, f_typ, extra, wm_us, n_pending):
+        run = list(extra) if extra[0] is not None else None
         closed: list[list] = []
-        if final.any():
-            for u, t in zip(us[final], typ[final]):
-                u = int(u)
-                if run is not None and (
-                    t != run[0]
-                    or (
-                        max_idle_us is not None
-                        and u - run[3] > max_idle_us
-                    )
-                ):
-                    closed.append(run)
-                    run = None
-                if run is None:
-                    run = [t, 1, u, u]
-                else:
-                    run[1] += 1
-                    run[3] = u
-            us, seq, typ = us[~final], seq[~final], typ[~final]
+        for u, t in zip(f_us.tolist(), f_typ):
+            if run is not None and (
+                t != run[0]
+                or (max_idle_us is not None and u - run[3] > max_idle_us)
+            ):
+                closed.append(run)
+                run = None
+            if run is None:
+                run = [t, 1, u, u]
+            else:
+                run[1] += 1
+                run[3] = u
 
-        # idle rule closes the OPEN run by watermark too — by event
-        # time (gap from the run's last event), never arrival batching
+        # idle rule closes the OPEN run by watermark too — by event time
+        # (gap from the run's last event), never arrival batching
         if (
             run is not None
             and max_idle_us is not None
@@ -623,44 +478,14 @@ def _runs_fn(max_idle_us: int | None):
             closed.append(run)
             run = None
 
-        out = None
-        if closed:
-            out = pd.DataFrame(
-                {
-                    "key": k,
-                    "run_type": [r[0] for r in closed],
-                    "run_len": [r[1] for r in closed],
-                    "start_us": [r[2] for r in closed],
-                    "end_us": [r[3] for r in closed],
-                }
-            )
+        # closed runs as columns: run_type, run_len, start_us, end_us
+        rows = dict(zip(RUNS_OUTPUT_SCHEMA.names[1:], zip(*closed))) if closed else None
+        if run is None:
+            return rows, None, []
+        wakes = [run[3] + max_idle_us] if max_idle_us is not None else []
+        return rows, tuple(run), wakes
 
-        if len(us) == 0 and run is None:
-            state.remove()
-        else:
-            state.update(
-                (
-                    us.tolist(), seq.tolist(), typ.tolist(),
-                    run[0] if run else None,
-                    run[1] if run else None,
-                    run[2] if run else None,
-                    run[3] if run else None,
-                )
-            )
-            wakes = []
-            if len(us):
-                wakes.append(int(us.min()) // 1000 + 1)
-            if run is not None and max_idle_us is not None:
-                wakes.append((run[3] + max_idle_us) // 1000 + 1)
-            if wakes:
-                state.setTimeoutTimestamp(
-                    max(min(wakes), state.getCurrentWatermarkMs() + 1)
-                )
-
-        if out is not None:
-            yield out
-
-    return fn
+    return step
 
 
 def runs_stream(
@@ -684,17 +509,10 @@ def runs_stream(
     ``max_idle`` never closes (no terminator can arrive-proof it); so
     drained output == batch islands minus each key's open tail run —
     the exact relation the parity test pins. State per key: the open
-    run's 4 scalars + the watermark tail."""
-    max_idle_us = (
-        int(max_idle.total_seconds() * 1_000_000)
-        if max_idle is not None
-        else None
-    )
-    packed = _pack(stream, key_col, type_col, ts_col, seq_col, watermark_delay)
-    return packed.groupBy("key").applyInPandasWithState(
-        _runs_fn(max_idle_us),
-        outputStructType=RUNS_OUTPUT_SCHEMA,
-        stateStructType=_RUNS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    run's 4 scalars + the watermark tail. A negative ``max_idle`` raises
+    ``ValueError``."""
+    step = _runs_step(_idle_us(max_idle))
+    return _tail_stream(
+        stream, key_col, type_col, ts_col, seq_col, watermark_delay,
+        step, RUNS_OUTPUT_SCHEMA, _RUNS_EXTRA,
     )

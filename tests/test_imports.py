@@ -5,6 +5,10 @@ Walks the AST of the package, ``perfbench/``, ``tools/`` and
 import, function-local ones included: a lazy import of a module that no
 longer exists only fails when that code path runs, so a tier-1 suite that
 never reaches it would stay green.
+
+The same walk guards the stateful operators' shape: one event-time timer
+rule (``stateful.arm_timer``) and at most three ``applyInPandasWithState``
+wirings.
 """
 
 from __future__ import annotations
@@ -64,6 +68,34 @@ def _unresolved(module: str, names: list[str]) -> list[str]:
         if not hasattr(mod, n)
         and not (hasattr(mod, "__path__") and _resolves(f"{module}.{n}"))
     ]
+
+
+def _calls(attr: str) -> list[tuple[Path, int]]:
+    """(file, line) of every ``<obj>.attr(...)`` call in the package."""
+    out = []
+    for path in _sources():
+        if path.is_relative_to(ROOT / PKG):
+            out += [(path, node.lineno)
+                    for node in ast.walk(ast.parse(path.read_text(), str(path)))
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == attr]
+    return out
+
+
+def test_one_timer_rule_and_three_stateful_sites():
+    """Every event-time timer is armed by ``stateful.arm_timer`` (one rule,
+    not a fork per operator), and ``applyInPandasWithState`` is wired at
+    most three times: the ring, the CEP kernel and the as-of join."""
+    stateful = ROOT / PKG / "operators" / "stateful.py"
+    arm = next(n for n in ast.walk(ast.parse(stateful.read_text()))
+               if isinstance(n, ast.FunctionDef) and n.name == "arm_timer")
+    timers = _calls("setTimeoutTimestamp")
+    assert len(timers) == 1, timers
+    path, line = timers[0]
+    assert path == stateful and arm.lineno <= line <= arm.end_lineno, timers
+    sites = _calls("applyInPandasWithState")
+    assert len(sites) <= 3, sites
 
 
 def test_every_package_import_resolves():

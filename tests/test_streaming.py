@@ -1496,103 +1496,6 @@ class TestStreamingPostings:
         assert key(from_idx) == key(from_batch)
 
 
-class TestHeavyHitters:
-    def test_misra_gries_guarantees_over_batches(self, spark, tmp_path):
-        """r4: streamed Misra-Gries summary (m=8) over 3 micro-batches
-        of skewed items must satisfy the classic guarantees vs exact
-        counts: under-estimate only, true <= est + err, err <= N/(m+1),
-        and every item above the N/(m+1) frequency line is tracked."""
-        import numpy as np
-
-        from real_time_sliding_window_spark.operators.heavy_hitters import (
-            heavy_hitters_stream,
-        )
-
-        m = 8
-        rng = np.random.default_rng(5)
-        zipf = [f"i{min(int(v), 40)}" for v in rng.zipf(1.4, 3000)]
-        batches = [
-            pd.DataFrame({
-                "grp": ["g1"] * 800 + ["g2"] * 200,
-                "item": zipf[k * 1000: k * 1000 + 800]
-                + zipf[k * 1000 + 800: (k + 1) * 1000],
-            })
-            for k in range(3)
-        ]
-        schema = "grp string, item string"
-
-        def pipe(stream):
-            return heavy_hitters_stream(stream, "grp", "item", m=m)
-
-        _, snaps = drive(
-            spark, tmp_path, pipe, batches, "hh", schema=schema
-        )
-        final = snaps[-1]
-        latest = final[final.version == final.groupby("group")
-                       .version.transform("max")]
-
-        exact = (
-            pd.concat(batches)
-            .groupby(["grp", "item"]).size().to_dict()
-        )
-        n_by_grp = pd.concat(batches).groupby("grp").size().to_dict()
-        for grp in ("g1", "g2"):
-            rows = latest[latest.group == grp]
-            n = n_by_grp[grp]
-            assert int(rows.n_total.iloc[0]) == n
-            err = int(rows.err_bound.iloc[0])
-            assert err <= n / (m + 1)
-            assert len(rows) <= m
-            for r in rows.itertuples():
-                true = exact.get((grp, r.item), 0)
-                assert r.est_count <= true <= r.est_count + err
-            # completeness: anything above the frequency line is tracked
-            tracked = set(rows.item)
-            for (g, item), true in exact.items():
-                if g == grp and true > n / (m + 1):
-                    assert item in tracked, (item, true, n / (m + 1))
-
-
-    def test_latest_summaries_bounded_reader(self, spark, tmp_path):
-        """VERDICT r04 #3: the version log grows m rows/group/batch;
-        latest_summaries must return exactly the CURRENT summary per
-        group after multi-batch evolution — max version only, schema
-        unchanged, groups with different version counts handled."""
-        from real_time_sliding_window_spark.operators.heavy_hitters import (
-            heavy_hitters_stream,
-            latest_summaries,
-        )
-
-        batches = [
-            pd.DataFrame({"grp": ["g1"] * 4 + ["g2"] * 2,
-                          "item": ["a", "a", "b", "c", "x", "y"]}),
-            pd.DataFrame({"grp": ["g1"] * 3,
-                          "item": ["a", "b", "b"]}),   # g2 absent: stays v1
-            pd.DataFrame({"grp": ["g1"] * 2 + ["g2"] * 1,
-                          "item": ["d", "a", "x"]}),
-        ]
-        schema = "grp string, item string"
-        sink, _ = drive(
-            spark, tmp_path, lambda s: heavy_hitters_stream(s, "grp",
-                                                            "item", m=8),
-            batches, "hhl", schema=schema,
-        )
-        log = sink.read_committed(spark)
-        got = latest_summaries(log).toPandas()
-        assert list(got.columns) == list(log.columns)
-        # g1 evolved to version 3, g2 only to version 2
-        assert set(got[got.group == "g1"].version) == {3}
-        assert set(got[got.group == "g2"].version) == {2}
-        # the latest slice carries the full-stream totals and counts
-        g1 = got[got.group == "g1"].set_index("item").est_count.to_dict()
-        assert g1 == {"a": 4, "b": 3, "c": 1, "d": 1}  # m=8: exact
-        assert int(got[got.group == "g1"].n_total.iloc[0]) == 9
-        g2 = got[got.group == "g2"].set_index("item").est_count.to_dict()
-        assert g2 == {"x": 2, "y": 1}
-        # and the log is strictly bigger than the latest view
-        assert len(log.toPandas()) > len(got)
-
-
 class TestAsOfStreamJoin:
     def test_matches_batch_asof_with_ties_and_horizon(self, spark, tmp_path):
         """Streaming as-of == batch as_of_join on the same rows: latest
