@@ -15,7 +15,15 @@ entry point all get the same plan-shaping defaults:
   the daemon backports 3.13's shared, lazily refreshed cache with a stat
   check, which takes that cost off every micro-batch of the ring buffer.
   From 3.13 it only runs ``pyspark.daemon``. A caller's ``extra_conf``
-  value of ``spark.python.daemon.module`` wins.
+  value of ``spark.python.daemon.module`` wins;
+- on a local master, checkpoint files (offset and commit logs, the file
+  source log, state changelogs) are renamed through Hadoop's FileSystem
+  API instead of FileContext (``local_master_conf``). Without libhadoop,
+  FileContext's rename forks ``readlink`` for the source and the
+  destination, and again for their ``.crc`` sidecars, and those forks were
+  most of every state commit; on ``file:`` both managers end in the same
+  ``File.renameTo``. Cluster masters keep Spark's default, whose rename
+  is atomic on HDFS, and a caller's ``extra_conf`` value wins.
 """
 
 from __future__ import annotations
@@ -56,6 +64,22 @@ def _export_pythonpath() -> None:
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_parent not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = pkg_parent + (os.pathsep + pp if pp else "")
+
+
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def local_master_conf(master: str) -> dict[str, str]:
+    """Conf that ``get_spark`` sets only on a local master (``local``,
+    ``local[N]``, ``local[*]``, ``local-cluster[...]``); see the module
+    docstring."""
+    if master == "local" or master.startswith(("local[", "local-cluster[")):
+        return {"spark.sql.streaming.checkpointFileManagerClass":
+                FS_CHECKPOINT_FILE_MANAGER}
+    return {}
 
 
 def get_spark(
@@ -111,7 +135,7 @@ def get_spark(
         .config("spark.python.daemon.module",
                 "real_time_sliding_window_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**local_master_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)

@@ -18,8 +18,10 @@ micro-batch in ``progress.observedMetrics``, and the listener accumulates
 them — exactly a Micrometer gauge feed.
 
 Each state operator's ``customMetrics`` (for the RocksDB provider: get/put
-latencies and counts, commit-phase and load timings, bytes written) and its
-state row count (``num_rows_total``) are kept per batch under
+latencies and counts, commit-phase and load timings, bytes written), its
+state row count (``num_rows_total``) and its phase times summed over the
+operator's tasks (``updates_time_ms``, ``removals_time_ms`` and
+``commit_time_ms``, the state store commit) are kept per batch under
 ``state_operators``, so a slow stateful batch can be split into state-store
 time and the rest of the operator's task time.
 
@@ -87,6 +89,9 @@ class LineageListener(StreamingQueryListener):
                 {
                     "operator": s.get("operatorName"),
                     "num_rows_total": s.get("numRowsTotal"),
+                    "updates_time_ms": s.get("allUpdatesTimeMs"),
+                    "removals_time_ms": s.get("allRemovalsTimeMs"),
+                    "commit_time_ms": s.get("commitTimeMs"),
                     "custom_metrics": s.get("customMetrics", {}),
                 }
                 for s in ops

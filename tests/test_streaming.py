@@ -782,6 +782,109 @@ sink = ExactlyOnceParquetSink({sink!r})
 """
 
 
+class TestRingCrash:
+    def test_sigkill_mid_ring_stream_resumes_exactly_once(self, spark, tmp_path):
+        """A real crash of the ring pipeline: a child process streams
+        ring_buffer_stream (capacity and age eviction, so state rows and
+        timers) into the sink on a processing-time trigger and is SIGKILLed
+        after its first commit marker. Restarted from the same checkpoint,
+        every turn is ADDed exactly once, no EVICT precedes its ADD, and the
+        committed rows equal an uninterrupted run's."""
+        import os
+        import signal
+        import subprocess
+        import sys
+        import time
+
+        convs, drops = 4, 6
+        feed = FileFeed(spark, str(tmp_path / "ring_crash_in"))
+        for k in range(drops):
+            feed.push(rows(*[
+                (f"c{c}", k, "user", f"t{k}", None, 3 * k + c) for c in range(convs)
+            ]))
+        sink = ExactlyOnceParquetSink(str(tmp_path / "ring_crash_out"))
+        ckpt = str(tmp_path / "ring_crash_ckpt")
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, RTSW_DRIVER_MEM="1g")
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (repo, os.path.join(repo, "tests"), env.get("PYTHONPATH"))
+            if p
+        )
+        log_path = tmp_path / "ring_crash_child.log"
+        with open(log_path, "w") as log:
+            proc = subprocess.Popen(
+                [sys.executable, "-c", RING_CRASH_CHILD.format(
+                    feed=feed.dir, sink=sink.root, ckpt=ckpt)],
+                env=env, stdout=log, stderr=subprocess.STDOUT,
+                start_new_session=True,
+            )
+        try:
+            deadline = time.monotonic() + 240
+            while (not sink.committed_batches() and proc.poll() is None
+                   and time.monotonic() < deadline):
+                time.sleep(0.05)
+            assert proc.poll() is None, log_path.read_text()[-4000:]
+            assert sink.committed_batches(), "no batch committed before deadline"
+        finally:
+            if proc.poll() is None:
+                os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+        committed_at_kill = len(sink.committed_batches())
+
+        run_to_sink(ring_crash_pipe(feed.stream()), sink, ckpt, "ring_crash_resume")
+        ref = ExactlyOnceParquetSink(str(tmp_path / "ring_crash_ref"))
+        run_to_sink(ring_crash_pipe(feed.stream()), ref,
+                    str(tmp_path / "ring_crash_ref_ckpt"), "ring_crash_ref")
+
+        assert len(sink.committed_batches()) > committed_at_kill
+        got = sink.read_committed(spark, with_batch_id=True).toPandas()
+        want = ref.read_committed(spark).toPandas()
+        adds = got[got.action == "ADD"]
+        assert sorted(zip(adds.conv_id, adds.turn_idx)) == sorted(
+            (f"c{c}", k) for c in range(convs) for k in range(drops))
+        evicts = got[got.action == "EVICT"]
+        assert len(evicts) > 0 and not evicts.duplicated(["conv_id", "turn_idx"]).any()
+        paired = evicts.merge(adds, on=["conv_id", "turn_idx"], suffixes=("_ev", "_add"))
+        assert len(paired) == len(evicts)
+        assert (paired.batch_id_ev > paired.batch_id_add).all()
+        cols = list(want.columns)
+        pd.testing.assert_frame_equal(
+            got[cols].sort_values(cols).reset_index(drop=True),
+            want.sort_values(cols).reset_index(drop=True),
+        )
+        assert sum(m["rows"] for m in sink.lineage()) == len(got)
+
+
+def ring_crash_pipe(stream):
+    """The ring query of TestRingCrash: its child process runs the same."""
+    return ring_buffer_stream(stream, timedelta(0), max_data=3,
+                              max_duration=timedelta(seconds=7))
+
+
+# Child process of test_sigkill_mid_ring_stream_resumes_exactly_once: the
+# ring query into the sink on a 1 s processing-time trigger, run until killed.
+RING_CRASH_CHILD = """
+from test_streaming import ring_crash_pipe
+
+from real_time_sliding_window_spark.session import get_spark
+from real_time_sliding_window_spark.sources.streams import FileFeed
+from real_time_sliding_window_spark.streaming.sink import ExactlyOnceParquetSink
+
+spark = get_spark(app_name="rtsw-ring-crash-child", master="local[2]",
+                  shuffle_partitions=4)
+sink = ExactlyOnceParquetSink({sink!r})
+(
+    ring_crash_pipe(FileFeed(spark, {feed!r}).stream())
+    .writeStream.foreachBatch(sink.foreach_batch())
+    .outputMode("append")
+    .option("checkpointLocation", {ckpt!r})
+    .trigger(processingTime="1 second")
+    .start()
+    .awaitTermination()
+)
+"""
+
+
 class TestIcebergGating:
     def test_unavailable_raises_actionable_error(self, spark, tmp_path):
         """No Iceberg jar in this sandbox: the production-path API must
@@ -867,6 +970,37 @@ class TestStateStoreMetrics:
             assert metrics["rocksdbPutCount"] >= 1
             assert {"rocksdbGetLatency", "rocksdbPutLatency", "rocksdbLoadLatencyMs",
                     "rocksdbCommitFlushLatency"} <= metrics.keys()
+        finally:
+            spark.streams.removeListener(listener)
+
+    def test_ring_batch_keeps_state_phase_times(self, spark, tmp_path):
+        """Each state operator entry keeps the operator's update, removal
+        and state-store commit times; to_df still leaves the nested
+        state_operators out."""
+        import time
+
+        from real_time_sliding_window_spark.streaming import lineage
+
+        def pipe(stream):
+            return ring_buffer_stream(stream, timedelta(0), max_data=4)
+
+        listener = lineage.attach(spark)
+        try:
+            pushes = [rows(*[("c1", i, "user", f"t{i}", None, i) for i in range(6)])]
+            drive(spark, tmp_path, pipe, pushes, "ring_phases")
+            deadline = time.monotonic() + 15
+            recs = []
+            while not recs and time.monotonic() < deadline:
+                time.sleep(0.2)
+                recs = [r for r in listener.progress
+                        if r["query"] == "ring_phases" and r["num_input_rows"]]
+            assert recs
+            [op] = recs[0]["state_operators"]
+            times = [op["updates_time_ms"], op["removals_time_ms"], op["commit_time_ms"]]
+            assert all(isinstance(t, int) and t >= 0 for t in times)
+            # the batch ran the ring body, which is update time
+            assert op["updates_time_ms"] > 0
+            assert "state_operators" not in listener.to_df(spark).columns
         finally:
             spark.streams.removeListener(listener)
 
