@@ -48,23 +48,31 @@ rather than once per conversation. Consequences:
   with (``n_buckets``) and the body raises on a mismatch rather than route
   conversations to buckets that do not hold their buffers.
 
-A bucket's state row holds its buffered turns sorted by (conversation,
-ts, turn_idx): ``ts_us`` and ``turn_idx`` arrays, the string columns
-pickled into one binary ``payload``, and the bucket count. Spark converts
-every element of a state array between Python and the JVM on each read and
-write, and a touched bucket reads and writes all of its conversations, so
-one binary value instead of four string arrays is what keeps a bucket with
-many buffered but untouched conversations cheap. The pandas body is fully
-vectorized — no per-row or per-conversation Python in the hot path. State
-size is bounded by ``max_data`` × row width per conversation (or watermark
-horizon × rate for pure timed mode); one shuffle on the bucket feeds the
-operator; the RocksDB state store (configured in session.py) keeps large
-state off-heap.
+A bucket's state row is one binary ``payload`` plus the bucket count. The
+payload holds the bucket's buffered turns sorted by (conversation, ts,
+turn_idx): a layout tag, ``ts_us`` as raw little-endian int64 bytes,
+``turn_idx`` (and the sharded ring's ``shard``) as raw little-endian int32
+bytes, and the string columns pickled. The body reads the numbers with
+``np.frombuffer`` and writes them with ``.tobytes()``. State array fields
+would cost twice per batch: Spark generates and compiles two new classes
+for the state's array (de)serializers on every micro-batch (their
+``MapObjects`` loops get fresh names, so the code cache never hits), and
+every element crosses the JVM/Python boundary as a boxed value on each read
+and write. A touched bucket reads and writes all of its conversations, so
+one binary value is also what keeps a bucket with many buffered but
+untouched conversations cheap. The layout tag makes a future binary layout,
+whose Spark state schema would not change, refusable too. The pandas body
+is fully vectorized — no per-row or per-conversation Python in the hot
+path. State size is bounded by ``max_data`` × row width per conversation
+(or watermark horizon × rate for pure timed mode); one shuffle on the
+bucket feeds the operator; the RocksDB state store (configured in
+session.py) keeps large state off-heap.
 """
 
 from __future__ import annotations
 
 import pickle
+import struct
 from datetime import timedelta
 from typing import Iterator, Tuple
 
@@ -75,10 +83,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -105,9 +111,7 @@ OUTPUT_SCHEMA = StructType(
 
 STATE_SCHEMA = StructType(
     [
-        StructField("ts_us", ArrayType(LongType()), True),
-        StructField("turn_idx", ArrayType(IntegerType()), True),
-        # pickled lists: role, text, tool, conv_id (and shard, sharded)
+        # the bucket's buffer, laid out as _pack writes it
         StructField("payload", BinaryType(), True),
         # the bucket count the state was written with: a resume under
         # another RING_BUCKETS keeps the key schema, so the body checks this
@@ -117,6 +121,14 @@ STATE_SCHEMA = StructType(
 
 _DTYPES = (np.int64, np.int32, object, object, object, object, np.int32)
 _TS, _TI, _ROLE, _TEXT, _TOOL, _CONV, _SHARD = range(7)
+
+# payload layout: tag, row count n, int32 column count k; then ts_us as n
+# little-endian int64, k little-endian int32 columns (turn_idx, and shard
+# in the sharded ring), then the pickled string lists (role, text, tool,
+# conv_id)
+_TAG = b"RNG1"
+_HEAD = "<4sII"
+_HEAD_SIZE = struct.calcsize(_HEAD)
 
 
 def batch_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
@@ -213,16 +225,20 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
         # the pool: the buffered rows (state), then this batch's rows
         if state.exists:
             s = state.get
-            cols = state_columns(s)
-            # another bucket count, or the other ring (sharded/unsharded)
-            # resumed on this checkpoint: same key and state schema
-            if s[-1] != n_buckets or len(cols) != n_cols:
+            tag, _, k = struct.unpack_from(_HEAD, s[0])
+            written_cols = k + 5  # ts_us, k int32 columns, 4 string lists
+            # another bucket count, the other ring (sharded/unsharded) or
+            # another payload layout resumed on this checkpoint: same key
+            # and state schema
+            if s[1] != n_buckets or tag != _TAG or written_cols != n_cols:
                 raise ValueError(
-                    f"ring state was written with {s[-1]} buckets and "
-                    f"{len(cols)} columns, this ring has RING_BUCKETS = "
-                    f"{n_buckets} and {n_cols} columns: conversations would "
-                    "not find their buffers. Resume from a fresh checkpoint."
+                    f"ring state was written with {s[1]} buckets, layout "
+                    f"{tag!r} and {written_cols} columns, this ring has "
+                    f"RING_BUCKETS = {n_buckets}, layout {_TAG!r} and "
+                    f"{n_cols} columns: conversations would not find their "
+                    "buffers. Resume from a fresh checkpoint."
                 )
+            cols = state_columns(s)
             cols = [np.asarray(c, dtype=_DTYPES[i]) for i, c in enumerate(cols)]
         else:
             cols = [np.empty(0, dtype=_DTYPES[c]) for c in range(n_cols)]
@@ -342,11 +358,7 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
         if len(buf) == 0:
             state.remove()
         else:
-            kept = [c[buf].tolist() for c in cols]
-            state.update((
-                kept[_TS], kept[_TI],
-                pickle.dumps(tuple(kept[_ROLE:]), protocol=5), n_buckets,
-            ))
+            state.update((_pack([c[buf] for c in cols]), n_buckets))
             # the bucket's earliest pending wake over its conversations:
             # age expiry of the oldest row and/or the end of the earliest
             # open session
@@ -394,10 +406,30 @@ def _ring_body(max_duration, max_data, session_gap, sharded: bool):
     return fn
 
 
+def _pack(cols: list) -> bytes:
+    """The state payload of the ring's columns (see ``_HEAD``)."""
+    ints = [cols[_TI], *cols[_SHARD:]]
+    return b"".join([
+        struct.pack(_HEAD, _TAG, len(cols[_TS]), len(ints)),
+        cols[_TS].astype("<i8", copy=False).tobytes(),
+        *(c.astype("<i4", copy=False).tobytes() for c in ints),
+        pickle.dumps(tuple(c.tolist() for c in cols[_ROLE:_SHARD]), protocol=5),
+    ])
+
+
 def state_columns(value) -> list:
-    """A ring state row as its column lists: ts_us, turn_idx, role, text,
-    tool, conv_id (and shard, for the sharded ring)."""
-    return [value[0], value[1], *pickle.loads(value[2])]
+    """A ring state row as its columns: ts_us and turn_idx arrays, the
+    role, text, tool and conv_id lists (and the shard array, for the
+    sharded ring)."""
+    payload = memoryview(value[0])
+    _, n, k = struct.unpack_from(_HEAD, payload)
+    ts = np.frombuffer(payload, dtype="<i8", count=n, offset=_HEAD_SIZE)
+    at = _HEAD_SIZE + 8 * n
+    ints = [
+        np.frombuffer(payload, dtype="<i4", count=n, offset=at + 4 * n * i)
+        for i in range(k)
+    ]
+    return [ts, ints[0], *pickle.loads(payload[at + 4 * n * k:]), *ints[1:]]
 
 
 def _per_row(parts: list, field: int) -> np.ndarray:

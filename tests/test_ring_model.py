@@ -24,6 +24,7 @@ inspection (TestReflection.kt:21-30) — but against a model, not examples.
 from __future__ import annotations
 
 import pickle
+import struct
 from datetime import timedelta
 
 import numpy as np
@@ -185,7 +186,7 @@ def test_ring_buffer_fn_matches_model(sched, max_data, max_dur_s):
         # state invariant: buffer == model, sorted by (ts, turn_idx)
         if model:
             assert state.exists
-            s_ts, s_ti = state.get[0], state.get[1]
+            s_ts, s_ti = state_columns(state.get)[:2]
             assert list(zip(s_ts, s_ti)) == model
             if max_data is not None:
                 assert len(s_ts) <= max_data
@@ -409,10 +410,24 @@ def test_bucket_of_conversations_matches_per_conversation_model(
             )
 
 
+def payload(tag, ts, ints, strs):
+    """A ring state payload built by hand: layout tag, row count, int32
+    column count, ts_us int64 bytes, the int32 columns' bytes, then the
+    pickled string lists."""
+    n = len(ts)
+    return b"".join([
+        struct.pack("<4sII", tag, n, len(ints)),
+        np.asarray(ts, dtype="<i8").tobytes(),
+        *(np.asarray(c, dtype="<i4").tobytes() for c in ints),
+        pickle.dumps(tuple(strs), protocol=5),
+    ])
+
+
 def test_state_of_another_layout_is_refused():
-    """A state row written under another RING_BUCKETS, or by the sharded
-    ring, is refused, not read: its conversations would hash to buckets
-    that do not hold them, or its columns would be misread."""
+    """A state row written under another RING_BUCKETS, by the sharded
+    ring, or in another payload layout is refused, not read: its
+    conversations would hash to buckets that do not hold them, or its
+    columns would be misread."""
     from real_time_sliding_window_spark.operators.stateful import RING_BUCKETS
 
     fn = make_ring_buffer_fn(None, 4)
@@ -420,12 +435,18 @@ def test_state_of_another_layout_is_refused():
     list(fn((0,), iter([batch_df([(0, 0)])]), state))
     assert state.get[-1] == RING_BUCKETS
     written = state.get
-    state.update(tuple(written[:-1]) + (RING_BUCKETS // 4,))
+    # the hand-built payload reads back as the ring's own
+    ts, ti, *strs = state_columns(written)
+    own = (payload(b"RNG1", ts, [ti], strs), RING_BUCKETS)
+    assert written == own
+    state.update((written[0], RING_BUCKETS // 4))
     with pytest.raises(ValueError, match="RING_BUCKETS"):
         list(fn((0,), iter([batch_df([(1, US)])]), state))
     # nor is the sharded ring's state (one more column) read as this one's
-    cols = state_columns(written)
-    state.update(tuple(written[:2]) + (pickle.dumps(tuple(cols[2:] + [[0]])),
-                                       RING_BUCKETS))
+    state.update((payload(b"RNG1", ts, [ti, [0]], strs), RING_BUCKETS))
+    with pytest.raises(ValueError, match="RING_BUCKETS"):
+        list(fn((0,), iter([batch_df([(1, US)])]), state))
+    # nor a payload of another layout under the same Spark state schema
+    state.update((payload(b"RNG2", ts, [ti], strs), RING_BUCKETS))
     with pytest.raises(ValueError, match="RING_BUCKETS"):
         list(fn((0,), iter([batch_df([(1, US)])]), state))

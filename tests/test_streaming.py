@@ -1039,6 +1039,38 @@ class TestRingBucketState:
         assert len(adds) == 2 * len(convs)
         assert set(adds.conv_id) == set(convs)
 
+    def test_ring_batches_compile_no_new_code(self, spark, tmp_path):
+        """After its first drop a ring query compiles no new class. State
+        array fields would make Spark generate and compile two new state
+        (de)serializer classes on every batch. Spark also inlines each
+        batch's watermark into a late-row predicate, one class per new
+        watermark value whatever the state, so a first drive over the same
+        drops warms the code cache and the counted drive replays its
+        watermarks."""
+        compiles = (
+            spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME()
+        )
+        pushes = [
+            rows(*[(f"c{c}", 4 * k + i, "user", f"t{i}", None, 10 * k + i)
+                   for c in range(8) for i in range(4)])
+            for k in range(3)
+        ]
+        counts = []
+
+        def pipe(stream):
+            counts.append(compiles.getCount())
+            return ring_buffer_stream(
+                stream, SEC, max_duration=timedelta(seconds=5)
+            )
+
+        drive(spark, tmp_path, pipe, pushes, "ring_codegen_warm")
+        _, snaps = drive(spark, tmp_path, pipe, pushes, "ring_codegen")
+        # counts[len(pushes) + 1]: before the counted drive's second drop
+        assert compiles.getCount() - counts[len(pushes) + 1] == 0
+        # the timed mode evicted by age
+        assert (snaps[-1].reason == "age").sum() == 64
+
 
 class TestBatchPhaseTimings:
     def test_window_batch_keeps_duration_phases(self, spark, tmp_path):
