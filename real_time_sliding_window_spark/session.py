@@ -15,7 +15,17 @@ entry point all get the same plan-shaping defaults:
   the daemon backports 3.13's shared, lazily refreshed cache with a stat
   check, which takes that cost off every micro-batch of the ring buffer.
   From 3.13 it only runs ``pyspark.daemon``. A caller's ``extra_conf``
-  value of ``spark.python.daemon.module`` wins;
+  value of ``spark.python.daemon.module`` wins. The session starts no
+  daemon and no worker: a pipeline whose plan has no Python operator
+  never pays for them. The first Python stage forks the pool, about 2 s
+  for a 4-task stage on a 4-core VM (more if it is also the session's
+  first job, which carries the JVM's warm-up), and a stage after Spark's
+  idle-worker reaper has stopped the workers (about a minute idle) forks
+  them again, about 1.6 s. Spark's "time to initialize Python workers"
+  task metric does not show that cost per task on its own: for a reused
+  worker it also counts the idle time since the worker's previous task,
+  because ``pyspark/worker.py`` takes ``boot_time`` before its blocking
+  read;
 - on a local master, checkpoint files (offset and commit logs, the file
   source log, state changelogs) are renamed through Hadoop's FileSystem
   API instead of FileContext (``local_master_conf``). Without libhadoop,
@@ -139,40 +149,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)
-    _warm_python_workers(spark)
     return spark
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Prefork the Python daemon/worker pool at session startup (r6).
-
-    Python workers are forked lazily at the FIRST Arrow/pandas stage, so
-    whatever query happens to hit the boundary first absorbs the whole
-    pool's spawn and first imports (~6 s of a ~13 s ``get_spark`` on a
-    4-core VM) — a per-session engine cost
-    misattributed to one operator. One trivial one-task-per-core
-    mapInPandas round-trip at startup pays it where it belongs (session
-    init), the same reasoning as warming the JVM before timing queries.
-    Workers are reused afterwards (spark.python.worker.reuse default).
-
-    Spark's "time to initialize Python workers" task metric does not show
-    per-task worker cost on its own: for a reused worker it also counts the
-    idle time since that worker's previous task, because
-    ``pyspark/worker.py`` takes ``boot_time`` before its blocking read."""
-    par = spark.sparkContext.defaultParallelism
-
-    def _identity(it):
-        yield from it
-
-    try:
-        (
-            spark.range(par)
-            .repartition(par)
-            .mapInPandas(_identity, "id long")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-    except Exception:
-        # warming is best-effort; a failure here must never block a session
-        pass

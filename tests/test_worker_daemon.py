@@ -2,7 +2,8 @@
 
 The backport is checked without Spark on a zip built here; the Spark tests
 check that ``get_spark`` sessions fork their workers from the package's
-daemon unless the caller configures another one.
+daemon unless the caller configures another one, and only at the first
+Python stage.
 """
 
 from __future__ import annotations
@@ -127,6 +128,18 @@ def test_session_workers_run_package_daemon(spark):
     assert [r.patched for r in rows] == [expected] * 4
 
 
+def _run_child(tmp_path, script: str):
+    """Run ``script`` in a child Python with a small local[1] session; returns
+    the JSON object on its last stdout line."""
+    env = dict(os.environ, TMPDIR=str(tmp_path), RTSW_DRIVER_MEM="1g",
+               SPARK_GRAFT_CPUS="1",
+               SPARK_LOCAL_DIRS=str(tmp_path / "spark-local"))
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
 def test_caller_daemon_module_wins(tmp_path):
     """A caller's ``extra_conf`` keeps its daemon; needs a fresh JVM, so it
     runs in a child process."""
@@ -155,11 +168,56 @@ def test_caller_daemon_module_wins(tmp_path):
         spark.stop()
         print(json.dumps(out))
     """)
-    env = dict(os.environ, TMPDIR=str(tmp_path), RTSW_DRIVER_MEM="1g",
-               SPARK_GRAFT_CPUS="1",
-               SPARK_LOCAL_DIRS=str(tmp_path / "spark-local"))
-    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
-                          capture_output=True, text=True, timeout=600)
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out == {"conf": "pyspark.daemon", "module": "zipimport"}
+    assert _run_child(tmp_path, script) == {"conf": "pyspark.daemon",
+                                             "module": "zipimport"}
+
+
+def test_session_starts_no_python_worker(tmp_path):
+    """``get_spark`` forks no Python daemon or worker under the JVM; the
+    first Python stage does. Needs a fresh JVM, so it runs in a child
+    process, and reads the process tree from /proc only."""
+    script = textwrap.dedent(f"""
+        import json, os, sys
+        sys.path.insert(0, {ROOT!r})
+        from pyspark import SparkContext
+        from real_time_sliding_window_spark import get_spark
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1, extra_conf={{
+            "spark.ui.showConsoleProgress": "false",
+        }})
+        jvm = SparkContext._gateway.proc.pid
+
+        def python_workers():
+            children = {{}}
+            for d in filter(str.isdigit, os.listdir("/proc")):
+                try:
+                    with open(f"/proc/{{d}}/stat") as f:
+                        ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+                except OSError:
+                    continue
+                children.setdefault(ppid, []).append(int(d))
+            out, todo = [], list(children.get(jvm, ()))
+            while todo:
+                pid = todo.pop()
+                todo.extend(children.get(pid, ()))
+                try:
+                    with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+                        cmd = f.read().replace(b"\\0", b" ").decode()
+                except OSError:
+                    continue
+                if "worker_daemon" in cmd or "pyspark.daemon" in cmd:
+                    out.append(cmd)
+            return out
+
+        def identity(it):
+            yield from it
+
+        out = {{"after_get_spark": python_workers()}}
+        spark.range(1).mapInPandas(identity, "id long").collect()
+        out["after_python_stage"] = python_workers()
+        spark.stop()
+        print(json.dumps(out))
+    """)
+    out = _run_child(tmp_path, script)
+    assert out["after_get_spark"] == []
+    assert out["after_python_stage"]
