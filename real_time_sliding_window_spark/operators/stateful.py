@@ -574,11 +574,14 @@ def ring_state_from_actions(actions: DataFrame) -> DataFrame:
     The action rows are a complete state history: a turn is in the buffer
     iff it was ADDed and never EVICTed (DUPs never changed state), so the
     live contents are one left-anti join over the log — the ring-buffer
-    analogue of the reference's ``currentBucket`` getter (the windowed
-    twin is streaming/live_view.py), computable from any sink that kept
-    the log, with no access to the state store. Output: one row per
-    buffered turn, ordered by the buffer's (ts, turn_idx) invariant via
-    ``turn_rank``.
+    analogue of the reference's ``currentBucket`` getter, computable from
+    any sink that kept the log, with no access to the state store. The
+    state store is the second source: ``spark.read.format("statestore")``
+    over the ring's checkpoint, each bucket row decoded with
+    ``state_columns`` (its ``value.groupState``), gives the same buffers;
+    streaming/live_view.py reads a window query's open windows that way.
+    Output: one row per buffered turn, ordered by the buffer's
+    (ts, turn_idx) invariant via ``turn_rank``.
     """
     from pyspark.sql.window import Window as SqlWindow
 

@@ -83,22 +83,3 @@ def write_stream_to_iceberg(
         writer = writer.trigger(availableNow=True)
     return writer.toTable(table)
 
-
-MERGE_TEMPLATE = """
-MERGE INTO {table} t
-USING updates u
-  ON  t.conv_id = u.conv_id
-  AND t.window_start = u.window_start
-  AND t.window_kind = u.window_kind
-WHEN MATCHED THEN UPDATE SET *
-WHEN NOT MATCHED THEN INSERT *
-"""
-
-
-def merge_batch_into_iceberg(spark: SparkSession, batch: DataFrame, table: str) -> None:
-    """foreachBatch body for UPSERT semantics (late re-emits under update
-    mode): key-level idempotence via Iceberg MERGE on
-    (conv_id, window_start, window_kind) — SURVEY.md §4.4."""
-    _require(spark)
-    batch.createOrReplaceTempView("updates")
-    spark.sql(MERGE_TEMPLATE.format(table=table))

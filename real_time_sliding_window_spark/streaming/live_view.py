@@ -1,42 +1,45 @@
-"""Live view of OPEN windows — update-output-mode twin of the append sink.
+"""Live view of OPEN windows, read from the append pipeline's own state.
 
 The reference's primary read path is polling the in-flight bucket
 (`FixedTumblingBucketedWindow.kt:80-98` ``currentBucket``/``buckets``
 getters, exercised at `FixedTumblingBucketedWindowTest.kt:287-291`): "what
 is in the window RIGHT NOW", before the window closes. The append-mode
-pipeline (streaming/pipeline.py + sink.py) only surfaces windows after the
-watermark passes their end — correct for the finalized feed, useless for
-the live question.
+pipeline (streaming/pipeline.py + sink.py) only emits a window after the
+watermark passes its end, but its state store already holds every open
+window's running aggregate. So one query answers both questions, from two
+sources:
 
-This module answers it with Structured Streaming's UPDATE output mode: the
-windowed aggregation emits every window group that changed in each
-micro-batch (including the open one), and a foreachBatch upsert keeps the
-latest value per (window, keys). The store is an ExactlyOnceParquetSink
-(per-batch delta parquet + commit markers, exactly once on redelivery),
-with the read side resolving the newest version per key — MERGE-on-read,
-exactly what `iceberg.merge_batch_into_iceberg` does server-side on a real
-cluster.
+- closed windows: the rows ``start`` appends into an
+  ``ExactlyOnceParquetSink`` at the view's root;
+- open windows: Spark's state data source,
+  ``spark.read.format("statestore").load(<checkpoint>)``. Its key is
+  ``(window, *keys)`` and its value the aggregation buffer
+  ``(count, min, max)``, which for ``windowed_stream`` without
+  ``extra_aggs`` or ``content_payload`` is already
+  ``(n_rows, first_ts, last_ts)``.
 
-Scale notes: each micro-batch writes only CHANGED groups (delta size is
-bounded by update activity, not window count); the read-side
-latest-version-per-key resolution is one window function over the deltas —
-at production scale you would compact (or use the Iceberg MERGE twin), and
-the read is partition-pruned by window_start.
+Both halves are read at one batch: ``N``, the last entry in
+``<checkpoint>/commits``. The state is read at ``batchId`` ``N`` and the
+sink only up to ``batch_id <= N``. The sink commits batch ``N+1`` before
+the engine writes ``commits/N+1``; after a crash in that gap, an unpinned
+read would show a window that closed in ``N+1`` twice, open in the state
+and closed in the sink.
+
+Reads are tested between runs of an availableNow query. Reading while the
+query runs is unverified. A view root written by the earlier update-mode
+store (several versions of one window in its sink) must be started fresh:
+those rows would read as closed windows. Session windows are refused:
+their output and state are keyed by session, not ``window``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import time
-import uuid
 from datetime import datetime
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as SqlWindow
 
 from real_time_sliding_window_spark.config import WindowSpec
 from real_time_sliding_window_spark.streaming.pipeline import windowed_stream
@@ -44,106 +47,19 @@ from real_time_sliding_window_spark.streaming.sink import ExactlyOnceParquetSink
 
 
 class LiveWindowView:
-    """Upsert store + read API for update-mode window aggregates.
+    """The reference's bucket getters over one append-mode window query.
 
-    Compaction safety (VERDICT r02 #6): ``compact`` holds a lease file
-    (`_compaction.lock`) that ``buckets`` honors — a reader arriving during
-    the non-atomic oldest-delta swap gets a clear retryable error instead
-    of a torn view. A crashed compactor's stale lease is stolen after
-    ``stale_after`` seconds and its leftover ``_tmp_*`` dirs are GC'd on
-    init (age-gated, so a live writer's in-flight tmp is never touched).
+    ``start`` appends closed windows into the sink at ``root`` and records
+    the query's checkpoint there (``_checkpoint``), so a view opened on the
+    same root reads the same query. ``buckets`` unions the checkpoint's
+    open windows with the sink's closed ones, both pinned to the last
+    committed batch (see the module docstring).
     """
-
-    LOCK_NAME = "_compaction.lock"
-    TMP_GC_AGE_S = 3600.0
 
     def __init__(self, root: str):
         self.root = root
         self.sink = ExactlyOnceParquetSink(root, track_lineage=False)
-        self.delta_dir = self.sink.data_dir
-        self._gc_tmp_dirs()
-
-    # -- compaction lease ------------------------------------------------
-    def _lock_path(self) -> str:
-        return os.path.join(self.root, self.LOCK_NAME)
-
-    def _gc_tmp_dirs(self, min_age_s: float | None = None) -> int:
-        """Remove crash-leftover ``_tmp_*`` dirs older than ``min_age_s``.
-
-        Age-gated because a CONCURRENT writer's tmp dir (uuid-named,
-        renamed into place within seconds) must never be collected; a
-        crashed compaction's leftover is hours old by the next init."""
-        if min_age_s is None:
-            min_age_s = self.TMP_GC_AGE_S
-        # A fresh _compaction.lock means a compactor is ACTIVE right now:
-        # its _tmp_snap_* write may legitimately outlive TMP_GC_AGE_S on a
-        # huge snapshot, and the mtime age gate alone would rmtree it
-        # mid-flight (ADVICE r03). The lease already identifies the active
-        # compactor — skip GC entirely while it's fresh; a crashed
-        # compactor's lease goes stale and the next init GCs as before.
-        try:
-            lock_age = time.time() - os.path.getmtime(self._lock_path())
-            if lock_age < min_age_s:
-                return 0
-        except FileNotFoundError:
-            pass
-        removed = 0
-        for name in os.listdir(self.root):
-            if not name.startswith("_tmp_"):
-                continue
-            p = os.path.join(self.root, name)
-            try:
-                if time.time() - os.path.getmtime(p) >= min_age_s:
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed += 1
-            except FileNotFoundError:
-                pass
-        return removed
-
-    def _acquire_lease(self, stale_after_s: float) -> None:
-        path = self._lock_path()
-        for _ in range(2):
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                with os.fdopen(fd, "w") as f:
-                    json.dump({"pid": os.getpid(), "token": uuid.uuid4().hex}, f)
-                return
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(path)
-                except FileNotFoundError:
-                    continue  # holder just released — retry create
-                if age < stale_after_s:
-                    raise RuntimeError(
-                        f"compaction lease held at {path} (age {age:.0f}s "
-                        f"< stale_after {stale_after_s:.0f}s) — another "
-                        "compactor is active or crashed recently; retry "
-                        "later or raise stale_after to steal"
-                    )
-                # stale (crashed holder): steal ATOMICALLY via rename — two
-                # compactors can both pass the age check, but only one
-                # rename succeeds; the loser loops, sees the winner's FRESH
-                # lock, and raises above (a bare os.remove here would let
-                # the loser delete the winner's new lock — both "holding")
-                steal = f"{path}.steal.{uuid.uuid4().hex}"
-                try:
-                    os.rename(path, steal)
-                except FileNotFoundError:
-                    continue  # raced: stolen/released elsewhere — retry
-                os.remove(steal)
-        raise RuntimeError(f"could not acquire compaction lease at {path}")
-
-    def _release_lease(self) -> None:
-        try:
-            os.remove(self._lock_path())
-        except FileNotFoundError:
-            pass
-
-    # -- sink side -----------------------------------------------------
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: the sink's exactly-once delta write of the
-        changed groups."""
-        self.sink.write_batch(df, batch_id)
+        self._checkpoint_file = os.path.join(root, "_checkpoint")
 
     def start(
         self,
@@ -155,14 +71,21 @@ class LiveWindowView:
         trigger_available_now: bool = True,
         query_name: str = "rtsw-live-view",
     ):
-        """Start the update-mode window aggregation into this view.
+        """Start the append-mode window aggregation into this view.
 
         Returns the running StreamingQuery (caller owns stop/await).
         """
+        if spec.kind == "session":
+            raise ValueError(
+                "LiveWindowView reads windows keyed by 'window'; session "
+                f"windows ({spec.name!r}) have another output and state layout"
+            )
+        with open(self._checkpoint_file, "w") as f:
+            f.write(os.path.abspath(checkpoint))
         agg = windowed_stream(stream, spec, ts_col=ts_col, keys=keys)
         writer = (
             agg.writeStream.foreachBatch(self.sink.foreach_batch())
-            .outputMode("update")
+            .outputMode("append")
             .option("checkpointLocation", checkpoint)
             .queryName(query_name)
         )
@@ -170,49 +93,38 @@ class LiveWindowView:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    # -- read side -------------------------------------------------------
     def buckets(
         self, spark: SparkSession, keys: Sequence[str] = ()
     ) -> DataFrame:
-        """Latest state of EVERY window seen so far (open and closed) —
-        the reference's ``buckets`` getter. One row per (window, keys):
-        newest delta version wins (merge-on-read).
-
-        Honors the compaction lease: reading while ``compact`` swaps the
-        oldest delta dir could return a torn view, so a held lease raises
-        a retryable error instead (VERDICT r02 #6). Scope of the
-        guarantee: the lease is checked when the DataFrame is BUILT (and
-        re-checked after path listing); the returned DataFrame is lazy, so
-        consume it before starting a compactor — plain-filesystem reads
-        have no snapshot isolation (a compactor that starts after this
-        returns can still invalidate the scan; the Iceberg twin reads a
-        pinned snapshot and has no such window)."""
-        def _require_no_lease():
-            if os.path.exists(self._lock_path()):
-                raise RuntimeError(
-                    f"compaction in progress under {self.root} "
-                    f"({self.LOCK_NAME} held) — retry when it completes"
-                )
-
-        _require_no_lease()
-        out = self._resolved(spark, keys)
-        # re-check AFTER the delta dirs were listed: a compactor acquiring
-        # mid-build would otherwise hand us a doomed path set
-        _require_no_lease()
-        return out
-
-    def _resolved(
-        self, spark: SparkSession, keys: Sequence[str] = ()
-    ) -> DataFrame:
-        # batch_id is encoded in the path; recover it as the version column
-        deltas = self.sink.read_committed(spark, with_batch_id=True)
-        w = SqlWindow.partitionBy("window_start", *keys).orderBy(
-            F.col("batch_id").desc()
+        """Every window seen so far, open and closed, one row per
+        (window, keys) — the reference's ``buckets`` getter. Open windows
+        come from the query's state, closed ones from the sink, both as of
+        the last committed batch."""
+        with open(self._checkpoint_file) as f:
+            checkpoint = f.read()
+        commits = os.path.join(checkpoint, "commits")
+        committed = [int(n) for n in os.listdir(commits) if n.isdigit()]
+        if not committed:
+            raise FileNotFoundError(f"no committed batch under {checkpoint}")
+        last = max(committed)
+        key = F.col("key")
+        open_windows = (
+            spark.read.format("statestore")
+            .option("batchId", last)
+            .load(checkpoint)
+            .select(
+                key["window"]["start"].alias("window_start"),
+                key["window"]["end"].alias("window_end"),
+                *[key[k].alias(k) for k in keys],
+                F.col("value.count").alias("n_rows"),
+                F.col("value.min").alias("first_ts"),
+                F.col("value.max").alias("last_ts"),
+            )
         )
-        return (
-            deltas.withColumn("__v", F.row_number().over(w))
-            .filter(F.col("__v") == 1)
-            .drop("__v", "batch_id")
+        # the sink committed every batch up to ``last`` before the engine did
+        closed = self.sink.read_committed(spark, with_batch_id=True)
+        return open_windows.unionByName(
+            closed.filter(F.col("batch_id") <= last).drop("batch_id")
         )
 
     def current_bucket(
@@ -228,83 +140,6 @@ class LiveWindowView:
             (F.col("window_start") <= F.lit(now))
             & (F.col("window_end") > F.lit(now))
         )
-
-    def compact(
-        self,
-        spark: SparkSession,
-        keys: Sequence[str] = (),
-        stale_after_s: float = 3600.0,
-    ) -> int:
-        """Fold all deltas into one resolved snapshot (merge-on-read →
-        merge-on-write), so read cost returns to one scan regardless of how
-        many micro-batches have run — the filesystem analogue of Iceberg
-        snapshot compaction. Returns the number of deltas folded away.
-
-        The snapshot takes the OLDEST existing batch id, never a new one:
-        Structured Streaming epoch ids keep increasing from the checkpoint
-        after a restart, so a snapshot at max_id+1 would collide with the
-        stream's next epoch and the sink's idempotence check would silently
-        SKIP that real batch. Folding downward can't collide (those epochs
-        are already consumed) and resolution is unchanged — every key's
-        latest surviving version is the snapshot unless a newer delta
-        exists.
-
-        Maintenance-window operation: run while the streaming query is
-        stopped. Concurrent READERS are now excluded by the lease file
-        (``buckets`` raises while it is held; a crashed compactor's lease
-        is stolen after ``stale_after_s`` and the re-run completes the
-        fold — the snapshot-first ordering makes that resume safe).
-        Replacing the oldest delta dir is still not atomic on a plain
-        filesystem (the Iceberg twin gets atomicity from snapshot commits).
-
-        PRODUCTION PATH (VERDICT r03 #8): at 100 TB this whole class is an
-        Iceberg MERGE-ON-READ table — deltas are snapshot commits, this
-        method is ``CALL catalog.system.rewrite_data_files(t)`` +
-        ``expire_snapshots``, and the lease/tmp-GC machinery disappears
-        because the catalog's atomic snapshot swap provides the isolation
-        this file builds by hand. See streaming/iceberg.py for the gated
-        runtime.
-        """
-        self._acquire_lease(stale_after_s)
-        try:
-            old_ids = self.sink.committed_batches()
-            if len(old_ids) <= 1:
-                return 0
-            resolved = self._resolved(spark, keys)
-            snap_id = old_ids[0]
-            tmp = os.path.join(self.root, f"_tmp_snap_{uuid.uuid4().hex}")
-            resolved.write.mode("overwrite").parquet(tmp)
-            # HEARTBEAT the lease after the long step (review r4): the
-            # GC guard and the stale-steal both key off the lock's
-            # mtime, so a snapshot write that outlives stale_after would
-            # otherwise leave this compactor's lease stealable and its
-            # tmp dir collectable exactly when it matters. Touching the
-            # lock after each long step keeps the lease fresh as long as
-            # no SINGLE step exceeds stale_after (which is also the
-            # honest limit of mtime-based leasing on a plain filesystem).
-            os.utime(self._lock_path())
-            # Replace the OLDEST delta with the snapshot FIRST: once it
-            # lands, the store is fully consistent — every newer delta's
-            # per-key value equals the snapshot's resolved value, so the
-            # cleanup below is safe to crash in and re-run. The only
-            # inconsistent window is the rmtree→rename of the oldest dir
-            # itself (sub-second; the Iceberg twin gets true atomicity
-            # from snapshot commits).
-            target = os.path.join(self.delta_dir, f"batch_id={snap_id}")
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(tmp, target)
-            for b in old_ids[1:]:
-                shutil.rmtree(
-                    os.path.join(self.delta_dir, f"batch_id={b}"),
-                    ignore_errors=True,
-                )
-                try:
-                    os.remove(self.sink._commit_marker(b))
-                except FileNotFoundError:
-                    pass
-            return len(old_ids) - 1
-        finally:
-            self._release_lease()
 
     def non_current_buckets(
         self,

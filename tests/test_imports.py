@@ -7,8 +7,8 @@ longer exists only fails when that code path runs, so a tier-1 suite that
 never reaches it would stay green.
 
 The same walk guards the stateful operators' shape: one event-time timer
-rule (``stateful.arm_timer``) and at most three ``applyInPandasWithState``
-wirings.
+rule (``stateful.arm_timer``), at most three ``applyInPandasWithState``
+wirings, and append output mode on every streaming write.
 """
 
 from __future__ import annotations
@@ -70,12 +70,12 @@ def _unresolved(module: str, names: list[str]) -> list[str]:
     ]
 
 
-def _calls(attr: str) -> list[tuple[Path, int]]:
-    """(file, line) of every ``<obj>.attr(...)`` call in the package."""
+def _calls(attr: str) -> list[tuple[Path, ast.Call]]:
+    """(file, call node) of every ``<obj>.attr(...)`` call in the package."""
     out = []
     for path in _sources():
         if path.is_relative_to(ROOT / PKG):
-            out += [(path, node.lineno)
+            out += [(path, node)
                     for node in ast.walk(ast.parse(path.read_text(), str(path)))
                     if isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
@@ -90,12 +90,27 @@ def test_one_timer_rule_and_three_stateful_sites():
     stateful = ROOT / PKG / "operators" / "stateful.py"
     arm = next(n for n in ast.walk(ast.parse(stateful.read_text()))
                if isinstance(n, ast.FunctionDef) and n.name == "arm_timer")
-    timers = _calls("setTimeoutTimestamp")
+    timers = [(p, c.lineno) for p, c in _calls("setTimeoutTimestamp")]
     assert len(timers) == 1, timers
     path, line = timers[0]
     assert path == stateful and arm.lineno <= line <= arm.end_lineno, timers
-    sites = _calls("applyInPandasWithState")
+    sites = [(p, c.lineno) for p, c in _calls("applyInPandasWithState")]
     assert len(sites) <= 3, sites
+
+
+def test_every_streaming_write_is_append_mode():
+    """Every ``.outputMode(...)`` call passes the literal ``"append"``:
+    windows are final when emitted, and open windows are read from the
+    append query's own state (``streaming/live_view.py``), not from a
+    second, update-mode query."""
+    calls = _calls("outputMode")
+    assert calls, "no outputMode call found — walker broken?"
+    other = [
+        (str(p.relative_to(ROOT)), c.lineno) for p, c in calls
+        if c.keywords or len(c.args) != 1
+        or not (isinstance(c.args[0], ast.Constant) and c.args[0].value == "append")
+    ]
+    assert not other, other
 
 
 def test_every_package_import_resolves():

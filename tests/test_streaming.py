@@ -1165,6 +1165,18 @@ class TestLiveWindowView:
         ).toPandas()
         assert len(closed) == 1 and closed.iloc[0]["n_rows"] == 3
 
+    def test_session_spec_refused_before_any_query(self, tmp_path):
+        """Session windows are keyed by session, not ``window``: start
+        refuses them before it builds or starts anything."""
+        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
+
+        view = LiveWindowView(str(tmp_path / "ss_store"))
+        spec = WindowSpec(name="ss", kind="session", gap="30 seconds")
+        ckpt = tmp_path / "ss_ckpt"
+        with pytest.raises(ValueError, match="session"):
+            view.start(None, spec, str(ckpt))
+        assert not ckpt.exists()
+
 
 class TestKafkaGating:
     def test_unavailable_raises_actionable_error(self, spark):
@@ -1225,106 +1237,6 @@ class TestStreamStaticJoin:
         assert list(final["tool_category"].fillna("-")) == [
             "retrieval", "math", "-"
         ]
-
-
-class TestLiveViewCompaction:
-    def test_compact_preserves_state_and_stream_resumes(self, spark, tmp_path):
-        """Compaction folds every delta into the OLDEST batch id; state
-        reads identically, and — critically — the resumed stream's next
-        epoch id does not collide with the snapshot (a max_id+1 snapshot
-        would be silently skipped by the sink's idempotence check)."""
-        import os
-
-        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
-
-        feed = FileFeed(spark, str(tmp_path / "cp_in"))
-        view = LiveWindowView(str(tmp_path / "cp_store"))
-        spec = WindowSpec(
-            name="cp", length="60 seconds", watermark_delay="30 seconds"
-        )
-        ckpt = str(tmp_path / "cp_ckpt")
-
-        def run_push(pdf):
-            feed.push(pdf)
-            q = view.start(
-                feed.stream(), spec, ckpt, keys=["conv_id"], query_name="cp"
-            )
-            q.awaitTermination()
-
-        run_push(rows(("c1", 0, "user", "a", None, 0)))
-        run_push(rows(("c1", 1, "user", "b", None, 5)))
-        run_push(rows(("c2", 0, "user", "c", None, 70)))
-        before = view.buckets(spark, keys=["conv_id"]).toPandas()
-        # >= 2: availableNow may add a watermark-advance epoch per push,
-        # so 3 pushes yield up to 6 deltas — all but one fold away
-        folded = view.compact(spark, keys=["conv_id"])
-        assert folded >= 2
-        after = view.buckets(spark, keys=["conv_id"]).toPandas()
-        key = lambda p: sorted(
-            map(tuple, p[["conv_id", "window_start", "n_rows"]].itertuples(index=False))
-        )
-        assert key(before) == key(after)
-        assert len(os.listdir(view.delta_dir)) == 1  # one snapshot delta
-
-        # the stream resumes from the same checkpoint: its next epoch (3)
-        # must land (would be skipped if the snapshot had taken id 3)
-        run_push(rows(("c1", 2, "user", "d", None, 10)))
-        final = view.buckets(spark, keys=["conv_id"]).toPandas()
-        c1w0 = final[(final.conv_id == "c1")]
-        assert sorted(c1w0["n_rows"]) == [3]  # running count updated to 3
-
-
-class TestLiveViewCompactionLease:
-    @staticmethod
-    def _two_delta_view(spark, tmp_path):
-        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
-
-        view = LiveWindowView(str(tmp_path / "lease_store"))
-        mk = lambda n: spark.createDataFrame(pd.DataFrame({
-            "window_start": [T0], "window_end": [T0 + 60 * SEC],
-            "conv_id": ["c1"], "n_rows": [n],
-        }))
-        view.write_batch(mk(1), 0)
-        view.write_batch(mk(2), 1)
-        return view
-
-    def test_lease_blocks_readers_and_stale_is_stolen(self, spark, tmp_path):
-        """VERDICT r02 #6: reading mid-compaction could see a torn view —
-        a held lease makes buckets() raise a retryable error, a second
-        compactor refuses, and a CRASHED compactor's stale lease is stolen
-        so the re-run completes the fold."""
-        import os
-
-        view = self._two_delta_view(spark, tmp_path)
-        with open(view._lock_path(), "w") as f:
-            f.write("{}")
-        with pytest.raises(RuntimeError, match="compaction in progress"):
-            view.buckets(spark, keys=["conv_id"])
-        with pytest.raises(RuntimeError, match="lease held"):
-            view.compact(spark, keys=["conv_id"])
-        # crash-resume: the holder died long ago (ancient mtime) — steal
-        os.utime(view._lock_path(), (1, 1))
-        assert view.compact(spark, keys=["conv_id"]) == 1
-        assert not os.path.exists(view._lock_path())
-        out = view.buckets(spark, keys=["conv_id"]).toPandas()
-        assert len(out) == 1 and out.iloc[0]["n_rows"] == 2  # newest wins
-
-    def test_init_gc_removes_only_stale_tmp_dirs(self, spark, tmp_path):
-        """A crashed compaction's _tmp_snap_* dir must not survive forever;
-        a CONCURRENT writer's seconds-old tmp dir must survive the GC."""
-        import os
-
-        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
-
-        view = self._two_delta_view(spark, tmp_path)
-        stale = os.path.join(view.root, "_tmp_snap_deadbeef")
-        fresh = os.path.join(view.root, "_tmp_12_cafe")
-        os.makedirs(stale)
-        os.makedirs(fresh)
-        os.utime(stale, (1, 1))
-        LiveWindowView(view.root)  # re-init runs the GC
-        assert not os.path.exists(stale)
-        assert os.path.exists(fresh)
 
 
 EVENT_SCHEMA = "user_id string, event_type string, ts timestamp"
@@ -1479,25 +1391,6 @@ class TestStreamingTwins:
 
 
 class TestLiveViewIdempotence:
-    def test_write_batch_redelivery_noop(self, spark, tmp_path):
-        """A redelivered live-view batch id is a no-op (commit-marker
-        dedup) — the same exactly-once contract as the append sink."""
-        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
-
-        view = LiveWindowView(str(tmp_path / "idem_store"))
-        df1 = spark.createDataFrame(pd.DataFrame({
-            "window_start": [T0], "window_end": [T0 + 60 * SEC],
-            "conv_id": ["c1"], "n_rows": [2],
-        }))
-        df2 = spark.createDataFrame(pd.DataFrame({
-            "window_start": [T0], "window_end": [T0 + 60 * SEC],
-            "conv_id": ["c1"], "n_rows": [99],   # would differ if applied
-        }))
-        view.write_batch(df1, 0)
-        view.write_batch(df2, 0)   # redelivery: must be skipped
-        got = view.buckets(spark, keys=["conv_id"]).toPandas()
-        assert len(got) == 1 and got.iloc[0]["n_rows"] == 2
-
     def test_restart_redelivers_committed_stateful_batch(self, spark, tmp_path):
         """Crash after the view committed a batch but before the engine's
         commits/N: the restart redelivers that stateful batch. Its state
@@ -1534,6 +1427,52 @@ class TestLiveViewIdempotence:
         run()
         assert key(view.buckets(spark, keys=["conv_id"]).toPandas()) == before
         assert before == [(T0, 1), (T0 + 600 * SEC, 1), (T0 + 1200 * SEC, 1)]
+
+    def test_crash_between_sink_and_engine_commit_reads_each_window_once(
+        self, spark, tmp_path
+    ):
+        """The last batch closes a window and the sink commits it, then the
+        engine's commits/N is lost. buckets() reads the state at N-1 and
+        the sink only up to N-1, so the window shows once (open), not also
+        closed; the restart then gives the rows read before the crash."""
+        import os
+
+        from real_time_sliding_window_spark.streaming.live_view import LiveWindowView
+
+        feed = FileFeed(spark, str(tmp_path / "seam_in"))
+        view = LiveWindowView(str(tmp_path / "seam_store"))
+        spec = WindowSpec(
+            name="seam", length="10 minutes", watermark_delay="0 seconds"
+        )
+        ckpt = str(tmp_path / "seam_ckpt")
+
+        def run():
+            view.start(
+                feed.stream(), spec, ckpt, keys=["conv_id"], query_name="seam"
+            ).awaitTermination()
+
+        def read():
+            p = view.buckets(spark, keys=["conv_id"]).toPandas()
+            return sorted(map(tuple, p[["window_start", "conv_id", "n_rows"]]
+                              .itertuples(index=False)))
+
+        for i, sec in enumerate((0, 700, 1400)):
+            feed.push(rows(("c1", i, "user", "t", None, sec)))
+        run()
+        before = read()
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+        # the lost batch is the one that closed [10:00, 20:00)
+        closed = view.sink.read_batch(spark, last).toPandas()
+        assert list(closed["window_start"]) == [T0 + 600 * SEC]
+        os.remove(os.path.join(commits, str(last)))
+        os.remove(os.path.join(commits, f".{last}.crc"))
+        crashed = read()
+        assert [r[:2] for r in crashed] == [r[:2] for r in before]
+        run()
+        assert read() == before == [
+            (T0, "c1", 1), (T0 + 600 * SEC, "c1", 1), (T0 + 1200 * SEC, "c1", 1)
+        ]
 
 
 class TestStatelessDocOpsOnStreams:
@@ -1598,6 +1537,52 @@ class TestRingReplay:
         assert list(c1["turn_rank"]) == [1, 2]
         c2 = state[state.conv_id == "c2"]
         assert list(c2["turn_idx"]) == [0]
+
+    def test_state_store_buffer_matches_action_replay(self, spark, tmp_path):
+        """The action log and the state it describes agree: decoding every
+        bucket row that Spark's state data source reads from the ring's
+        checkpoint gives, per conversation and in stored order, the
+        (turn_idx, ts) buffer that replaying the log gives in turn_rank
+        order, under capacity and age eviction."""
+        from real_time_sliding_window_spark.operators.stateful import (
+            ring_state_from_actions,
+            state_columns,
+        )
+
+        def pipe(stream):
+            return ring_buffer_stream(
+                stream, timedelta(0), max_duration=timedelta(seconds=30),
+                max_data=2,
+            )
+
+        pushes = [
+            rows(("c1", 0, "user", "a", None, 0), ("c1", 1, "user", "b", None, 1),
+                 ("c2", 0, "user", "x", None, 2)),
+            rows(("c1", 2, "user", "c", None, 3)),          # capacity evicts
+            # watermark 50 s ages out everything before 20 s
+            rows(("c1", 3, "user", "d", None, 45), ("c3", 0, "user", "y", None, 50)),
+            rows(("c3", 1, "user", "z", None, 60), ("c4", 0, "user", "w", None, 61)),
+        ]
+        sink, _ = drive(spark, tmp_path, pipe, pushes, "ringx")
+        log = sink.read_committed(spark)
+        reasons = {r.reason for r in log.filter(F.col("action") == "EVICT")
+                   .select("reason").distinct().collect()}
+        assert reasons == {"capacity", "age"}
+
+        from_state = {}
+        state = spark.read.format("statestore").load(str(tmp_path / "ringx_ckpt"))
+        for row in state.collect():
+            ts, turn_idx, _, _, _, conv_id = state_columns(row.value.groupState)
+            for c, t, i in zip(conv_id, ts.tolist(), turn_idx.tolist()):
+                from_state.setdefault(c, []).append((i, t))
+
+        replay = {}
+        for r in (ring_state_from_actions(log)
+                  .select("conv_id", "turn_idx", F.unix_micros("ts").alias("ts"))
+                  .orderBy("conv_id", "turn_rank").collect()):
+            replay.setdefault(r.conv_id, []).append((r.turn_idx, r.ts))
+        assert from_state == replay
+        assert sorted(replay) == ["c1", "c3", "c4"]
 
 
 class TestStreamingTwinValidation:
