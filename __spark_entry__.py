@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_sliding_window_spark.config import ViewArgs
-from real_time_sliding_window_spark.operators import similarity as S
 from real_time_sliding_window_spark.operators import text as T
 from real_time_sliding_window_spark.operators import windows as W
 from real_time_sliding_window_spark.operators.joins import interval_join
@@ -765,41 +764,6 @@ def q_distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _events(spark, sf_dir).select("user_id", "event_type").distinct()
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-3 for query vectors vec_id < 20 (exact,
-    quantized int math — bit-identical to the oracle)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return S.cosine_topk(emb, query_ids=range(20), k=3)
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-3 with flip-1-bit multi-probe
-    (8 planes, 9 probed buckets per query — the scale path)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return S.ivf_topk(emb, query_ids=range(20), k=3, n_planes=8, multiprobe=True)
-
-
-def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned-centroid IVF top-3 (VERDICT r02 #1): integer k-means coarse
-    quantizer (k=8 centroids, 4 Lloyd's rounds, content-addressed seeds),
-    2-probe search with 2-way corpus spill. Every k-means step is exact
-    int64, so the DuckDB oracle replays the ENTIRE training iteration as a
-    recursive CTE and the value-hash gate pins quantizer + spill assignment
-    + probe + search end-to-end."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return S.ivf_kmeans_topk(
-        emb, query_ids=range(20), k=3, n_centroids=8, n_iter=4, n_probe=2,
-        spill=2,
-    )
-
-
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the IVF multi-probe path against the exact cosine
-    baseline, per query — the ANN shippability metric (VERDICT r01 #4)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return S.recall_at_k(emb, query_ids=range(20), k=3, n_planes=8, multiprobe=True)
-
-
 def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-heuristic language identification."""
     return T.language_id(_docs(spark, sf_dir))
@@ -1020,236 +984,13 @@ _TFIDF_QUERIES = [
 
 def q_tfidf_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword retrieval: integer TF-IDF top-10 per query over an
-    inverted postings index (operators/retrieval.py::tfidf_topk) — the
-    search-side complement of the ANN family. Log-free rational idf
-    ((N*1000) div (df+1)) keeps scores exact int64, so the oracle replays
-    the whole index + scoring pipeline and hash-matches at any scale."""
+    inverted postings index (operators/retrieval.py::tfidf_topk). Log-free
+    rational idf ((N*1000) div (df+1)) keeps scores exact int64, so the
+    oracle replays the whole index + scoring pipeline and hash-matches at
+    any scale."""
     from real_time_sliding_window_spark.operators.retrieval import tfidf_topk
 
     return tfidf_topk(_docs(spark, sf_dir), _TFIDF_QUERIES, k=10)
-
-
-def _sketch_sql_expr(qv: str, n_planes: int) -> str:
-    """DuckDB twin of functions/columns.sign_sketch: bit p of the bucket is
-    the sign of the projection onto dense pseudo-random ±1 plane p."""
-    bits = []
-    for p in range(n_planes):
-        proj = (
-            f"list_sum(list_transform(generate_series(1, len({qv})), "
-            f"j -> CASE WHEN (j * {p + 7}) % 13 < 7 "
-            f"THEN {qv}[j] ELSE -{qv}[j] END))"
-        )
-        bits.append(f"CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END")
-    return " + ".join(bits)
-
-
-_INT_COSINE = (
-    "CAST(list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2])) AS DOUBLE)"
-    " / (sqrt(CAST(list_sum(list_transform({a}, v -> v*v)) AS DOUBLE))"
-    " * sqrt(CAST(list_sum(list_transform({b}, v -> v*v)) AS DOUBLE)))"
-)
-
-
-def _ivf_sql(n_planes: int = 8, k: int = 3) -> str:
-    """DuckDB twin of similarity.ivf_topk with flip-1-bit multi-probe:
-    probe p=0 is the query's own bucket; probe p>=1 flips bit p-1."""
-    return f"""
-        WITH q AS (
-            SELECT vec_id,
-                list_transform(embedding,
-                    x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings
-        ),
-        b AS (SELECT vec_id, qv, {_sketch_sql_expr('qv', n_planes)} AS bucket FROM q),
-        qs AS (
-            SELECT vec_id AS query_id, qv AS q_qv, bucket AS q_bucket
-            FROM b WHERE vec_id < 20
-        ),
-        probes AS (
-            SELECT query_id, q_qv,
-                   CASE WHEN p.p = 0 THEN q_bucket
-                        ELSE xor(q_bucket, (1 << (p.p - 1))) END AS probe_bucket
-            FROM qs, LATERAL (SELECT unnest(generate_series(0, {n_planes})) AS p) p
-        ),
-        pairs AS (
-            SELECT query_id, b.vec_id AS neighbor_id,
-                   {_INT_COSINE.format(a='q_qv', b='b.qv')} AS cosine
-            FROM probes JOIN b ON b.bucket = probes.probe_bucket
-                         AND b.vec_id <> probes.query_id
-        )
-        SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-        FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM pairs
-        )
-        WHERE rank <= {k}
-    """
-
-
-def _knn_graph_sql(n_planes: int = 8, k: int = 3) -> str:
-    """DuckDB twin of similarity.knn_graph + the query's mutual-edge flag:
-    _ivf_sql with EVERY vector as a query, then a self-join of the ranked
-    edge list on the reversed (src, dst) key."""
-    return f"""
-        WITH q AS (
-            SELECT vec_id,
-                list_transform(embedding,
-                    x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings
-        ),
-        b AS (SELECT vec_id, qv, {_sketch_sql_expr('qv', n_planes)} AS bucket FROM q),
-        probes AS (
-            SELECT vec_id AS src, qv AS q_qv,
-                   CASE WHEN p.p = 0 THEN bucket
-                        ELSE xor(bucket, (1 << (p.p - 1))) END AS probe_bucket
-            FROM b, LATERAL (SELECT unnest(generate_series(0, {n_planes})) AS p) p
-        ),
-        pairs AS (
-            SELECT src, b.vec_id AS dst,
-                   {_INT_COSINE.format(a='q_qv', b='b.qv')} AS cosine
-            FROM probes JOIN b ON b.bucket = probes.probe_bucket
-                         AND b.vec_id <> probes.src
-        ),
-        graph AS (
-            SELECT src, dst, cosine, CAST(rank AS INTEGER) AS rank
-            FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY src ORDER BY cosine DESC, dst) AS rank
-                FROM pairs
-            )
-            WHERE rank <= {k}
-        )
-        SELECT g.src, g.dst, g.cosine, g.rank,
-               CAST(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-                   AS mutual
-        FROM graph g
-        LEFT JOIN graph r ON r.src = g.dst AND r.dst = g.src
-    """
-
-
-_EXACT_ANN_SQL = """
-    WITH q AS (
-        SELECT vec_id,
-            list_transform(embedding,
-                x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-        FROM embeddings
-    ),
-    qs AS (
-        SELECT vec_id AS query_id, qv AS q_qv FROM q WHERE vec_id < 20
-    ),
-    pairs AS (
-        SELECT query_id, q.vec_id AS neighbor_id,
-            CAST(list_sum(list_transform(list_zip(q_qv, q.qv),
-                                         p -> p[1] * p[2])) AS DOUBLE)
-            / (sqrt(CAST(list_sum(list_transform(q_qv, v -> v*v)) AS DOUBLE))
-               * sqrt(CAST(list_sum(list_transform(q.qv, v -> v*v)) AS DOUBLE)))
-            AS cosine
-        FROM qs, q
-        WHERE q.vec_id <> qs.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM pairs
-    )
-    WHERE rank <= 3
-"""
-
-
-# DuckDB twin of similarity.ivf_kmeans_topk — replays the ENTIRE integer
-# k-means training as a recursive CTE (possible because every step is exact
-# int64: quantized vectors, squared-L2 argmin with ties to the lowest cid,
-# per-dim floor(sum/count) updates, md5-ordered seeding), then mirrors the
-# corpus assignment, n_probe query fan-out, and top-k search. iter count is
-# FIXED (Spark's early fixpoint exit is identity-equivalent).
-_KM_K, _KM_ITERS, _KM_NPROBE, _KM_TOPK, _KM_SPILL = 8, 4, 2, 3, 2
-_KMEANS_IVF_SQL = f"""
-    WITH RECURSIVE q AS (
-        SELECT vec_id,
-            list_transform(embedding,
-                x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-        FROM embeddings
-    ),
-    seeds AS (
-        SELECT CAST(row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-               AS INTEGER) AS cid, qv
-        FROM q
-        QUALIFY row_number() OVER (
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) <= {_KM_K}
-    ),
-    km(iter, cid, cvec) AS (
-        SELECT 0, cid, qv FROM seeds
-        UNION ALL
-        SELECT iter + 1, km.cid,
-            CASE WHEN upd.cvec_new IS NULL THEN km.cvec ELSE upd.cvec_new END
-        FROM km
-        LEFT JOIN (
-            SELECT cid, list(dimmean ORDER BY pos) AS cvec_new
-            FROM (
-                SELECT a.cid, u.pos,
-                       CAST(floor(CAST(sum(u.val) AS DOUBLE) / count(*))
-                            AS BIGINT) AS dimmean
-                FROM (
-                    SELECT v.vec_id, v.qv,
-                           min_by(c.cid,
-                               list_sum(list_transform(list_zip(v.qv, c.cvec),
-                                   p -> (p[1]-p[2])*(p[1]-p[2])))
-                               * {_KM_K} + c.cid) AS cid
-                    FROM q v, km c
-                    GROUP BY v.vec_id, v.qv
-                ) a,
-                LATERAL (SELECT unnest(a.qv) AS val,
-                                generate_subscripts(a.qv, 1) AS pos) u
-                GROUP BY a.cid, u.pos
-            )
-            GROUP BY cid
-        ) upd ON upd.cid = km.cid
-        WHERE km.iter < {_KM_ITERS}
-    ),
-    cent AS (SELECT cid, cvec FROM km WHERE iter = {_KM_ITERS}),
-    assigned AS (
-        SELECT vec_id, qv, cid FROM (
-            SELECT v.vec_id, v.qv, c.cid,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       list_sum(list_transform(list_zip(v.qv, c.cvec),
-                           p -> (p[1]-p[2])*(p[1]-p[2]))), c.cid) AS rn
-            FROM q v, cent c
-        ) WHERE rn <= {_KM_SPILL}
-    ),
-    probes AS (
-        SELECT query_id, q_qv, cid FROM (
-            SELECT v.vec_id AS query_id, v.qv AS q_qv, c.cid,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       list_sum(list_transform(list_zip(v.qv, c.cvec),
-                           p -> (p[1]-p[2])*(p[1]-p[2]))), c.cid) AS rn
-            FROM q v, cent c
-            WHERE v.vec_id < 20
-        ) WHERE rn <= {_KM_NPROBE}
-    ),
-    pairs AS (
-        SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-            CAST(list_sum(list_transform(list_zip(p.q_qv, a.qv),
-                                         z -> z[1] * z[2])) AS DOUBLE)
-            / (sqrt(CAST(list_sum(list_transform(p.q_qv, v -> v*v)) AS DOUBLE))
-               * sqrt(CAST(list_sum(list_transform(a.qv, v -> v*v)) AS DOUBLE)))
-            AS cosine
-        FROM probes p
-        JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM pairs
-    )
-    WHERE rank <= {_KM_TOPK}
-"""
 
 
 _ASOF_SQL = """
@@ -1517,23 +1258,6 @@ def q_temperature_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass exact Gramian over the embedding corpus (r5,
-    operators/linalg.py::gram_matrix): per-partition numpy X^T X
-    partials through Arrow mapInPandas, one tiny (i,j) sum agg —
-    shuffle volume partitions x d(d+1)/2 rows, corpus-size-independent.
-    Quantized int64 throughout, so the 2,145 output rows (upper
-    triangle + column sums + count) are bit-identical to the oracle's
-    naive per-element replay. This is the fixed-size-summary doctrine
-    (kmeans centroids, GK sketches) applied to second moments — the
-    substrate for distributed PCA (linalg.pca_fit, pytest-gated since
-    eigh is not SQL-expressible)."""
-    from real_time_sliding_window_spark.operators.linalg import gram_matrix
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return gram_matrix(emb, dim=64, scale=1000)
-
-
 def q_token_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus drift monitor (r5, operators/drift.py::token_drift): the
     25 most-drifted tokens between sources src0 and src1 by exact
@@ -1545,50 +1269,6 @@ def q_token_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return token_drift(
         _docs(spark, sf_dir), "source", "src0", "src1", top_k=25
-    )
-
-
-def q_media_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing with an oracle row (the family previously had
-    pytest-only coverage): build a deterministic media table FROM the
-    documents parquet (payload = UTF-8 text bytes; kind/duration derived
-    from doc_id/n_chars — both engines construct identical rows), then run
-    the REAL operators: `multimodal.extract_features` (JVM-side md5/length
-    + the Arrow mapInPandas decode pass — the stub decoder runs, its
-    non-SQL `features` column is dropped from the output) and
-    `multimodal.frame_sample` (metadata-driven frame offsets), reduced to
-    frames-per-media. The oracle replays the metadata arithmetic
-    (sequence length = floor(stop/step)+1) — so schema, payload bytes,
-    hashing, and the sampling plan are all value-hash gated even though
-    real codecs aren't in the container."""
-    from real_time_sliding_window_spark.operators import multimodal as M
-
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("audio"))
-        .otherwise(F.lit("video"))
-        .alias("kind"),
-        F.encode("text", "UTF-8").alias("payload"),
-        (F.col("n_chars") * 10).cast("int").alias("duration_ms"),
-    )
-    feats = M.extract_features(media).select(
-        "media_id", "kind", "n_bytes", "content_hash"
-    )
-    frames = (
-        M.frame_sample(media, every_ms=1000)
-        .groupBy("media_id")
-        .agg(F.count(F.lit(1)).alias("n_frames"))
-    )
-    return (
-        feats.join(frames, "media_id", "left")
-        .select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            "content_hash",
-            F.coalesce("n_frames", F.lit(0)).cast("long").alias("n_frames"),
-        )
     )
 
 
@@ -1613,32 +1293,6 @@ def q_boilerplate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_segs",
         "n_kept",
         F.md5("clean_text").alias("clean_md5"),
-    )
-
-
-def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide approximate k-NN graph (similarity.py::knn_graph): every
-    vector's top-3 cosine neighbors among its sign-sketch LSH candidates
-    (8 planes, flip-1-bit multi-probe), plus a mutual-edge flag (reverse
-    edge also present — the mutual-kNN pruning used before graph
-    clustering). Both sides of the probe join stay distributed (no
-    corpus-sized broadcast); the edge list is localCheckpointed so the
-    mutual self-join reuses it instead of recomputing the LSH join
-    (multi-branch reuse doctrine). Exact quantized-int cosine — the
-    oracle replays planes, probes, ranking, and the mutual join."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    edges = S.knn_graph(
-        emb, k=3, n_planes=8, multiprobe=True
-    ).localCheckpoint(eager=True)
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(1).alias("__m")
-    )
-    return edges.join(rev, ["src", "dst"], "left").select(
-        "src",
-        "dst",
-        "cosine",
-        "rank",
-        F.coalesce(F.col("__m"), F.lit(0)).cast("long").alias("mutual"),
     )
 
 
@@ -2260,70 +1914,6 @@ def q_market_share_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_ITER, _PR_DAMP, _PR_SCALE = 3, 85, 10**9
-
-
-def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality over the approximate k-NN similarity graph
-    (operators/graph.py::pagerank over similarity.knn_graph edges) —
-    the canonical iterative dataflow: 3 integer fixed-point iterations,
-    each one src-join + dst-agg with per-iteration lineage truncation
-    (the connected-components discipline). Exact integer arithmetic end
-    to end, so the oracle replays the LSH graph AND every iteration
-    bit-for-bit (dangling mass pruned — stated in the operator
-    docstring)."""
-    from real_time_sliding_window_spark.operators.graph import pagerank
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    edges = S.knn_graph(emb, k=3, n_planes=8, multiprobe=True)
-    return pagerank(
-        edges, n_iter=_PR_ITER, damping_pct=_PR_DAMP, scale=_PR_SCALE
-    )
-
-
-def _pagerank_oracle_sql() -> str:
-    """DuckDB replay: knn edges (the _knn_graph_sql CTE chain minus the
-    mutual flag) + the unrolled integer iterations."""
-    d, scale = _PR_DAMP, _PR_SCALE
-    its = []
-    prev = "r0"
-    for i in range(1, _PR_ITER + 1):
-        its.append(f"""
-        i{i} AS (
-            SELECT nn.node,
-                   (SELECT (CAST({100 - d} AS BIGINT) * {scale})
-                        // (100 * n) FROM c)
-                   + ({d} * COALESCE(m.mass, 0)) // 100 AS rank
-            FROM nodes nn LEFT JOIN (
-                SELECT e.dst AS node,
-                       CAST(sum(r.rank // dg.deg) AS BIGINT) AS mass
-                FROM edges e
-                JOIN {prev} r ON r.node = e.src
-                JOIN deg dg ON dg.src = e.src
-                GROUP BY e.dst
-            ) m USING (node)
-        )""")
-        prev = f"i{i}"
-    return f"""
-        WITH edges AS (
-            SELECT src, dst FROM ({_knn_graph_sql(n_planes=8, k=3)})
-        ),
-        nodes AS (
-            SELECT DISTINCT node FROM (
-                SELECT src AS node FROM edges
-                UNION ALL SELECT dst FROM edges
-            )
-        ),
-        deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-        c AS (SELECT count(*) AS n FROM nodes),
-        r0 AS (
-            SELECT node, (SELECT {scale} // n FROM c) AS rank FROM nodes
-        ),
-        {','.join(its)}
-        SELECT node, CAST(rank AS BIGINT) AS rank_scaled FROM {prev}
-    """
-
-
 _JS_DEPTH, _JS_WIDTH = 4, 512
 
 
@@ -2572,7 +2162,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cm_freq_docs": q_cm_freq_docs,
         "journey_funnel_events": q_journey_funnel_events,
         "join_size_estimate": q_join_size_estimate,
-        "pagerank_knn": q_pagerank_knn,
         "local_supplier_volume": q_local_supplier_volume,
         "sliding_events_sliced": q_sliding_events_sliced,
         "json_props_stats": q_json_props_stats,
@@ -2591,7 +2180,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "brand_promo_revenue": q_brand_promo_revenue,
         "returned_top_customers": q_returned_top_customers,
         "boilerplate_docs": q_boilerplate_docs,
-        "knn_graph": q_knn_graph,
         "decontaminate_bloom_docs": q_decontaminate_bloom_docs,
         "nation_trade_volume": q_nation_trade_volume,
         "profile_docs": q_profile_docs,
@@ -2602,9 +2190,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "groupwise_sample_docs": q_groupwise_sample_docs,
         "redact_docs": q_redact_docs,
         "length_gate_docs": q_length_gate_docs,
-        "media_pipeline_docs": q_media_pipeline_docs,
         "temperature_mixture_docs": q_temperature_mixture_docs,
-        "embedding_gram": q_embedding_gram,
         "token_drift_docs": q_token_drift_docs,
         # -- r3/r4 additions, never yet in the driver window (r5 rotation) --
         "repetition_docs": q_repetition_docs,
@@ -2647,10 +2233,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate_docs": q_decontaminate_docs,
         "pack_docs": q_pack_docs,
         "topk_events_per_user": q_topk_events_per_user,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivf_kmeans_topk": q_ann_ivf_kmeans_topk,
-        "ann_recall": q_ann_recall,
         "curated_corpus": q_curated_corpus,
         "hash_sample_docs": q_hash_sample_docs,
         "split_counts_docs": q_split_counts_docs,
@@ -2667,7 +2249,6 @@ def oracle_sql() -> dict[str, str]:
     out = {
         "cm_freq_docs": _cm_oracle_sql(),
         "join_size_estimate": _join_size_oracle_sql(),
-        "pagerank_knn": _pagerank_oracle_sql(),
         "forecast_revenue_change": """
             SELECT count(*) AS n_items,
                    CAST(sum(CAST(round(
@@ -3462,28 +3043,6 @@ def oracle_sql() -> dict[str, str]:
         "distinct_user_types": """
             SELECT DISTINCT user_id, event_type FROM events
         """,
-        "ann_ivf_topk": _ivf_sql(n_planes=8, k=3),
-        "ann_ivf_kmeans_topk": _KMEANS_IVF_SQL,
-        "ann_recall": f"""
-            WITH exact AS (
-                SELECT query_id, neighbor_id FROM ({_EXACT_ANN_SQL}) e
-            ),
-            approx AS (
-                SELECT query_id, neighbor_id FROM ({_ivf_sql(8, 3)}) a
-            ),  -- noqa: composed from the two checked ANN oracles
-            hits AS (
-                SELECT e.query_id, count(*) AS hits
-                FROM exact e JOIN approx a
-                  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-                GROUP BY 1
-            )
-            SELECT q.query_id,
-                   CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-                   COALESCE(h.hits, 0) / 3.0 AS recall
-            FROM (SELECT DISTINCT query_id FROM exact) q
-            LEFT JOIN hits h ON h.query_id = q.query_id
-        """,
-        "ann_cosine_topk": _EXACT_ANN_SQL,
         "curated_corpus": f"""
             WITH t AS (
                 SELECT doc_id, source, text, {_TOK} AS tok FROM documents
@@ -3896,7 +3455,6 @@ def oracle_sql() -> dict[str, str]:
             FROM red
         """,
         # quantile_disc == GK sketch in its exact regime (group n <= accuracy)
-        "knn_graph": _knn_graph_sql(n_planes=8, k=3),
         "profile_docs": " UNION ALL ".join(
             f"""
             SELECT '{c}' AS "column",
@@ -4015,43 +3573,6 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY delta_ppm DESC, token ASC
             LIMIT 25
         """,
-        # naive per-element replay of the one-pass Gramian: same quantize
-        # expression, exact integer products/sums; (i,0)=column sums,
-        # (0,0)=row count ride the same 3-column shape
-        "embedding_gram": """
-            WITH q AS (
-                SELECT vec_id,
-                       list_transform(embedding,
-                           x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)
-                       ) AS qv
-                FROM embeddings
-            ),
-            idx AS (SELECT unnest(generate_series(1, 64)) AS i),
-            ex AS (
-                SELECT q.vec_id, idx.i, qv[idx.i] AS val
-                FROM q CROSS JOIN idx
-            ),
-            tri AS (
-                SELECT a.i AS i, b.i AS j,
-                       CAST(sum(a.val * b.val) AS BIGINT) AS dot
-                FROM ex a JOIN ex b
-                  ON a.vec_id = b.vec_id AND a.i <= b.i
-                GROUP BY 1, 2
-            ),
-            sums AS (
-                SELECT i, CAST(0 AS BIGINT) AS j,
-                       CAST(sum(val) AS BIGINT) AS dot
-                FROM ex GROUP BY 1
-            ),
-            cnt AS (
-                SELECT CAST(0 AS BIGINT) AS i, CAST(0 AS BIGINT) AS j,
-                       CAST(count(*) AS BIGINT) AS dot
-                FROM q
-            )
-            SELECT i, j, dot FROM tri
-            UNION ALL SELECT i, j, dot FROM sums
-            UNION ALL SELECT i, j, dot FROM cnt
-        """,
         # alpha=0.5 -> sqrt, IEEE-correctly-rounded on both engines, so the
         # floor'd per-mille rate is bit-identical; sizes are exact integer
         # sums cast to double; buckets are the shared md5 hex expression
@@ -4075,21 +3596,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
                   % 1000 < r.rate_pm
             GROUP BY 1, 2
-        """,
-        # payload = UTF-8 text bytes, so md5(text) == md5(payload) and
-        # strlen (bytes) == the Spark binary length; frame count replays
-        # sequence-length arithmetic floor(stop/step)+1
-        "media_pipeline_docs": """
-            SELECT doc_id AS media_id,
-                   CASE doc_id % 3 WHEN 0 THEN 'image'
-                                   WHEN 1 THEN 'audio'
-                                   ELSE 'video' END AS kind,
-                   CAST(strlen(text) AS BIGINT) AS n_bytes,
-                   md5(text) AS content_hash,
-                   CAST(CASE WHEN doc_id % 3 = 2
-                             THEN greatest(n_chars * 10 - 1, 0) // 1000 + 1
-                             ELSE 0 END AS BIGINT) AS n_frames
-            FROM documents
         """,
     }
     # the Bloom prefilter has no false negatives, so the bloom-planned

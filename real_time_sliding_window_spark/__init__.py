@@ -6,8 +6,8 @@ tumbling / sliding / session windows with event-time watermarks, a
 per-conversation stateful ring buffer with maxDuration / maxData eviction and
 EMIT/EVICT callback rows, a stateful stream-stream join, and an exactly-once
 idempotent sink — over conversation-transcript tables at very large scale —
-plus the large-scale training-data pipeline operators (similarity search,
-text analysis, multimodal plumbing).
+plus the large-scale training-data pipeline operators (text analysis,
+sampling, retrieval).
 
 Nothing here is a port: the reference's schedulers, locks, observers and
 bucket queues are replaced by Structured Streaming's trigger / state /

@@ -31,12 +31,16 @@ KINDS = ("tumbling", "sliding", "session")
 
 
 def as_timedelta(value: timedelta | int | float | str, what: str) -> timedelta:
-    """Coerce seconds / Spark-style '10 seconds' strings to timedelta."""
+    """Coerce seconds / Spark-style '10 seconds' strings to timedelta.
+
+    bool, NaN, infinities and amounts beyond ``timedelta``'s range are
+    refused with the same ``ValueError`` as any other invalid duration."""
     if isinstance(value, timedelta):
         return value
-    if isinstance(value, (int, float)):
-        return timedelta(seconds=value)
-    if isinstance(value, str):
+    seconds = None
+    if isinstance(value, (int, float)) and not isinstance(value, bool):
+        seconds = value
+    elif isinstance(value, str):
         parts = value.strip().split()
         if len(parts) == 2:
             qty, unit = parts
@@ -52,9 +56,14 @@ def as_timedelta(value: timedelta | int | float | str, what: str) -> timedelta:
             }
             if unit in factors:
                 try:
-                    return timedelta(seconds=float(qty) * factors[unit])
+                    seconds = float(qty) * factors[unit]
                 except ValueError:
                     pass
+    if seconds is not None:
+        try:
+            return timedelta(seconds=seconds)
+        except (OverflowError, ValueError):  # out of range, inf, NaN
+            pass
     raise ValueError(f"{what} is not a valid duration: {value!r}")
 
 
@@ -127,7 +136,9 @@ class WindowSpec:
 
         if self.max_data is not None:
             _require(
-                isinstance(self.max_data, int) and self.max_data >= 1,
+                isinstance(self.max_data, int)
+                and not isinstance(self.max_data, bool)
+                and self.max_data >= 1,
                 "'max_data' must be an integer >= 1",
             )
 

@@ -1,7 +1,6 @@
 """Keyword retrieval over the document corpus: inverted-index TF-IDF top-k.
 
-The search-side complement of the ANN family (operators/similarity.py):
-given free-text queries, rank documents by term-frequency × inverse
+Given free-text queries, rank documents by term-frequency × inverse
 document frequency over an exploded postings index. The plan is the
 canonical distributed retrieval shape — one explode + one partial-agg
 count builds the postings, the query side broadcasts, scoring is a hash

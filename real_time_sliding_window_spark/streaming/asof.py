@@ -235,6 +235,17 @@ def as_of_stream_join(
     right_json); unpack with ``from_json``. Rows with NULL in any key
     column are filtered (equi-join semantics). Unmatched lefts emit with
     null right columns (left-outer).
+
+    Limit: both sides share ONE watermark, taken over the union. A right
+    row that arrives more than ``watermark_delay`` behind the max event
+    time seen on EITHER side is dropped as late, so the lefts it would
+    have matched emit unmatched where batch ``as_of_join`` matches them.
+    E.g. horizon 60 s, delay 2 s, four runs in order: (left u1@100 s,
+    right u1@95 s), (left u1@200 s), (right u1@150 s), closers at 1,000 s
+    on both sides. The left at 200 s emits with no match; batch
+    ``as_of_join`` over the same rows matches it to the right at 150 s.
+    Equality with the batch operator holds only while both sides advance
+    together.
     """
     if not keys:
         raise ValueError("as_of_stream_join requires at least one key column")

@@ -111,8 +111,10 @@ class ExactlyOnceParquetSink:
     ) -> DataFrame:
         """All committed rows. ``with_batch_id=True`` recovers the writing
         batch's id as a ``batch_id`` column (partition-directory discovery
-        via basePath) — callers that must tell a retry's own rows apart
-        from genuinely earlier data (the ingest guards) need it."""
+        via basePath), for callers that map rows to batches:
+        ``LiveWindowView.buckets`` keeps only ``batch_id <= N``, the query's
+        last engine commit, and perfbench pairs each row with its batch's
+        commit time to measure emit latency; tests read both forms."""
         batches = self.committed_batches()
         paths = [
             os.path.join(self.data_dir, f"batch_id={b}")
@@ -126,8 +128,9 @@ class ExactlyOnceParquetSink:
         return spark.read.parquet(*paths)
 
     def read_batch(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Rows of ONE committed batch — the retry short-circuit readback
-        (a committed batch's rows ARE its decision record)."""
+        """Rows of ONE committed batch. Tests use it to see what a given
+        batch wrote, e.g. which window the batch before a simulated crash
+        closed."""
         path = os.path.join(self.data_dir, f"batch_id={batch_id}")
         if not os.path.exists(self._commit_marker(batch_id)):
             raise FileNotFoundError(

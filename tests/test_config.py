@@ -61,8 +61,9 @@ class TestWindowSpec:
             WindowSpec(name="w", kind="session", gap=0.1)
 
     def test_max_data_positive(self):
-        with pytest.raises(ValueError, match="'max_data' must be an integer >= 1"):
-            WindowSpec(name="w", length=1, max_data=0)
+        for bad in (0, True):
+            with pytest.raises(ValueError, match="'max_data' must be an integer >= 1"):
+                WindowSpec(name="w", length=1, max_data=bad)
 
     def test_negative_watermark(self):
         with pytest.raises(ValueError, match="'watermark_delay' must be >= 0"):
@@ -82,8 +83,14 @@ class TestWindowSpec:
         assert as_timedelta("250 milliseconds", "x") == timedelta(milliseconds=250)
         assert as_timedelta(2.5, "x") == timedelta(seconds=2.5)
         assert interval_str(timedelta(seconds=1, microseconds=1)) == "1000001 microseconds"
-        with pytest.raises(ValueError, match="not a valid duration"):
-            as_timedelta("banana", "x")
+        for bad in (
+            "banana", True, float("nan"), float("inf"), 1e20,
+            "inf seconds", "nan seconds", "1e12 days",
+        ):
+            with pytest.raises(ValueError, match=r"^x is not a valid duration"):
+                as_timedelta(bad, "x")
+        with pytest.raises(ValueError, match="'length' is not a valid duration"):
+            WindowSpec(name="w", length=True)
 
 
 class TestViewArgs:

@@ -8,12 +8,14 @@ never reaches it would stay green.
 
 The same walk guards the stateful operators' shape: one event-time timer
 rule (``stateful.arm_timer``), at most three ``applyInPandasWithState``
-wirings, and append output mode on every streaming write.
+wirings, and append output mode on every streaming write; and the engine's
+layering: the streaming engine imports nothing from the curation side.
 """
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 import importlib
 import importlib.util
 from pathlib import Path
@@ -49,6 +51,26 @@ def _imports(path: Path) -> list[tuple[int, str, list[str]]]:
             if module.split(".")[0] == PKG:
                 out.append((node.lineno, module,
                             [a.name for a in node.names if a.name != "*"]))
+    return out
+
+
+def _module_file(module: str) -> Path | None:
+    """Source file of a package module, or None if ``module`` is not one."""
+    base = ROOT.joinpath(*module.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Package modules ``path`` imports; ``from pkg import mod`` names ``mod``."""
+    out = set()
+    for _, module, names in _imports(path):
+        subs = {f"{module}.{n}" for n in names if _module_file(f"{module}.{n}")}
+        out |= subs
+        if not names or len(subs) < len(names):
+            out.add(module)
     return out
 
 
@@ -111,6 +133,39 @@ def test_every_streaming_write_is_append_mode():
         or not (isinstance(c.args[0], ast.Constant) and c.args[0].value == "append")
     ]
     assert not other, other
+
+
+# The streaming engine and everything it imports, named relative to the
+# package. Curation-side modules (operators other than these two,
+# functions/, plans/, storage, util) stay outside it.
+ENGINE_ROOTS = ("streaming/*.py", "sources/*.py", "session.py", "operators/stateful.py")
+ENGINE_CLOSURE = ("config", "session", "synth", "operators.stateful",
+                  "operators.windows", "sources.*", "streaming.*")
+
+
+def test_engine_imports_stay_on_the_engine_path():
+    """The transitive package imports of ``streaming/``, ``sources/``,
+    ``session`` and ``operators.stateful`` stay within ``ENGINE_CLOSURE``,
+    function-local imports included."""
+    todo = [p for g in ENGINE_ROOTS for p in sorted((ROOT / PKG).glob(g))]
+    seen: set[Path] = set()
+    reached: set[str] = set()
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        for module in _imported_modules(path):
+            reached.add(module)
+            target = _module_file(module)
+            assert target is not None, f"{path.relative_to(ROOT)}: {module}"
+            todo.append(target)
+    names = {m.removeprefix(PKG).removeprefix(".") for m in reached}
+    # synth via sources, operators.windows via a lazy import in pipeline
+    assert {"config", "synth", "operators.windows"} <= names, names
+    outside = sorted(n for n in names
+                     if not any(fnmatch.fnmatchcase(n, g) for g in ENGINE_CLOSURE))
+    assert not outside, outside
 
 
 def test_every_package_import_resolves():

@@ -1,5 +1,5 @@
-"""Tests for the training-data pipeline operators (similarity, text,
-multimodal) and skew handling (F8)."""
+"""Tests for the training-data pipeline operators (text, sampling,
+chunking, retrieval, sketches) and skew handling (F8)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_sliding_window_spark import synth
-from real_time_sliding_window_spark.operators import multimodal, similarity, text
+from real_time_sliding_window_spark.operators import text
 from real_time_sliding_window_spark.operators.skew import salted_windowed_agg
 from real_time_sliding_window_spark.operators.windows import windowed_agg
 
@@ -37,150 +37,6 @@ def docs(spark):
         }
     )
     return spark.createDataFrame(pdf).cache()
-
-
-class TestSimilarity:
-    def test_brute_force_topk(self, spark):
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        out = similarity.cosine_topk(emb, query_ids=range(5), k=3).toPandas()
-        assert set(out.query_id) == set(range(5))
-        assert (out.groupby("query_id").size() == 3).all()
-        for qid, grp in out.groupby("query_id"):
-            g = grp.sort_values("rank")
-            assert list(g["rank"]) == [1, 2, 3]
-            assert g["cosine"].is_monotonic_decreasing or len(set(g["cosine"])) < 3
-            assert not (g["neighbor_id"] == qid).any()
-
-    def test_ivf_subset_of_bucket(self, spark):
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        exact = similarity.cosine_topk(emb, query_ids=range(5), k=3).toPandas()
-        approx = similarity.ivf_topk(emb, query_ids=range(5), k=3).toPandas()
-        # approximate ranks are valid and cosines can't beat exact rank-1
-        best_exact = exact[exact["rank"] == 1].set_index("query_id")["cosine"]
-        best_approx = approx[approx["rank"] == 1].set_index("query_id")["cosine"]
-        for q in best_approx.index:
-            assert best_approx[q] <= best_exact[q] + 1e-12
-
-    def test_ivf_multiprobe_recall(self, spark):
-        """Multi-probe lifts recall in LSH's designed regime (true near
-        neighbors): deterministic planted corpus — base vectors + cosine
-        ~0.95 perturbations of the query vectors."""
-        rng = np.random.default_rng(7)
-        dim, n_base, n_q, per_q = 16, 200, 10, 3
-        base = rng.normal(0, 1, (n_base, dim))
-        rows = [
-            {"vec_id": i, "embedding": base[i].tolist()} for i in range(n_base)
-        ]
-        nid = n_base
-        for qi in range(n_q):
-            v = base[qi] / np.linalg.norm(base[qi])
-            for _ in range(per_q):
-                noise = rng.normal(0, 1, dim)
-                noise -= noise @ v * v
-                noise /= np.linalg.norm(noise)
-                w = 0.95 * v + np.sqrt(1 - 0.95**2) * noise
-                rows.append({"vec_id": nid, "embedding": w.tolist()})
-                nid += 1
-        emb = spark.createDataFrame(pd.DataFrame(rows))
-        single = (
-            similarity.recall_at_k(
-                emb, range(n_q), k=per_q, n_planes=8, multiprobe=False
-            )
-            .agg(F.avg("recall"))
-            .collect()[0][0]
-        )
-        multi = (
-            similarity.recall_at_k(
-                emb, range(n_q), k=per_q, n_planes=8, multiprobe=True
-            )
-            .agg(F.avg("recall"))
-            .collect()[0][0]
-        )
-        assert multi >= single
-        assert multi >= 0.6  # measured ~0.8+ in this regime (BENCH/ANN.md)
-
-    @staticmethod
-    def _clustered_corpus(spark, n=240, dim=16, n_clusters=6, noise=0.25):
-        """Deterministic well-separated mixture: every vector's true
-        neighbors share its cluster."""
-        rng = np.random.default_rng(42)
-        centers = rng.standard_normal((n_clusters, dim))
-        centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-        lab = np.arange(n) % n_clusters
-        g = rng.standard_normal((n, dim))
-        g /= np.linalg.norm(g, axis=1, keepdims=True)
-        vecs = centers[lab] + noise * g
-        vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-        return spark.createDataFrame(pd.DataFrame({
-            "vec_id": range(n),
-            "embedding": [v.astype(np.float32).tolist() for v in vecs],
-        }))
-
-    def test_kmeans_deterministic_across_partitionings(self, spark):
-        """The integer k-means quantizer must give the SAME centroids
-        regardless of input partitioning — summation is exact int64, so
-        no float order-dependence (the property the oracle's recursive-CTE
-        replay relies on)."""
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        a = similarity.kmeans_centroids(emb, n_centroids=6, n_iter=3)
-        b = similarity.kmeans_centroids(
-            emb.repartition(13), n_centroids=6, n_iter=3
-        )
-        assert a == b
-
-    def test_kmeans_requires_convergence_raises(self, spark):
-        """require_convergence must FAIL loudly when no fixpoint was
-        reached — a half-trained quantizer silently degrades recall."""
-        import pytest
-
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        with pytest.raises(RuntimeError, match="fixpoint"):
-            similarity.kmeans_centroids(
-                emb, n_centroids=6, n_iter=0, require_convergence=True
-            )
-
-    def test_ivf_kmeans_exact_on_separated_clusters(self, spark):
-        """On a well-separated mixture, learned cells align with the true
-        clusters: 1-probe IVF recovers ≥ 0.9 of the exact top-k, and a
-        second probe covers the local-optimum case where k-means split one
-        true cluster across two cells — then the result is byte-identical
-        to brute force. (The regime where sign-sketch LSH already loses
-        half its recall — BENCH/ANN.md round 3.)"""
-        emb = self._clustered_corpus(spark)
-        cents = similarity.kmeans_centroids(emb, n_centroids=6, n_iter=6)
-        exact = similarity.cosine_topk(emb, range(12), k=5).toPandas()
-        key = lambda p: sorted(
-            map(tuple, p[["query_id", "neighbor_id", "rank"]]
-                .itertuples(index=False))
-        )
-        one = similarity.ivf_kmeans_topk(
-            emb, range(12), k=5, centroids=cents, n_probe=1
-        ).toPandas()
-        e = set(map(tuple, exact[["query_id", "neighbor_id"]].values))
-        a = set(map(tuple, one[["query_id", "neighbor_id"]].values))
-        assert len(e & a) / len(e) >= 0.9
-        two = similarity.ivf_kmeans_topk(
-            emb, range(12), k=5, centroids=cents, n_probe=2
-        ).toPandas()
-        assert key(exact) == key(two)
-
-    def test_ivf_kmeans_spill_no_duplicates_and_helps(self, spark):
-        """spill > 1 must not emit duplicate (query, neighbor) rows, and
-        recall at equal probes must not drop (boundary recovery)."""
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        cents = similarity.kmeans_centroids(emb, n_centroids=16, n_iter=4)
-
-        def hits(spill):
-            exact = similarity.cosine_topk(emb, range(10), k=5).toPandas()
-            appr = similarity.ivf_kmeans_topk(
-                emb, range(10), k=5, centroids=cents, n_probe=2, spill=spill
-            ).toPandas()
-            assert not appr.duplicated(["query_id", "neighbor_id"]).any()
-            e = set(map(tuple, exact[["query_id", "neighbor_id"]].values))
-            a = set(map(tuple, appr[["query_id", "neighbor_id"]].values))
-            return len(e & a)
-
-        assert hits(2) >= hits(1)
 
 
 class TestText:
@@ -213,52 +69,6 @@ class TestText:
         )
         out = text.fingerprints(spark.createDataFrame(pdf)).toPandas()
         assert out.iloc[0]["fingerprint"] == out.iloc[1]["fingerprint"]
-
-
-class TestMultimodal:
-    def test_feature_extraction_schema_and_shape(self, spark):
-        media = multimodal.synthesize_media(spark, n=24)
-        feats = multimodal.extract_features(media, feature_dim=16).toPandas()
-        assert len(feats) == 24
-        assert all(len(f) == 16 for f in feats["features"])
-        assert (feats["n_bytes"] > 0).all()
-        # deterministic: same payload -> same hash across runs
-        feats2 = multimodal.extract_features(media, feature_dim=16).toPandas()
-        assert list(feats.sort_values("media_id")["content_hash"]) == list(
-            feats2.sort_values("media_id")["content_hash"]
-        )
-
-    def test_frame_sample_plan(self, spark):
-        media = multimodal.synthesize_media(spark, n=9)
-        frames = multimodal.frame_sample(media, every_ms=1000).toPandas()
-        per_media = frames.groupby("media_id").size()
-        assert (per_media == 5).all()  # 5000ms / 1000ms
-
-    def test_resize_images(self, spark):
-        """r5: schema-preserving resize — image rows only, payload exactly
-        w*h bytes, metadata rewritten, deterministic across partitionings,
-        and the output composes with extract_features."""
-        media = multimodal.synthesize_media(spark, n=24)
-        out = multimodal.resize_images(media, 8, 4).toPandas()
-        n_images = media.filter(F.col("kind") == "image").count()
-        assert len(out) == n_images > 0
-        assert (out["kind"] == "image").all()
-        assert all(len(p) == 8 * 4 for p in out["payload"])
-        assert (out["width"] == 8).all() and (out["height"] == 4).all()
-        # deterministic under repartition (pure function of the row)
-        out7 = multimodal.resize_images(media.repartition(7), 8, 4).toPandas()
-        a = out.sort_values("media_id").reset_index(drop=True)
-        b = out7.sort_values("media_id").reset_index(drop=True)
-        assert list(a["payload"]) == list(b["payload"])
-        # composes: features over resized payloads
-        feats = multimodal.extract_features(
-            multimodal.resize_images(media, 8, 4)
-        ).toPandas()
-        assert len(feats) == n_images and (feats["n_bytes"] == 32).all()
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="positive"):
-            multimodal.resize_images(media, 0, 4)
 
 
 class TestSkew:
@@ -897,100 +707,6 @@ class TestPercentileGate:
         assert (out.source == "b").sum() >= 1
 
 
-class TestLinalg:
-    """r5: one-pass Gramian + driver-side PCA (the fixed-size-summary
-    doctrine applied to second moments)."""
-
-    def _emb(self, spark, n=120, d=8, seed=7):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        # low-rank structure + noise so PCA has a meaningful spectrum
-        basis = rng.normal(size=(3, d))
-        x = rng.normal(size=(n, 3)) @ basis + 0.05 * rng.normal(size=(n, d))
-        rows = [(i, [float(v) for v in x[i]]) for i in range(n)]
-        return (
-            spark.createDataFrame(rows, ["vec_id", "embedding"]),
-            x,
-        )
-
-    def test_gram_matrix_exact_and_partition_invariant(self, spark):
-        import numpy as np
-
-        from real_time_sliding_window_spark.operators import linalg
-
-        df, x = self._emb(spark)
-        q = np.round(x.astype(np.float64) * 1000).astype(np.int64)
-        want = q.T @ q
-        got = {
-            (r["i"], r["j"]): r["dot"]
-            for r in linalg.gram_matrix(df, dim=8).collect()
-        }
-        assert got[(0, 0)] == len(x)
-        for i in range(8):
-            assert got[(i + 1, 0)] == q[:, i].sum()
-            for j in range(i, 8):
-                assert got[(i + 1, j + 1)] == want[i, j], (i, j)
-        # partition-invariant (int math is associative): 1 vs 13 slices
-        got13 = {
-            (r["i"], r["j"]): r["dot"]
-            for r in linalg.gram_matrix(df.repartition(13), dim=8).collect()
-        }
-        assert got == got13
-        # mergeable: gram(A ∪ B) == gram(A) + gram(B) pointwise
-        a = df.filter(F.col("vec_id") < 60)
-        b = df.filter(F.col("vec_id") >= 60)
-        ga = {(r["i"], r["j"]): r["dot"] for r in linalg.gram_matrix(a, dim=8).collect()}
-        gb = {(r["i"], r["j"]): r["dot"] for r in linalg.gram_matrix(b, dim=8).collect()}
-        assert got == {k: ga[k] + gb[k] for k in got}
-
-    def test_pca_fit_matches_numpy_and_projects(self, spark):
-        import numpy as np
-
-        from real_time_sliding_window_spark.operators import linalg
-
-        df, x = self._emb(spark)
-        comps, evals, mu = linalg.pca_fit(df, k=3, dim=8)
-        # against numpy PCA on the quantized data (the operator's contract
-        # is over quantized vectors; quantization noise is ~1e-3)
-        xq = np.round(x.astype(np.float64) * 1000) / 1000.0
-        mu_np = xq.mean(axis=0)
-        cov = (xq - mu_np).T @ (xq - mu_np) / len(xq)
-        ev_np, evec_np = np.linalg.eigh(cov)
-        order = np.argsort(ev_np)[::-1][:3]
-        assert np.allclose(mu, mu_np, atol=1e-9)
-        assert np.allclose(evals, ev_np[order], rtol=1e-9)
-        # eigenvectors match up to the pinned sign convention
-        for c in range(3):
-            v = evec_np[:, order[c]]
-            v = v * np.sign(v[np.abs(v).argmax()])
-            assert np.allclose(comps[:, c], v, atol=1e-9), c
-        # orthonormal
-        assert np.allclose(comps.T @ comps, np.eye(3), atol=1e-12)
-        # distributed projection == numpy projection on ORIGINAL floats
-        proj = {
-            r["vec_id"]: np.array(r["pca"])
-            for r in linalg.pca_project(df, comps, mu).collect()
-        }
-        xf = np.array([[np.float32(v) for v in row] for row in x], dtype=np.float64)
-        want = (xf - mu) @ comps
-        for i in range(len(x)):
-            assert np.allclose(proj[i], want[i], atol=1e-9), i
-        # variance actually concentrates: top-3 explain > 95% here
-        assert evals.sum() / cov.trace() > 0.95
-
-    def test_pca_fit_raises_on_tiny_corpus(self, spark):
-        import pytest as _pytest
-
-        from real_time_sliding_window_spark.operators import linalg
-
-        df = spark.createDataFrame(
-            [(0, [1.0, 2.0])], ["vec_id", "embedding"]
-        )
-        with _pytest.raises(ValueError):
-            linalg.pca_fit(df, k=1, dim=2)
-
-
 class TestTokenDrift:
     def test_known_fixture_and_contracts(self, spark):
         """r5: exact ppm deltas on a crafted two-slice corpus; symmetric
@@ -1152,56 +868,6 @@ class TestRemoveBoilerplate:
         fast = self._run(spark, rows, width=3, min_df=4)
         slow = self._run(spark, rows, width=3, min_df=4, broadcast_hot=False)
         assert fast.equals(slow)
-
-
-class TestKnnGraph:
-    def _emb(self, spark):
-        # three tight clusters of 3 + one isolated vector whose sketch
-        # neighborhood is empty of candidates at most probe distances
-        rng = np.random.default_rng(11)
-        rows = []
-        vid = 0
-        for c in range(3):
-            center = rng.normal(0, 1, 8)
-            center /= np.linalg.norm(center)
-            for _ in range(3):
-                noise = rng.normal(0, 0.05, 8)
-                rows.append({"vec_id": vid, "embedding": (center + noise).tolist()})
-                vid += 1
-        return spark.createDataFrame(pd.DataFrame(rows))
-
-    def test_cluster_members_are_neighbors(self, spark):
-        out = similarity.knn_graph(self._emb(spark), k=2).toPandas()
-        # every vector's top candidates come from its own tight cluster
-        for _, r in out.iterrows():
-            assert r["src"] // 3 == r["dst"] // 3
-            assert r["cosine"] > 0.9
-        # every vector finds at least one cluster-mate; ranks are a dense
-        # prefix 1..n (a mate >1 sketch bit away may be missed — LSH recall,
-        # not a bug)
-        ranks = out.groupby("src")["rank"].apply(list).map(sorted)
-        assert set(out["src"]) == set(range(9))
-        assert all(r == list(range(1, len(r) + 1)) for r in ranks)
-
-    def test_mutual_filter_is_symmetric(self, spark):
-        full = similarity.knn_graph(self._emb(spark), k=2).toPandas()
-        mut = similarity.knn_graph(self._emb(spark), k=2, mutual=True).toPandas()
-        edges = set(zip(full["src"], full["dst"]))
-        expect = {(s, d) for (s, d) in edges if (d, s) in edges}
-        assert set(zip(mut["src"], mut["dst"])) == expect
-        # mutual graph is symmetric as an edge set
-        got = set(zip(mut["src"], mut["dst"]))
-        assert {(d, s) for (s, d) in got} == got
-
-    def test_max_bucket_caps_targets_not_sources(self, spark):
-        emb = self._emb(spark)
-        capped = similarity.knn_graph(emb, k=2, max_bucket=1).toPandas()
-        # with every multi-member bucket capped, edges may vanish but no
-        # src appears that wasn't in the uncapped graph, and capping never
-        # errors (the id universe is only the probe side here)
-        full = similarity.knn_graph(emb, k=2).toPandas()
-        assert set(capped["src"]) <= set(full["src"])
-        assert len(capped) <= len(full)
 
 
 class TestBloom:
@@ -1741,86 +1407,8 @@ class TestCmInnerProduct:
         )
 
 
-class TestPageRank:
-    """operators/graph.py — exact integer fixed-point parity vs a
-    reference replication, structure sanity, validation."""
-
-    @staticmethod
-    def _ref(edges, n_iter=3, damping=85, scale=10**9):
-        from collections import Counter, defaultdict
-
-        nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-        n = len(nodes)
-        deg = Counter(s for s, _ in edges)
-        rank = {v: scale // n for v in nodes}
-        base = (100 - damping) * scale // (100 * n)
-        for _ in range(n_iter):
-            mass = defaultdict(int)
-            for s, d in edges:
-                mass[d] += rank[s] // deg[s]
-            rank = {
-                v: base + (damping * mass[v]) // 100 for v in nodes
-            }
-        return rank
-
-    def test_exact_parity_random_graph(self, spark):
-        from real_time_sliding_window_spark.operators.graph import pagerank
-
-        rng = np.random.default_rng(61)
-        edges = list(
-            {
-                (f"n{rng.integers(30)}", f"n{rng.integers(30)}")
-                for _ in range(150)
-            }
-        )
-        edges = [(s, d) for s, d in edges if s != d]
-        df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"])
-        )
-        got = {
-            r.node: r.rank_scaled
-            for r in pagerank(df, n_iter=3).collect()
-        }
-        assert got == self._ref(edges, n_iter=3)
-
-    def test_star_graph_center_dominates(self, spark):
-        from real_time_sliding_window_spark.operators.graph import pagerank
-
-        edges = [(f"leaf{i}", "center") for i in range(20)]
-        df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"])
-        )
-        got = {
-            r.node: r.rank_scaled
-            for r in pagerank(df, n_iter=3).collect()
-        }
-        leafs = [v for k, v in got.items() if k != "center"]
-        assert got["center"] > 10 * max(leafs)
-        # mass never exceeds scale (floor leakage only shrinks it)
-        assert sum(got.values()) <= 10**9
-
-    def test_validation(self, spark):
-        from real_time_sliding_window_spark.operators.graph import pagerank
-
-        df = spark.createDataFrame(
-            pd.DataFrame([("a", "b")], columns=["src", "dst"])
-        )
-        with pytest.raises(ValueError):
-            pagerank(df, n_iter=0)
-        with pytest.raises(ValueError):
-            pagerank(df, damping_pct=101)
-
-
 class TestReviewGuards:
-    """Review fixes: empty-input guards on pagerank and write_zordered."""
-
-    def test_pagerank_empty_graph(self, spark):
-        from real_time_sliding_window_spark.operators.graph import pagerank
-
-        empty = spark.createDataFrame([], "src string, dst string")
-        out = pagerank(empty, n_iter=2)
-        assert out.count() == 0
-        assert out.columns == ["node", "rank_scaled"]
+    """Review fixes: empty-input guards on write_zordered."""
 
     def test_zorder_validation(self, spark, tmp_path):
         from real_time_sliding_window_spark.storage import write_zordered
@@ -1866,60 +1454,3 @@ class TestR6Rewrites:
                 d, "k", depth=3, width=64, weight_col=wcol, pre_agg=True
             )
             assert cells(a) == cells(b), wcol
-
-    def test_cosine_topk_expression_twin(self, spark):
-        """numpy-scored cosine_topk equals the JVM-expression build
-        (crossJoin + interpreted int_dot/int_norm) bit for bit."""
-        import numpy as np
-
-        from real_time_sliding_window_spark.functions import columns as C
-        from pyspark.sql.window import Window
-
-        rng = np.random.default_rng(17)
-        pdf = pd.DataFrame(
-            {
-                "vec_id": range(40),
-                "embedding": [
-                    rng.normal(size=16).astype("float32").tolist()
-                    for _ in range(40)
-                ],
-            }
-        )
-        emb = spark.createDataFrame(pdf)
-        got = (
-            similarity.cosine_topk(emb, query_ids=[1, 5, 9], k=4)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-        q = emb.select(
-            F.col("vec_id"), C.quantize("embedding").alias("qv")
-        )
-        queries = q.filter(F.col("vec_id").isin([1, 5, 9])).select(
-            F.col("vec_id").alias("query_id"), F.col("qv").alias("q_qv")
-        )
-        pairs = F.broadcast(queries).crossJoin(q).filter(
-            F.col("query_id") != F.col("vec_id")
-        )
-        cos = C.int_dot("q_qv", "qv").cast("double") / (
-            C.int_norm("q_qv") * C.int_norm("qv")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        ref = (
-            pairs.select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cosine"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 4)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-        assert got[["query_id", "neighbor_id", "rank"]].equals(
-            ref[["query_id", "neighbor_id", "rank"]]
-        )
-        assert (got["cosine"].to_numpy() == ref["cosine"].to_numpy()).all()

@@ -11,7 +11,7 @@ against `--out` (default /tmp/sf1):
 - dims (region, nation): copied — dims don't scale with fact data.
 - keyed tables: per-tile key offsets large enough to never collide
   (custkey +k·1e6, orderkey +k·1e7, suppkey +k·1e5, partkey +k·1e6,
-  event/user/doc/vec ids likewise); foreign keys remapped with the SAME
+  event/user/doc ids likewise); foreign keys remapped with the SAME
   offsets so join cardinalities scale exactly linearly. Name columns get
   a `-t{k}` suffix so name-grouped queries don't merge tiles.
 - events: ids offset, ts/value/props kept — event-time density grows
@@ -23,11 +23,6 @@ against `--out` (default /tmp/sf1):
   near-dups — near-dup density per tile is constant, total linear.
   n_chars keeps the source value (metadata column; no query derives it
   from text).
-- embeddings: per-tile SIGN PATTERN s_j = ±1 (deterministic in (j, k)),
-  embedding'_j = s_j · embedding_j. Since s_j² = 1, every WITHIN-tile
-  dot product / cosine / norm is preserved EXACTLY (planted neighbor
-  structure intact), while cross-tile cosines decorrelate — 10× corpus,
-  same per-tile ANN structure.
 
 Run: python tools/gen_sf1.py [--mult 10] [--out /tmp/sf1]
 Then: python tools/oracle_check.py /tmp/sf1
@@ -55,7 +50,6 @@ OFF = {
     "event_id": 10_000_000,
     "user_id": 1_000_000,
     "doc_id": 1_000_000,
-    "vec_id": 1_000_000,
 }
 
 
@@ -67,15 +61,6 @@ def _salted_text(k: int):
         ),
         " ",
     ).alias("text")
-
-
-def _signed_embedding(k: int):
-    # s_j = 1 - 2*(xxhash64(j, k) & 1) ∈ {−1, +1}; s_j² = 1 preserves all
-    # within-tile dot products exactly
-    return F.expr(
-        "transform(embedding, (v, j) -> "
-        f"v * cast(1 - 2 * (xxhash64(j, {k}) & 1) as float))"
-    ).alias("embedding")
 
 
 def tile_exprs(table: str, k: int):
@@ -125,12 +110,6 @@ def tile_exprs(table: str, k: int):
             _salted_text(k) if k else F.col("text"),
             "lang", "source", "n_chars",
         ]
-    if table == "embeddings":
-        return [
-            (F.col("vec_id") + k * OFF["vec_id"]).alias("vec_id"),
-            _signed_embedding(k) if k else F.col("embedding"),
-            "label",
-        ]
     raise ValueError(table)
 
 
@@ -154,7 +133,7 @@ def main() -> None:
 
     for table in [
         "customer", "supplier", "part", "orders", "lineitem",
-        "events", "documents", "embeddings",
+        "events", "documents",
     ]:
         base = spark.read.parquet(f"{SRC}/{table}.parquet")
         tiles = [base.select(*tile_exprs(table, k)) for k in range(args.mult)]
