@@ -633,85 +633,6 @@ def q_click_and_purchase_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return slots("click").intersect(slots("purchase"))
 
 
-def q_hash_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic content-addressed 25% sample: selection is a pure
-    function of doc_id (md5 bucket), so it reproduces across runs,
-    engines, partitionings, and incremental ingest — the reproducible
-    alternative to RNG TABLESAMPLE."""
-    from real_time_sliding_window_spark.operators.sampling import hash_sample
-
-    return hash_sample(_docs(spark, sf_dir), "doc_id", rate_pct=25).select(
-        "doc_id", "source"
-    )
-
-
-_MIXTURE_RATES = {"src0": 80, "src1": 50, "src2": 20, "src3": 0}
-
-
-def q_mixture_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus MIXING (r4): per-source sampling rates over the same
-    content-addressed buckets as hash_sample — keep 80% of src0, 50% of
-    src1, 20% of src2, none of src3, 10% of everything else. One
-    map-side expression, zero shuffle, reproducible under reruns /
-    engines / incremental ingest (sampling.mixture_sample)."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        mixture_sample,
-    )
-
-    return mixture_sample(
-        _docs(spark, sf_dir), "doc_id", "source", _MIXTURE_RATES,
-        default_pct=10,
-    ).select("doc_id", "source")
-
-
-def q_token_budget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget corpus selection (r4): greedy best-first by
-    (quality score DESC, doc_id ASC) keeping the longest prefix with
-    cumulative tokens <= 10,000 — "fill the training mix with the best
-    data first". The Spark lowering is the two-pass stratum plan
-    (sampling.token_budget_select): per-score partial agg + a window
-    over <= 1001 strata + a boundary window over ONE stratum — no
-    global single-partition running sum anywhere. The oracle replays
-    the naive global-window prefix rule, so the oracle check proves the
-    stratum decomposition exact."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        token_budget_select,
-    )
-
-    scored = T.quality_scores(_docs(spark, sf_dir)).select(
-        "doc_id", "n_tokens", "distinct_permille"
-    )
-    return token_budget_select(
-        scored, budget=10_000, score_col="distinct_permille",
-        token_col="n_tokens",
-    )
-
-
-def q_split_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test assignment (hash ranges on
-    doc_id) — per (source, split) doc counts."""
-    from real_time_sliding_window_spark.operators.sampling import split_assignment
-
-    return (
-        split_assignment(_docs(spark, sf_dir), "doc_id")
-        .groupBy("source", "split")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination: held-out (val/test) docs sharing >=1 word
-    3-gram with any train doc, via the df-capped inverted-index semi-join
-    — one row per contaminated held-out doc with its evidence count."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        decontaminate,
-        split_assignment,
-    )
-
-    docs = split_assignment(_docs(spark, sf_dir), "doc_id")
-    return decontaminate(docs, shingle_k=3, max_df=128)
-
-
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking: 32-token chunks with a 16-token stride
     (50% overlap) — one row per chunk, all JVM-side expressions."""
@@ -1146,24 +1067,6 @@ def q_bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(_docs(spark, sf_dir), _TFIDF_QUERIES, k=10)
 
 
-def q_groupwise_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source eval-set draw: EXACTLY min(20, |source|) documents per
-    source, selected by content-addressed bottom-k rank
-    (operators/sampling.py::groupwise_bottomk_sample) — the deterministic,
-    mergeable replacement for per-group reservoir sampling."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        groupwise_bottomk_sample,
-    )
-
-    out = groupwise_bottomk_sample(
-        _docs(spark, sf_dir).select("doc_id", "source"),
-        group_col="source",
-        key_col="doc_id",
-        k=20,
-    )
-    return out.select("source", "doc_id", "sample_rank")
-
-
 def q_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub (operators/text.py::redact_pii) over the corpus. The
     synthetic corpus is PII-free, so the query first APPENDS deterministic
@@ -1205,59 +1108,6 @@ def q_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_length_gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentile-floor curation (operators/sampling.py::percentile_gate):
-    drop each source's bottom quartile by document length, report
-    per-source survivor stats. The threshold rides the mergeable GK
-    sketch (no group's raw values ever concentrate in one executor); in
-    the sketch's exact regime (group n ≤ accuracy, true at all test
-    scales) the cut equals DuckDB's quantile_disc order statistic, and
-    n_chars is integral, so the gate is value-hash exact."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        percentile_gate,
-    )
-
-    kept = percentile_gate(
-        _docs(spark, sf_dir).select("doc_id", "source", "n_chars"),
-        group_col="source",
-        value_col="n_chars",
-        pct=0.25,
-    )
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("n_chars").alias("min_kept_chars"),
-        F.sum("n_chars").alias("sum_kept_chars"),
-        F.min("gate_threshold").cast("long").alias("threshold_chars"),
-    )
-
-
-def q_temperature_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature source balancing (r5,
-    operators/sampling.py::temperature_mixture): alpha=0.5 multinomial
-    smoothing over char-weighted source sizes — each source keeps
-    rate (min_size/size)^0.5 via the content-addressed hash buckets, so
-    the head source is thinned hardest and the smallest keeps 100%.
-    Reports per-source rate and survivor count. alpha=0.5 lowers the
-    power to IEEE sqrt, making the floor'd integer rate bit-identical
-    across engines — the oracle replays the formula exactly."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        temperature_mixture,
-    )
-
-    kept = temperature_mixture(
-        _docs(spark, sf_dir).select("doc_id", "source", "n_chars"),
-        key_col="doc_id",
-        source_col="source",
-        alpha=0.5,
-        n_buckets=1000,
-        weight_col="n_chars",
-    )
-    return kept.groupBy("source", "rate_pm").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_chars").alias("kept_chars"),
-    )
-
-
 def q_token_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus drift monitor (r5, operators/drift.py::token_drift): the
     25 most-drifted tokens between sources src0 and src1 by exact
@@ -1293,27 +1143,6 @@ def q_boilerplate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_segs",
         "n_kept",
         F.md5("clean_text").alias("clean_md5"),
-    )
-
-
-def q_decontaminate_bloom_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same decontamination semantics as `decontaminate_docs`, planned
-    through the distributed Bloom prefilter (operators/bloom.py): the
-    train-shingle set's 2^16-bit Bloom image prunes held-out shingles
-    map-side (k=4 chained broadcast joins, zero probe-side exchange)
-    before the exact confirm semi-join. No false negatives ⇒ the result
-    — and therefore the oracle — is byte-identical to the exact plan;
-    what changes is the join's input volume, which is the thing that
-    matters when the blocklist is 10^9 shingles and the probe side is
-    the whole corpus."""
-    from real_time_sliding_window_spark.operators.sampling import (
-        decontaminate,
-        split_assignment,
-    )
-
-    docs = split_assignment(_docs(spark, sf_dir), "doc_id")
-    return decontaminate(
-        docs, shingle_k=3, max_df=128, bloom_bits=1 << 16, bloom_hashes=4
     )
 
 
@@ -1641,111 +1470,6 @@ def q_returned_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CM_PROBES = [
-    "join", "scan", "hash", "window", "filter", "merge",
-    "order", "batch", "column", "value", "zzzqx", "notaword",
-]
-_CM_DEPTH, _CM_WIDTH = 4, 512
-
-
-def q_cm_freq_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min point-frequency estimates vs exact truth over document
-    tokens (operators/cm_sketch.py): build the depth×width matrix in one
-    pass (shuffle bounded at depth×width rows by map-side partials),
-    probe a fixed word list (two absent on purpose — their estimates
-    demonstrate the min-over-rows floor), and join the exact counts for
-    the same probes so every row exhibits ``est >= true``. Truth is
-    computed only for the probes (broadcast semi-join, never a full
-    vocabulary agg against the sketch). The matrix is md5-derived, so
-    the oracle rebuilds it bit-for-bit."""
-    from real_time_sliding_window_spark.functions.columns import tokens
-    from real_time_sliding_window_spark.operators.cm_sketch import (
-        cm_estimate,
-        cm_sketch,
-    )
-
-    # r6: one tokenize+count pass feeds BOTH the sketch and the truth.
-    # The per-token md5 fan-out runs over the (Heaps-bounded) vocabulary
-    # instead of every token instance — 4×|tokens| md5 → 4×|vocab| — and
-    # the vocab-sized checkpoint stops the regex/explode pass running
-    # once per consumer. Sketch and truth values are unchanged: buckets
-    # depend only on the token, and Σ weights distributes over cells.
-    toks = _docs(spark, sf_dir).select(F.explode(tokens("text")).alias("tok"))
-    counts = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("__w"))
-        .localCheckpoint(eager=True)
-    )
-    sk = cm_sketch(
-        counts, "tok", depth=_CM_DEPTH, width=_CM_WIDTH, weight_col="__w"
-    )
-    probes = spark.createDataFrame(
-        [(w,) for w in _CM_PROBES], "tok string"
-    )
-    est = cm_estimate(sk, probes, "tok", depth=_CM_DEPTH, width=_CM_WIDTH)
-    truth = counts.join(F.broadcast(probes), "tok").select(
-        "tok", F.col("__w").alias("true_count")
-    )
-    return (
-        est.join(F.broadcast(truth), "tok", "left")
-        .select(
-            "tok",
-            "est_count",
-            F.coalesce("true_count", F.lit(0).cast("long")).alias(
-                "true_count"
-            ),
-        )
-    )
-
-
-def _cm_oracle_sql() -> str:
-    """DuckDB replay of q_cm_freq_docs: identical md5 buckets (15 hex
-    chars — positive int64 on both engines), identical min-over-rows
-    estimate, exact truth for the probe set."""
-    probes = ", ".join(f"('{w}')" for w in _CM_PROBES)
-    bucket = (
-        "('0x' || substr(md5('cm' || CAST({r} AS VARCHAR) || ':' || {k}),"
-        f" 1, 15))::BIGINT % {_CM_WIDTH}"
-    )
-    return f"""
-        WITH toks AS (
-            SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
-                AS tok
-            FROM documents
-        ),
-        rows_r AS (SELECT unnest(generate_series(0, {_CM_DEPTH - 1})) AS r),
-        cells AS (
-            SELECT r, {bucket.format(r='r', k='tok')} AS c,
-                   count(*) AS cnt
-            FROM toks CROSS JOIN rows_r
-            GROUP BY 1, 2
-        ),
-        probes(tok) AS (VALUES {probes}),
-        coords AS (
-            SELECT p.tok, rows_r.r,
-                   {bucket.format(r='rows_r.r', k='p.tok')} AS c
-            FROM probes p CROSS JOIN rows_r
-        ),
-        est AS (
-            SELECT coords.tok,
-                   min(coalesce(cells.cnt, 0)) AS est_count
-            FROM coords
-            LEFT JOIN cells ON cells.r = coords.r AND cells.c = coords.c
-            GROUP BY 1
-        ),
-        truth AS (
-            SELECT tok, count(*) AS true_count
-            FROM toks
-            WHERE tok IN (SELECT tok FROM probes)
-            GROUP BY tok
-        )
-        SELECT est.tok,
-               CAST(est.est_count AS BIGINT) AS est_count,
-               CAST(coalesce(truth.true_count, 0) AS BIGINT) AS true_count
-        FROM est LEFT JOIN truth USING (tok)
-    """
-
-
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shape co-location join: 1996 revenue per ASIA nation
     where the CUSTOMER and the SUPPLIER sit in the same nation — the
@@ -1912,77 +1636,6 @@ def q_market_share_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             " DIV total_cents AS BIGINT)"
         ).alias("share_ppm"),
     )
-
-
-_JS_DEPTH, _JS_WIDTH = 4, 512
-
-
-def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based join-size estimation (Cormode–Muthukrishnan §4.2):
-    |orders ⋈ lineitem on orderkey| estimated from two count-min
-    sketches via min-over-rows inner product — the whole estimate costs
-    O(depth×width), never a shuffle of either table: the planner-side
-    cardinality oracle a 100 TB optimizer consults BEFORE choosing a
-    join strategy. The true size rides along (one real join at bench
-    scale; at production scale you would obviously skip it — it is here
-    so the oracle row itself certifies est ≥ true)."""
-    from real_time_sliding_window_spark.operators.cm_sketch import (
-        cm_inner_product,
-        cm_sketch,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey"
-    )
-    est = cm_inner_product(
-        cm_sketch(orders, "o_orderkey", depth=_JS_DEPTH, width=_JS_WIDTH),
-        cm_sketch(li, "l_orderkey", depth=_JS_DEPTH, width=_JS_WIDTH),
-        depth=_JS_DEPTH,
-    )
-    true = orders.join(
-        li, orders["o_orderkey"] == li["l_orderkey"]
-    ).agg(F.count(F.lit(1)).alias("true_join_size"))
-    return est.crossJoin(F.broadcast(true))
-
-
-def _join_size_oracle_sql() -> str:
-    """DuckDB replay: same md5 buckets, same min-over-rows dot."""
-    bucket = (
-        "('0x' || substr(md5('cm' || CAST(r AS VARCHAR) || ':' ||"
-        " CAST({k} AS VARCHAR)), 1, 15))::BIGINT % {w}"
-    )
-    return f"""
-        WITH rows_r AS (
-            SELECT unnest(generate_series(0, {_JS_DEPTH - 1})) AS r
-        ),
-        sa AS (
-            SELECT r, {bucket.format(k='o_orderkey', w=_JS_WIDTH)} AS c,
-                   count(*) AS cnt
-            FROM orders CROSS JOIN rows_r GROUP BY 1, 2
-        ),
-        sb AS (
-            SELECT r, {bucket.format(k='l_orderkey', w=_JS_WIDTH)} AS c,
-                   count(*) AS cnt
-            FROM lineitem CROSS JOIN rows_r GROUP BY 1, 2
-        ),
-        dots AS (
-            SELECT rows_r.r,
-                   CAST(COALESCE(sum(sa.cnt * sb.cnt), 0) AS BIGINT)
-                       AS dot
-            FROM rows_r
-            LEFT JOIN sa ON sa.r = rows_r.r
-            LEFT JOIN sb ON sb.r = sa.r AND sb.c = sa.c
-            GROUP BY rows_r.r
-        )
-        SELECT (SELECT CAST(min(dot) AS BIGINT) FROM dots)
-                   AS est_join_size,
-               (SELECT CAST(count(*) AS BIGINT)
-                FROM orders o JOIN lineitem l
-                  ON o.o_orderkey = l.l_orderkey) AS true_join_size
-    """
 
 
 _JOURNEY_W_US = 7 * 24 * 3600 * 1_000_000  # 7-day conversion window
@@ -2159,9 +1812,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # in r4 (VERDICT.md) and take their driver row in r5.
     return {
         # -- r5 additions, never yet in the driver window --
-        "cm_freq_docs": q_cm_freq_docs,
         "journey_funnel_events": q_journey_funnel_events,
-        "join_size_estimate": q_join_size_estimate,
         "local_supplier_volume": q_local_supplier_volume,
         "sliding_events_sliced": q_sliding_events_sliced,
         "json_props_stats": q_json_props_stats,
@@ -2180,17 +1831,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "brand_promo_revenue": q_brand_promo_revenue,
         "returned_top_customers": q_returned_top_customers,
         "boilerplate_docs": q_boilerplate_docs,
-        "decontaminate_bloom_docs": q_decontaminate_bloom_docs,
         "nation_trade_volume": q_nation_trade_volume,
         "profile_docs": q_profile_docs,
         "priority_late_orders": q_priority_late_orders,
         "top_revenue_suppliers": q_top_revenue_suppliers,
         "idle_rich_customers": q_idle_rich_customers,
         "bm25_search_docs": q_bm25_search_docs,
-        "groupwise_sample_docs": q_groupwise_sample_docs,
         "redact_docs": q_redact_docs,
-        "length_gate_docs": q_length_gate_docs,
-        "temperature_mixture_docs": q_temperature_mixture_docs,
         "token_drift_docs": q_token_drift_docs,
         # -- r3/r4 additions, never yet in the driver window (r5 rotation) --
         "repetition_docs": q_repetition_docs,
@@ -2199,8 +1846,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bulk_suppliers": q_bulk_suppliers,
         "event_gaps": q_event_gaps,
         "late_suppliers": q_late_suppliers,
-        "mixture_sample_docs": q_mixture_sample_docs,
-        "token_budget_docs": q_token_budget_docs,
         # -- stable set (driver-green r3+r4) --
         "tumbling_events": q_tumbling_events,
         "sliding_events": q_sliding_events,
@@ -2230,12 +1875,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "click_and_purchase_users": q_click_and_purchase_users,
         # ---- position 51+: long-stable pins displaced from the driver window
         # (driver-green in r3 AND r4; still checked by tools/oracle_check.py) --
-        "decontaminate_docs": q_decontaminate_docs,
         "pack_docs": q_pack_docs,
         "topk_events_per_user": q_topk_events_per_user,
         "curated_corpus": q_curated_corpus,
-        "hash_sample_docs": q_hash_sample_docs,
-        "split_counts_docs": q_split_counts_docs,
         "chunk_docs": q_chunk_docs,
         "distinct_user_types": q_distinct_user_types,
         "langid_docs": q_langid_docs,
@@ -2247,8 +1889,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     out = {
-        "cm_freq_docs": _cm_oracle_sql(),
-        "join_size_estimate": _join_size_oracle_sql(),
         "forecast_revenue_change": """
             SELECT count(*) AS n_items,
                    CAST(sum(CAST(round(
@@ -2900,89 +2540,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT user_id, date_trunc('hour', ts) AS hour
             FROM events WHERE event_type = 'purchase'
         """,
-        "hash_sample_docs": """
-            SELECT doc_id, source FROM documents
-            WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                  % 100 < 25
-        """,
-        "mixture_sample_docs": """
-            SELECT doc_id, source FROM documents
-            WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                  % 100 <
-                  CASE source WHEN 'src0' THEN 80 WHEN 'src1' THEN 50
-                              WHEN 'src2' THEN 20 WHEN 'src3' THEN 0
-                              ELSE 10 END
-        """,
-        # the NAIVE form on purpose: a single global running sum ordered
-        # (score DESC, doc_id ASC) — the hash match proves the stratum
-        # decomposition the Spark side uses is exactly equivalent
-        "token_budget_docs": f"""
-            WITH t AS (SELECT doc_id, {_TOK} AS tok FROM documents),
-            scored AS (
-                SELECT doc_id,
-                       CAST(len(tok) AS BIGINT) AS n_tokens,
-                       CASE WHEN len(tok) > 0
-                            THEN CAST(floor(1000 * len(list_distinct(tok))
-                                            / len(tok)) AS BIGINT)
-                            ELSE 0 END AS score
-                FROM t
-            ),
-            ordered AS (
-                SELECT doc_id, score, n_tokens,
-                       CAST(sum(n_tokens) OVER (
-                           ORDER BY score DESC, doc_id ASC
-                           ROWS UNBOUNDED PRECEDING
-                       ) AS BIGINT) AS cum_tokens
-                FROM scored
-            )
-            SELECT doc_id, score, n_tokens, cum_tokens
-            FROM ordered WHERE cum_tokens <= 10000
-        """,
-        "split_counts_docs": """
-            WITH b AS (
-                SELECT source,
-                       ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                           % 100 AS bucket
-                FROM documents
-            )
-            SELECT source,
-                   CASE WHEN bucket < 80 THEN 'train'
-                        WHEN bucket < 90 THEN 'val'
-                        ELSE 'test' END AS split,
-                   count(*) AS n_docs
-            FROM b GROUP BY 1, 2
-        """,
-        "decontaminate_docs": """
-            WITH s AS (
-                SELECT doc_id, text,
-                       CASE WHEN b < 80 THEN 'train'
-                            WHEN b < 90 THEN 'val'
-                            ELSE 'test' END AS split
-                FROM (
-                    SELECT *,
-                        ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                            % 100 AS b
-                    FROM documents
-                )
-            ),
-            base AS (
-                SELECT doc_id, split,
-                    list_distinct(
-                        list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-                                       i -> array_to_string(w[i:i+2], ' '))) AS sh
-                FROM (SELECT doc_id, split, string_split(text, ' ') AS w FROM s)
-            ),
-            idx AS (SELECT doc_id, split, unnest(sh) AS shingle FROM base),
-            rare AS (
-                SELECT shingle FROM idx GROUP BY 1 HAVING count(*) <= 128
-            ),
-            cidx AS (SELECT idx.* FROM idx JOIN rare USING (shingle)),
-            tr AS (SELECT DISTINCT shingle FROM cidx WHERE split = 'train')
-            SELECT doc_id, split, count(*) AS n_contaminated_shingles
-            FROM cidx JOIN tr USING (shingle)
-            WHERE split IN ('val', 'test')
-            GROUP BY 1, 2
-        """,
         "chunk_docs": """
             WITH w AS (
                 SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -3399,18 +2956,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM scored
             ) WHERE rank <= 10
         """,
-        # md5 hex strings compare identically on both engines
-        "groupwise_sample_docs": """
-            SELECT source, doc_id, sample_rank FROM (
-                SELECT source, doc_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC,
-                                    doc_id ASC
-                       ) AS INT) AS sample_rank
-                FROM documents
-            ) WHERE sample_rank <= 20
-        """,
         # same augmentation, same two regexes, same application order;
         # 'g' flag = replace-all to match Spark's regexp_replace default
         "redact_docs": """
@@ -3529,22 +3074,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN clean c USING (doc_id)
             GROUP BY 1
         """,
-        "length_gate_docs": """
-            WITH thr AS (
-                SELECT source,
-                       quantile_disc(n_chars, 0.25) AS gate_threshold
-                FROM documents GROUP BY 1
-            )
-            SELECT d.source,
-                   CAST(count(*) AS BIGINT) AS n_kept,
-                   CAST(min(d.n_chars) AS BIGINT) AS min_kept_chars,
-                   CAST(sum(d.n_chars) AS BIGINT) AS sum_kept_chars,
-                   CAST(min(t.gate_threshold) AS BIGINT) AS threshold_chars
-            FROM documents d
-            JOIN thr t USING (source)
-            WHERE d.n_chars >= t.gate_threshold
-            GROUP BY 1
-        """,
         # same tokenizer, exact integer ppm (// is DuckDB integer division,
         # div is Spark's), same (delta DESC, token ASC) total order
         "token_drift_docs": f"""
@@ -3573,34 +3102,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY delta_ppm DESC, token ASC
             LIMIT 25
         """,
-        # alpha=0.5 -> sqrt, IEEE-correctly-rounded on both engines, so the
-        # floor'd per-mille rate is bit-identical; sizes are exact integer
-        # sums cast to double; buckets are the shared md5 hex expression
-        "temperature_mixture_docs": """
-            WITH sizes AS (
-                SELECT source, CAST(sum(n_chars) AS DOUBLE) AS src_size
-                FROM documents GROUP BY 1
-            ),
-            rates AS (
-                SELECT source,
-                       CAST(floor(sqrt((SELECT min(src_size) FROM sizes)
-                                       / src_size) * 1000.0) AS BIGINT)
-                           AS rate_pm
-                FROM sizes
-            )
-            SELECT d.source, r.rate_pm,
-                   CAST(count(*) AS BIGINT) AS n_kept,
-                   CAST(sum(d.n_chars) AS BIGINT) AS kept_chars
-            FROM documents d
-            JOIN rates r USING (source)
-            WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
-                  % 1000 < r.rate_pm
-            GROUP BY 1, 2
-        """,
     }
-    # the Bloom prefilter has no false negatives, so the bloom-planned
-    # decontamination is byte-identical to the exact one — SAME oracle
-    out["decontaminate_bloom_docs"] = out["decontaminate_docs"]
     # same answer, different physical plan (stream slicing vs native
     # window explode) — the oracle is shared verbatim
     out["sliding_events_sliced"] = out["sliding_events"]

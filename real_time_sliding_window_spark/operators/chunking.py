@@ -98,10 +98,11 @@ def pack_documents(
     Scale note: a running sum ordered within a partition key is ONE task
     per key — sequential packing is inherently serial per stream. With
     ``n_shards > 1`` docs are first split into deterministic hash shards
-    (content-addressed, like sampling.hash_bucket) and packed per
-    (partition, shard): n_shards independent pack streams per key, each its
-    own task — how parallel packers actually write, at the cost of up to
-    one partially-filled bin per shard instead of one per key.
+    (content-addressed: md5 of the id, so a doc's shard never depends on
+    partitioning) and packed per (partition, shard): n_shards independent
+    pack streams per key, each its own task — how parallel packers
+    actually write, at the cost of up to one partially-filled bin per
+    shard instead of one per key.
     """
     n_tok = (
         F.length(text_col)

@@ -343,7 +343,9 @@ def remove_boilerplate(
     distribution), set it False to fall back to a shuffled anti-join
     when the hot set itself is too large to broadcast. Segmenting is a
     higher-order transform over the PRE-SPLIT words array (never split
-    inside the lambda — functions/columns.shingles_from_words doctrine).
+    inside the lambda: higher-order functions are interpreted, so an
+    expression inside the lambda runs once per element, and a ``split``
+    there would re-split the whole document once per segment).
 
     ``hot_segments`` (a 1-column ``seg`` frame) substitutes an externally
     maintained hot set — e.g. ``hot_segments_from_index`` over the

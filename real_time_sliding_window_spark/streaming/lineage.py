@@ -7,7 +7,8 @@ watermark) is captured to a list and can be persisted as a metrics table.
 Per-partition lineage comes from the exactly-once sink's commit manifests
 (sink.py) — together they satisfy the north rule's "per-partition lineage
 and metrics" requirement. The 110%-of-bucket-duration WARN
-(FixedTumblingBucketedWindow.kt:140-147) maps to `slow_batches`.
+(FixedTumblingBucketedWindow.kt:140-147) is a filter over ``progress``:
+``[r for r in listener.progress if r["batch_duration_ms"] > 1.1 * bucket_ms]``.
 
 Per-class item-count gauges (reference `BucketedWindow.kt:32-33`,
 `FixedTumblingBucketedWindow.kt:149-151`, exported at `Metrics.kt:108-137`)
@@ -63,10 +64,8 @@ def with_role_gauges(
 
 
 class LineageListener(StreamingQueryListener):
-    def __init__(self, slow_batch_ms: float | None = None):
+    def __init__(self):
         self.progress: list[dict] = []
-        self.slow_batch_ms = slow_batch_ms
-        self.slow_batches: list[dict] = []
 
     def onQueryStarted(self, event):
         pass
@@ -104,8 +103,6 @@ class LineageListener(StreamingQueryListener):
             },
         }
         self.progress.append(rec)
-        if self.slow_batch_ms and (rec["batch_duration_ms"] or 0) > self.slow_batch_ms:
-            self.slow_batches.append(rec)
 
     def onQueryTerminated(self, event):
         pass
@@ -154,7 +151,7 @@ class LineageListener(StreamingQueryListener):
         return spark.createDataFrame(pdf)
 
 
-def attach(spark: SparkSession, slow_batch_ms: float | None = None) -> LineageListener:
-    listener = LineageListener(slow_batch_ms)
+def attach(spark: SparkSession) -> LineageListener:
+    listener = LineageListener()
     spark.streams.addListener(listener)
     return listener

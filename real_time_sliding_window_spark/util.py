@@ -25,7 +25,7 @@ def ensure_parallelism(
     """Repartition iff the input has fewer partitions than the cluster can
     use in parallel.
 
-    Heavy per-row expression work (tokenizing, hashing, shingle
+    Heavy per-row expression work (tokenizing, hashing, segment
     explosion) is compute-bound, and a small parquet input arrives
     as a single partition under ``spark.sql.files.maxPartitionBytes`` — one
     task, zero parallelism. At production scale the scan naturally has
@@ -65,8 +65,8 @@ def ensure_parallelism(
     if df.isStreaming:
         # no stats/rdd on streaming plans; micro-batch partitioning comes
         # from the source (maxFilesPerTrigger / topic partitions) — pass
-        # through so the stateless doc operators (chunking, sampling, text)
-        # compose with readStream unchanged
+        # through so the stateless doc operators that call this (text,
+        # retrieval, profile) compose with readStream unchanged
         return df
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism

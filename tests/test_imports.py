@@ -9,7 +9,9 @@ never reaches it would stay green.
 The same walk guards the stateful operators' shape: one event-time timer
 rule (``stateful.arm_timer``), at most three ``applyInPandasWithState``
 wirings, and append output mode on every streaming write; and the engine's
-layering: the streaming engine imports nothing from the curation side.
+layering: the streaming engine imports nothing from the curation side. A
+session conf that exists for one call pattern (``periodicGC`` for
+``localCheckpoint``) is held to that pattern.
 """
 
 from __future__ import annotations
@@ -133,6 +135,20 @@ def test_every_streaming_write_is_append_mode():
         or not (isinstance(c.args[0], ast.Constant) and c.args[0].value == "append")
     ]
     assert not other, other
+
+
+def test_periodic_gc_conf_only_while_a_module_local_checkpoints():
+    """``session.py`` sets ``spark.cleaner.periodicGC.interval`` if and only
+    if some package module calls ``.localCheckpoint(``. The conf is there so
+    a driver GC frees the blocks of dead local checkpoints; it goes with the
+    last call."""
+    gc_conf = "spark.cleaner.periodicGC.interval"
+    session = ROOT / PKG / "session.py"
+    sets_gc = [n.lineno for n in ast.walk(ast.parse(session.read_text()))
+               if isinstance(n, ast.Constant) and n.value == gc_conf]
+    checkpoints = [(str(p.relative_to(ROOT)), c.lineno)
+                   for p, c in _calls("localCheckpoint")]
+    assert bool(sets_gc) == bool(checkpoints), (sets_gc, checkpoints)
 
 
 # The streaming engine and everything it imports, named relative to the

@@ -195,12 +195,6 @@ def test_retention_drops_only_expired_partitions(spark, tmp_path):
     assert kept.select(_F.min("ts")).first()[0] >= expect.select(_F.min("ts")).first()[0]
 
 
-def test_groupwise_sample_rank_limit_pushdown(spark):
-    """The bottom-k sample must prune per-partition before its one shuffle."""
-    sc = scorecard(E.q_groupwise_sample_docs(spark, SF))
-    assert sc["window_group_limit"], "rank<=k must lower to WindowGroupLimit"
-
-
 def test_q15_argmax_broadcasts_scalar_and_dim(spark):
     """The 1-row max and the supplier dim must broadcast — no shuffle join
     against the aggregated revenue."""
@@ -252,27 +246,6 @@ def test_bucketed_postings_no_term_shuffle(spark):
         assert a == b
     finally:
         spark.sql("DROP TABLE IF EXISTS postings_b")
-
-
-def test_bloom_prefilter_zero_probe_side_shuffle(spark):
-    """The Bloom probe must be k chained BROADCAST joins — no Exchange on
-    the probe side (that is the entire point of prefiltering with a
-    broadcastable filter image instead of an exact shuffled semi-join)."""
-    from pyspark.sql import functions as F
-    from real_time_sliding_window_spark.operators.bloom import (
-        bloom_build,
-        bloom_prefilter,
-    )
-
-    keys = spark.range(1000).select(F.concat(F.lit("k"), "id").alias("key"))
-    probe = spark.range(5000).select(F.concat(F.lit("p"), "id").alias("key"))
-    bloom = bloom_build(keys, "key", n_bits=1 << 14, n_hashes=4)
-    out = bloom_prefilter(probe, "key", bloom, n_bits=1 << 14, n_hashes=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 4
-    # the only exchanges allowed are the broadcast of the word table (and
-    # its AQE reuse); the probe side itself must never hash-partition
-    assert "hashpartitioning(key" not in plan
 
 
 def test_q7_trade_volume_dims_broadcast_filters_pushed(spark):

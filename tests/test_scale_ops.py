@@ -1,5 +1,6 @@
-"""Tests for the training-data pipeline operators (text, sampling,
-chunking, retrieval, sketches) and skew handling (F8)."""
+"""Tests for the training-data pipeline operators (text, chunking,
+retrieval, drift, profiling), the batch sequence funnel and skew
+handling (F8)."""
 
 from __future__ import annotations
 
@@ -15,8 +16,6 @@ from real_time_sliding_window_spark import synth
 from real_time_sliding_window_spark.operators import text
 from real_time_sliding_window_spark.operators.skew import salted_windowed_agg
 from real_time_sliding_window_spark.operators.windows import windowed_agg
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -120,208 +119,6 @@ class TestSkew:
             assert merged == expect
 
 
-class TestSampling:
-    def test_hash_sample_deterministic_under_repartition(self, spark):
-        """Content-addressed sampling selects the same rows no matter how
-        the data is partitioned or re-run — the reproducibility property
-        RNG sampling lacks."""
-        from real_time_sliding_window_spark.operators import sampling
-
-        df = spark.range(2000).withColumnRenamed("id", "doc_id")
-        a = sorted(r.doc_id for r in sampling.hash_sample(df, "doc_id", 25).collect())
-        b = sorted(
-            r.doc_id
-            for r in sampling.hash_sample(df.repartition(7), "doc_id", 25).collect()
-        )
-        assert a == b and 0 < len(a) < 2000
-        # rate is approximately honored (md5 buckets are uniform)
-        assert abs(len(a) / 2000 - 0.25) < 0.05
-
-    def test_mixture_sample_rates_and_consistency(self, spark):
-        """r4: per-source rates honored; a doc's keep decision under
-        mixture_sample(rate r for its source) == hash_sample(r) — the
-        mixture is per-source hash_sample by construction, so mixing
-        composes with incremental ingest exactly like sampling does."""
-        from pyspark.sql import functions as SF
-
-        from real_time_sliding_window_spark.operators import sampling
-
-        df = spark.range(3000).select(
-            F.col("id").alias("doc_id"),
-            SF.concat(SF.lit("s"), (F.col("id") % 3)).alias("source"),
-        )
-        got = sampling.mixture_sample(
-            df, "doc_id", "source", {"s0": 100, "s1": 40}, default_pct=0
-        ).toPandas()
-        by_src = got.groupby("source").size().to_dict()
-        assert by_src.get("s0") == 1000          # rate 100 keeps all
-        assert by_src.get("s2", 0) == 0          # default 0 drops all
-        assert 0 < by_src.get("s1", 0) < 1000    # ~40%
-        only_s1 = sampling.hash_sample(
-            df.filter(F.col("source") == "s1"), "doc_id", 40
-        ).toPandas()
-        assert sorted(got[got.source == "s1"].doc_id) == sorted(
-            only_s1.doc_id
-        )
-
-    def test_mixture_sample_rates_are_percent_at_any_bucket_count(self, spark):
-        """ADVICE r4: rates mean PERCENT regardless of n_buckets — pct=80
-        at n_buckets=1000 keeps ~80% (not 8%), and n_buckets=100 keeps
-        exactly the same semantics as before the fix."""
-        from pyspark.sql import functions as SF
-
-        from real_time_sliding_window_spark.operators import sampling
-
-        df = spark.range(4000).select(
-            F.col("id").alias("doc_id"), SF.lit("s0").alias("source")
-        )
-        for n_buckets in (100, 1000, 256):
-            kept = sampling.mixture_sample(
-                df, "doc_id", "source", {"s0": 80}, n_buckets=n_buckets
-            ).count()
-            assert abs(kept / 4000 - 0.80) < 0.05, (n_buckets, kept)
-        # 0 drops all, 100 keeps all — at every bucket count
-        assert sampling.mixture_sample(
-            df, "doc_id", "source", {"s0": 0}, n_buckets=1000
-        ).count() == 0
-        assert sampling.mixture_sample(
-            df, "doc_id", "source", {"s0": 100}, n_buckets=1000
-        ).count() == 4000
-
-    def test_temperature_mixture(self, spark):
-        """r5: alpha-temperature source balancing. alpha=1 keeps
-        everything (rate 100% per source); alpha=0 equalizes toward the
-        smallest source (rate = min/size); alpha=0.5 thins the head by
-        sqrt(min/size); the smallest source always keeps 100%; the kept
-        set equals per-source hash_sample at the computed rate
-        (content-addressed composition carries over)."""
-        from pyspark.sql import functions as SF
-
-        from real_time_sliding_window_spark.operators import sampling
-
-        # sources of size 4000 / 1000 / 250 (16:4:1 head skew)
-        df = spark.range(5250).select(
-            F.col("id").alias("doc_id"),
-            SF.when(F.col("id") < 4000, "big")
-            .when(F.col("id") < 5000, "mid")
-            .otherwise("small")
-            .alias("source"),
-        )
-        # alpha=1: no thinning at all
-        assert (
-            sampling.temperature_mixture(df, "doc_id", "source", alpha=1.0)
-            .count() == 5250
-        )
-        # alpha=0.5: rates = sqrt(250/size) -> big 250, mid 500, small 1000 pm
-        out = sampling.temperature_mixture(
-            df, "doc_id", "source", alpha=0.5
-        ).toPandas()
-        rates = out.groupby("source").rate_pm.first().to_dict()
-        assert rates == {"big": 250, "mid": 500, "small": 1000}
-        by = out.groupby("source").size().to_dict()
-        assert by["small"] == 250                      # min source: all kept
-        assert abs(by["big"] / 4000 - 0.25) < 0.05     # ~25%
-        assert abs(by["mid"] / 1000 - 0.50) < 0.07     # ~50%
-        # alpha=0: equalize -> rate = min/size (big 62 pm, floor'd)
-        eq = sampling.temperature_mixture(
-            df, "doc_id", "source", alpha=0.0
-        ).toPandas()
-        assert eq.groupby("source").rate_pm.first().to_dict() == {
-            "big": 62, "mid": 250, "small": 1000
-        }
-        # composition: kept big-rows == hash_sample at 250/1000 on that source
-        only_big = sampling.hash_sample(
-            df.filter(F.col("source") == "big"), "doc_id", 250, n_buckets=1000
-        ).toPandas()
-        assert sorted(out[out.source == "big"].doc_id) == sorted(
-            only_big.doc_id
-        )
-        # weight_col changes sizes: weight 'small' heaviest so it is no
-        # longer the 100% source
-        wdf = df.withColumn(
-            "w",
-            SF.when(F.col("source") == "small", 1000).otherwise(1).cast("long"),
-        )
-        wout = sampling.temperature_mixture(
-            wdf, "doc_id", "source", alpha=0.5, weight_col="w"
-        ).toPandas()
-        wrates = wout.groupby("source").rate_pm.first().to_dict()
-        assert wrates["mid"] == 1000 and wrates["small"] < 100
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            sampling.temperature_mixture(df, "doc_id", "source", alpha=1.5)
-
-    def test_token_budget_select_edges(self, spark):
-        """r4: the two-pass stratum plan equals the naive prefix rule on
-        crafted strata, including both edge regimes — whole corpus fits
-        (no boundary stratum) and budget inside the FIRST stratum."""
-        from real_time_sliding_window_spark.operators.sampling import (
-            token_budget_select,
-        )
-
-        pdf = pd.DataFrame({
-            "doc_id": [1, 2, 3, 4, 5, 6],
-            "score": [9, 9, 5, 5, 5, 1],
-            "toks": [10, 20, 5, 5, 100, 1],
-        })
-        df = spark.createDataFrame(pdf)
-
-        def run(budget):
-            out = token_budget_select(
-                df, budget, score_col="score", token_col="toks"
-            ).toPandas()
-            return sorted(
-                (int(r.doc_id), int(r.cum_tokens)) for r in out.itertuples()
-            )
-
-        # naive order: (9,1,10) (9,2,30) (5,3,35) (5,4,40) (5,5,140) (1,6,141)
-        assert run(40) == [(1, 10), (2, 30), (3, 35), (4, 40)]
-        assert run(139) == [(1, 10), (2, 30), (3, 35), (4, 40)]  # 5 overflows; prefix stops
-        assert run(1000) == [(1, 10), (2, 30), (3, 35), (4, 40), (5, 140),
-                             (6, 141)]          # whole corpus fits
-        assert run(15) == [(1, 10)]             # budget inside first stratum
-        assert run(5) == []                     # nothing fits
-
-    def test_split_assignment_partitions_corpus(self, spark):
-        from real_time_sliding_window_spark.operators import sampling
-
-        df = spark.range(2000).withColumnRenamed("id", "doc_id")
-        out = sampling.split_assignment(df, "doc_id").toPandas()
-        counts = out["split"].value_counts()
-        assert set(counts.index) == {"train", "val", "test"}
-        assert counts.sum() == 2000
-        assert abs(counts["train"] / 2000 - 0.8) < 0.05
-
-    def test_decontaminate_flags_overlap_only(self, spark):
-        """A held-out doc sharing a rare 3-gram with train is flagged with
-        the exact shared-shingle count; clean docs and boilerplate-only
-        overlaps are not."""
-        from real_time_sliding_window_spark.operators.sampling import decontaminate
-
-        boiler = "terms and conditions apply to every document here now ok"
-        pdf = pd.DataFrame({
-            "doc_id": [0, 1, 2, 3, 4, 5],
-            "split": ["train", "train", "test", "test", "val", "train"],
-            "text": [
-                f"unique alpha beta gamma delta {boiler}",
-                f"different content entirely words {boiler}",
-                f"copy of alpha beta gamma delta {boiler}",   # overlaps doc 0
-                f"totally clean heldout text xyz {boiler}",   # boilerplate only
-                f"different content entirely words {boiler}", # exact dup of 1
-                f"more train stuff {boiler}",
-            ],
-        })
-        df = spark.createDataFrame(pdf)
-        out = decontaminate(
-            df, shingle_k=3, max_df=3
-        ).toPandas().set_index("doc_id")
-        assert 2 in out.index            # rare-shingle overlap with train
-        assert 4 in out.index            # exact dup of a train doc
-        assert 3 not in out.index        # boilerplate (df>cap) is not evidence
-        assert out.loc[2, "n_contaminated_shingles"] >= 3
-
-
 class TestChunking:
     def test_chunk_coverage_and_overlap(self, spark):
         """Chunks tile the token stream: with stride < size consecutive
@@ -411,57 +208,6 @@ class TestChunking:
         k = lambda p: sorted(map(tuple, p[["doc_id", "shard", "pack_id"]]
                                  .itertuples(index=False)))
         assert k(out) == k(again)
-
-    def test_contamination_filter_batch_and_stream(self, spark, tmp_path):
-        """The ingest guard drops exactly the docs sharing a k-gram with
-        the holdout table — in batch, and per micro-batch via foreachBatch
-        on a stream."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from real_time_sliding_window_spark.operators.sampling import (
-            contamination_filter,
-            holdout_shingle_table,
-        )
-
-        holdout = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [100],
-            "text": ["secret eval question about rare topic xyz"],
-        }))
-        hs = holdout_shingle_table(holdout, shingle_k=3).cache()
-        incoming = pd.DataFrame({
-            "doc_id": [0, 1, 2],
-            "text": [
-                "normal training text with common words",
-                "another document citing the secret eval question verbatim",
-                "more clean training data here",
-            ],
-        })
-        got = contamination_filter(
-            spark.createDataFrame(incoming), hs, shingle_k=3
-        ).toPandas()
-        assert sorted(got["doc_id"]) == [0, 2]  # doc 1 leaked the eval gram
-
-        # streaming ingest: same guard inside foreachBatch
-        src = tmp_path / "guard_in"
-        src.mkdir()
-        pq.write_table(pa.Table.from_pandas(incoming), str(src / "d.parquet"))
-        stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-        kept = []
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: kept.extend(
-                    r.doc_id
-                    for r in contamination_filter(df, hs, shingle_k=3).collect()
-                )
-            )
-            .option("checkpointLocation", str(tmp_path / "guard_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert sorted(kept) == [0, 2]
-
 
 class TestRepetitionSignals:
     def test_known_fixture(self, spark):
@@ -577,71 +323,6 @@ class TestBm25Retrieval:
             bm25_topk(empty, [("q", "apple")])
 
 
-class TestGroupwiseSample:
-    @staticmethod
-    def _rows(spark):
-        import pandas as pd
-
-        return spark.createDataFrame(pd.DataFrame({
-            "doc_id": range(40),
-            "source": ["a"] * 25 + ["b"] * 12 + ["c"] * 3,
-        }))
-
-    def test_exact_count_and_repartition_stability(self, spark):
-        from real_time_sliding_window_spark.operators.sampling import (
-            groupwise_bottomk_sample,
-        )
-
-        df = self._rows(spark)
-        out = groupwise_bottomk_sample(df, "source", "doc_id", k=5).toPandas()
-        sizes = out.groupby("source")["doc_id"].count().to_dict()
-        assert sizes == {"a": 5, "b": 5, "c": 3}  # min(k, |group|) exactly
-        again = (
-            groupwise_bottomk_sample(
-                df.repartition(7, "doc_id"), "source", "doc_id", k=5
-            )
-            .toPandas()
-        )
-        key = lambda p: sorted(map(tuple, p[["source", "doc_id"]].values))
-        assert key(out) == key(again)
-
-    def test_bottomk_is_mergeable(self, spark):
-        """Bottom-k of a union == bottom-k over the per-increment bottom-k's
-        — the property that lets an incremental pipeline keep only k rows
-        per group per increment."""
-        from real_time_sliding_window_spark.operators.sampling import (
-            groupwise_bottomk_sample,
-        )
-
-        df = self._rows(spark)
-        half1 = df.filter(F.col("doc_id") < 20)
-        half2 = df.filter(F.col("doc_id") >= 20)
-        merged = groupwise_bottomk_sample(
-            groupwise_bottomk_sample(half1, "source", "doc_id", k=5)
-            .select("doc_id", "source")
-            .unionByName(
-                groupwise_bottomk_sample(half2, "source", "doc_id", k=5)
-                .select("doc_id", "source")
-            ),
-            "source", "doc_id", k=5,
-        ).toPandas()
-        direct = groupwise_bottomk_sample(
-            df, "source", "doc_id", k=5
-        ).toPandas()
-        key = lambda p: sorted(
-            map(tuple, p[["source", "doc_id", "sample_rank"]].values)
-        )
-        assert key(merged) == key(direct)
-
-    def test_k_must_be_positive(self, spark):
-        from real_time_sliding_window_spark.operators.sampling import (
-            groupwise_bottomk_sample,
-        )
-
-        with pytest.raises(ValueError, match="k must be"):
-            groupwise_bottomk_sample(self._rows(spark), "source", "doc_id", 0)
-
-
 class TestRedactPii:
     def test_counts_and_replacement(self, spark):
         out = text.redact_pii(
@@ -674,37 +355,6 @@ class TestRedactPii:
         # the 7-digit run lives inside the email: one email, zero longnums
         assert out["text_redacted"] == "reach <email> now"
         assert (out["n_emails"], out["n_longnums"]) == (1, 0)
-
-
-class TestPercentileGate:
-    def test_gate_cuts_at_group_order_statistic(self, spark):
-        import pandas as pd
-
-        from real_time_sliding_window_spark.operators.sampling import (
-            percentile_gate,
-        )
-
-        pdf = pd.DataFrame({
-            "doc_id": range(23),
-            "source": ["a"] * 20 + ["b"] * 3,
-            "n_chars": list(range(100, 2100, 100)) + [5, 7, 9],
-        })
-        out = percentile_gate(
-            spark.createDataFrame(pdf), "source", "n_chars", pct=0.25
-        ).toPandas()
-        for src, grp in pdf.groupby("source"):
-            kept = out[out.source == src]
-            thr = kept.gate_threshold.iloc[0]
-            # the cut is a MEMBER of the group (discrete order statistic)
-            assert thr in set(grp.n_chars)
-            # kept == exactly the rows at or above the cut
-            assert sorted(kept.n_chars) == sorted(
-                grp.n_chars[grp.n_chars >= thr]
-            )
-            # no more than pct of the group falls strictly below the cut
-            assert (grp.n_chars < thr).sum() <= 0.25 * len(grp)
-        # the 3-row group keeps at least its top rows (gate never empties)
-        assert (out.source == "b").sum() >= 1
 
 
 class TestTokenDrift:
@@ -870,53 +520,6 @@ class TestRemoveBoilerplate:
         assert fast.equals(slow)
 
 
-class TestBloom:
-    BITS, K = 1 << 14, 4
-
-    def _sets(self, spark):
-        members = spark.range(500).select(
-            F.concat(F.lit("in"), "id").alias("key")
-        )
-        outsiders = spark.range(5000).select(
-            F.concat(F.lit("out"), "id").alias("key")
-        )
-        return members, outsiders
-
-    def test_no_false_negatives(self, spark):
-        from real_time_sliding_window_spark.operators import bloom as B
-
-        members, _ = self._sets(spark)
-        f = B.bloom_build(members, "key", self.BITS, self.K)
-        kept = B.bloom_prefilter(members, "key", f, self.BITS, self.K)
-        assert kept.count() == 500  # every true member must survive
-
-    def test_false_positive_rate_sane(self, spark):
-        from real_time_sliding_window_spark.operators import bloom as B
-
-        members, outsiders = self._sets(spark)
-        f = B.bloom_build(members, "key", self.BITS, self.K)
-        fps = B.bloom_prefilter(outsiders, "key", f, self.BITS, self.K).count()
-        # 500 keys * 4 hashes in 16384 bits -> theoretical fp ~ (1-e^-kn/m)^k
-        # ~ 1.6e-4; allow two orders of slack against hash clustering
-        assert fps < 5000 * 0.05
-
-    def test_decontaminate_bloom_equals_exact(self, spark):
-        from real_time_sliding_window_spark.operators.sampling import (
-            decontaminate,
-            split_assignment,
-        )
-
-        docs = split_assignment(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet"), "doc_id"
-        )
-        exact = decontaminate(docs, shingle_k=3, max_df=128)
-        bloomed = decontaminate(
-            docs, shingle_k=3, max_df=128, bloom_bits=1 << 15, bloom_hashes=4
-        )
-        key = lambda df: sorted(map(tuple, df.collect()))
-        assert key(exact) == key(bloomed)
-
-
 class TestSegmentDfIndex:
     def test_incremental_hotset_equals_batch_removal(self, spark, tmp_path):
         """Per-batch distinct df increments are additive under append-only
@@ -1040,137 +643,6 @@ class TestProfile:
         assert got["a.b"] == (60, 0, 5)
         assert got["a`b"] == (60, 0, 2)
         assert got["a\\b"] == (60, 0, 4)
-
-
-class TestCountMin:
-    """operators/cm_sketch.py — over-estimate bound, exact additivity,
-    weighted counts, zero-for-absent, and the CM error bound."""
-
-    DEPTH, WIDTH = 4, 256
-
-    @pytest.fixture(scope="class")
-    def zipf_keys(self, spark):
-        # zipf-ish: key k appears ~ 1000/(k+1) times -> heavy head,
-        # long tail; 200 distinct keys, N ~ 5878
-        rows = []
-        for k in range(200):
-            rows.extend([f"key{k}"] * (1000 // (k + 1)))
-        return spark.createDataFrame(
-            pd.DataFrame({"item": rows})
-        ).cache()
-
-    def _true_counts(self, df):
-        return {
-            r.item: r.cnt
-            for r in df.groupBy("item").agg(
-                F.count(F.lit(1)).alias("cnt")
-            ).collect()
-        }
-
-    def test_overestimate_and_error_bound(self, spark, zipf_keys):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_estimate,
-            cm_sketch,
-        )
-
-        sk = cm_sketch(
-            zipf_keys, "item", depth=self.DEPTH, width=self.WIDTH
-        ).cache()
-        probes = zipf_keys.select("item").distinct()
-        est = {
-            r.item: r.est_count
-            for r in cm_estimate(
-                sk, probes, "item", depth=self.DEPTH, width=self.WIDTH
-            ).collect()
-        }
-        true = self._true_counts(zipf_keys)
-        n_total = sum(true.values())
-        # est >= true always; est <= true + e*N/width for the overwhelming
-        # majority (the bound is probabilistic per key at 1 - e^-depth;
-        # with depth=4 a single miss in 200 keys is already unlikely)
-        bound = (2.718281828 * n_total) / self.WIDTH
-        misses = 0
-        for k, t in true.items():
-            assert est[k] >= t, f"{k}: est {est[k]} < true {t}"
-            if est[k] > t + bound:
-                misses += 1
-        assert misses <= 2, f"{misses}/200 keys above the e*N/width bound"
-
-    def test_absent_key_estimates_zero_or_collision(self, spark, zipf_keys):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_estimate,
-            cm_sketch,
-        )
-
-        sk = cm_sketch(zipf_keys, "item", depth=self.DEPTH, width=self.WIDTH)
-        probes = spark.createDataFrame(
-            pd.DataFrame({"item": [f"never{k}" for k in range(50)]})
-        )
-        est = cm_estimate(
-            sk, probes, "item", depth=self.DEPTH, width=self.WIDTH
-        )
-        vals = [r.est_count for r in est.collect()]
-        assert len(vals) == 50
-        # absent keys may collide into occupied buckets but min over
-        # depth rows keeps most at/near zero; all are >= 0
-        assert all(v >= 0 for v in vals)
-        assert sorted(vals)[len(vals) // 2] <= 60  # median small vs N~5878
-
-    def test_merge_exactly_additive(self, spark, zipf_keys):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_merge,
-            cm_sketch,
-        )
-
-        with_id = zipf_keys.withColumn(
-            "rid", F.monotonically_increasing_id()
-        ).cache()
-        a = with_id.filter(F.col("rid") % 2 == 0).select("item")
-        b = with_id.filter(F.col("rid") % 2 == 1).select("item")
-        merged = cm_merge(
-            cm_sketch(a, "item", depth=self.DEPTH, width=self.WIDTH),
-            cm_sketch(b, "item", depth=self.DEPTH, width=self.WIDTH),
-        )
-        whole = cm_sketch(
-            zipf_keys, "item", depth=self.DEPTH, width=self.WIDTH
-        )
-        assert (
-            merged.exceptAll(whole).count() == 0
-            and whole.exceptAll(merged).count() == 0
-        )
-
-    def test_weighted_sketch(self, spark):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_estimate,
-            cm_sketch,
-        )
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {"item": ["a", "a", "b"], "w": [10, 5, 7]}
-            )
-        )
-        sk = cm_sketch(df, "item", depth=4, width=64, weight_col="w")
-        est = {
-            r.item: r.est_count
-            for r in cm_estimate(
-                sk, df.select("item").distinct(), "item", depth=4, width=64
-            ).collect()
-        }
-        assert est["a"] >= 15 and est["b"] >= 7
-        # width 64 >> 2 keys: no collision expected
-        assert est["a"] == 15 and est["b"] == 7
-
-    def test_validates_shape(self, spark, zipf_keys):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_merge,
-            cm_sketch,
-        )
-
-        with pytest.raises(ValueError):
-            cm_sketch(zipf_keys, "item", depth=0, width=16)
-        with pytest.raises(ValueError):
-            cm_merge()
 
 
 class TestSequenceFunnel:
@@ -1328,85 +800,6 @@ class TestSequenceFunnel:
         assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
-class TestCmInnerProduct:
-    """cm_sketch.cm_inner_product — join-size estimation: over-estimate,
-    CM error bound, and the zero-overlap floor."""
-
-    def test_join_size_bounds(self, spark):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_inner_product,
-            cm_sketch,
-        )
-
-        rng = np.random.default_rng(53)
-        a = pd.DataFrame(
-            {"k": [f"key{rng.integers(80)}" for _ in range(3000)]}
-        )
-        b = pd.DataFrame(
-            {"k": [f"key{rng.integers(80)}" for _ in range(1000)]}
-        )
-        dfa = spark.createDataFrame(a)
-        dfb = spark.createDataFrame(b)
-        true_size = dfa.join(dfb, "k").count()
-        depth, width = 4, 256
-        est = cm_inner_product(
-            cm_sketch(dfa, "k", depth=depth, width=width),
-            cm_sketch(dfb, "k", depth=depth, width=width),
-            depth=depth,
-        ).collect()[0].est_join_size
-        assert est >= true_size
-        bound = 2.718281828 * len(a) * len(b) / width
-        assert est <= true_size + bound
-
-    def test_disjoint_keys_near_zero(self, spark):
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_inner_product,
-            cm_sketch,
-        )
-
-        dfa = spark.createDataFrame(
-            pd.DataFrame({"k": [f"a{i}" for i in range(40)]})
-        )
-        dfb = spark.createDataFrame(
-            pd.DataFrame({"k": [f"b{i}" for i in range(40)]})
-        )
-        depth, width = 4, 1024
-        est = cm_inner_product(
-            cm_sketch(dfa, "k", depth=depth, width=width),
-            cm_sketch(dfb, "k", depth=depth, width=width),
-            depth=depth,
-        ).collect()[0].est_join_size
-        # 40x40 keys in 1024 buckets: min over 4 rows is ~always 0
-        assert 0 <= est <= 4
-
-    def test_depth_mismatch_raises(self, spark):
-        """Advice r5: a caller depth above the build depth used to inject
-        all-zero spine rows (silent est=0); below, it silently ignored
-        rows. Both now fail loudly; the matched depth is unchanged."""
-        import pytest as _pytest
-
-        from real_time_sliding_window_spark.operators.cm_sketch import (
-            cm_inner_product,
-            cm_sketch,
-        )
-
-        dfa = spark.createDataFrame(pd.DataFrame({"k": ["a", "b", "c"] * 5}))
-        dfb = spark.createDataFrame(pd.DataFrame({"k": ["b", "c", "d"] * 7}))
-        sa = cm_sketch(dfa, "k", depth=4, width=64)
-        sb = cm_sketch(dfb, "k", depth=4, width=64)
-        ok = cm_inner_product(sa, sb, depth=4).collect()[0].est_join_size
-        assert ok >= dfa.join(dfb, "k").count()
-        for bad in (6, 2):
-            with _pytest.raises(Exception, match="depth mismatch"):
-                cm_inner_product(sa, sb, depth=bad).collect()
-        # empty sketches stay valid (no rows to contradict any depth)
-        empty = cm_sketch(dfa.filter("k = 'zz'"), "k", depth=4, width=64)
-        assert (
-            cm_inner_product(empty, sb, depth=4).collect()[0].est_join_size
-            == 0
-        )
-
-
 class TestReviewGuards:
     """Review fixes: empty-input guards on write_zordered."""
 
@@ -1423,34 +816,3 @@ class TestReviewGuards:
         empty = spark.createDataFrame([], "x long, y long")
         with pytest.raises(ValueError, match="empty input"):
             write_zordered(empty, str(tmp_path / "z3"), ["x", "y"])
-
-
-class TestR6Rewrites:
-    """r6 optimization round: the rewritten internals must be value-
-    identical to their original expression/plan forms (the optimization
-    contract — plans may change, results may not)."""
-
-    def test_cm_sketch_pre_agg_identical(self, spark):
-        """pre_agg=True collapses to distinct keys before hashing — cells
-        must be bit-identical to the default path, weighted or not."""
-        from real_time_sliding_window_spark.operators import cm_sketch as CM
-
-        pdf = pd.DataFrame(
-            {
-                "k": ["a"] * 50 + ["b"] * 20 + ["c"] * 5 + ["d"],
-                "w": list(range(76)),
-            }
-        )
-        d = spark.createDataFrame(pdf)
-
-        def cells(df):
-            return sorted(
-                (int(r.r), int(r.c), int(r.cnt)) for r in df.collect()
-            )
-
-        for wcol in (None, "w"):
-            a = CM.cm_sketch(d, "k", depth=3, width=64, weight_col=wcol)
-            b = CM.cm_sketch(
-                d, "k", depth=3, width=64, weight_col=wcol, pre_agg=True
-            )
-            assert cells(a) == cells(b), wcol
