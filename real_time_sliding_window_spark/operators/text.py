@@ -114,6 +114,44 @@ def curate_corpus(
     )
 
 
+def percentile_gate(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    pct: float = 0.10,
+    accuracy: int = 50_000,
+) -> DataFrame:
+    """Per-group percentile floor: append each group's ``pct``-quantile of
+    ``value_col`` as ``gate_threshold`` and keep only rows at or above it
+    — the curation rule "drop each source's bottom decile" without any
+    global sort.
+
+    The threshold comes from the mergeable Greenwald-Khanna sketch
+    (operators/windows.py::approx_group_percentiles — O(accuracy·log n)
+    per group, flows through map-side partial agg), so no executor ever
+    buffers a group's raw values; the per-group thresholds are a
+    groups-sized table broadcast back onto the scan. In the sketch's
+    exact regime (group n ≤ accuracy) the threshold is precisely the
+    discrete order statistic (DuckDB ``quantile_disc``), making the gate
+    engine-exact for integer value columns; beyond it, GK's rank error
+    ≤ n/accuracy bounds how far the cut can drift
+    (BENCH/PERCENTILES.md).
+    """
+    from real_time_sliding_window_spark.operators.windows import (
+        approx_group_percentiles,
+    )
+
+    p_col = f"p_{str(pct).replace('.', '_')}"
+    thr = approx_group_percentiles(
+        df, value_col, [group_col], (pct,), accuracy=accuracy
+    ).select(
+        group_col, F.col(p_col).alias("gate_threshold")
+    )
+    return df.join(F.broadcast(thr), group_col).filter(
+        F.col(value_col) >= F.col("gate_threshold")
+    )
+
+
 def quality_scores(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -357,6 +357,33 @@ class TestRedactPii:
         assert (out["n_emails"], out["n_longnums"]) == (1, 0)
 
 
+class TestPercentileGate:
+    def test_gate_cuts_at_group_order_statistic(self, spark):
+        import pandas as pd
+
+        pdf = pd.DataFrame({
+            "doc_id": range(23),
+            "source": ["a"] * 20 + ["b"] * 3,
+            "n_chars": list(range(100, 2100, 100)) + [5, 7, 9],
+        })
+        out = text.percentile_gate(
+            spark.createDataFrame(pdf), "source", "n_chars", pct=0.25
+        ).toPandas()
+        for src, grp in pdf.groupby("source"):
+            kept = out[out.source == src]
+            thr = kept.gate_threshold.iloc[0]
+            # the cut is a MEMBER of the group (discrete order statistic)
+            assert thr in set(grp.n_chars)
+            # kept == exactly the rows at or above the cut
+            assert sorted(kept.n_chars) == sorted(
+                grp.n_chars[grp.n_chars >= thr]
+            )
+            # no more than pct of the group falls strictly below the cut
+            assert (grp.n_chars < thr).sum() <= 0.25 * len(grp)
+        # the 3-row group keeps at least its top rows (gate never empties)
+        assert (out.source == "b").sum() >= 1
+
+
 class TestTokenDrift:
     def test_known_fixture_and_contracts(self, spark):
         """r5: exact ppm deltas on a crafted two-slice corpus; symmetric
