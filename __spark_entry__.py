@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_sliding_window_spark.config import ViewArgs
-from real_time_sliding_window_spark.operators import text as T
 from real_time_sliding_window_spark.operators import windows as W
 from real_time_sliding_window_spark.operators.joins import interval_join
 
@@ -656,19 +655,6 @@ def q_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation in ONE pass (operators/text.py::curate_corpus):
-    exact-dedup canonicals (text-hash window, no join), English by the
-    stopword classifier, length >= 5 tokens, lexical diversity >= 200
-    permille — the kept set a training pipeline feeds to tokenization."""
-    return T.curate_corpus(
-        _docs(spark, sf_dir),
-        lang="en",
-        min_tokens=5,
-        min_distinct_permille=200,
-    )
-
-
 def q_topk_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3 most recent events per user (rank-limit pushdown; sort/limit/top-k)."""
     ev = _events(spark, sf_dir)
@@ -683,26 +669,6 @@ def q_topk_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (user_id, event_type) pairs — hash-aggregate distinct."""
     return _events(spark, sf_dir).select("user_id", "event_type").distinct()
-
-
-def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-heuristic language identification."""
-    return T.language_id(_docs(spark, sf_dir))
-
-
-def q_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality features + distinct-token per-mille score."""
-    return T.quality_scores(_docs(spark, sf_dir))
-
-
-def q_token_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace / regex / BPE-ish token counts."""
-    return T.token_counts(_docs(spark, sf_dir))
-
-
-def q_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized md5 fingerprints (full + 8-token prefix)."""
-    return T.fingerprints(_docs(spark, sf_dir))
 
 
 def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,31 +855,6 @@ def q_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality gates: duplicate-word fraction and
-    top-bigram fraction per document (zero-shuffle sorted-run-length plan;
-    operators/text.py::repetition_signals)."""
-    return T.repetition_signals(_docs(spark, sf_dir))
-
-
-_TFIDF_QUERIES = [
-    ("q_window", "spark window merge sort"),
-    ("q_scan", "hash table scan batch"),
-    ("q_value", "key value row fast"),
-]
-
-
-def q_tfidf_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword retrieval: integer TF-IDF top-10 per query over an
-    inverted postings index (operators/retrieval.py::tfidf_topk). Log-free
-    rational idf ((N*1000) div (df+1)) keeps scores exact int64, so the
-    oracle replays the whole index + scoring pipeline and hash-matches at
-    any scale."""
-    from real_time_sliding_window_spark.operators.retrieval import tfidf_topk
-
-    return tfidf_topk(_docs(spark, sf_dir), _TFIDF_QUERIES, k=10)
-
-
 _ASOF_SQL = """
             WITH cand AS (
                 SELECT p.user_id,
@@ -935,24 +876,6 @@ _ASOF_SQL = """
 
 
 _TOK = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-
-
-def _tfidf_terms_sql() -> str:
-    """(query_id, term) VALUES rows for the tfidf oracle — tokenized with
-    the same rules as the Spark side (retrieval.tokenize_query)."""
-    from real_time_sliding_window_spark.operators.retrieval import tokenize_query
-
-    pairs = [
-        (qid, t)
-        for qid, text in _TFIDF_QUERIES
-        for t in sorted(set(tokenize_query(text)))
-    ]
-    return ", ".join(f"('{q}', '{t}')" for q, t in pairs)
-
-
-def _hits_sql(words: list[str]) -> str:
-    arr = ", ".join(f"'{w}'" for w in words)
-    return f"CAST(len(list_filter(tok, t -> list_contains([{arr}], t))) AS BIGINT)"
 
 
 def q_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,57 +980,6 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graded keyword retrieval: integer-scaled Okapi BM25 top-10 per
-    query (operators/retrieval.py::bm25_topk) — saturating tf and
-    document-length normalization over the same postings plan as
-    tfidf_search_docs, exact int64 end to end."""
-    from real_time_sliding_window_spark.operators.retrieval import bm25_topk
-
-    return bm25_topk(_docs(spark, sf_dir), _TFIDF_QUERIES, k=10)
-
-
-def q_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub (operators/text.py::redact_pii) over the corpus. The
-    synthetic corpus is PII-free, so the query first APPENDS deterministic
-    pseudo-PII derived from doc_id (an e-mail for doc_id ≡ 0 mod 3, a
-    ≥6-digit run for doc_id ≡ 0 mod 2 — both engines build the identical
-    string) purely to exercise the redaction end to end with non-zero,
-    varying counts; output carries md5(text_redacted) so the byte-exact
-    redacted text is what the hash gate checks. Map-only, zero shuffle."""
-    docs = _docs(spark, sf_dir).withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.lit(" contact u"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.concat(
-                    F.lit(" ref "),
-                    (F.col("doc_id") * F.col("doc_id") + 100000).cast(
-                        "string"
-                    ),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    red = T.redact_pii(docs)
-    return red.select(
-        "doc_id",
-        F.md5("text_redacted").alias("redacted_md5"),
-        F.length("text_redacted").cast("long").alias("redacted_len"),
-        "n_emails",
-        "n_longnums",
-    )
-
-
 def q_token_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus drift monitor (r5, operators/drift.py::token_drift): the
     25 most-drifted tokens between sources src0 and src1 by exact
@@ -1119,30 +991,6 @@ def q_token_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return token_drift(
         _docs(spark, sf_dir), "source", "src0", "src1", top_k=25
-    )
-
-
-_BOILER_W, _BOILER_MIN_DF = 3, 4
-
-
-def q_boilerplate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level boilerplate removal (text.py::remove_boilerplate —
-    the CCNet/RefinedWeb line-dedup pass over whitespace segments): every
-    3-word segment present in ≥4 distinct documents is dropped everywhere
-    and the documents are reassembled. Output carries md5(clean_text) so
-    the byte-exact reassembled text is what the hash gate checks; at
-    sf0.01 the pass touches 200 of 500 documents (non-vacuous). Plan: one
-    df hash-agg + broadcast anti-join + one doc_id reassembly shuffle."""
-    from real_time_sliding_window_spark.operators import text as T
-
-    out = T.remove_boilerplate(
-        _docs(spark, sf_dir), width=_BOILER_W, min_df=_BOILER_MIN_DF
-    )
-    return out.select(
-        "doc_id",
-        "n_segs",
-        "n_kept",
-        F.md5("clean_text").alias("clean_md5"),
     )
 
 
@@ -1808,7 +1656,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (+ the sf1 tiling for every r5 addition).
     # Driver-row history: every entry past position 50 below was driver-green
     # in BOTH CORRECTNESS_r03 and CORRECTNESS_r04 (verified before each
-    # rotation); the 9 r3/r4 entries below the r5 blocks were judge-verified
+    # rotation); the r3/r4 entries below the r5 blocks were judge-verified
     # in r4 (VERDICT.md) and take their driver row in r5.
     return {
         # -- r5 additions, never yet in the driver window --
@@ -1830,18 +1678,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "big_order_customers": q_big_order_customers,
         "brand_promo_revenue": q_brand_promo_revenue,
         "returned_top_customers": q_returned_top_customers,
-        "boilerplate_docs": q_boilerplate_docs,
         "nation_trade_volume": q_nation_trade_volume,
         "profile_docs": q_profile_docs,
         "priority_late_orders": q_priority_late_orders,
         "top_revenue_suppliers": q_top_revenue_suppliers,
         "idle_rich_customers": q_idle_rich_customers,
-        "bm25_search_docs": q_bm25_search_docs,
-        "redact_docs": q_redact_docs,
         "token_drift_docs": q_token_drift_docs,
         # -- r3/r4 additions, never yet in the driver window (r5 rotation) --
-        "repetition_docs": q_repetition_docs,
-        "tfidf_search_docs": q_tfidf_search_docs,
         "small_qty_revenue": q_small_qty_revenue,
         "bulk_suppliers": q_bulk_suppliers,
         "event_gaps": q_event_gaps,
@@ -1869,21 +1712,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orders_by_segment": q_orders_by_segment,
         "text_stats_docs": q_text_stats_docs,
         "lineitem_pricing": q_lineitem_pricing,
+        # ---- position 51+: long-stable pins displaced from the driver window
+        # (driver-green in r3 AND r4; still checked by tools/oracle_check.py) --
         "rollup_lineitem": q_rollup_lineitem,
         "top_unshipped_orders": q_top_unshipped_orders,
         "click_not_purchase_users": q_click_not_purchase_users,
         "click_and_purchase_users": q_click_and_purchase_users,
-        # ---- position 51+: long-stable pins displaced from the driver window
-        # (driver-green in r3 AND r4; still checked by tools/oracle_check.py) --
         "pack_docs": q_pack_docs,
         "topk_events_per_user": q_topk_events_per_user,
-        "curated_corpus": q_curated_corpus,
         "chunk_docs": q_chunk_docs,
         "distinct_user_types": q_distinct_user_types,
-        "langid_docs": q_langid_docs,
-        "quality_docs": q_quality_docs,
-        "token_counts_docs": q_token_counts_docs,
-        "fingerprint_docs": q_fingerprint_docs,
     }
 
 
@@ -2600,104 +2438,6 @@ def oracle_sql() -> dict[str, str]:
         "distinct_user_types": """
             SELECT DISTINCT user_id, event_type FROM events
         """,
-        "curated_corpus": f"""
-            WITH t AS (
-                SELECT doc_id, source, text, {_TOK} AS tok FROM documents
-            ),
-            canon AS (
-                SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-            ),
-            hits AS (
-                SELECT doc_id,
-                    {_hits_sql(["the", "and", "of", "to", "in", "is", "a"])} AS hits_en,
-                    {_hits_sql(["der", "die", "und", "das", "ist", "ein"])} AS hits_de,
-                    {_hits_sql(["el", "la", "que", "los", "una", "es"])} AS hits_es,
-                    {_hits_sql(["le", "les", "et", "des", "une", "est"])} AS hits_fr
-                FROM t
-            ),
-            lang AS (
-                SELECT doc_id,
-                    CASE
-                        WHEN hits_en >= hits_de AND hits_en >= hits_es
-                             AND hits_en >= hits_fr THEN 'en'
-                        WHEN hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
-                        WHEN hits_es >= hits_fr THEN 'es'
-                        ELSE 'fr'
-                    END AS predicted_lang
-                FROM hits
-            ),
-            qual AS (
-                SELECT doc_id,
-                    CAST(len(tok) AS BIGINT) AS n_tokens,
-                    CASE WHEN len(tok) > 0
-                         THEN CAST(floor(1000 * len(list_distinct(tok)) / len(tok))
-                                   AS BIGINT)
-                         ELSE 0 END AS distinct_permille
-                FROM t
-            )
-            SELECT t.doc_id, t.source, q.n_tokens
-            FROM t
-            JOIN canon c ON c.doc_id = t.doc_id
-            JOIN lang l ON l.doc_id = t.doc_id
-            JOIN qual q ON q.doc_id = t.doc_id
-            WHERE l.predicted_lang = 'en'
-              AND q.n_tokens >= 5
-              AND q.distinct_permille >= 200
-        """,
-        "langid_docs": f"""
-            WITH t AS (SELECT doc_id, {_TOK} AS tok FROM documents),
-            hits AS (
-                SELECT doc_id,
-                    {_hits_sql(["the", "and", "of", "to", "in", "is", "a"])} AS hits_en,
-                    {_hits_sql(["der", "die", "und", "das", "ist", "ein"])} AS hits_de,
-                    {_hits_sql(["el", "la", "que", "los", "una", "es"])} AS hits_es,
-                    {_hits_sql(["le", "les", "et", "des", "une", "est"])} AS hits_fr
-                FROM t
-            )
-            SELECT doc_id, hits_en, hits_de, hits_es, hits_fr,
-                CASE
-                    WHEN hits_en >= hits_de AND hits_en >= hits_es
-                         AND hits_en >= hits_fr THEN 'en'
-                    WHEN hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
-                    WHEN hits_es >= hits_fr THEN 'es'
-                    ELSE 'fr'
-                END AS predicted_lang
-            FROM hits
-        """,
-        "quality_docs": f"""
-            WITH t AS (SELECT doc_id, text, {_TOK} AS tok FROM documents)
-            SELECT doc_id,
-                CAST(len(tok) AS BIGINT) AS n_tokens,
-                CAST(len(list_distinct(tok)) AS BIGINT) AS n_distinct_tokens,
-                CAST(COALESCE(list_sum(list_transform(tok, s -> length(s))), 0)
-                     AS BIGINT) AS alnum_chars,
-                CAST(length(text) AS BIGINT)
-                    - CAST(COALESCE(list_sum(list_transform(tok, s -> length(s))), 0)
-                           AS BIGINT) AS other_chars,
-                CASE WHEN len(tok) > 0
-                     THEN CAST(floor(1000 * len(list_distinct(tok)) / len(tok))
-                               AS BIGINT)
-                     ELSE 0 END AS distinct_permille
-            FROM t
-        """,
-        "token_counts_docs": f"""
-            WITH t AS (SELECT doc_id, text, {_TOK} AS tok FROM documents)
-            SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_words,
-                CAST(len(tok) AS BIGINT) AS re_tokens,
-                CAST(COALESCE(list_sum(list_transform(tok,
-                         s -> CAST(ceil(length(s) / 4.0) AS BIGINT))), 0)
-                     AS BIGINT) AS subword_est
-            FROM t
-        """,
-        "fingerprint_docs": f"""
-            WITH t AS (SELECT doc_id, {_TOK} AS tok FROM documents)
-            SELECT doc_id,
-                md5(COALESCE(array_to_string(tok, ' '), '')) AS fingerprint,
-                md5(COALESCE(array_to_string(tok[1:8], ' '), ''))
-                    AS prefix_fingerprint
-            FROM t
-        """,
         "small_qty_revenue": """
             WITH li AS (
                 SELECT l_partkey,
@@ -2794,70 +2534,6 @@ def oracle_sql() -> dict[str, str]:
               )
             GROUP BY s.s_name, n.n_name
         """,
-        # exact unnest+group-by twin of the zero-shuffle sorted-run plan:
-        # max multiplicity of a bigram == longest equal run after sorting
-        "repetition_docs": f"""
-            WITH tok AS (SELECT doc_id, {_TOK} AS t FROM documents),
-            base AS (
-                SELECT doc_id,
-                       CAST(len(t) AS BIGINT) AS n_words,
-                       CAST(len(list_distinct(t)) AS BIGINT)
-                           AS n_distinct_words,
-                       CASE WHEN len(t) >= 2
-                            THEN list_transform(range(1, len(t)),
-                                                i -> t[i] || ' ' || t[i + 1])
-                            ELSE []::VARCHAR[] END AS bg
-                FROM tok
-            ),
-            cnt AS (
-                SELECT doc_id, bgram, count(*) AS c
-                FROM (SELECT doc_id, unnest(bg) AS bgram FROM base)
-                GROUP BY 1, 2
-            ),
-            top AS (SELECT doc_id, max(c) AS top FROM cnt GROUP BY 1)
-            SELECT b.doc_id, b.n_words, b.n_distinct_words,
-                   CAST(len(b.bg) AS BIGINT) AS n_bigrams,
-                   CAST(COALESCE(top.top, 0) AS BIGINT) AS top_bigram_count,
-                   CASE WHEN b.n_words > 0
-                        THEN 1.0 - CAST(b.n_distinct_words AS DOUBLE)
-                                   / CAST(b.n_words AS DOUBLE)
-                        ELSE 0.0 END AS dup_word_frac,
-                   CASE WHEN len(b.bg) > 0
-                        THEN CAST(COALESCE(top.top, 0) AS DOUBLE)
-                             / CAST(len(b.bg) AS DOUBLE)
-                        ELSE 0.0 END AS top_bigram_frac
-            FROM base b LEFT JOIN top USING (doc_id)
-        """,
-        "tfidf_search_docs": f"""
-            WITH tok AS (SELECT doc_id, {_TOK} AS t FROM documents),
-            post AS (
-                SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                FROM (SELECT doc_id, unnest(t) AS term FROM tok)
-                GROUP BY 1, 2
-            ),
-            dfreq AS (
-                SELECT term, CAST(count(*) AS BIGINT) AS df
-                FROM post GROUP BY 1
-            ),
-            n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-            q(query_id, term) AS (VALUES {_tfidf_terms_sql()}),
-            scored AS (
-                SELECT q.query_id, p.doc_id,
-                       CAST(sum(p.tf * ((n.n_docs * 1000) // (d.df + 1)))
-                            AS BIGINT) AS score
-                FROM post p
-                JOIN dfreq d USING (term)
-                JOIN q ON q.term = p.term
-                CROSS JOIN n
-                GROUP BY 1, 2
-            )
-            SELECT query_id, doc_id, score, rank FROM (
-                SELECT *, CAST(row_number() OVER (
-                    PARTITION BY query_id
-                    ORDER BY score DESC, doc_id ASC) AS INT) AS rank
-                FROM scored
-            ) WHERE rank <= 10
-        """,
         # correlated-EXISTS form: the oracle checks Q4 semantics, not the
         # Spark LEFT SEMI lowering
         "priority_late_orders": """
@@ -2909,96 +2585,6 @@ def oracle_sql() -> dict[str, str]:
               )
             GROUP BY 1
         """,
-        # integer BM25 twin: identical rational arithmetic, // is DuckDB's
-        # integer division (all operands positive, matches Spark's div)
-        "bm25_search_docs": f"""
-            WITH tok AS (SELECT doc_id, {_TOK} AS t FROM documents),
-            post AS (
-                SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                FROM (SELECT doc_id, unnest(t) AS term FROM tok)
-                GROUP BY 1, 2
-            ),
-            doclen AS (
-                SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-                FROM post GROUP BY 1
-            ),
-            consts AS (
-                SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(dl) AS BIGINT) AS sum_len
-                FROM doclen
-            ),
-            dfreq AS (
-                SELECT term, CAST(count(*) AS BIGINT) AS df
-                FROM post GROUP BY 1
-            ),
-            q(query_id, term) AS (VALUES {_tfidf_terms_sql()}),
-            scored AS (
-                SELECT q.query_id, p.doc_id,
-                       CAST(sum(
-                           (((2 * (c.n_docs - d.df) + 1) * 1000)
-                            // (2 * d.df + 1))
-                           * ((2200 * p.tf * 100000)
-                              // (1000 * p.tf + 300
-                                  + (9 * ((dl.dl * c.n_docs * 1000)
-                                          // c.sum_len)) // 10))
-                       ) AS BIGINT) AS score
-                FROM post p
-                JOIN dfreq d USING (term)
-                JOIN doclen dl USING (doc_id)
-                JOIN q ON q.term = p.term
-                CROSS JOIN consts c
-                GROUP BY 1, 2
-            )
-            SELECT query_id, doc_id, score, rank FROM (
-                SELECT *, CAST(row_number() OVER (
-                    PARTITION BY query_id
-                    ORDER BY score DESC, doc_id ASC) AS INT) AS rank
-                FROM scored
-            ) WHERE rank <= 10
-        """,
-        # same augmentation, same two regexes, same application order;
-        # 'g' flag = replace-all to match Spark's regexp_replace default
-        "redact_docs": """
-            WITH aug AS (
-                SELECT doc_id,
-                       text
-                       || CASE WHEN doc_id % 3 = 0
-                               THEN ' contact u' || CAST(doc_id AS VARCHAR)
-                                    || '@example.com'
-                               ELSE '' END
-                       || CASE WHEN doc_id % 2 = 0
-                               THEN ' ref '
-                                    || CAST(doc_id * doc_id + 100000
-                                            AS VARCHAR)
-                               ELSE '' END AS text
-                FROM documents
-            ),
-            red AS (
-                SELECT doc_id,
-                       regexp_replace(
-                           regexp_replace(
-                               text,
-                               '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}',
-                               '<email>', 'g'),
-                           '[0-9]{6,}', '<num>', 'g') AS text_redacted,
-                       CAST(len(regexp_extract_all(
-                           text, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'
-                       )) AS BIGINT) AS n_emails,
-                       CAST(len(regexp_extract_all(
-                           regexp_replace(
-                               text,
-                               '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}',
-                               '<email>', 'g'),
-                           '[0-9]{6,}'
-                       )) AS BIGINT) AS n_longnums
-                FROM aug
-            )
-            SELECT doc_id,
-                   md5(text_redacted) AS redacted_md5,
-                   CAST(length(text_redacted) AS BIGINT) AS redacted_len,
-                   n_emails, n_longnums
-            FROM red
-        """,
         # quantile_disc == GK sketch in its exact regime (group n <= accuracy)
         "profile_docs": " UNION ALL ".join(
             f"""
@@ -3030,49 +2616,6 @@ def oracle_sql() -> dict[str, str]:
               AND n2.n_name IN {_TRADE_NATIONS!r}
               AND n1.n_name <> n2.n_name
             GROUP BY 1, 2, 3
-        """,
-        # non-overlapping 3-word segments via generate_series + slice (1-based
-        # inclusive on DuckDB, start+length on Spark — same windows); df over
-        # DISTINCT docs; parallel unnests zip positionally so ord is 0-based
-        # on both engines; string_agg ORDER BY ord == sorted collect_list
-        "boilerplate_docs": f"""
-            WITH base AS (
-                SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ),
-            segd AS (
-                SELECT doc_id,
-                    list_transform(
-                        generate_series(0, CAST(ceil(len(w) / {_BOILER_W}.0) AS BIGINT) - 1),
-                        s -> array_to_string(
-                            w[s * {_BOILER_W} + 1 : s * {_BOILER_W} + {_BOILER_W}], ' ')
-                    ) AS segs
-                FROM base
-            ),
-            ex AS (
-                SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_segs, u.seg, u.ord
-                FROM segd, LATERAL (
-                    SELECT unnest(segs) AS seg,
-                           unnest(generate_series(0, len(segs) - 1)) AS ord) u
-            ),
-            hot AS (
-                SELECT seg FROM (
-                    SELECT seg, count(DISTINCT doc_id) AS dfc FROM ex GROUP BY 1)
-                WHERE dfc >= {_BOILER_MIN_DF}
-            ),
-            kept AS (SELECT * FROM ex WHERE seg NOT IN (SELECT seg FROM hot)),
-            clean AS (
-                SELECT doc_id,
-                       CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(seg, ' ' ORDER BY ord) AS clean_text
-                FROM kept GROUP BY 1
-            )
-            SELECT s.doc_id,
-                   CAST(min(s.n_segs) AS BIGINT) AS n_segs,
-                   COALESCE(min(c.n_kept), 0) AS n_kept,
-                   md5(COALESCE(min(c.clean_text), '')) AS clean_md5
-            FROM (SELECT DISTINCT doc_id, n_segs FROM ex) s
-            LEFT JOIN clean c USING (doc_id)
-            GROUP BY 1
         """,
         # same tokenizer, exact integer ppm (// is DuckDB integer division,
         # div is Spark's), same (delta DESC, token ASC) total order

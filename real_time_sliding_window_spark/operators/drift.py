@@ -99,13 +99,13 @@ def run_token_count_index(
 ):
     """Incremental drift substrate: append one (slice, token, cnt) row
     per (slice, token) per micro-batch through the exactly-once sink.
-    Token counts are exactly additive (the Gramian-index property), so
-    summing any batch RANGE of the index reproduces the batch counts of
-    that range bit-for-bit — drift between "last hour" and "the week
-    before" is two prefix sums over the log, never a corpus rescan.
-    Redelivered batches are dropped by the sink's marker; unlike the
-    postings index, re-arriving VALUES are fine (counts mean
-    occurrences, not identity)."""
+    Token counts are exactly additive, so summing any batch RANGE of the
+    index reproduces the batch counts of that range bit-for-bit — drift
+    between "last hour" and "the week before" is two prefix sums over the
+    log, never a corpus rescan.
+    Redelivered batches are dropped by the sink's marker; a document
+    that arrives again in a new batch is counted again, as it should be
+    (counts mean occurrences, not document identity)."""
 
     def _body(batch: DataFrame, batch_id: int) -> None:
         sink.write_batch(

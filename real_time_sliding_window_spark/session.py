@@ -3,8 +3,11 @@
 Centralizes the scale-relevant configuration so tests, bench and the driver
 entry point all get the same plan-shaping defaults:
 
-- AQE on (runtime coalesce + skew-join splitting) — explicit north-rule
-  requirement for skewed conv_id handling;
+- AQE on (runtime coalesce + skew-join splitting) for the batch driver
+  queries and ``tools/``. Spark turns it off in every streaming query (it
+  logs that AQE is not supported in streaming DataFrames or stateful
+  workloads), so on the streaming path conv_id skew is handled by the
+  ring's bucketing and ``sharded_ring_buffer_stream``, not by AQE;
 - Arrow enabled for every pandas UDF path (input_hint bans per-row Python);
 - shuffle partitions sized to the local core count (on a real cluster this
   would be ~2-3x total executor cores; AQE coalesces down post-shuffle);
@@ -126,13 +129,6 @@ def get_spark(
             str(int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))),
         )
         .config("spark.sql.files.openCostInBytes", "262144")
-        # r6: materialization barriers (localCheckpoint) free their blocks
-        # only when the ContextCleaner sees the reference die, which needs
-        # a driver GC — the default 30min periodic GC lets a long
-        # multi-query session accumulate dead checkpoint blocks and evict
-        # live ones. One driver GC a minute is noise; reclaiming the
-        # blocks is not.
-        .config("spark.cleaner.periodicGC.interval", "60s")
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         # commit uploads changelogs instead of full snapshots — the

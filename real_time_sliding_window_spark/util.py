@@ -65,8 +65,8 @@ def ensure_parallelism(
     if df.isStreaming:
         # no stats/rdd on streaming plans; micro-batch partitioning comes
         # from the source (maxFilesPerTrigger / topic partitions) — pass
-        # through so the stateless doc operators that call this (text,
-        # retrieval, profile) compose with readStream unchanged
+        # through so the stateless doc operators that call this
+        # (chunking, profile) compose with readStream unchanged
         return df
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism

@@ -80,14 +80,6 @@ def test_bucketed_join_no_join_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_repetition_zero_shuffle_map_plan(spark):
-    """The sorted-run-length plan must stay map-only (no explode+groupBy):
-    at most the ensure_parallelism exchange, no partial agg needed."""
-    sc = scorecard(E.q_repetition_docs(spark, SF))
-    assert sc["exchanges"] <= 2
-    assert sc["scan_cols"] <= 2
-
-
 def test_late_suppliers_single_sort_shared_by_both_windows(spark):
     """r4 Q21 lowering guard: the two collect_set windows (EXISTS /
     NOT-EXISTS twins) must share ONE Sort over one exchange on
@@ -104,13 +96,6 @@ def test_late_suppliers_single_sort_shared_by_both_windows(spark):
     sc = scorecard(df)
     assert sc["broadcast_join"], "supplier+nation dims must broadcast"
     assert sc["pushed_filters"], "orderstatus filter must reach the scan"
-
-
-def test_tfidf_broadcasts_query_terms_and_limits_rank(spark):
-    sc = scorecard(E.q_tfidf_search_docs(spark, SF))
-    assert sc["broadcast_join"], "query-term table must broadcast"
-    assert sc["window_group_limit"], "per-query top-k must push the rank limit"
-    assert sc["partial_agg"], "postings tf count must map-side combine"
 
 
 def test_small_qty_revenue_broadcast_and_pushdown(spark):
@@ -210,42 +195,6 @@ def test_q4_semi_join_prunes_lineitem_scan(spark):
     assert sc["partial_agg"]
     plan = E.q_priority_late_orders(spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
-
-
-def test_bucketed_postings_no_term_shuffle(spark):
-    """The 100 TB retrieval layout the retrieval module promises: persist
-    the postings table bucketed on `term` (storage.py) and the scoring
-    plan's term-side work — the df aggregation and the postings⋈df join —
-    rides the bucketing with ZERO hashpartitioning(term) Exchange; the
-    only shuffles left are over the (query_id, doc_id)-sized result."""
-    from pyspark.sql import functions as F
-
-    from real_time_sliding_window_spark.operators.retrieval import (
-        postings,
-        score_postings,
-    )
-    from real_time_sliding_window_spark.storage import write_bucketed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    post = postings(docs)
-    n_docs = docs.count()
-    q = [("q", "spark window merge")]
-    try:
-        write_bucketed(post, "postings_b", ["term"], 4)
-        bucketed = score_postings(spark.table("postings_b"), n_docs, q, k=5)
-        bplan = bucketed._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(term" not in bplan, (
-            "term-side shuffle must be elided by the bucketed layout"
-        )
-        plain = score_postings(post, n_docs, q, k=5)
-        pplan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(term" in pplan  # the shuffle it saves
-        # layout is semantically free: identical results
-        a = sorted(map(tuple, bucketed.collect()))
-        b = sorted(map(tuple, plain.collect()))
-        assert a == b
-    finally:
-        spark.sql("DROP TABLE IF EXISTS postings_b")
 
 
 def test_q7_trade_volume_dims_broadcast_filters_pushed(spark):

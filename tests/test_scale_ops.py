@@ -1,6 +1,5 @@
-"""Tests for the training-data pipeline operators (text, chunking,
-retrieval, drift, profiling), the batch sequence funnel and skew
-handling (F8)."""
+"""Tests for the training-data pipeline operators (chunking, drift,
+profiling), the batch sequence funnel and skew handling (F8)."""
 
 from __future__ import annotations
 
@@ -13,61 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_sliding_window_spark import synth
-from real_time_sliding_window_spark.operators import text
 from real_time_sliding_window_spark.operators.skew import salted_windowed_agg
 from real_time_sliding_window_spark.operators.windows import windowed_agg
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(8),
-            "text": [
-                "the quick brown fox jumps over the lazy dog",
-                "the quick brown fox jumps over the lazy cat",   # near-dup of 0
-                "the quick brown fox jumps over the lazy dog",   # exact dup of 0
-                "completely different content about der die und das spark engine",
-                "el gato la casa que los perros una fiesta",
-                "short",
-                "",
-                "Punct!! and,, CAPS 42 tokens?",
-            ],
-        }
-    )
-    return spark.createDataFrame(pdf).cache()
-
-
-class TestText:
-    def test_language_id(self, docs):
-        out = text.language_id(docs).toPandas().set_index("doc_id")
-        assert out.loc[0, "predicted_lang"] == "en"
-        assert out.loc[3, "predicted_lang"] == "de"
-        assert out.loc[4, "predicted_lang"] == "es"
-        assert out.loc[6, "predicted_lang"] == "en"  # empty: tie -> order
-
-    def test_quality_scores(self, docs):
-        out = text.quality_scores(docs).toPandas().set_index("doc_id")
-        assert out.loc[6, "n_tokens"] == 0 and out.loc[6, "distinct_permille"] == 0
-        # doc 0: 9 tokens, 8 distinct ('the' twice)
-        assert out.loc[0, "n_tokens"] == 9
-        assert out.loc[0, "n_distinct_tokens"] == 8
-        assert out.loc[0, "distinct_permille"] == int(1000 * 8 / 9)
-
-    def test_token_counts(self, docs):
-        out = text.token_counts(docs).toPandas().set_index("doc_id")
-        assert out.loc[7, "re_tokens"] == 5  # punct, and, caps, 42, tokens
-        assert out.loc[5, "subword_est"] == 2  # 'short' -> ceil(5/4)
-
-    def test_fingerprints_normalize(self, spark):
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [0, 1],
-                "text": ["Hello,  World!", "hello world"],
-            }
-        )
-        out = text.fingerprints(spark.createDataFrame(pdf)).toPandas()
-        assert out.iloc[0]["fingerprint"] == out.iloc[1]["fingerprint"]
 
 
 class TestSkew:
@@ -209,180 +155,6 @@ class TestChunking:
                                  .itertuples(index=False)))
         assert k(out) == k(again)
 
-class TestRepetitionSignals:
-    def test_known_fixture(self, spark):
-        """'a a a b': 4 words, 2 distinct, bigrams [aa, aa, ab] -> top 2."""
-        import pandas as pd
-
-        from real_time_sliding_window_spark.operators.text import (
-            repetition_signals,
-        )
-
-        docs = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [0, 1, 2],
-            "text": ["a a a b", "solo", ""],
-        }))
-        out = (
-            repetition_signals(docs).toPandas().set_index("doc_id")
-        )
-        r = out.loc[0]
-        assert (r.n_words, r.n_distinct_words, r.n_bigrams,
-                r.top_bigram_count) == (4, 2, 3, 2)
-        assert r.dup_word_frac == 0.5 and abs(r.top_bigram_frac - 2 / 3) < 1e-12
-        # 1-token and empty docs: no bigrams, zero fractions
-        assert out.loc[1].n_bigrams == 0 and out.loc[1].top_bigram_frac == 0.0
-        assert out.loc[2].n_words == 0 and out.loc[2].dup_word_frac == 0.0
-
-
-class TestTfidfRetrieval:
-    @staticmethod
-    def _docs(spark):
-        import pandas as pd
-
-        return spark.createDataFrame(pd.DataFrame({
-            "doc_id": [0, 1, 2],
-            "text": ["apple banana", "apple apple", "cherry"],
-        }))
-
-    def test_scoring_and_ranks(self, spark):
-        from real_time_sliding_window_spark.operators.retrieval import tfidf_topk
-
-        out = tfidf_topk(
-            self._docs(spark), [("q", "apple")], k=5
-        ).toPandas().sort_values("rank")
-        # df(apple)=2, N=3 -> w = 3000 div 3 = 1000; d1 tf=2 -> 2000
-        assert list(out.doc_id) == [1, 0]
-        assert list(out.score) == [2000, 1000]
-        assert list(out["rank"]) == [1, 2]  # .rank is the pandas method
-
-    def test_max_df_drops_stopword_terms(self, spark):
-        from real_time_sliding_window_spark.operators.retrieval import tfidf_topk
-
-        out = tfidf_topk(
-            self._docs(spark), [("q", "apple cherry")], k=5, max_df=1
-        ).toPandas()
-        # apple (df=2) is dropped by the cap; only cherry scores
-        assert list(out.doc_id) == [2]
-
-
-class TestBm25Retrieval:
-    @staticmethod
-    def _corpus(spark):
-        import pandas as pd
-
-        return spark.createDataFrame(pd.DataFrame({
-            "doc_id": [0, 1, 2],
-            "text": [
-                "apple apple",                                  # dl=2, tf=2
-                "apple apple filler filler filler filler",      # dl=6, tf=2
-                "cherry words other",                           # dl=3, tf=0
-            ],
-        }))
-
-    def test_length_normalization_ranks_shorter_doc_first(self, spark):
-        from real_time_sliding_window_spark.operators.retrieval import bm25_topk
-
-        out = (
-            bm25_topk(self._corpus(spark), [("q", "apple")], k=5)
-            .toPandas()
-            .sort_values("rank")
-        )
-        # equal tf, shorter doc wins under BM25 length normalization
-        assert list(out.doc_id) == [0, 1]
-
-    def test_integer_formula_matches_reference_python(self, spark):
-        from real_time_sliding_window_spark.operators.retrieval import (
-            BM25_COMP_SCALE, IDF_SCALE, bm25_topk,
-        )
-
-        out = (
-            bm25_topk(self._corpus(spark), [("q", "apple")], k=5)
-            .toPandas()
-            .set_index("doc_id")["score"]
-        )
-        n, sl = 3, 11          # 3 docs, 2+6+3 tokens
-        df_t = 2               # 'apple' appears in docs 0 and 1
-        idf = ((2 * (n - df_t) + 1) * IDF_SCALE) // (2 * df_t + 1)
-        for doc_id, tf, dl in [(0, 2, 2), (1, 2, 6)]:
-            r = (dl * n * 1000) // sl
-            comp = (2200 * tf * BM25_COMP_SCALE) // (
-                1000 * tf + 300 + (9 * r) // 10
-            )
-            assert out[doc_id] == idf * comp
-
-    def test_max_df_guard_and_empty_corpus(self, spark):
-        from real_time_sliding_window_spark.operators.retrieval import bm25_topk
-
-        out = bm25_topk(
-            self._corpus(spark), [("q", "apple cherry")], k=5, max_df=1
-        ).toPandas()
-        # apple (df=2) capped away; only cherry scores
-        assert list(out.doc_id) == [2]
-        empty = spark.createDataFrame([], "doc_id long, text string")
-        with pytest.raises(ValueError, match="empty corpus"):
-            bm25_topk(empty, [("q", "apple")])
-
-
-class TestRedactPii:
-    def test_counts_and_replacement(self, spark):
-        out = text.redact_pii(
-            spark.createDataFrame(
-                [
-                    (0, "mail me at jo.doe+x@corp.example.org today"),
-                    (1, "ticket 1234567 and card 99887766554433"),
-                    (2, "clean text with short num 12345"),
-                    (3, ""),
-                ],
-                "doc_id long, text string",
-            )
-        ).toPandas().set_index("doc_id")
-        assert out.loc[0, "text_redacted"] == "mail me at <email> today"
-        assert (out.loc[0, "n_emails"], out.loc[0, "n_longnums"]) == (1, 0)
-        assert out.loc[1, "text_redacted"] == "ticket <num> and card <num>"
-        assert (out.loc[1, "n_emails"], out.loc[1, "n_longnums"]) == (0, 2)
-        # 5-digit run is below the long-num threshold: untouched
-        assert out.loc[2, "text_redacted"] == "clean text with short num 12345"
-        assert (out.loc[2, "n_emails"], out.loc[2, "n_longnums"]) == (0, 0)
-        assert out.loc[3, "text_redacted"] == ""
-
-    def test_digit_bearing_email_counted_once(self, spark):
-        out = text.redact_pii(
-            spark.createDataFrame(
-                [(0, "reach user1234567@host.example.com now")],
-                "doc_id long, text string",
-            )
-        ).toPandas().iloc[0]
-        # the 7-digit run lives inside the email: one email, zero longnums
-        assert out["text_redacted"] == "reach <email> now"
-        assert (out["n_emails"], out["n_longnums"]) == (1, 0)
-
-
-class TestPercentileGate:
-    def test_gate_cuts_at_group_order_statistic(self, spark):
-        import pandas as pd
-
-        pdf = pd.DataFrame({
-            "doc_id": range(23),
-            "source": ["a"] * 20 + ["b"] * 3,
-            "n_chars": list(range(100, 2100, 100)) + [5, 7, 9],
-        })
-        out = text.percentile_gate(
-            spark.createDataFrame(pdf), "source", "n_chars", pct=0.25
-        ).toPandas()
-        for src, grp in pdf.groupby("source"):
-            kept = out[out.source == src]
-            thr = kept.gate_threshold.iloc[0]
-            # the cut is a MEMBER of the group (discrete order statistic)
-            assert thr in set(grp.n_chars)
-            # kept == exactly the rows at or above the cut
-            assert sorted(kept.n_chars) == sorted(
-                grp.n_chars[grp.n_chars >= thr]
-            )
-            # no more than pct of the group falls strictly below the cut
-            assert (grp.n_chars < thr).sum() <= 0.25 * len(grp)
-        # the 3-row group keeps at least its top rows (gate never empties)
-        assert (out.source == "b").sum() >= 1
-
 
 class TestTokenDrift:
     def test_known_fixture_and_contracts(self, spark):
@@ -471,123 +243,6 @@ class TestTokenDrift:
         ti = drift_from_index(sink.read_committed(spark), "a", "b", top_k=2)
         tb = token_drift(df, "source", "a", "b", top_k=2)
         assert key(ti.collect()) == key(tb.collect())
-
-
-class TestRemoveBoilerplate:
-    def _run(self, spark, rows, **kw):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        return (
-            text.remove_boilerplate(df, **kw)
-            .toPandas()
-            .set_index("doc_id")
-            .sort_index()
-        )
-
-    def test_hot_segment_removed_everywhere(self, spark):
-        # "a b c" appears in 3 docs (df=3 >= min_df=3) -> removed from all,
-        # including its second occurrence inside doc 0; tails stay intact
-        out = self._run(
-            spark,
-            [
-                (0, "a b c x y z a b c"),
-                (1, "a b c p q r"),
-                (2, "m n o a b c"),  # "a b c" is doc 2's SECOND segment
-                (3, "u v w"),
-            ],
-            width=3,
-            min_df=3,
-        )
-        assert out.loc[0, "clean_text"] == "x y z"
-        assert (out.loc[0, "n_segs"], out.loc[0, "n_kept"]) == (3, 1)
-        assert out.loc[1, "clean_text"] == "p q r"
-        assert out.loc[2, "clean_text"] == "m n o"
-        assert out.loc[3, "clean_text"] == "u v w"
-        assert out.loc[3, "n_kept"] == 1
-
-    def test_within_doc_repetition_is_not_boilerplate(self, spark):
-        # df counts DISTINCT docs: 3 copies inside one doc stay (df=1)
-        out = self._run(
-            spark,
-            [(0, "a b c a b c a b c"), (1, "x y z")],
-            width=3,
-            min_df=2,
-        )
-        assert out.loc[0, "clean_text"] == "a b c a b c a b c"
-        assert out.loc[1, "clean_text"] == "x y z"
-
-    def test_fully_removed_doc_keeps_its_row(self, spark):
-        out = self._run(
-            spark,
-            [(0, "a b c"), (1, "a b c"), (2, "a b c"), (3, "k l m")],
-            width=3,
-            min_df=2,
-        )
-        for d in (0, 1, 2):
-            assert out.loc[d, "clean_text"] == ""
-            assert (out.loc[d, "n_segs"], out.loc[d, "n_kept"]) == (1, 0)
-        assert out.loc[3, "clean_text"] == "k l m"
-
-    def test_short_tail_segment_counts(self, spark):
-        # 7 words at width 3 -> segments "a b c", "d e f", "g" (tail of 1);
-        # hot tail "g" (df=2) removed, order of survivors preserved
-        out = self._run(
-            spark,
-            [(0, "a b c d e f g"), (1, "g")],
-            width=3,
-            min_df=2,
-        )
-        assert out.loc[0, "n_segs"] == 3
-        assert out.loc[0, "clean_text"] == "a b c d e f"
-        assert out.loc[1, "clean_text"] == ""
-
-    def test_shuffled_anti_join_path_matches(self, spark):
-        rows = [(i, f"a b c w{i} x{i} y{i}") for i in range(6)]
-        fast = self._run(spark, rows, width=3, min_df=4)
-        slow = self._run(spark, rows, width=3, min_df=4, broadcast_hot=False)
-        assert fast.equals(slow)
-
-
-class TestSegmentDfIndex:
-    def test_incremental_hotset_equals_batch_removal(self, spark, tmp_path):
-        """Per-batch distinct df increments are additive under append-only
-        unique ids, so the index-derived hot set — and the removal pass fed
-        with it — equals a full batch recompute exactly. Replay adds
-        nothing (exactly-once marker)."""
-        from real_time_sliding_window_spark.operators.text import (
-            hot_segments_from_index,
-            remove_boilerplate,
-            run_segment_df_index,
-        )
-        from real_time_sliding_window_spark.sources.streams import FileFeed
-        from real_time_sliding_window_spark.streaming.sink import (
-            ExactlyOnceParquetSink,
-        )
-
-        schema = "doc_id long, text string"
-        rows = [
-            (0, "a b c x y z a b c"),
-            (1, "a b c p q r"),
-            (2, "m n o a b c"),
-            (3, "u v w"),
-            (4, "a b c u v w"),
-        ]
-        feed = FileFeed(spark, str(tmp_path / "sdi_in"))
-        sink = ExactlyOnceParquetSink(str(tmp_path / "sdi_idx"))
-        ckpt = str(tmp_path / "sdi_ckpt")
-        for lo, hi in ((0, 2), (2, 5)):
-            feed.push(spark.createDataFrame(rows[lo:hi], schema))
-            run_segment_df_index(feed.stream(schema), sink, ckpt, width=3)
-        run_segment_df_index(feed.stream(schema), sink, ckpt, width=3)  # replay
-
-        docs = spark.createDataFrame(rows, schema)
-        hot = hot_segments_from_index(sink.read_committed(spark), min_df=3)
-        # "a b c" spans batches (docs 0,1 then 2,4): only the summed index
-        # sees df=4; "u v w" reaches df=2 < 3 and must stay cold
-        assert {r["seg"] for r in hot.collect()} == {"a b c"}
-        key = lambda df: sorted(map(tuple, df.collect()))
-        incremental = remove_boilerplate(docs, width=3, hot_segments=hot)
-        batch = remove_boilerplate(docs, width=3, min_df=3)
-        assert key(incremental) == key(batch)
 
 
 class TestProfile:
